@@ -257,15 +257,13 @@ def _run_query_suite(
     min-of-2 quoted (see inline rationale). Returns (per-query secs,
     suite steal fraction, raw per-query samples)."""
     from pero_ocr_api_spark.plans.queries import QUERIES
-    from pero_ocr_api_spark.plans.queries_textops import (
-        _ivf_cents,
-        release_query_caches,
-    )
+    from pero_ocr_api_spark.plans.queries_textops import _ivf_cents
+    from pero_ocr_api_spark.session import release
 
-    # clear module-level caches from any prior attempt (dead-session
+    # clear the cache registry from any prior attempt (dead-session
     # handles unpersist as no-ops) so every attempt rebuilds the same
     # cache state and times stay comparable across attempts
-    release_query_caches()
+    release()
     spark = _fresh_spark(cpus)
 
     # JVM/regex warm-up so no timed query absorbs the one-time

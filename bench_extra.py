@@ -7,7 +7,7 @@ Usage:
   python bench_extra.py --explain [query ...]  # dump plans to plans/r06/
   python bench_extra.py --all                  # whole headline suite
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0),
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default all), RUNS (default 2, min quoted — the
 bench.py estimator), EXPLAIN_SUFFIX (default "after").
 
@@ -27,7 +27,7 @@ import time
 
 
 def main() -> None:
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     runs = int(os.environ.get("RUNS", "2"))
     noop = os.environ.get("NOOP", "0") == "1"
@@ -36,10 +36,7 @@ def main() -> None:
     args = [a for a in args if not a.startswith("--")]
 
     from pero_ocr_api_spark.plans.queries import QUERIES
-    from pero_ocr_api_spark.plans.queries_textops import (
-        _ivf_cents,
-        release_query_caches,
-    )
+    from pero_ocr_api_spark.plans.queries_textops import _ivf_cents
     from pero_ocr_api_spark.session import get_spark, stop_spark
 
     if "--all" in sys.argv[1:] or not args:
@@ -49,8 +46,7 @@ def main() -> None:
     else:
         names = args
 
-    release_query_caches()
-    stop_spark()
+    stop_spark()  # also releases the cache registry
     spark = get_spark(app_name="bench_extra", cores=cpus, shuffle_partitions=cpus)
 
     # same warm-up as bench.py:_run_query_suite

@@ -155,14 +155,25 @@ def parse_args(argv):
 def main(argv=None) -> int:
     args = parse_args(argv)
 
-    from pyspark.sql import SparkSession, Window
-    from pyspark.sql import functions as F
+    from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
     if spark is None:
         from pero_ocr_api_spark.session import get_spark
 
         spark = get_spark(app_name="curate_job", cores=args.cores)
+
+    from pero_ocr_api_spark.session import cache_scope
+
+    # every stage cache lives in the job's cache scope: freed when the
+    # job ends, also when it raises
+    with cache_scope() as job:
+        return _curate(spark, args, job)
+
+
+def _curate(spark, args, job: tuple) -> int:
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     from pero_ocr_api_spark.functions import text_stats as ts
     from pero_ocr_api_spark.operators import dedup
@@ -177,6 +188,7 @@ def main(argv=None) -> int:
         TOKENS_MIN,
         _SAMPLE_SPACE,
     )
+    from pero_ocr_api_spark.session import cache, release
 
     t0 = time.monotonic()
     docs = spark.read.parquet(args.documents).select(
@@ -211,9 +223,15 @@ def main(argv=None) -> int:
             & ((F.lit(REP_GRAM_DEN) * (n_g - nd_g) <= F.lit(REP_GRAM_NUM) * n_g) | (n_g == 0))
         ).alias("repetition_ok"),
     )
-    survivors = gated.filter(F.col("quality_ok") & F.col("repetition_ok")).select(
-        "doc_id", "text", "lang"
-    ).cache()
+    # the gate output lives in a sub-scope of the job: the LM cut
+    # below frees it (with its scores) once the cut output is cached
+    gate = (*job, "gate")
+    survivors = cache(
+        gated.filter(F.col("quality_ok") & F.col("repetition_ok")).select(
+            "doc_id", "text", "lang"
+        ),
+        gate,
+    )
     n_gated = survivors.count()
 
     # -- 2b (--lm-tail-pct): CCNet-style LM perplexity tail cut ----------
@@ -223,9 +241,12 @@ def main(argv=None) -> int:
 
         # cached: the scoring DAG (explode + gram window + unigram
         # join) feeds BOTH the cutoff aggregate and the survivors join
-        scores = bigram_lm_scores(survivors).select(
-            "doc_id", (F.col("sum_lp") / F.col("n_bigrams")).alias("avg_lp")
-        ).cache()
+        scores = cache(
+            bigram_lm_scores(survivors).select(
+                "doc_id", (F.col("sum_lp") / F.col("n_bigrams")).alias("avg_lp")
+            ),
+            gate,
+        )
         # one distributed percentile sketch -> a scalar cutoff (a
         # 1-row metric read, not a data path)
         cutoff = scores.agg(
@@ -233,16 +254,13 @@ def main(argv=None) -> int:
         ).first()[0]
         # docs too short to score (no bigrams) pass through — the
         # token-band gate above already owns the length policy
-        pre_lm = survivors
-        survivors = (
+        survivors = cache(
             survivors.join(scores, "doc_id", "left")
             .filter(F.col("avg_lp").isNull() | (F.col("avg_lp") >= cutoff))
             .select("doc_id", "text", "lang")
-            .cache()
         )
         n_gated_lm = survivors.count()  # materializes before the release
-        pre_lm.unpersist()
-        scores.unpersist()
+        release(*gate)
         lm_report = {
             "after_lm_filter": n_gated_lm,
             "cutoff_avg_lp": cutoff,
@@ -264,7 +282,7 @@ def main(argv=None) -> int:
 
     # -- 4: LSH near-dup with skew diagnostics ---------------------------
     sigs = dedup.minhash_signatures(exact_docs)
-    bands = dedup.lsh_bands_df(sigs).cache()
+    bands = cache(dedup.lsh_bands_df(sigs))
     sizes = dedup.lsh_bucket_sizes(bands)
     skew = sizes.agg(
         F.max("bucket_n").alias("max_bucket_n"),
@@ -273,9 +291,9 @@ def main(argv=None) -> int:
         ).alias("n_capped_buckets"),
     ).collect()[0]
     pairs = dedup.lsh_candidate_pairs(bands)
-    sh = exact_docs.select(
-        "doc_id", dedup.shingles_col(F.col("text")).alias("sh")
-    ).cache()
+    sh = cache(
+        exact_docs.select("doc_id", dedup.shingles_col(F.col("text")).alias("sh"))
+    )
     vpairs = (
         pairs.join(
             sh.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1")), "id1"
@@ -368,9 +386,9 @@ def main(argv=None) -> int:
         batch_docs = docs.join(deduped.select("doc_id"), "doc_id").select(
             "doc_id", "text"
         )
-        cand = band_index_candidates(
-            spark, batch_docs, args.band_index
-        ).cache()
+        # candidates live until the stage count (a job sub-scope)
+        stage = (*job, "band_index")
+        cand = cache(band_index_candidates(spark, batch_docs, args.band_index), stage)
         n_cand = cand.count()
         sh_b = batch_docs.join(
             cand.select(F.col("batch_id").alias("doc_id")).distinct(),
@@ -416,7 +434,7 @@ def main(argv=None) -> int:
         )
         deduped = deduped.join(drops, "doc_id", "left_anti")
         n_after = deduped.count()
-        cand.unpersist()
+        release(*stage)
         incr_report["incremental_text"] = {
             "candidates": n_cand,
             "after_incremental_text_dedup": n_after,
@@ -432,9 +450,11 @@ def main(argv=None) -> int:
         )
         dim = b_raw.select(F.size("embedding").alias("d")).first()
         if dim is not None:  # empty batch: nothing to dedup
-            cand = embedding_index_candidates(
-                spark, b_raw, args.embedding_index, dim["d"]
-            ).cache()
+            stage = (*job, "embedding_index")
+            cand = cache(
+                embedding_index_candidates(spark, b_raw, args.embedding_index, dim["d"]),
+                stage,
+            )
             n_cand = cand.count()
             b_emb = similarity._with_norm(b_raw).select(
                 F.col("vec_id").alias("batch_id"),
@@ -462,7 +482,7 @@ def main(argv=None) -> int:
             )
             deduped = deduped.join(drops, "doc_id", "left_anti")
             n_after = deduped.count()
-            cand.unpersist()
+            release(*stage)
             incr_report["incremental_embedding"] = {
                 "candidates": n_cand,
                 "after_incremental_embedding_dedup": n_after,
@@ -494,13 +514,6 @@ def main(argv=None) -> int:
             .write.mode("overwrite")
             .parquet(args.output_rows)
         )
-    survivors.unpersist()
-    bands.unpersist()
-    sh.unpersist()
-    if args.embeddings:
-        from pero_ocr_api_spark.operators import similarity
-
-        similarity.release_similarity_caches()
 
     funnel = {
         "input": n_input,

@@ -63,6 +63,7 @@ def main(argv=None) -> int:
 
     from pero_ocr_api_spark.plans.extract import run_extract
     from pero_ocr_api_spark.plans.io import read_done_ids, write_extracted
+    from pero_ocr_api_spark.session import cache_scope
 
     if args.n_docs:
         from pero_ocr_api_spark.corpus import generate_spark
@@ -77,21 +78,27 @@ def main(argv=None) -> int:
         config["min_confidence"] = args.min_confidence
 
     resume_from = read_done_ids(spark, args.output) if args.resume else None
-    t0 = time.monotonic()
-    extracted, lineage = run_extract(
-        spark,
-        docs,
-        media,
-        config=config or None,
-        run_id=args.run_id,
-        resume_from=resume_from,
-        salt_buckets=args.salt_buckets,
-    )
-    written = write_extracted(
-        spark, extracted, args.output, table_format=args.table_format
-    )
     lineage_path = args.lineage or f"{args.output.rstrip('/')}_lineage"
-    lineage.write.mode("append").parquet(lineage_path)
+    t0 = time.monotonic()
+    # the run's media cache is freed when the block ends, also on a raise
+    with cache_scope("run", args.run_id):
+        extracted, lineage = run_extract(
+            spark,
+            docs,
+            media,
+            config=config or None,
+            run_id=args.run_id,
+            resume_from=resume_from,
+            salt_buckets=args.salt_buckets,
+        )
+        # lineage first: writing the output refreshes every cache whose
+        # plan reads the output path — the media cache sits behind the
+        # resume anti-join — so a lineage read after it would re-run
+        # the UDF against the full output and come back empty
+        lineage.write.mode("append").parquet(lineage_path)
+        written = write_extracted(
+            spark, extracted, args.output, table_format=args.table_format
+        )
     wall = time.monotonic() - t0
     print(
         json.dumps(

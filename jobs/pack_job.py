@@ -68,6 +68,7 @@ def main(argv=None) -> int:
         spark = get_spark(app_name="pack_job", cores=args.cores)
 
     from pero_ocr_api_spark.operators.lm import assemble_blocks, vocab_topk
+    from pero_ocr_api_spark.session import cache, cache_scope
 
     t0 = time.monotonic()
     docs = spark.read.parquet(args.documents).select(
@@ -79,23 +80,24 @@ def main(argv=None) -> int:
         )
     n_docs = docs.count()
 
-    vocab = vocab_topk(docs, k=args.vocab_k).cache()
-    blocks = assemble_blocks(docs, vocab, args.seq_len)
-    # contiguous block ranges per shard file — the sequential-read
-    # layout a data loader expects
-    blocks.repartitionByRange("block_id").write.mode("overwrite").parquet(
-        args.output
-    )
-    vocab.write.mode("overwrite").parquet(args.output + "_vocab")
+    # the vocab cache is freed when the block ends, also on a raise
+    with cache_scope():
+        vocab = cache(vocab_topk(docs, k=args.vocab_k))
+        blocks = assemble_blocks(docs, vocab, args.seq_len)
+        # contiguous block ranges per shard file — the sequential-read
+        # layout a data loader expects
+        blocks.repartitionByRange("block_id").write.mode("overwrite").parquet(
+            args.output
+        )
+        vocab.write.mode("overwrite").parquet(args.output + "_vocab")
 
-    back = spark.read.parquet(args.output)
-    stats = back.agg(
-        F.count("*").alias("n_blocks"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("n_unk").alias("n_unk"),
-        F.max("block_id").alias("max_block"),
-    ).collect()[0]
-    vocab.unpersist()
+        back = spark.read.parquet(args.output)
+        stats = back.agg(
+            F.count("*").alias("n_blocks"),
+            F.sum("n_tokens").alias("n_tokens"),
+            F.sum("n_unk").alias("n_unk"),
+            F.max("block_id").alias("max_block"),
+        ).collect()[0]
     print(
         json.dumps(
             {

@@ -481,6 +481,8 @@ def decode_gray(data: bytes) -> np.ndarray:
                 acc &= (1 << have) - 1
                 k += 16
                 continue
+            if not s:  # size 0 means only EOB or ZRL (T.81 F.1.2.2)
+                raise JpegError("invalid AC symbol (size 0)")
             k += rs >> 4
             if k > 63:
                 raise JpegError("AC run past block end")

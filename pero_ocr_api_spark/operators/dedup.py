@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.functions.text_stats import normalize_text_col
+from pero_ocr_api_spark.session import cache
 
 MINHASH_K = 16
 LSH_BANDS = 4  # 4 bands x 4 rows
@@ -576,24 +577,15 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     text_col: str = "text",
     w: int = WINNOW_W,
-    cache: bool = True,
-    tracker: list | None = None,
 ) -> DataFrame:
     """(id, fp) winnowing fingerprints, computed in two projections
     with a materialization boundary between them so the gram-hash
     pipeline is evaluated once per row and compiled once per stage
-    (see :func:`winnow_from_hashes_col`). ``cache=True`` keeps the
-    intermediate gram arrays in memory — callers on unbounded corpora
-    should pass False and let the exchange/scan boundary split the
-    stages instead. ``tracker`` (a list) receives the cached
-    intermediate so the caller can unpersist it later."""
-    hashes = df.select(
-        F.col(id_col), ordered_gram_ints_col(F.col(text_col)).alias("_h")
+    (see :func:`winnow_from_hashes_col`). The intermediate gram arrays
+    are cached in the caller's cache scope (session cache registry)."""
+    hashes = cache(
+        df.select(F.col(id_col), ordered_gram_ints_col(F.col(text_col)).alias("_h"))
     )
-    if cache:
-        hashes = hashes.cache()
-        if tracker is not None:
-            tracker.append(hashes)
     return hashes.select(
         F.col(id_col), winnow_from_hashes_col(F.col("_h"), w).alias("fp")
     )
@@ -699,11 +691,6 @@ def duckdb_simhash_sql(expr: str, bits: int = SIMHASH_BITS) -> str:
         )
         terms.append(f"(CASE WHEN {bit_sum} >= 0 THEN {2**b} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
-
-
-def hamming16_col(a: Column, b: Column) -> Column:
-    """Hamming distance between two 16-bit simhashes (xor popcount)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_near_pairs(

@@ -61,17 +61,6 @@ def tokens_col(col: Column) -> Column:
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), F.lit(0))
 
 
-def bigrams_col(toks: Column) -> Column:
-    """Adjacent-pair grams of a token array (length n-1; callers must
-    exclude arrays shorter than 2 — ANSI slice rejects negative
-    lengths)."""
-    return F.zip_with(
-        F.slice(toks, 1, F.size(toks) - 1),
-        F.slice(toks, 2, F.size(toks) - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-
-
 def bigram_lm_scores(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

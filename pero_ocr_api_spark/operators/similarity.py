@@ -29,35 +29,18 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.functions.portable import round_bin
+from pero_ocr_api_spark.session import cache
 
 ANN_PLANES = 6
 ANN_TABLES = 4
 ANN_TABLE_PLANES = 4
 
-# Cache hygiene (mirrors queries_textops._QUERY_CACHES): ann_self_pairs
-# caches its normed-vector and bands intermediates — each is referenced
-# from 2-4 places of one plan, and without a boundary the 16x64-literal
-# hyperplane dot-product subtree re-executes per reference (measured
-# 24 s -> with cache the dominant stage runs once). Callers release via
-# release_similarity_caches() (queries_textops.release_query_caches
-# forwards here).
-_SIM_CACHES: list[DataFrame] = []
-
-
-def _tracked_cache(df: DataFrame) -> DataFrame:
-    df = df.cache()
-    _SIM_CACHES.append(df)
-    return df
-
-
-def release_similarity_caches() -> None:
-    """Unpersist every cache created by operators in this module."""
-    for df in _SIM_CACHES:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _SIM_CACHES.clear()
+# ann_self_pairs and the top-k operators cache their normed-vector and
+# bands intermediates: each is referenced from 2-4 places of one plan,
+# and without a boundary the 16x64-literal hyperplane dot-product
+# subtree re-executes per reference (measured 24 s -> with cache the
+# dominant stage runs once). The caches belong to the caller's scope
+# in the session cache registry.
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -175,7 +158,7 @@ def cosine_topk(
     """Exact top-k cosine neighbors per query vec_id."""
     # two plan references (query lookup + corpus scan) — one cached
     # norm pass instead of two
-    e = _tracked_cache(_with_norm(emb))
+    e = cache(_with_norm(emb))
     q = e.join(query_ids, "vec_id").select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
@@ -205,12 +188,12 @@ def ann_topk(
     concentrates neighbors into shared buckets."""
     # e is referenced by the bucket pass, the candidate re-score join
     # and the query-vector lookup; bucketed by the corpus and query
-    # sides — tracked-cache both so the norm and hyperplane pipelines
+    # sides — cache both so the norm and hyperplane pipelines
     # run once per call, not once per plan reference (the
     # ann_self_pairs lesson; on an unbounded corpus the same boundary
     # comes free from the persisted bucketed index table).
-    e = _tracked_cache(_with_norm(emb))
-    bucketed = _tracked_cache(
+    e = cache(_with_norm(emb))
+    bucketed = cache(
         e.select(
             "vec_id",
             F.explode(bucket_struct_col(F.col("v"), dim, tables, planes)).alias(
@@ -272,13 +255,13 @@ def ann_self_pairs(
     requires one (asserted in tests: no broadcast hint, and the plan
     compiles to shuffle joins with broadcasting disabled).
 
-    Both intermediates are tracked-cached: `e` (vec_id, v, norm) is
-    referenced by two scored joins, `bands` by three subtrees of the
-    cap machinery — without a boundary the hyperplane dot-product
-    pipeline re-executes ~4× (it was the dominant stage). df.cache()
-    is MEMORY_AND_DISK (spills, never OOMs); on an unbounded corpus
-    the same boundary comes free from writing `bands` to the bucketed
-    index table. Release via :func:`release_similarity_caches`.
+    Both intermediates are cached in the caller's cache scope: `e`
+    (vec_id, v, norm) is referenced by two scored joins, `bands` by
+    three subtrees of the cap machinery — without a boundary the
+    hyperplane dot-product pipeline re-executes ~4× (it was the
+    dominant stage). The cache is MEMORY_AND_DISK (spills, never
+    OOMs); on an unbounded corpus the same boundary comes free from
+    writing `bands` to the bucketed index table.
     `bands_out` (a list) receives the cached bands DF so callers can
     derive skew diagnostics (`dedup.lsh_bucket_sizes`) at no extra
     compute."""
@@ -286,8 +269,8 @@ def ann_self_pairs(
 
     if max_bucket is None:
         max_bucket = dedup.MAX_BUCKET
-    e = _tracked_cache(_with_norm(emb).select("vec_id", "v", "norm"))
-    bands = _tracked_cache(
+    e = cache(_with_norm(emb).select("vec_id", "v", "norm"))
+    bands = cache(
         e.select(
             "vec_id",
             F.explode(bucket_struct_col(F.col("v"), dim, tables, planes)).alias(
@@ -452,8 +435,8 @@ def trained_centroids(emb: DataFrame, nlist: int = IVF_NLIST) -> DataFrame:
     from re-planning AND re-executing the training). A production
     index trains per corpus, not per query: callers cache the result
     per (session, corpus) and pass it to :func:`ivf_topk` via
-    ``centroids=`` (see queries_textops._ivf_cents, the
-    _MEGA_BANDS_CACHE pattern)."""
+    ``centroids=`` (see queries_textops._ivf_cents, a session corpus
+    memo)."""
     return ivf_train_centroids(_with_norm(emb), nlist).localCheckpoint(eager=True)
 
 
@@ -508,9 +491,9 @@ def ivf_topk(
     the query side nprobe ways. Complements the LSH path: IVF adapts
     to the data's density, LSH needs no training."""
     # e feeds corpus assignment, query probing, the candidate re-score
-    # join and the query-vector lookup (4 plan references) — tracked-
-    # cache it so the norm pass runs once per call (see ann_topk)
-    e = _tracked_cache(_with_norm(emb))
+    # join and the query-vector lookup (4 plan references) — cache it
+    # so the norm pass runs once per call (see ann_topk)
+    e = cache(_with_norm(emb))
     if centroids is not None:
         # amortized path: the caller trained once per corpus (see
         # trained_centroids) — this call pays only assignment+probe
@@ -636,11 +619,11 @@ def ann_topk_multiprobe(
     candidate join stays an equi-join on (table, bucket). Probing
     1-bit neighbors scans the buckets whose boundary the query sits
     closest to — where near-misses of sign-LSH live."""
-    # same tracked-cache boundaries as ann_topk: e feeds three plan
+    # same cache boundaries as ann_topk: e feeds three plan
     # references, bucketed two — without them the norm + hyperplane
     # pipelines re-execute per reference
-    e = _tracked_cache(_with_norm(emb))
-    bucketed = _tracked_cache(
+    e = cache(_with_norm(emb))
+    bucketed = cache(
         e.select(
             "vec_id",
             F.explode(bucket_struct_col(F.col("v"), dim, tables, planes)).alias(

@@ -27,10 +27,6 @@ FAIL_STATES = ("NOT_FOUND", "INVALID_FILE", "PROCESSING_FAILED")
 LIVE_STATES = ("CREATED", "WAITING", "PROCESSING")  # general.py:50,60
 
 
-def _when_id(page: DataFrame, page_ids, col: Column, then: Column) -> Column:
-    return F.when(F.col("id").isin(list(page_ids)), then).otherwise(col)
-
-
 def upload_image(page: DataFrame, page_id: str, new_url: str, now: datetime) -> DataFrame:
     """U1 — CREATED→WAITING + url rewrite + waiting_timestamp
     (general.py:286-291; upload route routes.py:90-132)."""

@@ -52,27 +52,21 @@ from pero_ocr_api_spark.functions.arabic import normalize_arabic_col
 from pero_ocr_api_spark.functions.html_clean import clean_html_col
 from pero_ocr_api_spark.ocr import kernel
 from pero_ocr_api_spark.operators.restitch import restitch
+from pero_ocr_api_spark.session import cache, release
 from pero_ocr_api_spark.sources.tables import LINEAGE_SCHEMA
 
 LINEAGE_SENTINEL = "__lineage__"
 
-# run_id -> persisted media-UDF output (see media_path). Callers that
-# are done with a run's (rows, lineage) DataFrames should call
-# release_run(run_id) to free the cached partitions.
-_PERSISTED: dict[str, DataFrame] = {}
-
 
 def release_run(run_id: str) -> None:
     """Unpersist the cached media-UDF output of one extraction run."""
-    df = _PERSISTED.pop(run_id, None)
-    if df is not None:
-        df.unpersist()
+    release("run", run_id)
 
 
 def release_all_runs() -> None:
-    """Unpersist every tracked extraction cache (session teardown)."""
-    for run_id in list(_PERSISTED):
-        release_run(run_id)
+    """Unpersist every extraction run's cache (session teardown)."""
+    release("run")
+
 
 MEDIA_OUT_SCHEMA = T.StructType(
     [
@@ -233,21 +227,14 @@ def media_path(
     )
     out = joined.mapInPandas(_media_map_fn(cfg, run_id), MEDIA_OUT_SCHEMA)
     # the UDF output feeds two consumers (extracted rows + lineage);
-    # persist so the expensive OCR stage runs exactly once. Persisted
-    # outputs are tracked per run_id: re-running the same run_id
-    # replaces (and unpersists) the previous cache, and callers free
-    # storage explicitly via release_run()/release_all_runs() — a
-    # long-lived session no longer accumulates cached partitions
-    # until LRU eviction.
-    # (unpersist the previous same-run_id cache BEFORE persisting: an
-    # identical plan re-persisted maps to the same CacheManager entry,
-    # and unpersisting the old handle afterwards would drop the new
-    # cache with it)
-    prev = _PERSISTED.pop(run_id, None)
-    if prev is not None:
-        prev.unpersist()
-    out = out.persist()
-    _PERSISTED[run_id] = out
+    # persist so the expensive OCR stage runs exactly once. The cache
+    # is recorded under the run's scope and freed by release_run();
+    # re-running a run_id replaces its cache. (The old cache goes
+    # BEFORE persisting: an identical plan re-persisted maps to the
+    # same CacheManager entry, and unpersisting the old handle
+    # afterwards would drop the new cache with it.)
+    release_run(run_id)
+    out = cache(out, ("run", run_id))
     rows = out.filter(F.col("media_ref").isNull() | (F.col("media_ref") != LINEAGE_SENTINEL))
     lineage_raw = out.filter(F.col("media_ref") == LINEAGE_SENTINEL)
     lineage = lineage_raw.select(

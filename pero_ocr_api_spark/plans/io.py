@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (kept for callers)
 
+from pero_ocr_api_spark.session import cache, cache_scope
+
 
 def _exists(spark: SparkSession, path: str) -> bool:
     jvm = spark.sparkContext._jvm
@@ -82,11 +84,11 @@ def write_extracted(
     new_rows = (
         extracted if done is None else extracted.join(done, "doc_id", "left_anti")
     )
-    new_rows = new_rows.cache()
-    n = new_rows.count()
-    if n:
-        new_rows.write.mode("append").parquet(path)
-    new_rows.unpersist()
+    with cache_scope():
+        new_rows = cache(new_rows)
+        n = new_rows.count()
+        if n:
+            new_rows.write.mode("append").parquet(path)
     return n
 
 
@@ -121,27 +123,27 @@ def write_extracted_bucketed(
         new_rows = extracted.join(done, "doc_id", "left_anti")
     else:
         new_rows = extracted
-    new_rows = new_rows.cache()
-    n = new_rows.count()
-    if n:
-        writer = (
-            # repartition onto the bucket layout first: bucketBy makes
-            # every task write one file PER BUCKET it holds, so an
-            # unaligned batch adds up to tasks x buckets files per
-            # append (measured: 3 appends -> 72 files at 4 buckets);
-            # repartition(buckets, doc_id) uses the same murmur3 pmod
-            # as the bucket spec, so each task holds exactly one
-            # bucket and an append adds <= buckets files
-            new_rows.repartition(buckets, "doc_id")
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(buckets, "doc_id")
-            .sortBy("doc_id")
-        )
-        if path is not None:
-            writer = writer.option("path", path)
-        writer.saveAsTable(table)
-    new_rows.unpersist()
+    with cache_scope():
+        new_rows = cache(new_rows)
+        n = new_rows.count()
+        if n:
+            writer = (
+                # repartition onto the bucket layout first: bucketBy makes
+                # every task write one file PER BUCKET it holds, so an
+                # unaligned batch adds up to tasks x buckets files per
+                # append (measured: 3 appends -> 72 files at 4 buckets);
+                # repartition(buckets, doc_id) uses the same murmur3 pmod
+                # as the bucket spec, so each task holds exactly one
+                # bucket and an append adds <= buckets files
+                new_rows.repartition(buckets, "doc_id")
+                .write.mode("append")
+                .format("parquet")
+                .bucketBy(buckets, "doc_id")
+                .sortBy("doc_id")
+            )
+            if path is not None:
+                writer = writer.option("path", path)
+            writer.saveAsTable(table)
     return n
 
 
@@ -252,27 +254,27 @@ def write_band_index(
     if spark.catalog.tableExists(table):
         done = spark.table(table).select("doc_id").distinct()
         docs = docs.join(done, "doc_id", "left_anti")
-    docs = docs.cache()
-    n = docs.count()
-    # an empty FIRST build still creates the (empty) table: callers
-    # read it back unconditionally (jobs/build_dedup_index.py report,
-    # band_index_candidates), and an empty drop must be re-runnable
-    if n or not spark.catalog.tableExists(table):
-        bands = lsh_bands_df(minhash_signatures(docs))
-        writer = (
-            # align writer tasks with the bucket layout (same
-            # rationale as write_extracted_bucketed: an unaligned
-            # append emits tasks x buckets files)
-            bands.repartition(buckets, "band_idx", "band_hash")
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(buckets, "band_idx", "band_hash")
-            .sortBy("band_hash")
-        )
-        if path is not None:
-            writer = writer.option("path", path)
-        writer.saveAsTable(table)
-    docs.unpersist()
+    with cache_scope():
+        docs = cache(docs)
+        n = docs.count()
+        # an empty FIRST build still creates the (empty) table: callers
+        # read it back unconditionally (jobs/build_dedup_index.py report,
+        # band_index_candidates), and an empty drop must be re-runnable
+        if n or not spark.catalog.tableExists(table):
+            bands = lsh_bands_df(minhash_signatures(docs))
+            writer = (
+                # align writer tasks with the bucket layout (same
+                # rationale as write_extracted_bucketed: an unaligned
+                # append emits tasks x buckets files)
+                bands.repartition(buckets, "band_idx", "band_hash")
+                .write.mode("append")
+                .format("parquet")
+                .bucketBy(buckets, "band_idx", "band_hash")
+                .sortBy("band_hash")
+            )
+            if path is not None:
+                writer = writer.option("path", path)
+            writer.saveAsTable(table)
     return n
 
 
@@ -315,27 +317,27 @@ def write_embedding_index(
     if spark.catalog.tableExists(table):
         done = spark.table(table).select("vec_id").distinct()
         emb = emb.join(done, "vec_id", "left_anti")
-    emb = emb.cache()
-    n = emb.count()
-    if n or not spark.catalog.tableExists(table):
-        e = similarity.as_double_vec(emb)
-        bands = e.select(
-            "vec_id",
-            F.explode(
-                similarity.bucket_struct_col(F.col("v"), dim, tables, planes)
-            ).alias("b"),
-        ).select("vec_id", "b.t", "b.bucket")
-        writer = (
-            bands.repartition(buckets, "t", "bucket")
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(buckets, "t", "bucket")
-            .sortBy("bucket")
-        )
-        if path is not None:
-            writer = writer.option("path", path)
-        writer.saveAsTable(table)
-    emb.unpersist()
+    with cache_scope():
+        emb = cache(emb)
+        n = emb.count()
+        if n or not spark.catalog.tableExists(table):
+            e = similarity.as_double_vec(emb)
+            bands = e.select(
+                "vec_id",
+                F.explode(
+                    similarity.bucket_struct_col(F.col("v"), dim, tables, planes)
+                ).alias("b"),
+            ).select("vec_id", "b.t", "b.bucket")
+            writer = (
+                bands.repartition(buckets, "t", "bucket")
+                .write.mode("append")
+                .format("parquet")
+                .bucketBy(buckets, "t", "bucket")
+                .sortBy("bucket")
+            )
+            if path is not None:
+                writer = writer.option("path", path)
+            writer.saveAsTable(table)
     return n
 
 

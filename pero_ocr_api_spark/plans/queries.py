@@ -15,11 +15,20 @@ with the round-keyed rotation the driver periodically re-samples
 everything. All entries are equally covered in-repo either way: the
 pytest parity sweep (tests/test_queries_parity.py) runs EVERY entry
 against its DuckDB twin at sf0.001 on every test run.
+
+Building a query through this registry first releases the caches the
+previous query made (the query scope of the session cache registry),
+so no query rides a cache another query paid for.
 """
 
 from __future__ import annotations
 
+from functools import wraps
+
+from pero_ocr_api_spark.plans.queries_events import EVENTS_QUERIES
 from pero_ocr_api_spark.plans.queries_relational import RELATIONAL_QUERIES
+from pero_ocr_api_spark.plans.queries_textops import TEXTOPS_QUERIES
+from pero_ocr_api_spark.session import QUERY_SCOPE, release
 
 # name -> latest driver CORRECTNESS round in which the query was
 # hash-green (4 = green in some r1-r4 round but not re-sampled in r5;
@@ -58,27 +67,22 @@ _DRIVER_VERIFIED = {
     "usage_statistics": 5, "user_sessions": 5, "vocab_topk": 5,
 }
 
-_ALL: dict[str, tuple] = {}
-_ALL.update(RELATIONAL_QUERIES)
+_ALL: dict[str, tuple] = {**RELATIONAL_QUERIES, **TEXTOPS_QUERIES, **EVENTS_QUERIES}
 
-try:  # text/dedup/similarity operators (added incrementally)
-    from pero_ocr_api_spark.plans.queries_textops import TEXTOPS_QUERIES
 
-    _ALL.update(TEXTOPS_QUERIES)
-except ImportError:
-    pass
+def _after_release(build):
+    @wraps(build)
+    def run(*args, **kwargs):
+        release(*QUERY_SCOPE)
+        return build(*args, **kwargs)
 
-try:  # event-log analytics (sessionization / funnel / as-of attribution)
-    from pero_ocr_api_spark.plans.queries_events import EVENTS_QUERIES
+    return run
 
-    _ALL.update(EVENTS_QUERIES)
-except ImportError:
-    pass
 
 # least-recently-verified first; name tiebreak keeps the order
 # deterministic across builds
 QUERIES: dict[str, tuple] = {
-    name: _ALL[name]
+    name: (_after_release(_ALL[name][0]), *_ALL[name][1:])
     for name in sorted(
         _ALL, key=lambda n: (_DRIVER_VERIFIED.get(n, 0), n)
     )

@@ -19,51 +19,12 @@ from pero_ocr_api_spark.functions.html_clean import (
 )
 from pero_ocr_api_spark.functions.portable import duckdb_round_bin, round_bin
 from pero_ocr_api_spark.operators import dedup
+from pero_ocr_api_spark.session import cache, memo
 from pero_ocr_api_spark.sources.tables import read_table
 
 DUP_OFFSET = 1_000_000
 N_DUP_DOCS = 40  # doc_id < 40 get a mutated twin
 MUTATION_SUFFIX = " near duplicate suffix"
-
-# Cache hygiene (mirrors plans.extract's release_run): several queries
-# cache an intermediate (LSH bands before their self-join, shingle
-# sets verified twice, winnow gram arrays). Entries are bounded per
-# query and deduplicated by plan in Spark's CacheManager, but a
-# long-lived session that runs many queries should call
-# release_query_caches() between batches to keep storage flat.
-_QUERY_CACHES: list[DataFrame] = []
-
-
-def _tracked_cache(df: DataFrame) -> DataFrame:
-    df = df.cache()
-    _QUERY_CACHES.append(df)
-    return df
-
-
-def release_query_caches() -> None:
-    """Unpersist every cache created by the queries in this module
-    (including the shared mega-bucket bands, the trained-IVF centroid
-    table, and the similarity operators' internal caches).
-
-    Honest caveat on the IVF store: trained centroids come from
-    ``localCheckpoint`` (not ``.cache()``), and ``unpersist()`` is a
-    no-op on checkpointed plans — their blocks (nlist ≈ 16 rows, i.e.
-    negligible) are freed by the ContextCleaner once this registry
-    drops the last reference, which the ``clear()`` below does."""
-    for df in _QUERY_CACHES:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _QUERY_CACHES.clear()
-    for store in (_MEGA_BANDS_CACHE, _IVF_CENTS_CACHE):
-        for df in store.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        store.clear()
-    similarity.release_similarity_caches()
 
 HTML_PRE = (
     "<html><head><script>var t=1;</script></head><body>"
@@ -212,7 +173,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     all_docs = _with_dups(_docs(spark, sf))
     sigs = dedup.minhash_signatures(all_docs)
     # cached: the candidate join is a self-join of this DF
-    bands = _tracked_cache(dedup.lsh_bands_df(sigs))
+    bands = cache(dedup.lsh_bands_df(sigs))
     return dedup.lsh_candidate_pairs(bands)
 
 
@@ -278,32 +239,17 @@ FROM range({N_MEGA}) r CROSS JOIN (SELECT text FROM documents WHERE doc_id = 0) 
 """
 
 
-# (session applicationId, sf_dir) -> cached bands DF. The pairs and
-# histogram queries run over the SAME mega corpus; sharing one cached
-# bands DF means the shingle+md5+minhash pipeline runs once instead of
-# once per query (it was ~2x the combined cost). Bands rows are
-# (doc_id, band_idx, band_hash) — a few hundred KB, bounded.
-_MEGA_BANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Memoized per (session, sf_dir): the pairs and histogram queries run
+# over the SAME mega corpus; sharing one cached bands DF means the
+# shingle+md5+minhash pipeline runs once instead of once per query (it
+# was ~2x the combined cost). Bands rows are (doc_id, band_idx,
+# band_hash) — a few hundred KB, bounded.
 def _mega_bands(spark: SparkSession, sf: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    bands = _MEGA_BANDS_CACHE.get(key)
-    if bands is None:
-        all_docs = _with_mega(spark, _docs(spark, sf))
-        sigs = dedup.minhash_signatures(all_docs)
-        bands = dedup.lsh_bands_df(sigs).cache()
-        # one live session: drop stale keys, releasing their executor
-        # storage (a bare clear() would leak the evicted DF's cache
-        # blocks until GC when the session switches sf dirs)
-        for old in _MEGA_BANDS_CACHE.values():
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _MEGA_BANDS_CACHE.clear()
-        _MEGA_BANDS_CACHE[key] = bands
-    return bands
+    def build() -> DataFrame:
+        sigs = dedup.minhash_signatures(_with_mega(spark, _docs(spark, sf)))
+        return cache(dedup.lsh_bands_df(sigs))
+
+    return memo("mega_bands", (spark.sparkContext.applicationId, sf), build)
 
 
 def q_lsh_mega_bucket_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -474,8 +420,7 @@ def q_winnow_overlap(spark: SparkSession, sf: str) -> DataFrame:
     fp = dedup.winnow_fingerprints(
         all_docs.filter(
             (F.col("doc_id") < N_DUP_DOCS) | (F.col("doc_id") >= DUP_OFFSET)
-        ),
-        tracker=_QUERY_CACHES,
+        )
     )
     pairs = (
         fp.filter(F.col("doc_id") < N_DUP_DOCS)
@@ -621,27 +566,15 @@ SELECT qid, vec_id, cosine, rn FROM (
 """
 
 
-# (session applicationId, sf_dir) -> trained+checkpointed centroid
-# table (nlist rows). A production IVF index trains once per corpus;
+# Trained+checkpointed centroid table (nlist rows), memoized per
+# (session, sf_dir): a production IVF index trains once per corpus;
 # per-call training was the r3 perf regression (2.7 s -> 7.7 s).
-# Same single-live-entry policy as _MEGA_BANDS_CACHE.
-_IVF_CENTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _ivf_cents(spark: SparkSession, sf: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cents = _IVF_CENTS_CACHE.get(key)
-    if cents is None:
-        emb = read_table(spark, sf, "embeddings")
-        cents = similarity.trained_centroids(emb)
-        for old in _IVF_CENTS_CACHE.values():
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _IVF_CENTS_CACHE.clear()
-        _IVF_CENTS_CACHE[key] = cents
-    return cents
+    return memo(
+        "ivf_cents",
+        (spark.sparkContext.applicationId, sf),
+        lambda: similarity.trained_centroids(read_table(spark, sf, "embeddings")),
+    )
 
 
 def q_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -879,12 +812,12 @@ def q_incremental_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
     (t, bucket) — the corpus is hashed once and reused (in production
     the bands live in the bucketed index table written by
     write_embedding_index, so only the batch is hashed per run; here
-    the tracked-cached bands DF stands in for the index, exactly as in
+    the cached bands DF stands in for the index, exactly as in
     `incremental_dedup`). Candidates dedupe across tables before the
     exact-cosine verify, which joins vectors for CANDIDATE rows only —
     batch-linear, never corpus × batch."""
     emb = read_table(spark, sf, "embeddings")
-    corpus = _tracked_cache(
+    corpus = cache(
         similarity._with_norm(emb).select("vec_id", "v", "norm")
     )
     batch = similarity._with_norm(
@@ -908,7 +841,7 @@ def q_incremental_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
         ).select(id_alias, "b.t", "b.bucket")
 
     # the persisted index stand-in: corpus hashed once, joined per batch
-    c_bands = _tracked_cache(bands(corpus, "corpus_id"))
+    c_bands = cache(bands(corpus, "corpus_id"))
     cand = (
         bands(batch, "batch_id")
         .join(c_bands, ["t", "bucket"])
@@ -1071,9 +1004,9 @@ def q_dedup_keep_list(spark: SparkSession, sf: str) -> DataFrame:
     # both so the shingle/md5 pipeline runs once, not once per branch.
     survivors = all_docs.join(exact_kept.select("doc_id"), "doc_id")
     sigs = dedup.minhash_signatures(survivors)
-    bands = _tracked_cache(dedup.lsh_bands_df(sigs))
+    bands = cache(dedup.lsh_bands_df(sigs))
     pairs = dedup.lsh_candidate_pairs(bands)
-    sh = _tracked_cache(
+    sh = cache(
         survivors.select("doc_id", dedup.shingles_col(F.col("text")).alias("sh"))
     )
     verified = (
@@ -1765,13 +1698,13 @@ def q_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
         F.concat("text", F.lit(MUTATION_SUFFIX)).alias("text"),
     )
     # the persisted index stand-in: hashed once, joined by every batch
-    c_bands = _tracked_cache(
+    c_bands = cache(
         dedup.lsh_bands_df(dedup.minhash_signatures(corpus))
     )
     b_bands = dedup.lsh_bands_df(dedup.minhash_signatures(batch))
     # cached: referenced three times below (two semi-filters + the
     # final join); candidate sets are tiny by construction
-    cand = _tracked_cache(
+    cand = cache(
         b_bands.select(
             F.col("doc_id").alias("batch_id"), "band_idx", "band_hash"
         )
@@ -2000,7 +1933,7 @@ def q_source_overlap(spark: SparkSession, sf: str) -> DataFrame:
     # Cache the tiny signature table (#sources rows) before the
     # self-join: without the boundary BOTH join sides re-run the full
     # corpus scan + shingle hashing (the ann_self_pairs lesson).
-    sigs = _tracked_cache(
+    sigs = cache(
         dedup.minhash_signatures(docs, id_col="source").select(
             F.col("source"), F.col("signature")
         )

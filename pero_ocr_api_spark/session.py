@@ -16,9 +16,12 @@ Scale design (local[32] sandbox stands in for a 1000-executor cluster):
 
 from __future__ import annotations
 
+import itertools
 import os
+from collections.abc import Callable, Hashable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Arrow batch size for media-carrying stages. Sandbox fixture pages
 # are ~25 KB so 256 rows/batch ≈ 6 MB; production 5 MP pages would
@@ -26,6 +29,19 @@ from pyspark.sql import SparkSession
 # memory). Bigger batches amortize the per-batch Python/Arrow cost,
 # which measurably dominates at small batch sizes.
 MEDIA_ARROW_BATCH = 256
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: half the host's ``MemTotal``,
+    capped at 32g. In local mode the driver heap is the whole JVM's
+    heap, and a heap near the box's RAM lets the kernel OOM-kill the
+    JVM before the collector ever runs."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except OSError:  # no procfs: ask the OS instead
+        kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return f"{min(kb // 2048, 32 * 1024)}m"
 
 
 def get_spark(
@@ -75,7 +91,7 @@ def get_spark(
         # the natural split count is lower).
         .config("spark.sql.files.minPartitionNum", str(cores))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -90,12 +106,85 @@ def get_spark(
 
 
 def stop_spark() -> None:
-    # drop any extraction caches tracked against the dying session —
-    # their DataFrame handles would be unusable afterwards and must
-    # not linger in the registry for a later release_run() to trip on
-    from pero_ocr_api_spark.plans import extract as _extract
-
-    _extract._PERSISTED.clear()
+    # free every registered cache while the session is still alive:
+    # the handles would be unusable afterwards
+    release()
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+# --- the cache registry --------------------------------------------------
+# Every DataFrame the package persists is recorded here under a scope
+# key (a tuple), and release() is the one path that frees it:
+#   ("run", run_id)     one extract run's media-UDF output
+#                       (plans.extract.release_run);
+#   ("query",)          the registry query being built; plans.queries
+#                       releases it when the next query is built;
+#   ("memo", kind, key) a corpus memo, one live key per kind (memo());
+#   ("stage", n, ...)   a ``with cache_scope():`` block, freed on exit.
+# A scope opened inside another extends the outer key, so releasing a
+# scope also releases every scope opened inside it.
+QUERY_SCOPE = ("query",)
+_CACHES: dict[tuple, list[DataFrame]] = {}
+_OPEN: list[tuple] = []
+_SCOPE_IDS = itertools.count()
+
+
+def cache(df: DataFrame, scope: tuple | None = None) -> DataFrame:
+    """``df.cache()``, recorded under ``scope`` — by default the
+    innermost open scope, else the query scope."""
+    df = df.cache()
+    _CACHES.setdefault(scope or (_OPEN[-1] if _OPEN else QUERY_SCOPE), []).append(df)
+    return df
+
+
+def release(*prefix: Hashable) -> None:
+    """Unpersist every DataFrame recorded under a scope whose key
+    starts with ``prefix`` (no prefix: every scope)."""
+    for key in [k for k in _CACHES if k[: len(prefix)] == prefix]:
+        for df in _CACHES.pop(key):
+            try:
+                df.unpersist()
+            except Exception:  # its session is already stopped
+                pass
+
+
+@contextmanager
+def _recording(key: tuple) -> Iterator[tuple]:
+    _OPEN.append(key)
+    try:
+        yield key
+    finally:
+        # by key, not pop(): a streaming foreachBatch callback runs on
+        # another thread and may open its scope while this one is open
+        _OPEN.remove(key)
+
+
+@contextmanager
+def cache_scope(*key: Hashable) -> Iterator[tuple]:
+    """Record the caches made inside the block under ``key`` (default:
+    a fresh scope nested in the innermost open one) and release them
+    on exit, also when the block raises. Yields the key."""
+    if not key:
+        key = (*(_OPEN[-1] if _OPEN else ("stage",)), next(_SCOPE_IDS))
+    try:
+        with _recording(key):
+            yield key
+    finally:
+        release(*key)
+
+
+def memo(kind: str, key: Hashable, build: Callable[[], DataFrame]) -> DataFrame:
+    """The DataFrame ``build()`` returns for ``key``, kept across calls
+    until a different key of the same ``kind`` replaces it (one live
+    entry per kind). Caches made by ``build`` live as long as it."""
+    scope = ("memo", kind, key)
+    if scope not in _CACHES:
+        release("memo", kind)
+        with _recording(scope):
+            df = build()
+        # the result is listed last (a second listing of a cached
+        # result is harmless: unpersist is idempotent)
+        _CACHES.setdefault(scope, []).append(df)
+    return _CACHES[scope][-1]

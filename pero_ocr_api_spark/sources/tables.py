@@ -101,8 +101,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pero_ocr_api_spark.functions.arabic import normalize_arabic_col
 from pero_ocr_api_spark.functions.html_clean import clean_html_col
 from pero_ocr_api_spark.plans.extract import run_extract
+from pero_ocr_api_spark.session import cache_scope
 from pero_ocr_api_spark.sources.tables import DOCUMENTS_SCHEMA
 
 
@@ -577,21 +578,20 @@ def stream_extract(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extracted, lineage = run_extract(
-            spark,
-            batch_df,
-            media,
-            config=config,
-            run_id=f"stream_b{batch_id}",
-        )
-        # idempotent under checkpoint replay: a re-run of the same
-        # batch overwrites its own directory
-        extracted.write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
-        )
-        lineage.write.mode("overwrite").parquet(
-            f"{output_path}/_lineage/batch_id={batch_id}"
-        )
+        run_id = f"stream_b{batch_id}"
+        # the batch's media cache is freed once its output is written
+        with cache_scope("run", run_id):
+            extracted, lineage = run_extract(
+                spark, batch_df, media, config=config, run_id=run_id
+            )
+            # idempotent under checkpoint replay: a re-run of the same
+            # batch overwrites its own directory
+            extracted.write.mode("overwrite").parquet(
+                f"{output_path}/batch_id={batch_id}"
+            )
+            lineage.write.mode("overwrite").parquet(
+                f"{output_path}/_lineage/batch_id={batch_id}"
+            )
 
     return (
         stream.writeStream.foreachBatch(process_batch)

@@ -178,50 +178,59 @@ def test_trained_ivf_recall_floor_on_clustered_corpus(spark, clustered_corpus):
 
 
 def test_release_query_caches(spark):
-    """Query-level caches (LSH bands, winnow intermediates, mega
-    bands) must all free via release_query_caches — the query-module
-    analog of plans.extract.release_run. Asserted on the tracked
-    DataFrames' own storage levels (a global getPersistentRDDs count
-    is noisy: unrelated localCheckpoint RDDs unpersist on GC)."""
+    """Query-level caches (LSH bands, winnow intermediates, the
+    similarity operators' normed vectors and bands) are recorded under
+    the query scope of the session cache registry, the corpus memos
+    (mega bands, trained IVF centroids) under their memo scopes; one
+    release frees each. Asserted on the recorded DataFrames' own
+    storage levels (a global getPersistentRDDs count is noisy:
+    unrelated localCheckpoint RDDs unpersist on GC)."""
+    from pero_ocr_api_spark import session
     from pero_ocr_api_spark.plans import queries_textops as qt
 
-    qt.release_query_caches()  # from any earlier test in this session
+    session.release(*session.QUERY_SCOPE)  # from any earlier test
+    session.release("memo")
     sf_small = "/root/testdata/sf0.001"
     qt.q_minhash_lsh_pairs(spark, sf_small).count()
     qt.q_winnow_overlap(spark, sf_small).count()
     qt.q_lsh_mega_bucket_pairs(spark, sf_small).count()
-    qt.q_ann_self_near_pairs(spark, sf_small).count()  # similarity._SIM_CACHES
-    qt.q_ivf_topk(spark, sf_small).count()  # _IVF_CENTS_CACHE
-    tracked = (
-        list(qt._QUERY_CACHES)
-        + list(qt._MEGA_BANDS_CACHE.values())
-        + list(similarity._SIM_CACHES)
-    )
-    assert len(tracked) >= 5
-    assert len(similarity._SIM_CACHES) >= 2  # e + bands from ann_self_pairs
-    assert qt._IVF_CENTS_CACHE  # trained centroids memoized per corpus
+    qt.q_ann_self_near_pairs(spark, sf_small).count()  # similarity caches
+    qt.q_ivf_topk(spark, sf_small).count()  # trained-centroid memo
+    query = list(session._CACHES[session.QUERY_SCOPE])
+    memos = [k for k in session._CACHES if k[0] == "memo"]
+    tracked = query + [df for k in memos for df in session._CACHES[k]]
+    assert len(query) >= 4  # bands, winnow hashes, e + bands of ann_self_pairs
+    assert {k[1] for k in memos} == {"mega_bands", "ivf_cents"}
     assert any(df.storageLevel.useMemory for df in tracked)
-    qt.release_query_caches()
-    assert not qt._QUERY_CACHES and not qt._MEGA_BANDS_CACHE
-    assert not similarity._SIM_CACHES and not qt._IVF_CENTS_CACHE
+    session.release(*session.QUERY_SCOPE)
+    session.release("memo")
+    assert not [k for k in session._CACHES if k[0] in ("query", "memo")]
     assert all(not df.storageLevel.useMemory for df in tracked)
 
 
 def test_ivf_centroids_amortized_across_calls(spark):
     """Per-call k-means training was the r3 perf regression: the
     second q_ivf_topk call in a session must reuse the per-(session,
-    corpus) centroid table, not retrain (object identity of the cache
+    corpus) centroid table, not retrain (object identity of the memo
     entry across calls)."""
+    from pero_ocr_api_spark import session
     from pero_ocr_api_spark.plans import queries_textops as qt
 
-    qt.release_query_caches()
+    session.release("memo")
     sf_small = "/root/testdata/sf0.001"
+
+    def memo_entries():
+        return [
+            df for k, dfs in session._CACHES.items()
+            if k[:2] == ("memo", "ivf_cents") for df in dfs
+        ]
+
     qt.q_ivf_topk(spark, sf_small).count()
-    cents1 = list(qt._IVF_CENTS_CACHE.values())
+    cents1 = memo_entries()
     qt.q_ivf_topk(spark, sf_small).count()
-    cents2 = list(qt._IVF_CENTS_CACHE.values())
+    cents2 = memo_entries()
     assert len(cents1) == 1 and cents1[0] is cents2[0]
-    qt.release_query_caches()
+    session.release("memo")
 
 
 def test_embedding_dedup_keep_drops_exactly_the_twins(spark):

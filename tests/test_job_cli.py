@@ -134,6 +134,88 @@ def test_job_cli_end_to_end(spark):
     assert spark.read.parquet(f"{d}/out").count() == 40  # no dups
 
 
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_extract_job_resume_writes_lineage_and_frees_caches(spark):
+    """--resume over a half-written output: the lineage table records
+    the resumed docs (it was written empty when the output write ran
+    first and refreshed the media cache behind the resume anti-join),
+    and the job leaves no persisted RDD behind."""
+    import io as _io
+    from contextlib import redirect_stdout
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import extract_job
+
+    from pero_ocr_api_spark.corpus import generate_spark
+    from pero_ocr_api_spark.plans.extract import release_run
+
+    d = tempfile.mkdtemp()
+    out = f"{d}/out"
+    docs, media = generate_spark(spark, 60, seed=7)
+    first = [r.doc_id for r in docs.select("doc_id").orderBy("doc_id").limit(30).collect()]
+    half, _ = run_extract(
+        spark, docs.filter(F.col("doc_id").isin(first)), media, run_id="half"
+    )
+    assert write_extracted(spark, half, out) == 30
+    release_run("half")
+    before = _persisted_ids(spark)
+    with redirect_stdout(_io.StringIO()):
+        rc = extract_job.main(
+            ["--n-docs", "60", "--seed", "7", "--output", out,
+             "--run-id", "resume_half", "--resume"]
+        )
+    assert rc == 0
+    assert _persisted_ids(spark) <= before
+    assert spark.read.parquet(out).count() == 60
+    lineage = spark.read.parquet(f"{out}_lineage").collect()
+    assert lineage and {r.run_id for r in lineage} == {"resume_half"}
+    # per-partition distinct docs: a doc's media spans may land on
+    # several partitions, so the sum is at least one per resumed doc
+    assert sum(r.docs_in for r in lineage) > 0
+
+
+def test_curate_job_failure_frees_its_caches(spark):
+    """A curate run that raises (uncastable --corpus doc_id) must still
+    free every stage cache: the suite runs its jobs in one JVM."""
+    import shutil
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import curate_job
+
+    from __spark_entry__ import SF_SMOKE
+    from pero_ocr_api_spark.plans.io import write_band_index
+
+    d = tempfile.mkdtemp()
+    corpus_path = f"{SF_SMOKE}/documents.parquet"
+    table = "curate_fail_text_idx"
+    warehouse = spark.conf.get(
+        "spark.sql.warehouse.dir", "spark-warehouse"
+    ).removeprefix("file:")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(os.path.join(warehouse, table), ignore_errors=True)
+    corpus = spark.read.parquet(corpus_path)
+    try:
+        write_band_index(spark, corpus, table, buckets=4)
+        corpus.select(F.col("doc_id").cast("string").alias("doc_id"), "text").unionByName(
+            spark.createDataFrame([("not-a-number", "x")], "doc_id string, text string")
+        ).write.parquet(f"{d}/corpus")
+        before = _persisted_ids(spark)
+        # with ANSI mode on the cast itself raises (CAST_INVALID_INPUT)
+        # before the job's own uncastable-id guard; either way it raises
+        with pytest.raises(Exception, match="cast"):
+            curate_job.main(
+                ["--documents", corpus_path, "--output", f"{d}/kept",
+                 "--no-sampling", "--band-index", table,
+                 "--corpus", f"{d}/corpus"]
+            )
+        assert _persisted_ids(spark) <= before
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_pyfiles_zip_importable(tmp_path):
     res = subprocess.run(
         [sys.executable, "scripts/package_pyfiles.py", str(tmp_path)],

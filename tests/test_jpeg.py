@@ -324,3 +324,28 @@ def test_fill_bytes_before_data_still_rejected():
     bad = enc[: i - 4] + b"\xff\xff\x00" + enc[i - 4 :]
     with pytest.raises(jpeg.JpegError):
         jpeg.decode_gray(bad)
+
+
+def test_ac_symbol_with_size_zero_raises_jpeg_error():
+    """An AC run/size symbol of size 0 other than EOB (0x00) and ZRL
+    (0xF0) has no meaning (T.81 F.1.2.2); a table that defines one must
+    give JpegError, never a bare ValueError from a negative shift —
+    pdf.extract_page_images only catches JpegError."""
+    dc_code, dc_len = jpeg._canonical_codes(jpeg._DC_BITS, jpeg._DC_VALS)[0]
+    # two 1-bit AC codes: '0' -> 0x10 (run 1, size 0), '1' -> EOB
+    ac_bits = [2] + [0] * 15
+    bits = format(dc_code, f"0{dc_len}b") + "0"
+    bits += "1" * (-len(bits) % 8)  # pad with 1s
+    entropy = int(bits, 2).to_bytes(len(bits) // 8, "big")
+    data = (
+        b"\xff\xd8"
+        + jpeg._seg(0xFFDB, bytes([0x00]) + bytes([1] * 64))
+        + jpeg._seg(0xFFC0, bytes([8, 0, 8, 0, 8, 1, 1, 0x11, 0]))
+        + jpeg._seg(0xFFC4, bytes([0x00]) + bytes(jpeg._DC_BITS) + bytes(jpeg._DC_VALS))
+        + jpeg._seg(0xFFC4, bytes([0x10]) + bytes(ac_bits) + bytes([0x10, 0x00]))
+        + jpeg._seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
+        + entropy
+        + b"\xff\xd9"
+    )
+    with pytest.raises(jpeg.JpegError):
+        jpeg.decode_gray(data)

@@ -100,11 +100,11 @@ def test_source_overlap_scans_corpus_once(spark):
     """The signature table is cached before the pairwise self-join:
     both join sides must read the cache, not re-run the corpus scan
     + shingle hashing (the ann_self_pairs lesson)."""
-    from pero_ocr_api_spark.plans import queries_textops as qt
+    from pero_ocr_api_spark.session import QUERY_SCOPE, release
 
     try:
         plan = _plan(spark, "source_overlap")
         assert plan.count("InMemoryTableScan") >= 2
         assert "partial_min" in plan  # map-side minima for the signature
     finally:
-        qt.release_query_caches()
+        release(*QUERY_SCOPE)
