@@ -8,12 +8,12 @@ Prints ONE JSON line:
                        (sandbox stand-in for N vs 4N executors)
 
 Measurement policy (empirically derived, see BASELINE.md "sandbox
-calibration"): the media kernel is memory-bandwidth-bound and this VM
-delivers ~7 effective core-equivalents for it (pure-CPU python scales
-to ~23x, numpy+zlib plateaus at ~7x), so the extraction bench runs at
-<=8 worker cores and the scaling pair defaults to 1 vs 4 (both inside
-the bandwidth envelope, so the ratio measures the *engine*, not the
-VM); beyond 8 workers throughput *degrades* from bandwidth contention. Headline SQL
+calibration"): the media kernel is memory-bandwidth-bound, so the
+headline extraction runs at min($SPARK_GRAFT_CPUS, 24) worker cores
+(24 was the measured knee on a 32-vCPU host;
+SPARK_GRAFT_EXTRACT_CORES overrides) and the scaling pair defaults to
+1 vs 4 (both inside the bandwidth envelope, so the ratio measures the
+*engine*, not the host). Headline SQL
 queries (JVM-side) run at the full $SPARK_GRAFT_CPUS, each timed
 twice with min-of-2 quoted (one-sided interference noise; raw
 samples reported under `query_samples`). Extraction is

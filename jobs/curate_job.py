@@ -172,22 +172,10 @@ def main(argv=None) -> int:
 
 
 def _curate(spark, args, job: tuple) -> int:
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from pero_ocr_api_spark.functions import text_stats as ts
     from pero_ocr_api_spark.operators import dedup
-    from pero_ocr_api_spark.plans.queries_textops import (
-        QUALITY_MIN,
-        REP_GRAM_DEN,
-        REP_GRAM_NUM,
-        REP_TOKEN_DEN,
-        REP_TOKEN_NUM,
-        SAMPLE_RATES_PCT,
-        TOKENS_MAX,
-        TOKENS_MIN,
-        _SAMPLE_SPACE,
-    )
     from pero_ocr_api_spark.session import cache, release
 
     t0 = time.monotonic()
@@ -197,37 +185,13 @@ def _curate(spark, args, job: tuple) -> int:
     n_input = docs.count()
 
     # -- 1+2: per-doc gates, one scan ------------------------------------
-    t = F.col("text")
-    toks = dedup.tokens_col(t)
-    n_tok = F.size(toks)
-    nd_tok = F.size(F.array_distinct(toks))
-    grams = F.when(
-        n_tok >= 3,
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(n_tok - 3, F.lit(0))),
-            lambda i: F.concat_ws(" ", toks[i], toks[i + 1], toks[i + 2]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    n_g, nd_g = F.size(grams), F.size(F.array_distinct(grams))
-    gated = docs.select(
-        "doc_id",
-        "text",
-        "lang",
-        (
-            (ts.lang_guess_col(t) == F.col("lang"))
-            & (ts.quality_score_col(t) >= QUALITY_MIN)
-            & ts.token_count_col(t).between(TOKENS_MIN, TOKENS_MAX)
-        ).alias("quality_ok"),
-        (
-            (F.lit(REP_TOKEN_DEN) * (n_tok - nd_tok) <= F.lit(REP_TOKEN_NUM) * n_tok)
-            & ((F.lit(REP_GRAM_DEN) * (n_g - nd_g) <= F.lit(REP_GRAM_NUM) * n_g) | (n_g == 0))
-        ).alias("repetition_ok"),
-    )
+    lang_ok, quality_ok, len_ok = ts.quality_gate_cols(F.col("text"), F.col("lang"))
+    tok_rep, gram_rep = dedup.repetition_flags_cols(F.col("text"))
     # the gate output lives in a sub-scope of the job: the LM cut
     # below frees it (with its scores) once the cut output is cached
     gate = (*job, "gate")
     survivors = cache(
-        gated.filter(F.col("quality_ok") & F.col("repetition_ok")).select(
+        docs.filter(lang_ok & quality_ok & len_ok & ~tok_rep & ~gram_rep).select(
             "doc_id", "text", "lang"
         ),
         gate,
@@ -268,42 +232,14 @@ def _curate(spark, args, job: tuple) -> int:
         }
 
     # -- 3: exact dedup (keep lowest doc_id per fingerprint) -------------
-    fp = survivors.select(
-        "doc_id", "lang", ts.fingerprint_col(F.col("text")).alias("fp")
-    )
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    exact_kept = (
-        fp.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "lang")
-    )
+    exact_kept = dedup.exact_keep(survivors)
     exact_docs = survivors.join(exact_kept.select("doc_id"), "doc_id")
     n_exact = exact_docs.count()
 
     # -- 4: LSH near-dup with skew diagnostics ---------------------------
-    sigs = dedup.minhash_signatures(exact_docs)
-    bands = cache(dedup.lsh_bands_df(sigs))
-    sizes = dedup.lsh_bucket_sizes(bands)
-    skew = sizes.agg(
-        F.max("bucket_n").alias("max_bucket_n"),
-        F.sum(
-            F.when(F.col("bucket_n") > dedup.MAX_BUCKET, 1).otherwise(0)
-        ).alias("n_capped_buckets"),
-    ).collect()[0]
-    pairs = dedup.lsh_candidate_pairs(bands)
-    sh = cache(
-        exact_docs.select("doc_id", dedup.shingles_col(F.col("text")).alias("sh"))
-    )
-    vpairs = (
-        pairs.join(
-            sh.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1")), "id1"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2")), "id2"
-        )
-        .filter(dedup.jaccard_col(F.col("sh1"), F.col("sh2")) >= args.jaccard)
-        .select("id1", "id2")
-    )
+    text_bands: list = []
+    vpairs = dedup.lsh_near_pairs(exact_docs, args.jaccard, bands_out=text_bands)
+    skew = dedup.bucket_skew(text_bands[0])
     if args.closure:
         # edges accumulate across families; one closure after stage 4b
         edge_sets = [vpairs]
@@ -338,19 +274,9 @@ def _curate(spark, args, job: tuple) -> int:
             n_deduped_emb = deduped.count()
         # same skew metrics as the text LSH: the bands are already
         # cached by ann_self_pairs, so this is one cheap aggregate
-        eskew = dedup.lsh_bucket_sizes(bands_holder[0], id_col="vec_id").agg(
-            F.max("bucket_n").alias("max_bucket_n"),
-            F.sum(
-                F.when(F.col("bucket_n") > dedup.MAX_BUCKET, 1).otherwise(0)
-            ).alias("n_capped_buckets"),
-        ).collect()[0]
         emb_report = {
             "after_embedding_dedup": n_deduped_emb,
-            "skew": {
-                "max_bucket_n": eskew["max_bucket_n"],
-                "n_capped_buckets": int(eskew["n_capped_buckets"] or 0),
-                "cap": dedup.MAX_BUCKET,
-            },
+            "skew": dedup.bucket_skew(bands_holder[0], id_col="vec_id"),
         }
 
     # -- 4c (--closure): one transitive closure over every pair family ---
@@ -390,24 +316,17 @@ def _curate(spark, args, job: tuple) -> int:
         stage = (*job, "band_index")
         cand = cache(band_index_candidates(spark, batch_docs, args.band_index), stage)
         n_cand = cand.count()
-        sh_b = batch_docs.join(
-            cand.select(F.col("batch_id").alias("doc_id")).distinct(),
-            "doc_id",
-        ).select(
-            F.col("doc_id").alias("batch_id"),
-            dedup.shingles_col(F.col("text")).alias("shb"),
-        )
         corpus_texts = spark.read.parquet(args.corpus).select(
             F.col("doc_id").alias("_raw_id"),
-            F.col("doc_id").cast("long").alias("corpus_id"),
-            F.col("text").alias("corpus_text"),
+            F.col("doc_id").try_cast("long").alias("doc_id"),
+            "text",
         )
-        # fail-loud guard (round-5 advice): a non-numeric corpus doc_id
-        # casts to NULL, the sh_c join silently empties, and every
-        # band-index candidate would "fail verification" — incremental
-        # dedup becoming a no-op with no error. One narrow-column scan.
+        # fail-loud guard: a non-numeric corpus doc_id casts to NULL,
+        # the verify join silently empties, and every band-index
+        # candidate would "fail verification" — incremental dedup
+        # becoming a no-op with no error. One narrow-column scan.
         n_uncastable = corpus_texts.filter(
-            F.col("corpus_id").isNull() & F.col("_raw_id").isNotNull()
+            F.col("doc_id").isNull() & F.col("_raw_id").isNotNull()
         ).count()
         if n_uncastable:
             raise ValueError(
@@ -415,20 +334,9 @@ def _curate(spark, args, job: tuple) -> int:
                 "cast to long; the band index keys corpus ids as long, so "
                 "these rows would be dropped from verification silently"
             )
-        corpus_texts = corpus_texts.drop("_raw_id")
-        sh_c = corpus_texts.join(
-            cand.select("corpus_id").distinct(), "corpus_id"
-        ).select(
-            "corpus_id",
-            dedup.shingles_col(F.col("corpus_text")).alias("shc"),
-        )
         drops = (
-            cand.join(sh_b, "batch_id")
-            .join(sh_c, "corpus_id")
-            .filter(
-                dedup.jaccard_col(F.col("shb"), F.col("shc"))
-                >= args.jaccard
-            )
+            dedup.candidate_jaccard(cand, batch_docs, corpus_texts.drop("_raw_id"))
+            .filter(F.col("jaccard") >= args.jaccard)
             .select(F.col("batch_id").alias("doc_id"))
             .distinct()
         )
@@ -456,27 +364,14 @@ def _curate(spark, args, job: tuple) -> int:
                 stage,
             )
             n_cand = cand.count()
-            b_emb = similarity._with_norm(b_raw).select(
-                F.col("vec_id").alias("batch_id"),
-                F.col("v").alias("bv"),
-                F.col("norm").alias("bn"),
-            )
-            c_emb = similarity._with_norm(
-                spark.read.parquet(args.corpus_embeddings).select(
-                    "vec_id", "embedding"
-                )
-            ).select(
-                F.col("vec_id").alias("corpus_id"),
-                F.col("v").alias("cv"),
-                F.col("norm").alias("cn"),
-            )
-            cos = similarity.dot_col(F.col("bv"), F.col("cv")) / (
-                F.col("bn") * F.col("cn")
+            c_raw = spark.read.parquet(args.corpus_embeddings).select(
+                "vec_id", "embedding"
             )
             drops = (
-                cand.join(b_emb, "batch_id")
-                .join(c_emb, "corpus_id")
-                .filter(cos >= args.cosine)
+                similarity.candidate_cosine(
+                    cand, similarity._with_norm(b_raw), similarity._with_norm(c_raw)
+                )
+                .filter(F.col("cosine") >= args.cosine)
                 .select(F.col("batch_id").alias("doc_id"))
                 .distinct()
             )
@@ -492,17 +387,10 @@ def _curate(spark, args, job: tuple) -> int:
     if args.no_sampling:
         kept = deduped.select("doc_id")
     else:
-        u = dedup.md5_int_col(
-            F.concat(F.lit("sample|"), F.col("doc_id").cast("string")), 7
-        )
-        rate = None
-        for lang, pct in SAMPLE_RATES_PCT.items():
-            cond = F.col("lang") == lang
-            rate = F.when(cond, pct) if rate is None else rate.when(cond, pct)
         # unlisted langs keep everything (100%): a generic ingest job
         # must never silently drop a language the mix table forgot
-        rate = rate.otherwise(F.lit(100)).cast("long")
-        kept = deduped.filter((u * 100) < rate * _SAMPLE_SPACE).select("doc_id")
+        keep = dedup.stratified_keep_col(F.col("doc_id"), F.col("lang"), 100)
+        kept = deduped.filter(keep).select("doc_id")
     kept.write.mode("overwrite").parquet(args.output)
     n_kept = spark.read.parquet(args.output).count()
     if args.output_rows:
@@ -535,11 +423,7 @@ def _curate(spark, args, job: tuple) -> int:
         json.dumps(
             {
                 "funnel": funnel,
-                "lsh_skew": {
-                    "max_bucket_n": skew["max_bucket_n"],
-                    "n_capped_buckets": int(skew["n_capped_buckets"] or 0),
-                    "cap": dedup.MAX_BUCKET,
-                },
+                "lsh_skew": skew,
                 **(
                     {"embedding_skew": emb_report["skew"]}
                     if emb_report is not None

@@ -9,6 +9,7 @@ Operators:
 * token counting — whitespace tokens and a BPE-ish regex tokenizer;
 * quality scoring — alpha ratio / stopword ratio / length blend;
 * language ID — stopword-hit n-gram heuristic over en/de/es/fr;
+* the quality gate — lang-ID agreement, quality floor, token band;
 * document fingerprint — md5 over aggressively normalized text
   (whitespace/case folded), the exact-dedup key.
 """
@@ -87,6 +88,23 @@ def lang_guess_col(col: Column) -> Column:
             cond = c if cond is None else (cond & c)
         expr = F.when(cond, F.lit(lang)).otherwise(expr)
     return expr
+
+
+# the training-filter quality gate's thresholds
+QUALITY_MIN = 0.55
+TOKENS_MIN, TOKENS_MAX = 10, 2000
+
+
+def quality_gate_cols(text: Column, lang: Column) -> tuple[Column, Column, Column]:
+    """The quality gate a curation pipeline runs per doc, as its three
+    checks: lang-ID agreement with ``lang``, quality score at least
+    :data:`QUALITY_MIN`, token count in [TOKENS_MIN, TOKENS_MAX]. A doc
+    passes when all three hold."""
+    return (
+        lang_guess_col(text) == lang,
+        quality_score_col(text) >= QUALITY_MIN,
+        token_count_col(text).between(TOKENS_MIN, TOKENS_MAX),
+    )
 
 
 def normalize_text_col(col: Column) -> Column:

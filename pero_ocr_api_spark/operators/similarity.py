@@ -193,14 +193,7 @@ def ann_topk(
     # ann_self_pairs lesson; on an unbounded corpus the same boundary
     # comes free from the persisted bucketed index table).
     e = cache(_with_norm(emb))
-    bucketed = cache(
-        e.select(
-            "vec_id",
-            F.explode(bucket_struct_col(F.col("v"), dim, tables, planes)).alias(
-                "b"
-            ),
-        ).select("vec_id", "b.t", "b.bucket")
-    )
+    bucketed = cache(embedding_bands_df(e, dim, tables, planes))
     q_buckets = bucketed.join(query_ids, "vec_id").select(
         F.col("vec_id").alias("qid"), "t", "bucket"
     )
@@ -226,6 +219,57 @@ ANN_SELF_PLANES = 8  # more planes than the query path: bucket size is
 # plane per doubling); the star cap below is the backstop for
 # degenerate dense clusters that no plane count can split.
 ANN_SELF_TABLES = 2
+
+
+def embedding_bands_df(
+    e: DataFrame,
+    dim: int,
+    tables: int = ANN_SELF_TABLES,
+    planes: int = ANN_SELF_PLANES,
+) -> DataFrame:
+    """Explode double vectors ``e`` (vec_id, v) into the embedding
+    index's (vec_id, t, bucket) rows, one per hash table — the twin of
+    ``dedup.lsh_bands_df``. The stored index, the batch side of an
+    index lookup and the self-join all hash through this one
+    expression, so their buckets always agree."""
+    return e.select(
+        "vec_id",
+        F.explode(bucket_struct_col(F.col("v"), dim, tables, planes)).alias("b"),
+    ).select("vec_id", "b.t", "b.bucket")
+
+
+def candidate_cosine(
+    cand: DataFrame, batch: DataFrame, corpus: DataFrame
+) -> DataFrame:
+    """Raw cosine of each (batch_id, corpus_id) candidate; ``batch``
+    and ``corpus`` are normed vectors (vec_id, v, norm). Vectors join
+    for candidate rows only — batch-linear, never corpus x batch.
+    Callers apply their own threshold."""
+    return (
+        cand.join(
+            batch.select(
+                F.col("vec_id").alias("batch_id"),
+                F.col("v").alias("v1"),
+                F.col("norm").alias("n1"),
+            ),
+            "batch_id",
+        )
+        .join(
+            corpus.select(
+                F.col("vec_id").alias("corpus_id"),
+                F.col("v").alias("v2"),
+                F.col("norm").alias("n2"),
+            ),
+            "corpus_id",
+        )
+        .select(
+            "batch_id",
+            "corpus_id",
+            (
+                dot_col(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
+            ).alias("cosine"),
+        )
+    )
 
 
 def ann_self_pairs(
@@ -271,15 +315,8 @@ def ann_self_pairs(
         max_bucket = dedup.MAX_BUCKET
     e = cache(_with_norm(emb).select("vec_id", "v", "norm"))
     bands = cache(
-        e.select(
-            "vec_id",
-            F.explode(bucket_struct_col(F.col("v"), dim, tables, planes)).alias(
-                "b"
-            ),
-        ).select(
-            "vec_id",
-            F.col("b.t").alias("band_idx"),
-            F.col("b.bucket").alias("band_hash"),
+        embedding_bands_df(e, dim, tables, planes).withColumnsRenamed(
+            {"t": "band_idx", "bucket": "band_hash"}
         )
     )
     if bands_out is not None:
@@ -623,14 +660,7 @@ def ann_topk_multiprobe(
     # references, bucketed two — without them the norm + hyperplane
     # pipelines re-execute per reference
     e = cache(_with_norm(emb))
-    bucketed = cache(
-        e.select(
-            "vec_id",
-            F.explode(bucket_struct_col(F.col("v"), dim, tables, planes)).alias(
-                "b"
-            ),
-        ).select("vec_id", "b.t", "b.bucket")
-    )
+    bucketed = cache(embedding_bands_df(e, dim, tables, planes))
     q_own = bucketed.join(query_ids, "vec_id").select(
         F.col("vec_id").alias("qid"), "t", "bucket"
     )

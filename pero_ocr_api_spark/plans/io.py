@@ -15,10 +15,8 @@ parquet:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (kept for callers)
+from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.session import cache, cache_scope
 
@@ -285,14 +283,12 @@ def write_embedding_index(
     dim: int,
     path: str | None = None,
     buckets: int = 16,
-    tables: int | None = None,
-    planes: int | None = None,
 ) -> int:
     """Build / incrementally extend the PERSISTENT embedding-ANN band
     index — the embedding twin of :func:`write_band_index`, and the
     missing leg of the embedding production triangle (self-join →
     index → incremental): the corpus is sign-LSH-hashed ONCE at
-    index-build time (``similarity.bucket_struct_col``, the identical
+    index-build time (``similarity.embedding_bands_df``, the identical
     expression ``ann_self_pairs`` uses), and every daily embedding
     drop equi-joins the stored (t, bucket) rows instead of re-hashing
     10^12 vectors.
@@ -309,10 +305,6 @@ def write_embedding_index(
     only (vec_id, t, bucket), never the vectors."""
     from pero_ocr_api_spark.operators import similarity
 
-    if tables is None:
-        tables = similarity.ANN_SELF_TABLES
-    if planes is None:
-        planes = similarity.ANN_SELF_PLANES
     emb = emb.select("vec_id", "embedding").dropDuplicates(["vec_id"])
     if spark.catalog.tableExists(table):
         done = spark.table(table).select("vec_id").distinct()
@@ -321,13 +313,7 @@ def write_embedding_index(
         emb = cache(emb)
         n = emb.count()
         if n or not spark.catalog.tableExists(table):
-            e = similarity.as_double_vec(emb)
-            bands = e.select(
-                "vec_id",
-                F.explode(
-                    similarity.bucket_struct_col(F.col("v"), dim, tables, planes)
-                ).alias("b"),
-            ).select("vec_id", "b.t", "b.bucket")
+            bands = similarity.embedding_bands_df(similarity.as_double_vec(emb), dim)
             writer = (
                 bands.repartition(buckets, "t", "bucket")
                 .write.mode("append")
@@ -346,8 +332,6 @@ def embedding_index_candidates(
     batch: DataFrame,
     table: str,
     dim: int,
-    tables: int | None = None,
-    planes: int | None = None,
 ) -> DataFrame:
     """Candidate (batch_id, corpus_id) pairs for a new embedding batch
     against the stored ANN band index: hash ONLY the batch, equi-join
@@ -356,17 +340,9 @@ def embedding_index_candidates(
     the index deliberately does not store)."""
     from pero_ocr_api_spark.operators import similarity
 
-    if tables is None:
-        tables = similarity.ANN_SELF_TABLES
-    if planes is None:
-        planes = similarity.ANN_SELF_PLANES
-    b = similarity.as_double_vec(batch.select("vec_id", "embedding"))
-    b_bands = b.select(
-        "vec_id",
-        F.explode(
-            similarity.bucket_struct_col(F.col("v"), dim, tables, planes)
-        ).alias("b"),
-    ).select(F.col("vec_id").alias("batch_id"), "b.t", "b.bucket")
+    b_bands = similarity.embedding_bands_df(
+        similarity.as_double_vec(batch.select("vec_id", "embedding")), dim
+    ).withColumnRenamed("vec_id", "batch_id")
     idx = spark.table(table).select(
         F.col("vec_id").alias("corpus_id"), "t", "bucket"
     )

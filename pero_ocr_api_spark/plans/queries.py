@@ -31,8 +31,8 @@ from pero_ocr_api_spark.plans.queries_textops import TEXTOPS_QUERIES
 from pero_ocr_api_spark.session import QUERY_SCOPE, release
 
 # name -> latest driver CORRECTNESS round in which the query was
-# hash-green (4 = green in some r1-r4 round but not re-sampled in r5;
-# 5 = green in CORRECTNESS_r05). Names absent were never
+# hash-green (4 = green in some r1-r4 round but not re-sampled since;
+# 6 = green in CORRECTNESS_r06). Names absent were never
 # driver-verified and sort first.
 _DRIVER_VERIFIED = {
     # r1-r4 green, not re-sampled in r5
@@ -46,25 +46,25 @@ _DRIVER_VERIFIED = {
     "simhash_buckets": 4, "simhash_near_pairs": 4,
     "stratified_sample_counts": 4, "token_stats": 4,
     "training_filter_pipeline": 4, "winnow_overlap": 4,
-    # green in CORRECTNESS_r05
-    "argmin_fair_key": 5, "auth_lookup": 5, "avg_score": 5,
-    "bpe_merges": 5, "cancel_anti_join": 5, "clean_html_docs": 5,
-    "completion_ratio": 5, "dedup_components": 5,
-    "embedding_dedup_keep": 5, "engine_dict": 5, "event_transitions": 5,
-    "expiry_scan": 5, "fair_dequeue": 5, "format_dispatch": 5,
-    "funnel_conversion": 5, "in_list_filter": 5, "incremental_dedup": 5,
-    "incremental_embedding_dedup": 5, "keys_with_waiting": 5,
-    "last_touch_attribution": 5, "latest_version": 5,
-    "line_char_counts": 5, "line_dedup_stats": 5, "link_graph": 5,
-    "lm_quality_scores": 5, "median_score": 5, "navigate_joins": 5,
-    "null_or_filter": 5, "pack_blocks": 5, "pack_sequences": 5,
-    "pii_redaction": 5, "point_lookup": 5, "point_lookup_malformed": 5,
-    "processed_counts": 5, "quality_weighted_sample": 5,
-    "request_status": 5, "rolling_event_rate": 5, "sorted_page_names": 5,
-    "source_overlap": 5, "state_histogram": 5, "table_profile": 5,
-    "timeout_requeue": 5, "tokenize_corpus": 5, "tokenize_corpus_bpe": 5,
-    "top_ngrams": 5, "union_window_live": 5, "url_dedup_groups": 5,
-    "usage_statistics": 5, "user_sessions": 5, "vocab_topk": 5,
+    # green in CORRECTNESS_r05 and again in CORRECTNESS_r06
+    "argmin_fair_key": 6, "auth_lookup": 6, "avg_score": 6,
+    "bpe_merges": 6, "cancel_anti_join": 6, "clean_html_docs": 6,
+    "completion_ratio": 6, "dedup_components": 6,
+    "embedding_dedup_keep": 6, "engine_dict": 6, "event_transitions": 6,
+    "expiry_scan": 6, "fair_dequeue": 6, "format_dispatch": 6,
+    "funnel_conversion": 6, "in_list_filter": 6, "incremental_dedup": 6,
+    "incremental_embedding_dedup": 6, "keys_with_waiting": 6,
+    "last_touch_attribution": 6, "latest_version": 6,
+    "line_char_counts": 6, "line_dedup_stats": 6, "link_graph": 6,
+    "lm_quality_scores": 6, "median_score": 6, "navigate_joins": 6,
+    "null_or_filter": 6, "pack_blocks": 6, "pack_sequences": 6,
+    "pii_redaction": 6, "point_lookup": 6, "point_lookup_malformed": 6,
+    "processed_counts": 6, "quality_weighted_sample": 6,
+    "request_status": 6, "rolling_event_rate": 6, "sorted_page_names": 6,
+    "source_overlap": 6, "state_histogram": 6, "table_profile": 6,
+    "timeout_requeue": 6, "tokenize_corpus": 6, "tokenize_corpus_bpe": 6,
+    "top_ngrams": 6, "union_window_live": 6, "url_dedup_groups": 6,
+    "usage_statistics": 6, "user_sessions": 6, "vocab_topk": 6,
 }
 
 _ALL: dict[str, tuple] = {**RELATIONAL_QUERIES, **TEXTOPS_QUERIES, **EVENTS_QUERIES}

@@ -827,50 +827,24 @@ def q_incremental_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
         )
     ).select("vec_id", "v", "norm")
 
-    def bands(e: DataFrame, id_alias: str) -> DataFrame:
-        return e.select(
-            F.col("vec_id").alias(id_alias),
-            F.explode(
-                similarity.bucket_struct_col(
-                    F.col("v"),
-                    EMB_DIM,
-                    similarity.ANN_SELF_TABLES,
-                    similarity.ANN_SELF_PLANES,
-                )
-            ).alias("b"),
-        ).select(id_alias, "b.t", "b.bucket")
-
     # the persisted index stand-in: corpus hashed once, joined per batch
-    c_bands = cache(bands(corpus, "corpus_id"))
+    c_bands = cache(
+        similarity.embedding_bands_df(corpus, EMB_DIM).withColumnRenamed(
+            "vec_id", "corpus_id"
+        )
+    )
     cand = (
-        bands(batch, "batch_id")
+        similarity.embedding_bands_df(batch, EMB_DIM)
+        .withColumnRenamed("vec_id", "batch_id")
         .join(c_bands, ["t", "bucket"])
         .select("batch_id", "corpus_id")
         .distinct()
     )
-    cos = round_bin(
-        similarity.dot_col(F.col("v1"), F.col("v2"))
-        / (F.col("n1") * F.col("n2")),
-        4,
-    )
     return (
-        cand.join(
-            batch.select(
-                F.col("vec_id").alias("batch_id"),
-                F.col("v").alias("v1"),
-                F.col("norm").alias("n1"),
-            ),
-            "batch_id",
+        similarity.candidate_cosine(cand, batch, corpus)
+        .select(
+            "batch_id", "corpus_id", round_bin(F.col("cosine"), 4).alias("cosine")
         )
-        .join(
-            corpus.select(
-                F.col("vec_id").alias("corpus_id"),
-                F.col("v").alias("v2"),
-                F.col("norm").alias("n2"),
-            ),
-            "corpus_id",
-        )
-        .select("batch_id", "corpus_id", cos.alias("cosine"))
         .filter(F.col("cosine") >= NEARDUP_THRESHOLD)
     )
 
@@ -990,29 +964,11 @@ def q_dedup_keep_list(spark: SparkSession, sf: str) -> DataFrame:
     lowest doc_id of each group) — the canonical two-stage
     cheap-filter → exact-verify shape. Emits per-lang keep counts."""
     all_docs = _with_dups(_docs(spark, sf))
-    fp = all_docs.select(
-        "doc_id", "lang", ts.fingerprint_col(F.col("text")).alias("fp")
-    )
-    w_exact = Window.partitionBy("fp").orderBy("doc_id")
-    exact_kept = (
-        fp.withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "lang")
-    )
-    # near-dup pairs among survivors: LSH candidates + Jaccard verify.
-    # The bands DF self-joins and the shingle DF joins twice — cache
-    # both so the shingle/md5 pipeline runs once, not once per branch.
+    exact_kept = dedup.exact_keep(all_docs)
+    # near-dup pairs among survivors: LSH candidates + Jaccard verify
     survivors = all_docs.join(exact_kept.select("doc_id"), "doc_id")
-    sigs = dedup.minhash_signatures(survivors)
-    bands = cache(dedup.lsh_bands_df(sigs))
-    pairs = dedup.lsh_candidate_pairs(bands)
-    sh = cache(
-        survivors.select("doc_id", dedup.shingles_col(F.col("text")).alias("sh"))
-    )
     verified = (
-        pairs.join(sh.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1")), "id1")
-        .join(sh.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2")), "id2")
-        .filter(dedup.jaccard_col(F.col("sh1"), F.col("sh2")) >= 0.5)
+        dedup.lsh_near_pairs(survivors, 0.5)
         .select(F.col("id2").alias("doc_id"))  # id1 < id2: drop the higher
         .distinct()
     )
@@ -1131,38 +1087,15 @@ GROUP BY 1, 2 HAVING count(*) >= {CONTAM_MIN_SHARED}
 
 
 # --- intra-document repetition filters (Gopher-style) ------------------------
-# thresholds as integer cross-multiplications: frac > a/b ⟺ b*dups > a*total
-REP_TOKEN_NUM, REP_TOKEN_DEN = 1, 2  # duplicate-token fraction > 1/2
-REP_GRAM_NUM, REP_GRAM_DEN = 1, 20  # duplicate-3-gram fraction > 1/20
-
-
 def q_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source counts of repetition-heavy documents (duplicate
     token / duplicate 3-gram fractions over thresholds) — the
     MassiveText/Gopher-style intra-doc repetition filter. All
     comparisons are integer cross-multiplications and all outputs are
     counts: no float crosses the engine boundary."""
-    docs = _docs(spark, sf)
-    toks = dedup.tokens_col(F.col("text"))
-    n_tok = F.size(toks)
-    nd_tok = F.size(F.array_distinct(toks))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_tok - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", toks[i], toks[i + 1], toks[i + 2]),
-    )
-    grams = F.when(n_tok >= 3, grams).otherwise(F.array().cast("array<string>"))
-    n_g = F.size(grams)
-    nd_g = F.size(F.array_distinct(grams))
-    flags = docs.select(
-        "source",
-        (
-            F.lit(REP_TOKEN_DEN) * (n_tok - nd_tok)
-            > F.lit(REP_TOKEN_NUM) * n_tok
-        ).alias("tok_rep"),
-        (
-            (F.lit(REP_GRAM_DEN) * (n_g - nd_g) > F.lit(REP_GRAM_NUM) * n_g)
-            & (n_g > 0)
-        ).alias("gram_rep"),
+    tok_rep, gram_rep = dedup.repetition_flags_cols(F.col("text"))
+    flags = _docs(spark, sf).select(
+        "source", tok_rep.alias("tok_rep"), gram_rep.alias("gram_rep")
     )
     return flags.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -1172,26 +1105,17 @@ def q_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_repetition_stats() -> str:
-    toks = dedup.duckdb_tokens_sql("text")
-    grams = (
-        f"list_transform(range(1, greatest(len({toks}) - 3, 0) + 2), "
-        f"i -> array_to_string(list_slice({toks}, i, i + 2), ' '))"
-    )
-    grams = f"(CASE WHEN len({toks}) >= 3 THEN {grams} ELSE [] END)"
     return f"""
 WITH sized AS (
   SELECT source,
-         len({toks}) AS n_tok,
-         len(list_distinct({toks})) AS nd_tok,
-         len({grams}) AS n_g,
-         len(list_distinct({grams})) AS nd_g
+         {dedup.duckdb_repetition_sizes_sql("text")}
   FROM documents
 )
 SELECT source, count(*) AS n_docs,
-  CAST(sum(CASE WHEN {REP_TOKEN_DEN} * (n_tok - nd_tok)
-                     > {REP_TOKEN_NUM} * n_tok THEN 1 ELSE 0 END) AS BIGINT)
+  CAST(sum(CASE WHEN {dedup.REP_TOKEN_DEN} * (n_tok - nd_tok)
+                     > {dedup.REP_TOKEN_NUM} * n_tok THEN 1 ELSE 0 END) AS BIGINT)
     AS n_token_repetitive,
-  CAST(sum(CASE WHEN {REP_GRAM_DEN} * (n_g - nd_g) > {REP_GRAM_NUM} * n_g
+  CAST(sum(CASE WHEN {dedup.REP_GRAM_DEN} * (n_g - nd_g) > {dedup.REP_GRAM_NUM} * n_g
                  AND n_g > 0 THEN 1 ELSE 0 END) AS BIGINT)
     AS n_gram_repetitive
 FROM sized GROUP BY source
@@ -1393,7 +1317,7 @@ def q_quality_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
     u = dedup.md5_int_col(
         F.concat(F.lit("qsample|"), F.col("doc_id").cast("string")), 7
     )
-    kept = (u * 100) < (rate * _SAMPLE_SPACE)
+    kept = (u * 100) < (rate * dedup.SAMPLE_SPACE)
     return (
         docs.select("source", kept.alias("kept"))
         .groupBy("source")
@@ -1411,7 +1335,7 @@ def _sql_quality_weighted_sample() -> str:
     )
     return f"""
 SELECT source, count(*) AS n_docs,
-       CAST(sum(CASE WHEN ({u} * 100) < (floor({q} * 100) * {_SAMPLE_SPACE})
+       CAST(sum(CASE WHEN ({u} * 100) < (floor({q} * 100) * {dedup.SAMPLE_SPACE})
                 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
 FROM documents GROUP BY source
 """
@@ -1453,28 +1377,13 @@ def _sql_pack_blocks() -> str:
 
 
 # --- deterministic stratified sampling (training-mix weighting) ---------------
-# per-lang keep rates in integer percent — mixture weighting a
-# pretraining pipeline applies before tokenization
-SAMPLE_RATES_PCT = {"en": 50, "de": 75, "es": 25, "fr": 100, "zh": 10}
-_SAMPLE_SPACE = 16**7  # md5_int_col(_, 7) range
-
-
 def q_stratified_sample_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic hash-based stratified sampling: doc kept iff
-    md5('sample|' || doc_id) < rate — reproducible across engines,
-    runs, and cluster sizes (no RNG state), the property a resumable
-    100 TB mixing job needs. Integer threshold compare
-    (u * 100 < pct * 16^7): no float boundary anywhere."""
+    """Per-lang counts of the deterministic hash-based stratified
+    sample (dedup.stratified_keep_col; unlisted langs sample 0%) —
+    reproducible across engines, runs, and cluster sizes, the property
+    a resumable 100 TB mixing job needs."""
     docs = _docs(spark, sf)
-    u = dedup.md5_int_col(
-        F.concat(F.lit("sample|"), F.col("doc_id").cast("string")), 7
-    )
-    expr = None
-    for lang, pct in SAMPLE_RATES_PCT.items():
-        cond = F.col("lang") == lang
-        expr = F.when(cond, pct) if expr is None else expr.when(cond, pct)
-    rate_pct = expr.otherwise(F.lit(0))
-    kept = (u * 100) < (rate_pct.cast("long") * _SAMPLE_SPACE)
+    kept = dedup.stratified_keep_col(F.col("doc_id"), F.col("lang"), 0)
     return docs.select("lang", kept.alias("kept")).groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.col("kept").cast("int")).alias("n_sampled"),
@@ -1485,18 +1394,14 @@ def _sql_stratified_sample_counts() -> str:
     u = dedup.duckdb_md5_int_sql("'sample|' || CAST(doc_id AS VARCHAR)", 7)
     rate = "CASE " + " ".join(
         f"WHEN lang = '{lang}' THEN {pct}"
-        for lang, pct in SAMPLE_RATES_PCT.items()
+        for lang, pct in dedup.SAMPLE_RATES_PCT.items()
     ) + " ELSE 0 END"
     return f"""
 SELECT lang, count(*) AS n_docs,
-  CAST(sum(CASE WHEN {u} * 100 < CAST({rate} AS BIGINT) * {_SAMPLE_SPACE}
+  CAST(sum(CASE WHEN {u} * 100 < CAST({rate} AS BIGINT) * {dedup.SAMPLE_SPACE}
             THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
 FROM documents GROUP BY lang
 """
-
-
-QUALITY_MIN = 0.55
-TOKENS_MIN, TOKENS_MAX = 10, 2000
 
 
 def q_training_filter_pipeline(spark: SparkSession, sf: str) -> DataFrame:
@@ -1504,13 +1409,12 @@ def q_training_filter_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     language-ID agreement, quality threshold, token-count band —
     emitted as per-source funnel counts (all JVM expressions, one
     scan + one aggregate)."""
-    docs = _docs(spark, sf)
-    t = F.col("text")
-    flags = docs.select(
+    lang_ok, quality_ok, len_ok = ts.quality_gate_cols(F.col("text"), F.col("lang"))
+    flags = _docs(spark, sf).select(
         "source",
-        (ts.lang_guess_col(t) == F.col("lang")).alias("lang_ok"),
-        (ts.quality_score_col(t) >= QUALITY_MIN).alias("quality_ok"),
-        ts.token_count_col(t).between(TOKENS_MIN, TOKENS_MAX).alias("len_ok"),
+        lang_ok.alias("lang_ok"),
+        quality_ok.alias("quality_ok"),
+        len_ok.alias("len_ok"),
     )
     return flags.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -1526,9 +1430,9 @@ def q_training_filter_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 
 def _sql_training_filter_pipeline() -> str:
     lang_ok = f"({ts.duckdb_lang_guess_sql('text')} = lang)"
-    quality_ok = f"({ts.duckdb_quality_score_sql('text')} >= {QUALITY_MIN})"
+    quality_ok = f"({ts.duckdb_quality_score_sql('text')} >= {ts.QUALITY_MIN})"
     len_ok = (
-        f"({ts.duckdb_token_count_sql('text')} BETWEEN {TOKENS_MIN} AND {TOKENS_MAX})"
+        f"({ts.duckdb_token_count_sql('text')} BETWEEN {ts.TOKENS_MIN} AND {ts.TOKENS_MAX})"
     )
     return f"""
 SELECT source, count(*) AS n_docs,
@@ -1717,36 +1621,12 @@ def q_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
         .select("batch_id", "corpus_id")
         .distinct()
     )
-    # candidates-only verification: shingle ONLY rows that appear in
-    # cand (a semi-join each side), never the whole corpus — at corpus
-    # scale the full-text parse is the expensive stage and candidates
-    # are a vanishing fraction (measured here: 17.5 s -> 0.9 s, the
-    # un-filtered corpus shingle pass ran single-partition)
-    sh_c = (
-        corpus.join(
-            cand.select(F.col("corpus_id").alias("doc_id")).distinct(),
-            "doc_id",
-        )
-        .select("doc_id", dedup.shingles_col(F.col("text")).alias("sh"))
-    )
-    sh_b = (
-        batch.join(
-            cand.select(F.col("batch_id").alias("doc_id")).distinct(),
-            "doc_id",
-        )
-        .select("doc_id", dedup.shingles_col(F.col("text")).alias("sh"))
-    )
-    jac = round_bin(dedup.jaccard_col(F.col("sh1"), F.col("sh2")), 4)
+    # candidates-only verification (dedup.candidate_jaccard)
     return (
-        cand.join(
-            sh_b.select(F.col("doc_id").alias("batch_id"), F.col("sh").alias("sh1")),
-            "batch_id",
+        dedup.candidate_jaccard(cand, batch, corpus)
+        .select(
+            "batch_id", "corpus_id", round_bin(F.col("jaccard"), 4).alias("jaccard")
         )
-        .join(
-            sh_c.select(F.col("doc_id").alias("corpus_id"), F.col("sh").alias("sh2")),
-            "corpus_id",
-        )
-        .select("batch_id", "corpus_id", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= INCR_JACCARD)
     )
 

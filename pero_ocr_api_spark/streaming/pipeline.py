@@ -21,7 +21,7 @@ upload_results per page        idempotent per-batch append
 Two entry points:
 
 * :func:`stream_clean_text` — fully streaming stateless plan (explode
-  → X9 cleaner → append sink). Shows the text path is
+  → the batch ``text_path`` → append sink). Shows the text path is
   streaming-compatible as-is (pure Catalyst expressions).
 * :func:`stream_extract` — the complete pipeline via ``foreachBatch``:
   each micro-batch runs the same ``run_extract`` used in batch mode
@@ -39,9 +39,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pero_ocr_api_spark.functions.arabic import normalize_arabic_col
-from pero_ocr_api_spark.functions.html_clean import clean_html_col
-from pero_ocr_api_spark.plans.extract import run_extract
+from pero_ocr_api_spark.plans.extract import run_extract, text_path
 from pero_ocr_api_spark.session import cache_scope
 from pero_ocr_api_spark.sources.tables import DOCUMENTS_SCHEMA
 
@@ -55,17 +53,9 @@ def stream_clean_text(spark: SparkSession, input_path: str) -> DataFrame:
         .parquet(input_path)
     )
     spans = stream.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.offset").alias("offset"),
+        "doc_id", "s.kind", "s.text", "s.offset"
     )
-    cleaned = F.when(
-        F.col("kind") == "html", clean_html_col(F.col("text"))
-    ).otherwise(F.coalesce(F.col("text"), F.lit("")))
-    return spans.filter(F.col("kind") != "media").select(
-        "doc_id", "offset", "kind", normalize_arabic_col(cleaned).alias("text")
-    )
+    return text_path(spans).select("doc_id", "offset", "kind", "text")
 
 
 EVENTS_STREAM_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -368,9 +358,9 @@ def stream_incremental_embedding_dedup(
     of the batch ``incremental_embedding_dedup`` query and the stream
     hook of the embedding index (``plans.io.write_embedding_index``).
     Each incoming vector is sign-LSH-bucketed per row
-    (``similarity.bucket_struct_col`` — a pure projection, identical
-    to the batch/index expression, so stream and index buckets always
-    agree) and equi-joined against the pre-built corpus band index;
+    (a pure projection of the expression behind
+    ``similarity.embedding_bands_df``, so stream and index buckets
+    always agree) and equi-joined against the pre-built corpus band index;
     candidate pairs dedupe across tables inside the watermark, then an
     exact-cosine verify joins the static corpus VECTORS —
     candidates-only, never corpus × stream.
@@ -385,22 +375,9 @@ def stream_incremental_embedding_dedup(
     from pero_ocr_api_spark.operators import similarity
 
     if corpus_bands is None:
-        e = similarity.as_double_vec(corpus.select("vec_id", "embedding"))
-        corpus_bands = (
-            e.select(
-                "vec_id",
-                F.explode(
-                    similarity.bucket_struct_col(
-                        F.col("v"),
-                        dim,
-                        similarity.ANN_SELF_TABLES,
-                        similarity.ANN_SELF_PLANES,
-                    )
-                ).alias("b"),
-            )
-            .select("vec_id", "b.t", "b.bucket")
-            .localCheckpoint(eager=True)
-        )
+        corpus_bands = similarity.embedding_bands_df(
+            similarity.as_double_vec(corpus.select("vec_id", "embedding")), dim
+        ).localCheckpoint(eager=True)
     c_vec = similarity._with_norm(corpus.select("vec_id", "embedding")).select(
         F.col("vec_id").alias("corpus_id"),
         F.col("v").alias("cv"),

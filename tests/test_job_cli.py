@@ -203,9 +203,8 @@ def test_curate_job_failure_frees_its_caches(spark):
             spark.createDataFrame([("not-a-number", "x")], "doc_id string, text string")
         ).write.parquet(f"{d}/corpus")
         before = _persisted_ids(spark)
-        # with ANSI mode on the cast itself raises (CAST_INVALID_INPUT)
-        # before the job's own uncastable-id guard; either way it raises
-        with pytest.raises(Exception, match="cast"):
+        # try_cast lets the job's own guard name the problem
+        with pytest.raises(ValueError, match="1 values that do not cast to long"):
             curate_job.main(
                 ["--documents", corpus_path, "--output", f"{d}/kept",
                  "--no-sampling", "--band-index", table,
@@ -278,6 +277,50 @@ def test_curate_job_end_to_end(spark):
         assert curate_job.main(argv) == 0
     kept2 = {r.doc_id for r in spark.read.parquet(f"{d}/kept").collect()}
     assert kept1 == kept2  # hash-based sampling: no RNG state anywhere
+
+
+def test_curate_gate_count_matches_duckdb(spark):
+    """The job's quality + repetition gates agree with their DuckDB
+    twins: the funnel's gate count equals the DuckDB count of docs
+    passing both gates, built from the twin fragments of
+    training_filter_pipeline and repetition_stats."""
+    import io as _io
+    from contextlib import redirect_stdout
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import curate_job
+
+    from pero_ocr_api_spark.functions import text_stats as ts
+    from pero_ocr_api_spark.operators import dedup
+    from tests.parity import duck_connect
+
+    sf = "/root/testdata/sf0.001"
+    d = tempfile.mkdtemp()
+    buf = _io.StringIO()
+    with redirect_stdout(buf):
+        assert curate_job.main(
+            ["--documents", f"{sf}/documents.parquet", "--output", f"{d}/kept",
+             "--no-sampling"]
+        ) == 0
+    gated = json.loads(buf.getvalue().strip().splitlines()[-1])["funnel"][
+        "after_quality_and_repetition"
+    ]
+    sql = f"""
+SELECT count(*) FROM (
+  SELECT {ts.duckdb_lang_guess_sql('text')} = lang AS lang_ok,
+         {ts.duckdb_quality_score_sql('text')} >= {ts.QUALITY_MIN} AS quality_ok,
+         {ts.duckdb_token_count_sql('text')}
+           BETWEEN {ts.TOKENS_MIN} AND {ts.TOKENS_MAX} AS len_ok,
+         {dedup.duckdb_repetition_sizes_sql('text')}
+  FROM documents
+)
+WHERE lang_ok AND quality_ok AND len_ok
+  AND NOT ({dedup.REP_TOKEN_DEN} * (n_tok - nd_tok) > {dedup.REP_TOKEN_NUM} * n_tok)
+  AND NOT ({dedup.REP_GRAM_DEN} * (n_g - nd_g) > {dedup.REP_GRAM_NUM} * n_g
+           AND n_g > 0)
+"""
+    expected = duck_connect(sf).execute(sql).fetchone()[0]
+    assert 0 < gated == expected
 
 
 def test_curate_job_embedding_stage(spark):

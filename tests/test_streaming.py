@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pero_ocr_api_spark.plans.extract import run_extract
+from pero_ocr_api_spark.plans.extract import run_extract, text_path
 from pero_ocr_api_spark.streaming.pipeline import stream_clean_text, stream_extract
 
 
@@ -68,6 +68,12 @@ def test_stream_clean_text_rows(spark, docs_df, staged, corpus_pandas):
     assert got.count() == expected
     # boilerplate is stripped in-flight
     assert got.filter(F.col("text").contains("var tracker")).count() == 0
+    # the stream runs the batch text path: same rows for the same docs
+    spans = docs_df.select("doc_id", F.explode("spans").alias("s")).select(
+        "doc_id", "s.kind", "s.text", "s.offset"
+    )
+    batch = text_path(spans).select("doc_id", "offset", "kind", "text")
+    assert sorted(got.collect()) == sorted(batch.collect())
 
 
 def test_stream_user_sessions_matches_batch(spark):
