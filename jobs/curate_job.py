@@ -176,7 +176,7 @@ def _curate(spark, args, job: tuple) -> int:
 
     from pero_ocr_api_spark.functions import text_stats as ts
     from pero_ocr_api_spark.operators import dedup
-    from pero_ocr_api_spark.session import cache, release
+    from pero_ocr_api_spark.session import cache, checkpoint, release
 
     t0 = time.monotonic()
     docs = spark.read.parquet(args.documents).select(
@@ -247,7 +247,12 @@ def _curate(spark, args, job: tuple) -> int:
         n_deduped = None
     else:
         near_dups = vpairs.select(F.col("id2").alias("doc_id")).distinct()
-        deduped = exact_kept.join(near_dups, "doc_id", "left_anti")
+        # each stage's survivors are checkpointed, not just counted: the
+        # next stage joins `deduped` again, and without the cut every
+        # later plan nests all earlier stages (a ~70 MB plan string at
+        # the final write with both index stages, which AQE re-renders
+        # on every plan update)
+        deduped = checkpoint(exact_kept.join(near_dups, "doc_id", "left_anti"), job)
         n_deduped = deduped.count()
 
     # -- 4b: embedding near-dup (corpus-scale ANN self-join) -------------
@@ -270,7 +275,7 @@ def _curate(spark, args, job: tuple) -> int:
             n_deduped_emb = None
         else:
             emb_dups = emb_pairs.select(F.col("id2").alias("doc_id")).distinct()
-            deduped = deduped.join(emb_dups, "doc_id", "left_anti")
+            deduped = checkpoint(deduped.join(emb_dups, "doc_id", "left_anti"), job)
             n_deduped_emb = deduped.count()
         # same skew metrics as the text LSH: the bands are already
         # cached by ann_self_pairs, so this is one cheap aggregate
@@ -290,7 +295,7 @@ def _curate(spark, args, job: tuple) -> int:
         drops = comps.filter(F.col("node") != F.col("component")).select(
             F.col("node").alias("doc_id")
         )
-        deduped = exact_kept.join(drops, "doc_id", "left_anti")
+        deduped = checkpoint(exact_kept.join(drops, "doc_id", "left_anti"), job)
         n_deduped = deduped.count()
         closure_report = {
             "n_dup_components": comps.select("component").distinct().count(),
@@ -340,7 +345,7 @@ def _curate(spark, args, job: tuple) -> int:
             .select(F.col("batch_id").alias("doc_id"))
             .distinct()
         )
-        deduped = deduped.join(drops, "doc_id", "left_anti")
+        deduped = checkpoint(deduped.join(drops, "doc_id", "left_anti"), job)
         n_after = deduped.count()
         release(*stage)
         incr_report["incremental_text"] = {
@@ -375,7 +380,7 @@ def _curate(spark, args, job: tuple) -> int:
                 .select(F.col("batch_id").alias("doc_id"))
                 .distinct()
             )
-            deduped = deduped.join(drops, "doc_id", "left_anti")
+            deduped = checkpoint(deduped.join(drops, "doc_id", "left_anti"), job)
             n_after = deduped.count()
             release(*stage)
             incr_report["incremental_embedding"] = {

@@ -33,7 +33,6 @@ def parse_args(argv):
     p.add_argument("--lineage", help="lineage table path (default <output>_lineage)")
     p.add_argument("--run-id", default=f"run-{int(time.time())}")
     p.add_argument("--resume", action="store_true", help="skip already-extracted doc_ids")
-    p.add_argument("--salt-buckets", type=int, default=16)
     p.add_argument(
         "--table-format",
         choices=["parquet", "iceberg"],
@@ -89,7 +88,6 @@ def main(argv=None) -> int:
             config=config or None,
             run_id=args.run_id,
             resume_from=resume_from,
-            salt_buckets=args.salt_buckets,
         )
         # lineage first: writing the output refreshes every cache whose
         # plan reads the output path — the media cache sits behind the

@@ -5,15 +5,14 @@ aggregate* — never by relying on shuffle arrival order. This produces
 the per-row invariant: span-sequence equality ``(kind, text,
 media_ref, order)``.
 
-Scale design: a media-heavy document (FIXTURES §1: 20-50+ spans, at
-100 TB potentially thousands) is a skewed group for
-``groupBy(doc_id)``. The aggregation therefore runs in two levels —
-partial collect per ``(doc_id, salt)`` where ``salt =
-pmod(hash(offset), salt_buckets)``, then a final merge per ``doc_id``
-— so no single reducer receives one giant unsplittable group
-(map-side partials spread over ``salt_buckets`` reducers). The final
-merge handles only pre-bundled arrays. ``salt_buckets=1`` degenerates
-to a plain one-level groupBy for tiny inputs.
+Scale design: one ``groupBy(doc_id)``, one shuffle. A media-heavy
+document (FIXTURES §1: 20-50+ spans, at 100 TB potentially thousands)
+is a larger group, but its reducer receives every span of the
+document whichever way the aggregate is split, so salting the key
+into partial groups only adds a second shuffle. The partial
+aggregate runs map-side before that one shuffle. The aggregate and
+output Columns are built once per SparkContext
+(``session.per_context``) and reused by every run.
 """
 
 from __future__ import annotations
@@ -21,25 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# processed-span relation expected by restitch (output of the text and
-# media paths in plans/extract.py)
-SPAN_COLS = (
-    "doc_id",
-    "offset",
-    "kind",
-    "text",
-    "media_ref",
-    "state",
-    "error",
-    "alto_xml",
-    "page_xml",
-    "txt",
-    "confs",
-)
+from pero_ocr_api_spark.session import per_context
 
 
-def restitch(span_rows: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Aggregate processed span rows into `extracted` documents."""
+@per_context
+def _cols() -> tuple:
     span_struct = F.struct("offset", "kind", "text", "media_ref")
     fail_struct = F.when(
         F.col("state") != "PROCESSED", F.struct("offset", "state", "error")
@@ -48,26 +33,12 @@ def restitch(span_rows: DataFrame, salt_buckets: int = 16) -> DataFrame:
         F.col("alto_xml").isNotNull(),
         F.struct("offset", "alto_xml", "page_xml", "txt"),
     )
-
-    partial = (
-        span_rows.groupBy(
-            "doc_id",
-            F.pmod(F.hash("offset"), F.lit(salt_buckets)).alias("_salt"),
-        )
-        .agg(
-            F.collect_list(span_struct).alias("p_spans"),
-            F.collect_list(fail_struct).alias("p_fails"),
-            F.collect_list(export_struct).alias("p_exports"),
-            F.flatten(F.collect_list("confs")).alias("p_confs"),
-        )
-    )
-
-    merged = partial.groupBy("doc_id").agg(
-        F.array_sort(F.flatten(F.collect_list("p_spans"))).alias("o_spans"),
-        F.array_sort(F.flatten(F.collect_list("p_fails"))).alias("o_fails"),
-        F.array_sort(F.flatten(F.collect_list("p_exports"))).alias("o_exports"),
-        F.array_sort(F.flatten(F.collect_list("p_confs"))).alias("o_confs"),
-    )
+    aggs = [
+        F.array_sort(F.collect_list(span_struct)).alias("o_spans"),
+        F.array_sort(F.collect_list(fail_struct)).alias("o_fails"),
+        F.array_sort(F.collect_list(export_struct)).alias("o_exports"),
+        F.array_sort(F.flatten(F.collect_list("confs"))).alias("o_confs"),
+    ]
 
     n = F.size("o_confs")
     h = (n - F.lit(1)).cast("double") * 0.5
@@ -90,8 +61,9 @@ def restitch(span_rows: DataFrame, salt_buckets: int = 16) -> DataFrame:
         F.array_join(F.transform("o_exports", lambda e: e[field]), sep),
     )
 
-    return merged.select(
-        "doc_id",
+    doc_id = F.col("doc_id")
+    return doc_id, aggs, [
+        doc_id,
         F.transform(
             "o_spans",
             lambda s: F.struct(
@@ -108,4 +80,12 @@ def restitch(span_rows: DataFrame, salt_buckets: int = 16) -> DataFrame:
         join_exports("page_xml", "\n").alias("page_xml"),
         # per-media txt is already newline-terminated — plain concat
         join_exports("txt", "").alias("txt"),
-    )
+    ]
+
+
+def restitch(span_rows: DataFrame) -> DataFrame:
+    """Aggregate processed span rows (doc_id, offset, kind, text,
+    media_ref, state, error, alto_xml, page_xml, txt, confs — the text
+    and media paths of plans/extract.py) into `extracted` documents."""
+    doc_id, aggs, out = _cols()
+    return span_rows.groupBy(doc_id).agg(*aggs).select(*out)

@@ -11,7 +11,7 @@ loop (``routes.py:39-59`` → ``general.py:112-151`` →
                                 │   media_ref → mapInPandas OCR kernel
                                 │   (Arrow batches, per-doc failure
                                 │   capture — U4 semantics)
-                                └─ union → restitch (X10, salted) →
+                                └─ union → restitch (X10) →
                                     `extracted` (+ per-partition
                                     lineage rows)
 
@@ -23,7 +23,9 @@ Scale notes (designed for 10^12 docs / 100 TB, tested at local[32]):
   (Repartitioning by ``doc_id`` *before* the UDF would concentrate a
   heavy doc on one executor — deliberately avoided; doc locality is
   only needed at the stitch, where rows are already small.)
-* The stitch groupBy is two-level salted (operators/restitch.py).
+* The blobs, already shuffled on ``media_ref``, are merge-joined, never
+  also broadcast; the stitch is one ``groupBy(doc_id)`` (restitch.py).
+* A run's Columns are built once per SparkContext (``per_context``).
 * Text path never leaves the JVM; only media rows pay the Arrow hop.
 * Resume (U6/watchdog analog): ``resume_from`` anti-joins already-
   extracted doc_ids, so a rerun after failure is incremental and
@@ -40,6 +42,7 @@ import hashlib
 import json
 import time
 from collections.abc import Iterator
+from types import SimpleNamespace
 from typing import Any
 
 import pandas as pd
@@ -49,11 +52,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pero_ocr_api_spark.functions.arabic import normalize_arabic_col
-from pero_ocr_api_spark.functions.html_clean import clean_html_col
 from pero_ocr_api_spark.ocr import kernel
 from pero_ocr_api_spark.operators.restitch import restitch
-from pero_ocr_api_spark.session import cache, release
-from pero_ocr_api_spark.sources.tables import LINEAGE_SCHEMA
+from pero_ocr_api_spark.session import cache, per_context, release
 
 LINEAGE_SENTINEL = "__lineage__"
 
@@ -143,22 +144,27 @@ def _media_map_fn(config: dict[str, Any], run_id: str):
                 "wall_ms": int((time.monotonic() - t0) * 1000),
             }
         )
+        sentinel = {"doc_id": "", "offset": -1, "media_ref": LINEAGE_SENTINEL,
+                    "text": payload, "state": "LINEAGE"}
         yield pd.DataFrame(
-            {
-                "doc_id": [""],
-                "offset": [-1],
-                "media_ref": [LINEAGE_SENTINEL],
-                "text": [payload],
-                "state": ["LINEAGE"],
-                "error": [None],
-                "alto_xml": [None],
-                "page_xml": [None],
-                "txt": [None],
-                "confs": [None],
-            }
+            {f.name: [sentinel.get(f.name)] for f in MEDIA_OUT_SCHEMA.fields}
         )
 
     return fn
+
+
+@per_context
+def _text_cols(engine) -> tuple:
+    null = F.lit(None).cast("string")
+    cleaned = engine.text_expr(F.col("kind"), F.col("text"))
+    return F.col("kind") != "media", [
+        *(F.col(c) for c in ("doc_id", "offset", "kind")),
+        normalize_arabic_col(cleaned).alias("text"),
+        null.alias("media_ref"),
+        F.lit("PROCESSED").alias("state"),
+        *(null.alias(c) for c in ("error", "alto_xml", "page_xml", "txt")),
+        F.array().cast("array<double>").alias("confs"),
+    ]
 
 
 def text_path(spans: DataFrame, engine=None) -> DataFrame:
@@ -169,20 +175,30 @@ def text_path(spans: DataFrame, engine=None) -> DataFrame:
     rows; the default engine wires html→cleaner, text→passthrough."""
     from pero_ocr_api_spark.plans.registry import DEFAULT_ENGINE
 
-    eng = engine or DEFAULT_ENGINE
-    cleaned = eng.text_expr(F.col("kind"), F.col("text"))
-    return spans.filter(F.col("kind") != "media").select(
-        "doc_id",
-        "offset",
-        "kind",
-        normalize_arabic_col(cleaned).alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit("PROCESSED").alias("state"),
-        F.lit(None).cast("string").alias("error"),
-        F.lit(None).cast("string").alias("alto_xml"),
-        F.lit(None).cast("string").alias("page_xml"),
-        F.lit(None).cast("string").alias("txt"),
-        F.array().cast("array<double>").alias("confs"),
+    keep, cols = _text_cols(engine or DEFAULT_ENGINE)
+    return spans.filter(keep).select(*cols)
+
+
+@per_context
+def _media_cols() -> SimpleNamespace:
+    ref = F.col("media_ref")
+    text = F.col("text")
+    return SimpleNamespace(
+        ref=ref,
+        is_media=F.col("kind") == "media",
+        refs=[F.col(c) for c in ("doc_id", "offset", "media_ref")],
+        blobs=[F.col(c) for c in ("media_ref", "media_kind", "media_bytes")],
+        joined=[F.col(c) for c in ("doc_id", "offset", "media_ref", "media_kind", "media_bytes")],
+        is_row=ref.isNull() | (ref != LINEAGE_SENTINEL),
+        is_lineage=ref == LINEAGE_SENTINEL,
+        lineage=[
+            F.get_json_object(text, "$.run_id").alias("run_id"),
+            F.spark_partition_id().alias("partition_id"),
+            F.get_json_object(text, "$.docs_in").cast("long").alias("docs_in"),
+            F.get_json_object(text, "$.docs_out").cast("long").alias("docs_out"),
+            F.get_json_object(text, "$.span_hash").alias("span_hash"),
+            F.get_json_object(text, "$.wall_ms").cast("long").alias("wall_ms"),
+        ],
     )
 
 
@@ -201,6 +217,7 @@ def media_path(
     handful of partitions and serialize the kernel. Hash on media_ref
     (unique) → perfectly uniform spread regardless of doc skew."""
     cfg = {**kernel.DEFAULT_CONFIG, **(config or {})}
+    c = _media_cols()
     if udf_partitions is None:
         # one partition per core: per-task Python round-trips carry a
         # fixed cost, so bigger partitions beat finer ones as long as
@@ -214,17 +231,19 @@ def media_path(
     # the compute-bound UDF stage down to one task. On Iceberg the
     # media table would be bucketed by media_ref, removing even this
     # single blob shuffle.
-    refs = (
-        spans.filter(F.col("kind") == "media")
-        .select("doc_id", "offset", "media_ref")
-        .repartition(udf_partitions, "media_ref")
-    )
-    blobs = media.select("media_ref", "media_kind", "media_bytes").repartition(
-        udf_partitions, "media_ref"
-    )
-    joined = refs.join(blobs, "media_ref", "left").select(
-        "doc_id", "offset", "media_ref", "media_kind", "media_bytes"
-    )
+    refs = spans.filter(c.is_media).select(*c.refs).repartition(udf_partitions, c.ref)
+    # the reordering select between the refs shuffle and the join keeps
+    # udf_partitions: when BOTH inputs of a sort-merge join are shuffles,
+    # Spark re-creates them at spark.sql.shuffle.partitions if that is
+    # more (EnsureRequirements' minimum parallelism)
+    refs = refs.select(*reversed(c.refs))
+    # merge, not broadcast: the blobs are already shuffled here, and a
+    # blob table under autoBroadcastJoinThreshold would be collected
+    # and broadcast on top (AQE converts the join at runtime). Not
+    # shuffle_hash either: its per-partition hash table of blobs
+    # cannot spill, the sort-merge join's sort can.
+    blobs = media.select(*c.blobs).repartition(udf_partitions, c.ref).hint("merge")
+    joined = refs.join(blobs, "media_ref", "left").select(*c.joined)
     out = joined.mapInPandas(_media_map_fn(cfg, run_id), MEDIA_OUT_SCHEMA)
     # the UDF output feeds two consumers (extracted rows + lineage);
     # persist so the expensive OCR stage runs exactly once. The cache
@@ -235,17 +254,17 @@ def media_path(
     # afterwards would drop the new cache with it.)
     release_run(run_id)
     out = cache(out, ("run", run_id))
-    rows = out.filter(F.col("media_ref").isNull() | (F.col("media_ref") != LINEAGE_SENTINEL))
-    lineage_raw = out.filter(F.col("media_ref") == LINEAGE_SENTINEL)
-    lineage = lineage_raw.select(
-        F.get_json_object("text", "$.run_id").alias("run_id"),
-        F.spark_partition_id().alias("partition_id"),
-        F.get_json_object("text", "$.docs_in").cast("long").alias("docs_in"),
-        F.get_json_object("text", "$.docs_out").cast("long").alias("docs_out"),
-        F.get_json_object("text", "$.span_hash").alias("span_hash"),
-        F.get_json_object("text", "$.wall_ms").cast("long").alias("wall_ms"),
+    return out.filter(c.is_row), out.filter(c.is_lineage).select(*c.lineage)
+
+
+@per_context
+def _run_cols() -> SimpleNamespace:
+    return SimpleNamespace(
+        explode=[F.col("doc_id"), F.explode("spans").alias("s")],
+        spans=[F.col("doc_id")]
+        + [F.col(f"s.{f}").alias(f) for f in ("kind", "text", "media_ref", "offset")],
+        media_kind=F.lit("media"),
     )
-    return rows, lineage
 
 
 def run_extract(
@@ -255,7 +274,6 @@ def run_extract(
     config: dict[str, Any] | None = None,
     run_id: str = "run0",
     resume_from: DataFrame | None = None,
-    salt_buckets: int = 16,
     udf_partitions: int | None = None,
     engine=None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -266,20 +284,13 @@ def run_extract(
     doc_id because resume anti-joins existing output.
     """
     if resume_from is not None:
-        docs = docs.join(
-            resume_from.select("doc_id"), "doc_id", "left_anti"
-        )
-    spans = docs.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
+        docs = docs.join(resume_from.select("doc_id"), "doc_id", "left_anti")
+    c = _run_cols()
+    spans = docs.select(*c.explode).select(*c.spans)
     if engine is not None:
         config = {**engine.kernel_config(), **(config or {})}
     t_rows = text_path(spans, engine)
     m_rows, lineage = media_path(spans, media, config, run_id, udf_partitions)
-    m_rows = m_rows.withColumn("kind", F.lit("media"))
-    extracted = restitch(t_rows.unionByName(m_rows), salt_buckets=salt_buckets)
+    m_rows = m_rows.withColumn("kind", c.media_kind)
+    extracted = restitch(t_rows.unionByName(m_rows))
     return extracted, lineage

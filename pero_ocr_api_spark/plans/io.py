@@ -15,7 +15,7 @@ parquet:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.session import cache, cache_scope
@@ -59,7 +59,10 @@ def write_extracted(
     against rows already in the *target* — without the source dedupe
     they would land twice. The Iceberg temp view gets a unique
     per-call name so two concurrent ``write_extracted`` calls in one
-    SparkSession cannot race on it."""
+    SparkSession cannot race on it.
+
+    The parquet branch is one job, counted by ``observe`` on the write;
+    a batch with no new rows appends at most one empty file."""
     extracted = extracted.dropDuplicates(["doc_id"])
     if table_format == "iceberg":
         import uuid
@@ -82,12 +85,10 @@ def write_extracted(
     new_rows = (
         extracted if done is None else extracted.join(done, "doc_id", "left_anti")
     )
-    with cache_scope():
-        new_rows = cache(new_rows)
-        n = new_rows.count()
-        if n:
-            new_rows.write.mode("append").parquet(path)
-    return n
+    written = Observation()
+    writer = new_rows.observe(written, F.count(F.lit(1)).alias("n")).write
+    writer.mode("append").parquet(path)
+    return written.get["n"]
 
 
 def write_extracted_bucketed(

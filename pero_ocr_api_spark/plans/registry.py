@@ -31,7 +31,9 @@ from pero_ocr_api_spark.functions.html_clean import clean_html_col
 SpanProcessor = Callable[[Column], Column]
 
 
-@dataclass(frozen=True)
+# eq=False: engines compare and hash by identity, so plans/extract.py
+# can key the Columns it builds per engine on the engine itself
+@dataclass(frozen=True, eq=False)
 class Engine:
     name: str
     version: str

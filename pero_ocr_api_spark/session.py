@@ -4,8 +4,8 @@ Scale design (local[32] sandbox stands in for a 1000-executor cluster):
 
 * AQE on — runtime coalescing of shuffle partitions, skew-join
   splitting.  At 100 TB the media stage is the skew hazard (media-heavy
-  documents), so ``spark.sql.adaptive.skewJoin`` stays enabled and the
-  extract plan additionally salts media-heavy docs explicitly.
+  documents), so ``spark.sql.adaptive.skewJoin`` stays enabled; the
+  extract plan spreads media rows by their unique ``media_ref``.
 * Arrow on — every Python-side kernel is an Arrow-batched pandas UDF;
   ``maxRecordsPerBatch`` is kept small for the media stage because each
   record can carry a multi-megapixel decoded page.
@@ -16,11 +16,13 @@ Scale design (local[32] sandbox stands in for a 1000-executor cluster):
 
 from __future__ import annotations
 
+import functools
 import itertools
 import os
 from collections.abc import Callable, Hashable, Iterator
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 # Arrow batch size for media-carrying stages. Sandbox fixture pages
@@ -114,9 +116,28 @@ def stop_spark() -> None:
         active.stop()
 
 
+def per_context(build: Callable) -> Callable:
+    """Memoize ``build(*key)`` per active SparkContext: each Column call
+    is a py4j round trip, and a Column is a handle into the context it
+    was built in, so a new context gets a fresh build."""
+    built: dict[tuple, tuple] = {}  # key -> (context, build(*key))
+
+    @functools.wraps(build)
+    def get(*key: Hashable):
+        sc = SparkContext._active_spark_context
+        # two threads racing here both build; either result is valid
+        hit = built.get(key)
+        if hit is None or hit[0] is not sc:
+            hit = built[key] = (sc, build(*key))
+        return hit[1]
+
+    return get
+
+
 # --- the cache registry --------------------------------------------------
-# Every DataFrame the package persists is recorded here under a scope
-# key (a tuple), and release() is the one path that frees it:
+# Every DataFrame the package persists (cache) or checkpoints
+# (checkpoint) is recorded here under a scope key (a tuple), and
+# release() is the one path that frees it:
 #   ("run", run_id)     one extract run's media-UDF output
 #                       (plans.extract.release_run);
 #   ("query",)          the registry query being built; plans.queries
@@ -126,7 +147,7 @@ def stop_spark() -> None:
 # A scope opened inside another extends the outer key, so releasing a
 # scope also releases every scope opened inside it.
 QUERY_SCOPE = ("query",)
-_CACHES: dict[tuple, list[DataFrame]] = {}
+_CACHES: dict[tuple, list] = {}  # DataFrames and checkpoint RDDs
 _OPEN: list[tuple] = []
 _SCOPE_IDS = itertools.count()
 
@@ -135,17 +156,29 @@ def cache(df: DataFrame, scope: tuple | None = None) -> DataFrame:
     """``df.cache()``, recorded under ``scope`` — by default the
     innermost open scope, else the query scope."""
     df = df.cache()
-    _CACHES.setdefault(scope or (_OPEN[-1] if _OPEN else QUERY_SCOPE), []).append(df)
+    _record(df, scope)
     return df
 
 
+def checkpoint(df: DataFrame, scope: tuple | None = None) -> DataFrame:
+    """``df.localCheckpoint()`` (computed now, plan cut to a scan of the
+    result), its RDD recorded like ``cache`` and freed by ``release``."""
+    df = df.localCheckpoint()
+    _record(df._jdf.queryExecution().logical().rdd(), scope)
+    return df
+
+
+def _record(handle, scope: tuple | None) -> None:
+    _CACHES.setdefault(scope or (_OPEN[-1] if _OPEN else QUERY_SCOPE), []).append(handle)
+
+
 def release(*prefix: Hashable) -> None:
-    """Unpersist every DataFrame recorded under a scope whose key
-    starts with ``prefix`` (no prefix: every scope)."""
+    """Unpersist every DataFrame (or checkpoint RDD) recorded under a
+    scope whose key starts with ``prefix`` (no prefix: every scope)."""
     for key in [k for k in _CACHES if k[: len(prefix)] == prefix]:
         for df in _CACHES.pop(key):
             try:
-                df.unpersist()
+                df.unpersist(False)
             except Exception:  # its session is already stopped
                 pass
 

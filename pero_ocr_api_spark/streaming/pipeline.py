@@ -25,7 +25,7 @@ Two entry points:
   streaming-compatible as-is (pure Catalyst expressions).
 * :func:`stream_extract` — the complete pipeline via ``foreachBatch``:
   each micro-batch runs the same ``run_extract`` used in batch mode
-  (media join + OCR UDF + salted stitch), writing parquet partitioned
+  (media join + OCR UDF + doc_id stitch), writing parquet partitioned
   by batch id. ``foreachBatch`` is the idiomatic bridge when a plan
   needs multi-stage shuffles per batch; the streaming checkpoint
   provides exactly-once batch replay, and writes are idempotent per

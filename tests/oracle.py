@@ -2,8 +2,8 @@
 
 Runs the same per-span kernels as the Spark plan — the *kernels* are
 shared on purpose, so these golden tests verify the distributed
-plumbing (explode, routing, media join, shuffle, salted stitch,
-ordering) against a trivially-correct sequential loop, plus the
+plumbing (explode, routing, media join, shuffle, the groupBy(doc_id)
+stitch, ordering) against a trivially-correct sequential loop, plus the
 decoded-text-vs-ground-truth check in test_pipeline_golden.py.
 """
 

@@ -31,6 +31,38 @@ def test_write_extracted_idempotent(spark, docs_df, media_df):
     assert back.select("doc_id").distinct().count() == back.count()
 
 
+def test_write_extracted_all_written_batch_returns_zero(spark, docs_df, media_df):
+    """A batch whose docs are all in the table already adds nothing:
+    the count observed on the write is 0, and the table keeps its rows
+    and its distinct doc_ids."""
+    from pero_ocr_api_spark.plans.extract import release_run
+
+    out = tempfile.mkdtemp() + "/extracted"
+    rows, _ = run_extract(spark, docs_df.limit(10), media_df, run_id="zero")
+    assert write_extracted(spark, rows, out) == 10
+    assert write_extracted(spark, rows, out) == 0
+    back = spark.read.parquet(out)
+    assert back.count() == 10
+    assert back.select("doc_id").distinct().count() == 10
+    release_run("zero")
+
+
+def test_write_extracted_count_is_rows_added(spark, docs_df, media_df):
+    """The returned count equals the rows the write added on read-back,
+    also when part of the batch was already written."""
+    from pero_ocr_api_spark.plans.extract import release_run
+
+    out = tempfile.mkdtemp() + "/extracted"
+    first, _ = run_extract(spark, docs_df.limit(25), media_df, run_id="cnt_a")
+    write_extracted(spark, first, out)
+    before = spark.read.parquet(out).count()
+    full, _ = run_extract(spark, docs_df, media_df, run_id="cnt_b")
+    n = write_extracted(spark, full, out)
+    assert 0 < n == spark.read.parquet(out).count() - before
+    release_run("cnt_a")
+    release_run("cnt_b")
+
+
 def test_write_extracted_dedupes_source_batch(spark, docs_df, media_df):
     """A retried upstream stage can hand the writer two copies of a
     doc in ONE batch; the anti-join only guards against rows already

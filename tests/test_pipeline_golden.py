@@ -18,9 +18,7 @@ from tests import oracle
 
 @pytest.fixture(scope="module")
 def extracted_rows(spark, docs_df, media_df):
-    extracted, lineage = run_extract(
-        spark, docs_df, media_df, run_id="golden", salt_buckets=4
-    )
+    extracted, lineage = run_extract(spark, docs_df, media_df, run_id="golden")
     rows = {r["doc_id"]: r.asDict(recursive=True) for r in extracted.collect()}
     lineage_rows = [r.asDict() for r in lineage.collect()]
     return rows, lineage_rows

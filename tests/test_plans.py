@@ -4,6 +4,8 @@ pruning, broadcast dims, no stray shuffles)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pero_ocr_api_spark.plans.queries import QUERIES
@@ -79,12 +81,19 @@ def test_text_path_stays_in_jvm(spark, docs_df):
 
 def test_extract_media_stage_partitioning(spark, docs_df, media_df):
     """The explicit pre-UDF repartition must survive optimization."""
-    from pero_ocr_api_spark.plans.extract import run_extract
+    from pero_ocr_api_spark.plans.extract import release_run, run_extract
 
     extracted, _ = run_extract(spark, docs_df, media_df, run_id="plantest")
     plan = extracted._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "hashpartitioning(media_ref" in plan
+    # fewer UDF partitions than spark.sql.shuffle.partitions: the
+    # sort-merge media join must not raise the count (one lineage row
+    # per UDF partition)
+    _, lineage = run_extract(spark, docs_df, media_df, run_id="plantest4", udf_partitions=3)
+    assert lineage.count() == 3
+    release_run("plantest")
+    release_run("plantest4")
 
 
 def test_top_ngrams_takeordered_with_partials(spark):
@@ -108,3 +117,114 @@ def test_source_overlap_scans_corpus_once(spark):
         assert "partial_min" in plan  # map-side minima for the signature
     finally:
         release(*QUERY_SCOPE)
+
+
+def _final_plan(spark, path: str) -> str:
+    """The final (AQE-materialized) physical plan of the write into
+    ``path``, from Spark's SQL status store. Each nested AQE plan keeps
+    only its ``Final Plan`` part."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+    execs = conv.asJava(spark._jsparkSession.sharedState().statusStore().executionsList())
+    # newest first: the list is in execution-id order
+    plan = next(
+        d
+        for d in (execs.get(i).physicalPlanDescription() for i in reversed(range(execs.size())))
+        if path in d
+    )
+    tree = []
+    for ln in plan.split("== Physical Plan ==")[1].strip().splitlines():
+        if tree and not re.match(r"[ :]*[+:]- ", ln):
+            tree[-1] += ln  # a newline inside an expression (the regexes)
+        else:
+            tree.append(ln)
+    kept, skip_below = [], None
+    for ln in tree:
+        depth = _depth(ln)
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = depth if "== Initial Plan ==" in ln else None
+        if skip_below is None:
+            kept.append(ln)
+    return "\n".join(kept)
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    out = []
+    for ln in lines[i + 1 :]:
+        if _depth(ln) <= _depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+def test_extract_write_plan_shape(spark, docs_df, media_df, tmp_path):
+    """The executed plan of one extract run's write: the media blobs are
+    shuffled once and never broadcast, restitch is one groupBy(doc_id)
+    (one Exchange between the union and the write, no salt), and the
+    write reads no cache of the restitch output. The media-UDF cache
+    and the cached input tables stay."""
+    from pero_ocr_api_spark.plans.extract import release_run, run_extract
+    from pero_ocr_api_spark.plans.io import write_extracted
+
+    out = str(tmp_path / "extracted")
+    extracted, _ = run_extract(spark, docs_df, media_df, run_id="write_plan")
+    mode = spark.conf.get("spark.sql.ui.explainMode")
+    # extended: the status store then keeps each node's expressions
+    # inline in the tree, not in a separate formatted section
+    spark.conf.set("spark.sql.ui.explainMode", "extended")
+    try:
+        write_extracted(spark, extracted, out)
+        plan = _final_plan(spark, out)
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", mode)
+        release_run("write_plan")
+    lines = plan.splitlines()
+    assert "MapInPandas" in plan
+    assert "BroadcastExchange" not in plan
+    assert "pmod(hash(offset" not in plan
+    (union,) = [i for i, ln in enumerate(lines) if ln.lstrip(" :+-").startswith("Union")]
+    above = [lines[i] for i in range(union) if union - 1 - i < len(_subtree(lines, i))]
+    exchanges = [ln for ln in above if "Exchange" in ln]
+    assert len(exchanges) == 1
+    assert "hashpartitioning(doc_id" in exchanges[0]
+    cached = [i for i, ln in enumerate(lines) if "InMemoryRelation" in ln]
+    assert any("MapInPandas" in "".join(_subtree(lines, i)) for i in cached)
+    for i in cached:
+        assert "collect_list" not in "".join(_subtree(lines, i))
+
+
+def test_warm_run_extract_plan_build_py4j_calls(spark, docs_df, media_df, monkeypatch):
+    """Every Column a run uses is built once per SparkContext, so a warm
+    run_extract builds its plan in a few hundred py4j round trips
+    (rebuilding them took 2,400-3,000). Releases of handles that earlier
+    work dropped (py4j memory commands) are not the build's calls."""
+    import gc
+
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from pero_ocr_api_spark.plans.extract import release_run, run_extract
+
+    run_extract(spark, docs_df, media_df, run_id="py4j_warm")
+    release_run("py4j_warm")
+    gc.collect()
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        run_extract(spark, docs_df, media_df, run_id="py4j_count")
+    finally:
+        monkeypatch.undo()
+        release_run("py4j_count")
+    assert 0 < len(calls) <= 400

@@ -96,3 +96,42 @@ def test_registry_import_failure_raises(monkeypatch):
     monkeypatch.setitem(sys.modules, "pero_ocr_api_spark.plans.queries_events", None)
     with pytest.raises(ImportError):
         importlib.import_module("pero_ocr_api_spark.plans.queries")
+
+
+def test_checkpoint_is_freed_with_its_scope(spark):
+    """``checkpoint`` cuts the plan to a scan of the stored rows, and
+    its stored RDD is released with the scope, also on a raise."""
+    before = _persisted_ids(spark)
+    with pytest.raises(RuntimeError):
+        with session.cache_scope():
+            df = session.checkpoint(spark.range(100).selectExpr("id % 7 AS k").distinct())
+            assert df.count() == 7
+            assert _persisted_ids(spark) - before
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "LogicalRDD" in plan and "Range" not in plan
+            raise RuntimeError("stage failed")
+    assert _persisted_ids(spark) <= before
+
+
+def test_columns_are_built_once_per_spark_context(spark, monkeypatch):
+    """``per_context`` builds once per key and context, and a new
+    SparkContext never gets Columns built against an old one."""
+    from types import SimpleNamespace
+
+    from pyspark import SparkContext
+
+    from pero_ocr_api_spark.plans import extract
+    from pero_ocr_api_spark.plans.registry import DEFAULT_ENGINE
+
+    first = extract._text_cols(DEFAULT_ENGINE)
+    assert extract._text_cols(DEFAULT_ENGINE) is first
+    # a second context on the same gateway, so the build can run
+    real = SparkContext._active_spark_context
+    other = SimpleNamespace(_jvm=real._jvm, _gateway=real._gateway)
+    monkeypatch.setattr(SparkContext, "_active_spark_context", other)
+    second = extract._text_cols(DEFAULT_ENGINE)
+    assert second is not first
+    assert extract._text_cols(DEFAULT_ENGINE) is second
+    monkeypatch.undo()
+    third = extract._text_cols(DEFAULT_ENGINE)
+    assert third is not first and third is not second
