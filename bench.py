@@ -28,6 +28,10 @@ SPARK_GRAFT_SCALE_LO/HI (default 1/4), SPARK_GRAFT_SCALE_DOCS
 (default 2x bench docs), SPARK_GRAFT_SCALE_BLOCK/BLOCKS (runs per
 block / max blocks, default 2/10), SPARK_GRAFT_SCALE_BUDGET_S
 (default 1350), SPARK_GRAFT_SCALING=0 to skip the scaling pass.
+
+``python bench.py queries [--explain] [query ...]`` times or
+plan-dumps single queries with the suite's warm-up instead (see
+_queries_cmd).
 """
 
 from __future__ import annotations
@@ -174,6 +178,10 @@ def _run_extract_bench(spark, n_docs: int, runs: int = 5, max_runs: int = 9) -> 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    if sys.argv[1:2] == ["queries"]:
+        _queries_cmd(sys.argv[2:], sf_dir, cpus)
+        sys.stdout.flush()
+        os._exit(0)  # same py4j shutdown hazard as below
     bench_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "3000"))
     do_scaling = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
     # SPARK_GRAFT_QUERIES=0: skip the query suite + headline extract
@@ -257,7 +265,6 @@ def _run_query_suite(
     min-of-2 quoted (see inline rationale). Returns (per-query secs,
     suite steal fraction, raw per-query samples)."""
     from pero_ocr_api_spark.plans.queries import QUERIES
-    from pero_ocr_api_spark.plans.queries_textops import _ivf_cents
     from pero_ocr_api_spark.session import release
 
     # clear the cache registry from any prior attempt (dead-session
@@ -266,27 +273,7 @@ def _run_query_suite(
     release()
     spark = _fresh_spark(cpus)
 
-    # JVM/regex warm-up so no timed query absorbs the one-time
-    # ~40 s codegen/JIT cost (first regexp/split expression per
-    # JVM): warm both the regexp_extract_all path (token stats)
-    # and the split+md5+conv shingle pipeline on 50 docs
-    from pero_ocr_api_spark.operators.dedup import (
-        minhash_signatures,
-        winnow_col,
-    )
-    from pero_ocr_api_spark.sources.tables import read_table
-    from pyspark.sql import functions as F
-
-    warm_docs = read_table(spark, sf_dir, "documents").limit(50)
-    warm_docs.select(
-        F.size(F.regexp_extract_all("text", F.lit("[a-z]+"), F.lit(0)))
-    ).count()
-    minhash_signatures(warm_docs).count()
-    warm_docs.select(F.size(winnow_col(F.col("text")))).count()
-    # IVF centroids train once per (session, corpus) by contract —
-    # warm the cache so the timed ivf_topk measures the amortized
-    # query path (assignment + probe), not the one-time training
-    _ivf_cents(spark, sf_dir).count()
+    _warm_up(spark, sf_dir)
 
     # Per-query estimator: min wall over 2 back-to-back runs, both
     # samples reported. Same one-sided-noise argument as the scaling
@@ -313,6 +300,78 @@ def _run_query_suite(
         secs[name] = min(walls)
     wall = time.monotonic() - t0
     return secs, _steal_frac(s0, _steal_ticks(), wall), samples
+
+
+def _warm_up(spark, sf_dir: str) -> None:
+    """JVM/regex warm-up so no timed query absorbs the one-time ~40 s
+    codegen/JIT cost (first regexp/split expression per JVM): warm
+    both the regexp_extract_all path (token stats) and the
+    split+md5+conv shingle pipeline on 50 docs. IVF centroids train
+    once per (session, corpus) by contract, so their cache is warmed
+    too: a timed ivf_topk measures the amortized query path
+    (assignment + probe), not the one-time training."""
+    from pyspark.sql import functions as F
+
+    from pero_ocr_api_spark.operators.dedup import minhash_signatures, winnow_col
+    from pero_ocr_api_spark.plans.queries_textops import _ivf_cents
+    from pero_ocr_api_spark.sources.tables import read_table
+
+    warm_docs = read_table(spark, sf_dir, "documents").limit(50)
+    warm_docs.select(
+        F.size(F.regexp_extract_all("text", F.lit("[a-z]+"), F.lit(0)))
+    ).count()
+    minhash_signatures(warm_docs).count()
+    warm_docs.select(F.size(winnow_col(F.col("text")))).count()
+    _ivf_cents(spark, sf_dir).count()
+
+
+def _queries_cmd(args: list[str], sf: str, cpus: int) -> None:
+    """``python bench.py queries [--explain] [query ...]``: time the
+    listed queries (all of HEADLINE_QUERIES when none is listed, or
+    with ``--all``) in one warm session, each RUNS times back-to-back
+    (default 2, min quoted: the suite's estimator), with ``.count()``
+    as the action unless NOOP=1 (noop sink: computes every column).
+    ``--explain`` writes each query's formatted plan to
+    plans/r06/<name>_<EXPLAIN_SUFFIX>.txt (default suffix "after")
+    instead of timing it."""
+    from pero_ocr_api_spark.plans.queries import QUERIES
+
+    runs = int(os.environ.get("RUNS", "2"))
+    noop = os.environ.get("NOOP", "0") == "1"
+    names = [a for a in args if not a.startswith("--")] or list(HEADLINE_QUERIES)
+    spark = _fresh_spark(cpus)
+    _warm_up(spark, sf)
+
+    if "--explain" in args:
+        suffix = os.environ.get("EXPLAIN_SUFFIX", "after")
+        os.makedirs("plans/r06", exist_ok=True)
+        for name in names:
+            df = QUERIES[name][0](spark, sf)
+            path = f"plans/r06/{name}_{suffix}.txt"
+            with open(path, "w") as f:
+                f.write(
+                    df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"
+                    )
+                )
+            print(f"wrote {path}")
+        return
+
+    secs: dict[str, float] = {}
+    for name in names:
+        walls = []
+        for _ in range(runs):
+            t0 = time.monotonic()
+            df = QUERIES[name][0](spark, sf)
+            if noop:
+                df.write.format("noop").mode("overwrite").save()
+            else:
+                df.count()
+            walls.append(round(time.monotonic() - t0, 3))
+        secs[name] = min(walls)
+        print(f"{name}: min={secs[name]} samples={walls}", flush=True)
+    print(json.dumps(secs))
+    print(json.dumps({"total_min": round(sum(secs.values()), 3)}))
 
 
 def _stage_corpus(n_docs: int, path: str) -> None:

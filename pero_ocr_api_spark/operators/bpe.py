@@ -58,9 +58,11 @@ def char_syms_col(col: Column) -> Column:
 
 def word_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt, syms): the word-frequency training state — one
-    corpus scan, hash aggregate with map-side partials. Same tokenizer
-    as the LM/dedup family (lm.tokens_col) so all vocabularies agree
-    on token boundaries."""
+    corpus scan, hash aggregate with map-side partials. Words come
+    from the LM's tokenizer (lm.tokens_col, ``[a-z0-9]+`` runs), not
+    the dedup family's whitespace split (dedup.tokens_col) that feeds
+    vocab_topk, encode_docs and the packers, so BPE words and those
+    tokens can split a text differently."""
     from pero_ocr_api_spark.operators import dedup
     from pero_ocr_api_spark.operators.lm import tokens_col
 

@@ -48,19 +48,102 @@ def tokens_col(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
+def duckdb_tokens_sql(expr: str) -> str:
+    return f"string_split_regex(trim(lower({expr})), '\\s+')"
+
+
+# Word n-grams have exactly three builders, one per form; each takes a
+# token array, so every caller keeps its own tokenizer. A gram is a
+# window of n tokens joined with ' '. A text with fewer than n tokens
+# gives the caller's ``short`` value: the whole text for the shingle
+# family (dedup recall), nothing everywhere else (contamination,
+# top-n-grams, repetition and the LM must never match a whole text).
+
+
+def word_grams_col(toks: Column, n: int, short: Column | None = None) -> Column:
+    """The array form: the word n-grams of ``toks`` in document order,
+    duplicates kept; ``short`` (default: an empty array) when there
+    are fewer than n tokens. Each gram is built inside a ``transform``
+    lambda, on the interpreted expression path, so corpus scans use
+    :func:`exploded_word_grams` instead."""
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.concat_ws(" ", *[toks[i + j] for j in range(n)]),
+    )
+    if short is None:
+        short = F.array().cast("array<string>")
+    return F.when(F.size(toks) >= n, grams).otherwise(short)
+
+
+def exploded_word_grams(
+    df: DataFrame,
+    toks: Column,
+    n: int,
+    keep: tuple[str, ...] = ("doc_id",),
+    short: Column | None = None,
+) -> DataFrame:
+    """The explode form: (*keep, gram) rows, one per word-n-gram
+    OCCURRENCE of the token array ``toks`` (a Column over ``df``), in
+    the same grams as :func:`word_grams_col`. A text with fewer than n
+    tokens gives one ``short`` row (a string Column over ``df``), or
+    none when ``short`` is None. Callers that need per-doc set
+    semantics aggregate or distinct downstream.
+
+    Why this exists: the array form builds every gram inside a
+    ``transform`` lambda, and higher-order functions are evaluated on
+    the interpreted expression path, measured ~20x slower than this
+    position-explode + flat projection, where the gram concat (and a
+    caller's md5 on top) run inside whole-stage codegen."""
+    carry = [toks.alias("_t")] + ([] if short is None else [short.alias("_short")])
+    base = df.select(*keep, *carry)
+    pos = F.when(
+        F.size("_t") >= n, F.sequence(F.lit(0), F.size("_t") - n)
+    ).otherwise(
+        F.array().cast("array<int>") if short is None else F.array(F.lit(-1))
+    )
+    # concat with ' ' literals is the same string as concat_ws here:
+    # a token is never null
+    parts = [F.element_at(F.col("_t"), F.col("_i") + 1)]
+    for j in range(2, n + 1):
+        parts += [F.lit(" "), F.element_at(F.col("_t"), F.col("_i") + j)]
+    gram = F.concat(*parts)
+    if short is not None:
+        # position -1 marks the short-text row
+        gram = F.when(F.col("_i") >= 0, gram).otherwise(F.col("_short"))
+    ex = base.select("*", F.explode(pos).alias("_i"))
+    return ex.select(*keep, gram.alias("gram"))
+
+
+def duckdb_word_grams_sql(toks: str, n: int, short: str = "[]") -> str:
+    """The DuckDB form of :func:`word_grams_col` over a token-list
+    expression ``toks``."""
+    grams = (
+        f"list_transform(range(1, len({toks}) - {n - 2}), "
+        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' '))"
+    )
+    return f"(CASE WHEN len({toks}) >= {n} THEN {grams} ELSE {short} END)"
+
+
+def _shingle_seq_col(text: Column) -> Column:
+    """Word-3-gram sequence of ``text``; the whole text if < 3 tokens."""
+    return word_grams_col(
+        tokens_col(text), SHINGLE_N, F.array(F.trim(F.lower(text)))
+    )
+
+
+def _duckdb_shingle_seq_sql(expr: str) -> str:
+    return duckdb_word_grams_sql(
+        duckdb_tokens_sql(expr), SHINGLE_N, f"[trim(lower({expr}))]"
+    )
+
+
 def shingles_col(text: Column) -> Column:
     """Distinct word-3-gram shingles; whole text if < 3 tokens."""
-    toks = tokens_col(text)
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), n - SHINGLE_N),
-        lambda i: F.concat_ws(
-            " ", toks[i], toks[i + 1], toks[i + 2]
-        ),
-    )
-    return F.array_distinct(
-        F.when(n >= SHINGLE_N, grams).otherwise(F.array(F.trim(F.lower(text))))
-    )
+    return F.array_distinct(_shingle_seq_col(text))
+
+
+def duckdb_shingles_sql(expr: str) -> str:
+    return f"list_distinct({_duckdb_shingle_seq_sql(expr)})"
 
 
 # Gopher-style intra-doc repetition thresholds as integer
@@ -76,11 +159,7 @@ def repetition_flags_cols(text: Column) -> tuple[Column, Column]:
     toks = tokens_col(text)
     n_tok = F.size(toks)
     nd_tok = F.size(F.array_distinct(toks))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_tok - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", toks[i], toks[i + 1], toks[i + 2]),
-    )
-    grams = F.when(n_tok >= 3, grams).otherwise(F.array().cast("array<string>"))
+    grams = word_grams_col(toks, 3)
     n_g = F.size(grams)
     nd_g = F.size(F.array_distinct(grams))
     return (
@@ -90,36 +169,16 @@ def repetition_flags_cols(text: Column) -> tuple[Column, Column]:
     )
 
 
-def duckdb_tokens_sql(expr: str) -> str:
-    return f"string_split_regex(trim(lower({expr})), '\\s+')"
-
-
 def duckdb_repetition_sizes_sql(expr: str) -> str:
     """DuckDB twin of the four sizes behind
     :func:`repetition_flags_cols`, as a select list (n_tok, nd_tok,
     n_g, nd_g)."""
     toks = duckdb_tokens_sql(expr)
-    grams = (
-        f"list_transform(range(1, greatest(len({toks}) - 3, 0) + 2), "
-        f"i -> array_to_string(list_slice({toks}, i, i + 2), ' '))"
-    )
-    grams = f"(CASE WHEN len({toks}) >= 3 THEN {grams} ELSE [] END)"
+    grams = duckdb_word_grams_sql(toks, 3)
     return f"""len({toks}) AS n_tok,
          len(list_distinct({toks})) AS nd_tok,
          len({grams}) AS n_g,
          len(list_distinct({grams})) AS nd_g"""
-
-
-def duckdb_shingles_sql(expr: str) -> str:
-    toks = duckdb_tokens_sql(expr)
-    grams = (
-        f"list_transform(range(1, len({toks}) - {SHINGLE_N - 2}), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {SHINGLE_N - 1}), ' '))"
-    )
-    return (
-        f"list_distinct(CASE WHEN len({toks}) >= {SHINGLE_N} THEN {grams} "
-        f"ELSE [trim(lower({expr}))] END)"
-    )
 
 
 def word_ngram_ints_col(text: Column, n: int) -> Column:
@@ -127,57 +186,13 @@ def word_ngram_ints_col(text: Column, n: int) -> Column:
     than n tokens (contamination windows must never degrade to
     whole-text matches — unlike the 3-gram shingles above, which fall
     back to the full text for dedup recall)."""
-    toks = tokens_col(text)
-    cnt = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), cnt - n),
-        lambda i: F.concat_ws(" ", *[toks[i + j] for j in range(n)]),
-    )
-    hashed = F.transform(grams, lambda g: md5_int_col(g, 7))
-    return F.when(cnt >= n, F.array_distinct(hashed)).otherwise(
-        F.array().cast("array<bigint>")
-    )
-
-
-def exploded_word_ngram_hashes(
-    df: DataFrame, n: int, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, h) rows — one per word-n-gram OCCURRENCE (duplicates kept;
-    callers needing per-doc set semantics aggregate/distinct downstream).
-    Same md5 values as :func:`word_ngram_ints_col`; no rows when the
-    text has fewer than n tokens.
-
-    Why this exists: the array form builds every gram inside a
-    ``transform`` lambda, and higher-order functions are evaluated on
-    the interpreted expression path — measured ~20x slower than this
-    position-explode + flat-projection shape, where the gram concat and
-    md5 run inside whole-stage codegen (guide §4.1: prefer built-ins
-    that codegen; a lambda per gram is the expression-level analog of a
-    row-at-a-time UDF)."""
-    toks = tokens_col(F.col(text_col))
-    base = df.select(F.col(id_col), toks.alias("_t"))
-    pos = F.when(
-        F.size("_t") >= n, F.sequence(F.lit(0), F.size("_t") - n)
-    ).otherwise(F.array().cast("array<int>"))
-    ex = base.select(F.col(id_col), F.col("_t"), F.explode(pos).alias("_i"))
-    gram = F.concat_ws(
-        " ",
-        *[F.element_at(F.col("_t"), F.col("_i") + j + 1) for j in range(n)],
-    )
-    return ex.select(F.col(id_col), md5_int_col(gram, 7).alias("h"))
+    grams = word_grams_col(tokens_col(text), n)
+    return F.array_distinct(F.transform(grams, lambda g: md5_int_col(g, 7)))
 
 
 def duckdb_word_ngram_ints_sql(expr: str, n: int) -> str:
-    toks = duckdb_tokens_sql(expr)
-    grams = (
-        f"list_transform(range(1, len({toks}) - {n - 2}), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' '))"
-    )
-    hashed = f"list_transform({grams}, g -> {duckdb_md5_int_sql('g', 7)})"
-    return (
-        f"(CASE WHEN len({toks}) >= {n} THEN list_distinct({hashed}) "
-        f"ELSE [] END)"
-    )
+    grams = duckdb_word_grams_sql(duckdb_tokens_sql(expr), n)
+    return f"list_distinct(list_transform({grams}, g -> {duckdb_md5_int_sql('g', 7)}))"
 
 
 # ---------------------------------------------------------------- exact ---
@@ -323,46 +338,6 @@ def spread_to_parallelism(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def exploded_shingle_hashes(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, h) rows — one per word-3-gram shingle OCCURRENCE (duplicates
-    kept), md5-hashed with the same values as
-    ``transform(shingles_col(text), md5_int_col)``; texts with fewer
-    than SHINGLE_N tokens emit the single whole-text fallback shingle,
-    exactly like :func:`shingles_col`.
-
-    Flat position-explode + codegen projection: the gram concat and md5
-    run in whole-stage codegen instead of an interpreted per-element
-    lambda (measured ~20x on the corpus scan). Only MIN-style consumers
-    (MinHash) may use this stream in place of the distinct arrays —
-    duplicate occurrences do not change a min."""
-    toks = tokens_col(F.col(text_col))
-    base = df.select(
-        F.col(id_col), toks.alias("_t"), F.col(text_col).alias("_txt")
-    )
-    # position -1 marks the short-text fallback row (whole text as the
-    # only shingle) so the explode always emits >= 1 row per doc
-    pos = F.when(
-        F.size("_t") >= SHINGLE_N,
-        F.sequence(F.lit(0), F.size("_t") - SHINGLE_N),
-    ).otherwise(F.array(F.lit(-1)))
-    ex = base.select(
-        F.col(id_col), F.col("_t"), F.col("_txt"), F.explode(pos).alias("_i")
-    )
-    gram = F.when(
-        F.col("_i") >= 0,
-        F.concat_ws(
-            " ",
-            *[
-                F.element_at(F.col("_t"), F.col("_i") + j + 1)
-                for j in range(SHINGLE_N)
-            ],
-        ),
-    ).otherwise(F.trim(F.lower(F.col("_txt"))))
-    return ex.select(F.col(id_col), md5_int_col(gram, 7).alias("h"))
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -382,15 +357,21 @@ def minhash_signatures(
     :func:`spread_to_parallelism` — a single-file scan would otherwise
     serialize the hashing onto one core).
 
-    The shingle-hash stream comes from :func:`exploded_shingle_hashes`
+    The shingle-hash stream comes from :func:`exploded_word_grams`
     (position-explode + flat codegen projection, NOT a per-gram
     ``transform`` lambda — the interpreted-HOF path was ~20x slower)
     and keeps duplicate occurrences: ``min`` over a multiset equals
     ``min`` over its distinct set, so signatures are bit-identical to
-    the array_distinct form."""
-    exploded = exploded_shingle_hashes(
-        spread_to_parallelism(df), id_col, text_col
-    )
+    the array_distinct form. A text with fewer than SHINGLE_N tokens
+    hashes its whole text, exactly like :func:`shingles_col`."""
+    text = F.col(text_col)
+    exploded = exploded_word_grams(
+        spread_to_parallelism(df),
+        tokens_col(text),
+        SHINGLE_N,
+        keep=(id_col,),
+        short=F.trim(F.lower(text)),
+    ).select(id_col, md5_int_col(F.col("gram"), 7).alias("h"))
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
             f"_sig{i}"
@@ -637,43 +618,20 @@ WINNOW_W = 4  # fingerprint window (Schleimer et al. winnowing)
 def ordered_gram_ints_col(text: Column) -> Column:
     """Word-3-gram hash *sequence* (document order, duplicates kept —
     winnowing needs positions, unlike the MinHash shingle set)."""
-    toks = tokens_col(text)
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), n - SHINGLE_N),
-        lambda i: F.concat_ws(" ", toks[i], toks[i + 1], toks[i + 2]),
-    )
-    seq = F.when(n >= SHINGLE_N, grams).otherwise(
-        F.array(F.trim(F.lower(text)))
-    )
-    return F.transform(seq, lambda s: md5_int_col(s, 7))
-
-
-def winnow_col(text: Column, w: int = WINNOW_W) -> Column:
-    """Winnowing fingerprint set: minimum gram hash of every length-w
-    sliding window, deduplicated — the rolling-hash document
-    fingerprint (guarantees shared fingerprints for any shared run of
-    w+k-1 tokens, the property MOSS-style overlap detection needs).
-    Pure Catalyst expressions; one projection per row."""
-    h = ordered_gram_ints_col(text)
-    n = F.size(h)
-    mins = F.transform(
-        F.sequence(F.lit(0), n - w),
-        lambda i: F.array_min(F.slice(h, i + 1, w)),
-    )
-    return F.array_distinct(
-        F.when(n >= w, mins).otherwise(F.array(F.array_min(h)))
-    )
+    return F.transform(_shingle_seq_col(text), lambda s: md5_int_col(s, 7))
 
 
 def winnow_from_hashes_col(h: Column, w: int = WINNOW_W) -> Column:
-    """Winnow fingerprint set over a *materialized* gram-hash array
-    column. Prefer this + :func:`winnow_fingerprints` over
-    :func:`winnow_col` on heavy paths: the one-shot Column form
-    references its gram pipeline from four places, and CollapseProject
-    inlines the whole md5 pipeline into each — a codegen method so
-    large that Janino compilation dominates (measured ~13 s for an
-    80-doc query; two-step ~5 s)."""
+    """Winnowing fingerprint set over a gram-hash array column:
+    minimum gram hash of every length-w sliding window, deduplicated —
+    the rolling-hash document fingerprint (guarantees shared
+    fingerprints for any shared run of w+k-1 tokens, the property
+    MOSS-style overlap detection needs). On heavy paths feed it a
+    *materialized* hash column (:func:`winnow_fingerprints`): the
+    one-shot :func:`winnow_col` references its gram pipeline from four
+    places, and CollapseProject inlines the whole md5 pipeline into
+    each — a codegen method so large that Janino compilation dominates
+    (measured ~13 s for an 80-doc query; two-step ~5 s)."""
     n = F.size(h)
     mins = F.transform(
         F.sequence(F.lit(0), n - w),
@@ -682,6 +640,11 @@ def winnow_from_hashes_col(h: Column, w: int = WINNOW_W) -> Column:
     return F.array_distinct(
         F.when(n >= w, mins).otherwise(F.array(F.array_min(h)))
     )
+
+
+def winnow_col(text: Column, w: int = WINNOW_W) -> Column:
+    """Winnowing fingerprint set of ``text`` as one Column."""
+    return winnow_from_hashes_col(ordered_gram_ints_col(text), w)
 
 
 def winnow_fingerprints(
@@ -704,15 +667,7 @@ def winnow_fingerprints(
 
 
 def duckdb_winnow_sql(expr: str, w: int = WINNOW_W) -> str:
-    toks = duckdb_tokens_sql(expr)
-    grams = (
-        f"list_transform(range(1, len({toks}) - {SHINGLE_N - 2}), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {SHINGLE_N - 1}), ' '))"
-    )
-    seq = (
-        f"CASE WHEN len({toks}) >= {SHINGLE_N} THEN {grams} "
-        f"ELSE [trim(lower({expr}))] END"
-    )
+    seq = _duckdb_shingle_seq_sql(expr)
     h = f"list_transform({seq}, s -> {duckdb_md5_int_sql('s', 7)})"
     mins = (
         f"list_transform(range(1, len({h}) - {w - 2}), "

@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pero_ocr_api_spark.operators import dedup
 from pero_ocr_api_spark.operators.similarity import (
     duckdb_quant16_sql,
     quant16,
@@ -80,23 +81,9 @@ def bigram_lm_scores(
         .agg(F.count("*").alias("c1"))
     )
     voc = uni.agg(F.count("*").alias("v"))
-    # Flat bigram stream: explode adjacent positions and build each
-    # gram with codegen'd element_at/concat (the zip_with lambda form
-    # ran on the interpreted expression path); w1 is element_at, not a
-    # split_part re-parse of the gram string.
-    pos = F.when(
-        F.size("t") >= 2, F.sequence(F.lit(0), F.size("t") - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    bg = toks.select(
-        F.col(id_col), F.col("t"), F.explode(pos).alias("_i")
-    ).select(
-        F.col(id_col),
-        F.concat(
-            F.element_at(F.col("t"), F.col("_i") + 1),
-            F.lit(" "),
-            F.element_at(F.col("t"), F.col("_i") + 2),
-        ).alias("gram"),
-    )
+    # Flat bigram stream (dedup.exploded_word_grams: each gram built
+    # by codegen'd element_at/concat, not an interpreted lambda)
+    bg = dedup.exploded_word_grams(toks, F.col("t"), 2, keep=(id_col,))
     # bigram model side: aggregate-then-equi-join (NOT a count window
     # over the occurrence stream — WindowExec partitions are not
     # AQE-splittable, so the head gram would pin one task at scale).
@@ -150,8 +137,6 @@ def vocab_topk(
     in scheduling.global_rank. Same tokenizer as the dedup family
     (dedup.tokens_col) so vocab and shingles agree on token
     boundaries."""
-    from pero_ocr_api_spark.operators import dedup
-
     toks = dedup.spread_to_parallelism(docs).select(
         F.explode(dedup.tokens_col(F.col(text_col))).alias("tok")
     )
@@ -165,6 +150,23 @@ def vocab_topk(
     return top.withColumn(
         "token_id", F.row_number().over(w).cast("long")
     ).select("tok", "token_id", "n")
+
+
+def _encoded_tokens(
+    docs: DataFrame, vocab: DataFrame, text_col: str, id_col: str
+) -> DataFrame:
+    """(id_col, pos, tid): every whitespace token (dedup.tokens_col) of
+    every doc with its in-doc position, encoded against the (tok,
+    token_id) vocabulary; unknown tokens are UNK."""
+    toks = docs.select(
+        F.col(id_col),
+        F.posexplode(dedup.tokens_col(F.col(text_col))).alias("pos", "tok"),
+    )
+    return toks.join(vocab.select("tok", "token_id"), "tok", "left").select(
+        F.col(id_col),
+        "pos",
+        F.coalesce(F.col("token_id"), F.lit(UNK_ID)).alias("tid"),
+    )
 
 
 def encode_docs(
@@ -184,17 +186,7 @@ def encode_docs(
     broadcast-sized by construction) + one per-doc aggregate whose
     order-sensitive part is an array_sort over that doc's own tokens,
     never a cross-row float or global sort."""
-    from pero_ocr_api_spark.operators import dedup
-
-    toks = docs.select(
-        F.col(id_col),
-        F.posexplode(dedup.tokens_col(F.col(text_col))).alias("pos", "tok"),
-    )
-    enc = toks.join(vocab.select("tok", "token_id"), "tok", "left").select(
-        F.col(id_col),
-        "pos",
-        F.coalesce(F.col("token_id"), F.lit(UNK_ID)).alias("tid"),
-    )
+    enc = _encoded_tokens(docs, vocab, text_col, id_col)
     ids_in_order = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "tid"))),
         lambda s: s["tid"].cast("string"),
@@ -271,20 +263,10 @@ def assemble_blocks(
     broadcast-sized, the placement join is an equi-join on the doc
     key. Every block except the last is exactly seq_len tokens — the
     invariant the tests pin."""
-    from pero_ocr_api_spark.operators import dedup
-
     placed = pack_sequences(docs, seq_len, text_col, id_col).select(
         id_col, "start_tok"
     )
-    toks = docs.select(
-        F.col(id_col),
-        F.posexplode(dedup.tokens_col(F.col(text_col))).alias("pos", "tok"),
-    )
-    enc = toks.join(vocab.select("tok", "token_id"), "tok", "left").select(
-        F.col(id_col),
-        "pos",
-        F.coalesce(F.col("token_id"), F.lit(UNK_ID)).alias("tid"),
-    )
+    enc = _encoded_tokens(docs, vocab, text_col, id_col)
     stream = enc.join(placed, id_col).select(
         (F.col("start_tok") + F.col("pos")).alias("gpos"),
         F.col(id_col),
@@ -333,8 +315,6 @@ def duckdb_pack_blocks_sql(
     id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of vocab build + :func:`pack_blocks`."""
-    from pero_ocr_api_spark.operators import dedup
-
     toks = dedup.duckdb_tokens_sql("text")
     return f"""
 WITH {duckdb_vocab_cte_sql(k, docs_cte)},
@@ -372,8 +352,6 @@ def duckdb_pack_sequences_sql(
 ) -> str:
     """DuckDB twin of :func:`pack_sequences` (plain window cumsum —
     single-threaded is fine for the oracle)."""
-    from pero_ocr_api_spark.operators import dedup
-
     toks = dedup.duckdb_tokens_sql("text")
     return f"""
 WITH counted AS (
@@ -398,8 +376,6 @@ FROM placed
 def duckdb_vocab_cte_sql(k: int = VOCAB_K, docs_cte: str = "documents") -> str:
     """CTE chain ending in ``vocab (tok, token_id, n)`` — the DuckDB
     twin of :func:`vocab_topk`."""
-    from pero_ocr_api_spark.operators import dedup
-
     toks = dedup.duckdb_tokens_sql("text")
     return f"""vocab_top AS (
   SELECT tok, CAST(count(*) AS BIGINT) AS n
@@ -416,8 +392,6 @@ def duckdb_encode_docs_sql(
     k: int = VOCAB_K, docs_cte: str = "documents", id_col: str = "doc_id"
 ) -> str:
     """Full DuckDB twin of vocab build + :func:`encode_docs`."""
-    from pero_ocr_api_spark.operators import dedup
-
     toks = dedup.duckdb_tokens_sql("text")
     return f"""
 WITH {duckdb_vocab_cte_sql(k, docs_cte)},
@@ -456,9 +430,7 @@ WITH lm_toks AS (
 ), lm_voc AS (
   SELECT count(*) AS v FROM lm_uni
 ), lm_bg AS (
-  SELECT {id_col},
-         unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))
-           AS gram
+  SELECT {id_col}, unnest({dedup.duckdb_word_grams_sql('t', 2)}) AS gram
   FROM lm_toks
 ), lm_scored AS (
   SELECT {id_col},

@@ -25,7 +25,6 @@ from pero_ocr_api_spark.sources.tables import read_table
 EVENTS_NOW = "2024-01-16 00:00:00"
 EVENTS_DAY_AGO = "2024-01-15 00:00:00"
 ORDERS_FROM = "1996-01-01"
-ORDERS_TO = "1998-01-01"
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 

@@ -944,9 +944,6 @@ def q_ann_lsh_buckets(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_ANN_LSH_BUCKETS = None  # filled below (needs the hyperplane literals)
-
-
 def _sql_ann_lsh_buckets() -> str:
     return f"""
 WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
@@ -1043,9 +1040,9 @@ def q_benchmark_contamination(spark: SparkSession, sf: str) -> DataFrame:
         "bench_id",
         F.explode(dedup.word_ngram_ints_col(F.col("btext"), CONTAM_N)).alias("h"),
     )
-    cgrams = dedup.exploded_word_ngram_hashes(
-        dedup.spread_to_parallelism(docs), CONTAM_N
-    )
+    cgrams = dedup.exploded_word_grams(
+        dedup.spread_to_parallelism(docs), toks, CONTAM_N
+    ).select("doc_id", dedup.md5_int_col(F.col("gram"), 7).alias("h"))
     hits = (
         cgrams.join(F.broadcast(bgrams), "h")
         .groupBy("doc_id", "bench_id")
@@ -1707,34 +1704,6 @@ TOP_NGRAM_N = 3  # word 3-grams
 TOP_NGRAM_K = 20  # report the top-k by document frequency
 
 
-def _ngram_texts_col(text: "F.Column", n: int) -> "F.Column":
-    """Distinct word-n-gram TEXTS per document (the human-readable
-    sibling of dedup.word_ngram_ints_col — boilerplate reports need
-    the phrase itself, not its hash). Empty when the doc has fewer
-    than n tokens."""
-    toks = dedup.tokens_col(text)
-    cnt = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), cnt - n),
-        lambda i: F.concat_ws(" ", *[toks[i + j] for j in range(n)]),
-    )
-    return F.when(cnt >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _duckdb_ngram_texts_sql(expr: str, n: int) -> str:
-    toks = dedup.duckdb_tokens_sql(expr)
-    grams = (
-        f"list_transform(range(1, len({toks}) - {n - 2}), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' '))"
-    )
-    return (
-        f"(CASE WHEN len({toks}) >= {n} THEN list_distinct({grams}) "
-        f"ELSE [] END)"
-    )
-
-
 def q_top_ngrams(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-level boilerplate phrase detection: the top-k word
     3-grams by DOCUMENT frequency (distinct grams per doc, so a
@@ -1755,21 +1724,10 @@ def q_top_ngrams(spark: SparkSession, sf: str) -> DataFrame:
     gram text itself, so the result is deterministic in both engines.
     Reference analog: pero-ocr-api has no corpus analytics; this is
     a graft-required training-data addition (SURVEY.md §2)."""
-    docs = _docs(spark, sf)
-    toks = dedup.tokens_col(F.col("text"))
-    n = TOP_NGRAM_N
-    base = dedup.spread_to_parallelism(docs).select(
-        "doc_id", toks.alias("_t")
-    )
-    pos = F.when(
-        F.size("_t") >= n, F.sequence(F.lit(0), F.size("_t") - n)
-    ).otherwise(F.array().cast("array<int>"))
-    gram = F.concat_ws(
-        " ",
-        *[F.element_at(F.col("_t"), F.col("_i") + j + 1) for j in range(n)],
-    )
-    grams = base.select("doc_id", "_t", F.explode(pos).alias("_i")).select(
-        "doc_id", gram.alias("gram")
+    grams = dedup.exploded_word_grams(
+        dedup.spread_to_parallelism(_docs(spark, sf)),
+        dedup.tokens_col(F.col("text")),
+        TOP_NGRAM_N,
     )
     return (
         grams.groupBy("gram")
@@ -1780,9 +1738,10 @@ def q_top_ngrams(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_top_ngrams() -> str:
+    grams = dedup.duckdb_word_grams_sql(dedup.duckdb_tokens_sql("text"), TOP_NGRAM_N)
     return f"""
 WITH grams AS (
-  SELECT unnest({_duckdb_ngram_texts_sql('text', TOP_NGRAM_N)}) AS gram
+  SELECT unnest(list_distinct({grams})) AS gram
   FROM documents
 )
 SELECT gram, CAST(count(*) AS BIGINT) AS doc_freq

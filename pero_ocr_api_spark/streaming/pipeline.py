@@ -199,7 +199,7 @@ def stream_exact_dedup(
     table: md5 fingerprint of normalized text, first-seen row wins,
     state bounded by the event-time watermark
     (``dropDuplicatesWithinWatermark`` — the streaming twin of the
-    batch ``exact_dup_groups`` operator in operators/dedup.py).
+    batch ``exact_dup_groups`` query in plans/queries_textops.py).
 
     Scale note: state is one fingerprint per in-watermark doc, evicted
     as the watermark advances — O(ingest-rate x delay), not O(corpus).

@@ -7,10 +7,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.operators import dedup
-from pero_ocr_api_spark.plans.queries_textops import (
-    TOP_NGRAM_N,
-    _ngram_texts_col,
-)
+from pero_ocr_api_spark.plans.queries_textops import TOP_NGRAM_N
+
+
+def _doc_freq(df):
+    """The gram stream and count q_top_ngrams runs."""
+    grams = dedup.exploded_word_grams(
+        df, dedup.tokens_col(F.col("text")), TOP_NGRAM_N
+    )
+    return grams.groupBy("gram").agg(
+        F.count_distinct(F.col("doc_id")).alias("doc_freq")
+    )
 
 
 def test_boilerplate_phrase_tops_doc_frequency(spark):
@@ -22,13 +29,9 @@ def test_boilerplate_phrase_tops_doc_frequency(spark):
     ]
     rows += [(100 + i, f"solo{i}x solo{i}y solo{i}z") for i in range(5)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    counts = (
-        df.select(F.explode(_ngram_texts_col(F.col("text"), TOP_NGRAM_N)).alias("gram"))
-        .groupBy("gram")
-        .agg(F.count("*").alias("doc_freq"))
-        .orderBy(F.col("doc_freq").desc(), F.col("gram").asc())
-    )
-    top = counts.first()
+    top = _doc_freq(df).orderBy(
+        F.col("doc_freq").desc(), F.col("gram").asc()
+    ).first()
     assert top.gram == "copyright acme corp"
     assert top.doc_freq == 30
 
@@ -39,18 +42,13 @@ def test_ngram_texts_distinct_within_doc(spark):
     df = spark.createDataFrame(
         [(1, "spam spam spam spam spam spam")], "doc_id long, text string"
     )
-    grams = df.select(
-        F.explode(_ngram_texts_col(F.col("text"), TOP_NGRAM_N)).alias("gram")
-    ).collect()
-    assert [g.gram for g in grams] == ["spam spam spam"]
+    rows = _doc_freq(df).collect()
+    assert [(r.gram, r.doc_freq) for r in rows] == [("spam spam spam", 1)]
 
 
 def test_short_doc_yields_no_ngrams(spark):
     df = spark.createDataFrame([(1, "two words")], "doc_id long, text string")
-    n = df.select(
-        F.size(_ngram_texts_col(F.col("text"), TOP_NGRAM_N)).alias("n")
-    ).first()
-    assert n.n == 0
+    assert _doc_freq(df).count() == 0
 
 
 def _source_sigs(spark, rows):

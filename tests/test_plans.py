@@ -119,6 +119,32 @@ def test_source_overlap_scans_corpus_once(spark):
         release(*QUERY_SCOPE)
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "top_ngrams",
+        "minhash_lsh_pairs",
+        "lsh_mega_bucket_pairs",
+        "lm_quality_scores",
+        "vocab_topk",
+        "pack_sequences",
+    ],
+)
+def test_gram_paths_have_no_lambdas(spark, name):
+    """The corpus-scan gram and token paths stay flat: grams come from
+    dedup.exploded_word_grams, never a ``transform(sequence…)`` gram,
+    whose lambda runs on the interpreted expression path (~20x slower
+    on the scan)."""
+    from pero_ocr_api_spark.session import QUERY_SCOPE, release
+
+    try:
+        df = QUERIES[name][0](spark, SF)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("lambdafunction") == 0
+    finally:
+        release(*QUERY_SCOPE)
+
+
 def _final_plan(spark, path: str) -> str:
     """The final (AQE-materialized) physical plan of the write into
     ``path``, from Spark's SQL status store. Each nested AQE plan keeps
