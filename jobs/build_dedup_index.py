@@ -25,7 +25,7 @@ is growing).
 
 ``--embeddings <path> --dim N`` builds the EMBEDDING twin instead
 (sign-LSH ANN bands over (vec_id, embedding), bucketed by (t, bucket)
-— plans/io.write_embedding_index), the index behind
+— plans/io.write_band_index with EMBEDDING_BANDS), the index behind
 ``incremental_embedding_dedup`` and
 ``streaming.stream_incremental_embedding_dedup``.
 """
@@ -44,7 +44,7 @@ def parse_args(argv):
     g.add_argument(
         "--embeddings",
         help="embeddings table path (ANN sign-LSH index over vec_id, "
-        "embedding — the embedding twin: plans/io.write_embedding_index)",
+        "embedding — the embedding twin: plans/io.EMBEDDING_BANDS)",
     )
     p.add_argument(
         "--dim",
@@ -76,32 +76,24 @@ def main(argv=None) -> int:
 
     from pero_ocr_api_spark.operators.dedup import MAX_BUCKET
     from pero_ocr_api_spark.plans.io import (
+        EMBEDDING_BANDS,
+        TEXT_BANDS,
         write_band_index,
-        write_embedding_index,
     )
 
-    if args.embeddings:
-        emb = spark.read.parquet(args.embeddings)
-        n_new = write_embedding_index(
-            spark,
-            emb,
-            args.table,
-            dim=args.dim,
-            path=args.path,
-            buckets=args.buckets,
-        )
-        key_cols = ["t", "bucket"]
-    else:
-        docs = spark.read.parquet(args.documents)
-        n_new = write_band_index(
-            spark, docs, args.table, path=args.path, buckets=args.buckets
-        )
-        key_cols = ["band_idx", "band_hash"]
+    family = EMBEDDING_BANDS if args.embeddings else TEXT_BANDS
+    n_new = write_band_index(
+        spark,
+        spark.read.parquet(args.embeddings or args.documents),
+        args.table,
+        family,
+        dim=args.dim,
+        path=args.path,
+        buckets=args.buckets,
+    )
 
     idx = spark.table(args.table)
-    sizes = idx.groupBy(*key_cols).agg(
-        F.count("*").alias("n")
-    )
+    sizes = idx.groupBy(*family.key_cols).agg(F.count("*").alias("n"))
     skew = sizes.agg(
         F.count("*").alias("buckets_populated"),
         F.max("n").alias("max_bucket"),

@@ -125,7 +125,7 @@ def parse_args(argv):
         help="persistent embedding ANN band index TABLE "
         "(build_dedup_index.py --embeddings): additionally drop batch "
         "docs whose embedding near-dups the historical corpus — only "
-        "the batch is hashed (plans/io.embedding_index_candidates); "
+        "the batch is hashed (plans/io.band_index_candidates); "
         "requires --embeddings (batch vectors) and --corpus-embeddings "
         "(historical vectors) for the exact-cosine verify",
     )
@@ -312,81 +312,57 @@ def _curate(spark, args, job: tuple) -> int:
     # matching the corpus are dropped unconditionally: history wins.)
     incr_report: dict = {}
     if args.band_index:
-        from pero_ocr_api_spark.plans.io import band_index_candidates
+        from pero_ocr_api_spark.plans.io import TEXT_BANDS
 
-        batch_docs = docs.join(deduped.select("doc_id"), "doc_id").select(
-            "doc_id", "text"
-        )
-        # candidates live until the stage count (a job sub-scope)
-        stage = (*job, "band_index")
-        cand = cache(band_index_candidates(spark, batch_docs, args.band_index), stage)
-        n_cand = cand.count()
-        corpus_texts = spark.read.parquet(args.corpus).select(
-            F.col("doc_id").alias("_raw_id"),
-            F.col("doc_id").try_cast("long").alias("doc_id"),
-            "text",
-        )
-        # fail-loud guard: a non-numeric corpus doc_id casts to NULL,
-        # the verify join silently empties, and every band-index
-        # candidate would "fail verification" — incremental dedup
-        # becoming a no-op with no error. One narrow-column scan.
-        n_uncastable = corpus_texts.filter(
-            F.col("doc_id").isNull() & F.col("_raw_id").isNotNull()
-        ).count()
-        if n_uncastable:
-            raise ValueError(
-                f"--corpus doc_id has {n_uncastable} values that do not "
-                "cast to long; the band index keys corpus ids as long, so "
-                "these rows would be dropped from verification silently"
+        def jaccard(cand, batch):
+            corpus = spark.read.parquet(args.corpus).select(
+                F.col("doc_id").alias("_raw_id"),
+                F.col("doc_id").try_cast("long").alias("doc_id"),
+                "text",
             )
-        drops = (
-            dedup.candidate_jaccard(cand, batch_docs, corpus_texts.drop("_raw_id"))
-            .filter(F.col("jaccard") >= args.jaccard)
-            .select(F.col("batch_id").alias("doc_id"))
-            .distinct()
+            # fail-loud guard: a non-numeric corpus doc_id casts to NULL,
+            # the verify join silently empties, and every band-index
+            # candidate would "fail verification" — incremental dedup
+            # becoming a no-op with no error. One narrow-column scan.
+            n_uncastable = corpus.filter(
+                F.col("doc_id").isNull() & F.col("_raw_id").isNotNull()
+            ).count()
+            if n_uncastable:
+                raise ValueError(
+                    f"--corpus doc_id has {n_uncastable} values that do not "
+                    "cast to long; the band index keys corpus ids as long, so "
+                    "these rows would be dropped from verification silently"
+                )
+            pairs = dedup.candidate_jaccard(cand, batch, corpus.drop("_raw_id"))
+            return pairs.filter(F.col("jaccard") >= args.jaccard)
+
+        batch = docs.join(deduped.select("doc_id"), "doc_id").select("doc_id", "text")
+        deduped, incr_report["incremental_text"] = _index_dedup(
+            spark, job, deduped, "text", TEXT_BANDS, args.band_index, batch, jaccard
         )
-        deduped = checkpoint(deduped.join(drops, "doc_id", "left_anti"), job)
-        n_after = deduped.count()
-        release(*stage)
-        incr_report["incremental_text"] = {
-            "candidates": n_cand,
-            "after_incremental_text_dedup": n_after,
-        }
     if args.embedding_index:
         from pero_ocr_api_spark.operators import similarity
-        from pero_ocr_api_spark.plans.io import embedding_index_candidates
+        from pero_ocr_api_spark.plans.io import EMBEDDING_BANDS
 
-        b_raw = (
+        def cosine(cand, batch):
+            corpus = spark.read.parquet(args.corpus_embeddings).select(
+                "vec_id", "embedding"
+            )
+            return similarity.candidate_cosine(
+                cand, similarity._with_norm(batch), similarity._with_norm(corpus)
+            ).filter(F.col("cosine") >= args.cosine)
+
+        batch = (
             spark.read.parquet(args.embeddings)
             .select("vec_id", "embedding")
             .join(deduped.select(F.col("doc_id").alias("vec_id")), "vec_id")
         )
-        dim = b_raw.select(F.size("embedding").alias("d")).first()
+        dim = batch.select(F.size("embedding").alias("d")).first()
         if dim is not None:  # empty batch: nothing to dedup
-            stage = (*job, "embedding_index")
-            cand = cache(
-                embedding_index_candidates(spark, b_raw, args.embedding_index, dim["d"]),
-                stage,
+            deduped, incr_report["incremental_embedding"] = _index_dedup(
+                spark, job, deduped, "embedding", EMBEDDING_BANDS,
+                args.embedding_index, batch, cosine, dim["d"],
             )
-            n_cand = cand.count()
-            c_raw = spark.read.parquet(args.corpus_embeddings).select(
-                "vec_id", "embedding"
-            )
-            drops = (
-                similarity.candidate_cosine(
-                    cand, similarity._with_norm(b_raw), similarity._with_norm(c_raw)
-                )
-                .filter(F.col("cosine") >= args.cosine)
-                .select(F.col("batch_id").alias("doc_id"))
-                .distinct()
-            )
-            deduped = checkpoint(deduped.join(drops, "doc_id", "left_anti"), job)
-            n_after = deduped.count()
-            release(*stage)
-            incr_report["incremental_embedding"] = {
-                "candidates": n_cand,
-                "after_incremental_embedding_dedup": n_after,
-            }
 
     # -- 5: deterministic stratified mix sampling ------------------------
     if args.no_sampling:
@@ -450,6 +426,30 @@ def _curate(spark, args, job: tuple) -> int:
         )
     )
     return 0
+
+
+def _index_dedup(spark, job, deduped, name, family, index, batch, verify, dim=None):
+    """Stage 4d for one dedup family: drop the batch docs whose
+    candidates from the persistent band index `index` pass
+    ``verify(cand, batch)`` (which applies the family's threshold).
+    Returns the checkpointed survivors and the stage report."""
+    from pyspark.sql import functions as F
+
+    from pero_ocr_api_spark.plans.io import band_index_candidates
+    from pero_ocr_api_spark.session import cache, checkpoint, release
+
+    # candidates live until the stage count (a job sub-scope)
+    stage = (*job, f"{name}_index")
+    cand = cache(band_index_candidates(spark, batch, index, family, dim), stage)
+    n_cand = cand.count()
+    drops = verify(cand, batch).select(F.col("batch_id").alias("doc_id")).distinct()
+    deduped = checkpoint(deduped.join(drops, "doc_id", "left_anti"), job)
+    n_after = deduped.count()
+    release(*stage)
+    return deduped, {
+        "candidates": n_cand,
+        f"after_incremental_{name}_dedup": n_after,
+    }
 
 
 if __name__ == "__main__":

@@ -11,9 +11,16 @@ parquet:
   page-state update (``general.py:210-224`` guarded by PK).
 * :func:`read_done_ids` — the checkpoint read used to build the
   ``resume_from`` anti-join in ``run_extract``.
+* :func:`write_extracted_bucketed` and :func:`write_band_index` — the
+  same exactly-once contract into bucketed tables, through one
+  merge-append body; a band index serves either dedup family
+  (:data:`TEXT_BANDS`, :data:`EMBEDDING_BANDS`), and
+  :func:`band_candidates` is the one batch-vs-index candidate join.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -91,6 +98,63 @@ def write_extracted(
     return written.get["n"]
 
 
+def _merge_append_bucketed(
+    spark: SparkSession,
+    rows: DataFrame,
+    table: str,
+    id_col: str,
+    key_cols: tuple[str, ...],
+    sort_col: str,
+    path: str | None,
+    buckets: int,
+    to_table: Callable[[DataFrame], DataFrame] = lambda rows: rows,
+) -> int:
+    """Exactly-once merge-append into a table bucketed by ``key_cols``
+    — the one body behind :func:`write_extracted_bucketed` and
+    :func:`write_band_index`. The batch is deduplicated on ``id_col``,
+    ids already in `table` are anti-joined away (Iceberg MERGE
+    analog: a retried or re-run writer never duplicates a row), and
+    ``to_table`` of what is left is appended. Returns the number of
+    new ids.
+
+    An empty FIRST batch still creates the (empty) table: readers
+    read it back unconditionally (the build_dedup_index report,
+    band_index_candidates), and an empty drop must be re-runnable.
+
+    ``path`` makes the table external (data in `path`); bucket count
+    is a table constant — pick ~(table size / a few GB) at production
+    scale, and keep it fixed for the table's lifetime so every
+    writer/reader agrees on the layout."""
+    rows = rows.dropDuplicates([id_col])
+    exists = spark.catalog.tableExists(table)
+    if exists:
+        done = spark.table(table).select(id_col).distinct()
+        rows = rows.join(done, id_col, "left_anti")
+    with cache_scope():
+        rows = cache(rows)
+        n = rows.count()
+        if n or not exists:
+            writer = (
+                # repartition onto the bucket layout first: bucketBy makes
+                # every task write one file PER BUCKET it holds, so an
+                # unaligned batch adds up to tasks x buckets files per
+                # append (measured: 3 appends -> 72 files at 4 buckets);
+                # repartition(buckets, *key_cols) uses the same murmur3
+                # pmod as the bucket spec, so each task holds exactly one
+                # bucket and an append adds <= buckets files
+                to_table(rows)
+                .repartition(buckets, *key_cols)
+                .write.mode("append")
+                .format("parquet")
+                .bucketBy(buckets, *key_cols)
+                .sortBy(sort_col)
+            )
+            if path is not None:
+                writer = writer.option("path", path)
+            writer.saveAsTable(table)
+    return n
+
+
 def write_extracted_bucketed(
     spark: SparkSession,
     extracted: DataFrame,
@@ -110,40 +174,10 @@ def write_extracted_bucketed(
     is on by default), so only the incoming batch — the small side —
     shuffles. Plan-asserted in tests: with broadcasting disabled the
     merge anti-join compiles to exactly ONE Exchange (batch side),
-    none on the bucketed scan.
-
-    ``path`` makes the table external (data in `path`); bucket count
-    is a table constant — pick ~(corpus size / a few GB) at
-    production scale, and keep it fixed for the table's lifetime so
-    every writer/reader agrees on the layout."""
-    extracted = extracted.dropDuplicates(["doc_id"])
-    if spark.catalog.tableExists(table):
-        done = spark.table(table).select("doc_id")
-        new_rows = extracted.join(done, "doc_id", "left_anti")
-    else:
-        new_rows = extracted
-    with cache_scope():
-        new_rows = cache(new_rows)
-        n = new_rows.count()
-        if n:
-            writer = (
-                # repartition onto the bucket layout first: bucketBy makes
-                # every task write one file PER BUCKET it holds, so an
-                # unaligned batch adds up to tasks x buckets files per
-                # append (measured: 3 appends -> 72 files at 4 buckets);
-                # repartition(buckets, doc_id) uses the same murmur3 pmod
-                # as the bucket spec, so each task holds exactly one
-                # bucket and an append adds <= buckets files
-                new_rows.repartition(buckets, "doc_id")
-                .write.mode("append")
-                .format("parquet")
-                .bucketBy(buckets, "doc_id")
-                .sortBy("doc_id")
-            )
-            if path is not None:
-                writer = writer.option("path", path)
-            writer.saveAsTable(table)
-    return n
+    none on the bucketed scan."""
+    return _merge_append_bucketed(
+        spark, extracted, table, "doc_id", ("doc_id",), "doc_id", path, buckets
+    )
 
 
 def _num_buckets(spark: SparkSession, table: str) -> int:
@@ -220,167 +254,118 @@ def compact_extracted_bucketed(
     return files_before, len(spark.table(table).inputFiles())
 
 
+class BandFamily(NamedTuple):
+    """One dedup family's band index, as data: the batch rows
+    (``id_col``, ``value_col``) hash through ``bands(rows, dim)`` into
+    (``id_col``, *``key_cols``) band rows; the stored index is
+    bucketed by ``key_cols`` and sorted by ``sort_col``."""
+
+    id_col: str
+    value_col: str
+    key_cols: tuple[str, str]
+    sort_col: str
+    bands: Callable[[DataFrame, int | None], DataFrame]
+
+
+def _text_bands(rows: DataFrame, dim: int | None = None) -> DataFrame:
+    from pero_ocr_api_spark.operators.dedup import lsh_bands_df, minhash_signatures
+
+    return lsh_bands_df(minhash_signatures(rows))
+
+
+def _embedding_bands(rows: DataFrame, dim: int | None = None) -> DataFrame:
+    from pero_ocr_api_spark.operators import similarity
+
+    return similarity.embedding_bands_df(similarity.as_double_vec(rows), dim)
+
+
+# MinHash LSH bands over the text (dedup.lsh_bands_df)
+TEXT_BANDS = BandFamily(
+    "doc_id", "text", ("band_idx", "band_hash"), "band_hash", _text_bands
+)
+# sign-LSH ANN buckets over the vector (similarity.embedding_bands_df,
+# the expression ann_self_pairs hashes through); needs ``dim``
+EMBEDDING_BANDS = BandFamily(
+    "vec_id", "embedding", ("t", "bucket"), "bucket", _embedding_bands
+)
+
+
 def write_band_index(
     spark: SparkSession,
-    docs: DataFrame,
+    rows: DataFrame,
     table: str,
+    family: BandFamily = TEXT_BANDS,
+    dim: int | None = None,
     path: str | None = None,
     buckets: int = 16,
 ) -> int:
-    """Build / incrementally extend the PERSISTENT LSH band index —
-    the amortization vehicle the incremental dedup paths assume
-    (`incremental_dedup`, `streaming.stream_incremental_dedup`): the
-    corpus is minhashed ONCE at index-build time, and every daily
-    batch or stream micro-batch equi-joins the stored (band_idx,
-    band_hash) rows instead of re-hashing 10^12 documents.
+    """Build / incrementally extend a PERSISTENT band index — the
+    amortization vehicle the incremental dedup paths assume
+    (`incremental_dedup`, `incremental_embedding_dedup`, the
+    ``streaming`` incremental dedups, curate_job stage 4d): the corpus
+    is hashed ONCE at index-build time, and every daily batch or
+    stream micro-batch equi-joins the stored band rows instead of
+    re-hashing 10^12 documents or vectors.
 
-    The table is bucketed by the JOIN KEY (band_idx, band_hash), so
-    a candidate lookup scans it already hash-partitioned: with
-    bucketed scans on (the default) only the incoming batch — the
-    small side — shuffles. Plan-asserted in tests: broadcast
-    disabled, the candidate join compiles to exactly ONE Exchange.
-
-    Append semantics mirror :func:`write_extracted_bucketed`:
-    already-indexed doc_ids are anti-joined away, so re-running the
-    index job after a partial failure never duplicates band rows
-    (Iceberg MERGE analog). Returns the number of NEW docs indexed."""
-    from pero_ocr_api_spark.operators.dedup import (
-        lsh_bands_df,
-        minhash_signatures,
+    The table is bucketed by the family's JOIN KEY, so a candidate
+    lookup scans it already hash-partitioned: with bucketed scans on
+    (the default) only the incoming batch — the small side —
+    shuffles. Plan-asserted in tests: broadcast disabled, the
+    candidate join compiles to exactly ONE Exchange. Already-indexed
+    ids are anti-joined away, so a crashed build re-submits as-is.
+    Returns the number of NEW ids indexed."""
+    return _merge_append_bucketed(
+        spark,
+        rows.select(family.id_col, family.value_col),
+        table,
+        family.id_col,
+        family.key_cols,
+        family.sort_col,
+        path,
+        buckets,
+        lambda new: family.bands(new, dim),
     )
 
-    docs = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
-    if spark.catalog.tableExists(table):
-        done = spark.table(table).select("doc_id").distinct()
-        docs = docs.join(done, "doc_id", "left_anti")
-    with cache_scope():
-        docs = cache(docs)
-        n = docs.count()
-        # an empty FIRST build still creates the (empty) table: callers
-        # read it back unconditionally (jobs/build_dedup_index.py report,
-        # band_index_candidates), and an empty drop must be re-runnable
-        if n or not spark.catalog.tableExists(table):
-            bands = lsh_bands_df(minhash_signatures(docs))
-            writer = (
-                # align writer tasks with the bucket layout (same
-                # rationale as write_extracted_bucketed: an unaligned
-                # append emits tasks x buckets files)
-                bands.repartition(buckets, "band_idx", "band_hash")
-                .write.mode("append")
-                .format("parquet")
-                .bucketBy(buckets, "band_idx", "band_hash")
-                .sortBy("band_hash")
-            )
-            if path is not None:
-                writer = writer.option("path", path)
-            writer.saveAsTable(table)
-    return n
 
-
-def write_embedding_index(
-    spark: SparkSession,
-    emb: DataFrame,
-    table: str,
-    dim: int,
-    path: str | None = None,
-    buckets: int = 16,
-) -> int:
-    """Build / incrementally extend the PERSISTENT embedding-ANN band
-    index — the embedding twin of :func:`write_band_index`, and the
-    missing leg of the embedding production triangle (self-join →
-    index → incremental): the corpus is sign-LSH-hashed ONCE at
-    index-build time (``similarity.embedding_bands_df``, the identical
-    expression ``ann_self_pairs`` uses), and every daily embedding
-    drop equi-joins the stored (t, bucket) rows instead of re-hashing
-    10^12 vectors.
-
-    The table is bucketed by the JOIN KEY (t, bucket), so a candidate
-    lookup scans it already hash-partitioned — only the incoming batch
-    shuffles (plan-asserted in tests: broadcast disabled, the candidate
-    join compiles to exactly ONE Exchange). Append semantics mirror
-    :func:`write_band_index`: already-indexed vec_ids are anti-joined
-    away, so a crashed build re-submits as-is. Returns the number of
-    NEW vectors indexed.
-
-    The exact-cosine verify stays with the caller — the index stores
-    only (vec_id, t, bucket), never the vectors."""
-    from pero_ocr_api_spark.operators import similarity
-
-    emb = emb.select("vec_id", "embedding").dropDuplicates(["vec_id"])
-    if spark.catalog.tableExists(table):
-        done = spark.table(table).select("vec_id").distinct()
-        emb = emb.join(done, "vec_id", "left_anti")
-    with cache_scope():
-        emb = cache(emb)
-        n = emb.count()
-        if n or not spark.catalog.tableExists(table):
-            bands = similarity.embedding_bands_df(similarity.as_double_vec(emb), dim)
-            writer = (
-                bands.repartition(buckets, "t", "bucket")
-                .write.mode("append")
-                .format("parquet")
-                .bucketBy(buckets, "t", "bucket")
-                .sortBy("bucket")
-            )
-            if path is not None:
-                writer = writer.option("path", path)
-            writer.saveAsTable(table)
-    return n
-
-
-def embedding_index_candidates(
-    spark: SparkSession,
-    batch: DataFrame,
-    table: str,
-    dim: int,
+def band_candidates(
+    batch_bands: DataFrame, index_bands: DataFrame, family: BandFamily
 ) -> DataFrame:
-    """Candidate (batch_id, corpus_id) pairs for a new embedding batch
-    against the stored ANN band index: hash ONLY the batch, equi-join
-    the bucketed index on (t, bucket), dedupe across tables. The exact
-    cosine verify stays with the caller (it needs the vectors, which
-    the index deliberately does not store)."""
-    from pero_ocr_api_spark.operators import similarity
+    """The batch-vs-index candidate join: batch band rows equi-joined
+    to index band rows on the family's key. Returns one row per
+    shared band — the batch's columns with its id renamed
+    ``batch_id``, plus ``corpus_id`` — so callers dedupe as their
+    plan allows (``distinct`` in batch, a watermark in a stream).
 
-    b_bands = similarity.embedding_bands_df(
-        similarity.as_double_vec(batch.select("vec_id", "embedding")), dim
-    ).withColumnRenamed("vec_id", "batch_id")
-    idx = spark.table(table).select(
-        F.col("vec_id").alias("corpus_id"), "t", "bucket"
+    Self pairs are dropped: a retried batch or a replayed stream file
+    overlaps the index it already wrote, its own stored rows would
+    surface as (X, X) "duplicates", and a keep-list consumer would
+    drop every retried doc. The ids compare as strings: a stream's
+    doc_id is a string while the index keys it as a long, and ANSI
+    mode refuses to cast a non-numeric string to a long."""
+    corpus = index_bands.select(
+        F.col(family.id_col).alias("corpus_id"), *family.key_cols
     )
     return (
-        b_bands.join(idx, ["t", "bucket"])
-        # a retried batch overlaps the index it already wrote (same
-        # hazard as band_index_candidates): never emit (X, X)
-        .filter(F.col("batch_id") != F.col("corpus_id"))
-        .select("batch_id", "corpus_id")
-        .distinct()
+        batch_bands.withColumnRenamed(family.id_col, "batch_id")
+        .join(corpus, list(family.key_cols))
+        .filter(
+            F.col("batch_id").cast("string") != F.col("corpus_id").cast("string")
+        )
+        .drop(*family.key_cols)
     )
 
 
 def band_index_candidates(
-    spark: SparkSession, batch: DataFrame, table: str
+    spark: SparkSession,
+    batch: DataFrame,
+    table: str,
+    family: BandFamily = TEXT_BANDS,
+    dim: int | None = None,
 ) -> DataFrame:
     """Candidate (batch_id, corpus_id) pairs for a new batch against
     the stored band index: hash ONLY the batch, equi-join the
-    bucketed index on (band_idx, band_hash), dedupe across bands.
-    The Jaccard / cosine verify stays with the caller (it needs the
-    text, which the index deliberately does not store)."""
-    from pero_ocr_api_spark.operators.dedup import (
-        lsh_bands_df,
-        minhash_signatures,
-    )
-
-    b_bands = lsh_bands_df(minhash_signatures(batch.select("doc_id", "text")))
-    idx = spark.table(table).select(
-        F.col("doc_id").alias("corpus_id"), "band_idx", "band_hash"
-    )
-    return (
-        b_bands.select(F.col("doc_id").alias("batch_id"), "band_idx", "band_hash")
-        .join(idx, ["band_idx", "band_hash"])
-        # a retried batch overlaps the index it already wrote: its own
-        # stored rows would otherwise surface as (X, X) "duplicates"
-        # and a keep-list consumer would drop every retried doc
-        .filter(F.col("batch_id") != F.col("corpus_id"))
-        .select("batch_id", "corpus_id")
-        .distinct()
-    )
+    bucketed index, dedupe across bands. The exact verify stays with
+    the caller (it needs the text or vectors, which the index
+    deliberately does not store)."""
+    b_bands = family.bands(batch.select(family.id_col, family.value_col), dim)
+    return band_candidates(b_bands, spark.table(table), family).distinct()

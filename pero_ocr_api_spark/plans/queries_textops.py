@@ -19,6 +19,7 @@ from pero_ocr_api_spark.functions.html_clean import (
 )
 from pero_ocr_api_spark.functions.portable import duckdb_round_bin, round_bin
 from pero_ocr_api_spark.operators import dedup
+from pero_ocr_api_spark.plans.io import EMBEDDING_BANDS, TEXT_BANDS, band_candidates
 from pero_ocr_api_spark.session import cache, memo
 from pero_ocr_api_spark.sources.tables import read_table
 
@@ -806,12 +807,12 @@ def q_incremental_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental (batch-vs-corpus) EMBEDDING dedup — the daily-drop
     shape for the embedding family, completing its production triangle
     (self-join `ann_self_near_pairs` → persistent index
-    `plans/io.write_embedding_index` → this). A new batch (scaled
+    `plans/io.write_band_index` → this). A new batch (scaled
     twins of vec_id < N_NEARDUP, same direction ⇒ cosine 1.0) is
     sign-LSH-hashed and equi-joined against the CORPUS band index on
     (t, bucket) — the corpus is hashed once and reused (in production
     the bands live in the bucketed index table written by
-    write_embedding_index, so only the batch is hashed per run; here
+    write_band_index, so only the batch is hashed per run; here
     the cached bands DF stands in for the index, exactly as in
     `incremental_dedup`). Candidates dedupe across tables before the
     exact-cosine verify, which joins vectors for CANDIDATE rows only —
@@ -828,18 +829,10 @@ def q_incremental_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
     ).select("vec_id", "v", "norm")
 
     # the persisted index stand-in: corpus hashed once, joined per batch
-    c_bands = cache(
-        similarity.embedding_bands_df(corpus, EMB_DIM).withColumnRenamed(
-            "vec_id", "corpus_id"
-        )
-    )
-    cand = (
-        similarity.embedding_bands_df(batch, EMB_DIM)
-        .withColumnRenamed("vec_id", "batch_id")
-        .join(c_bands, ["t", "bucket"])
-        .select("batch_id", "corpus_id")
-        .distinct()
-    )
+    c_bands = cache(similarity.embedding_bands_df(corpus, EMB_DIM))
+    cand = band_candidates(
+        similarity.embedding_bands_df(batch, EMB_DIM), c_bands, EMBEDDING_BANDS
+    ).distinct()
     return (
         similarity.candidate_cosine(cand, batch, corpus)
         .select(
@@ -1605,19 +1598,7 @@ def q_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     b_bands = dedup.lsh_bands_df(dedup.minhash_signatures(batch))
     # cached: referenced three times below (two semi-filters + the
     # final join); candidate sets are tiny by construction
-    cand = cache(
-        b_bands.select(
-            F.col("doc_id").alias("batch_id"), "band_idx", "band_hash"
-        )
-        .join(
-            c_bands.select(
-                F.col("doc_id").alias("corpus_id"), "band_idx", "band_hash"
-            ),
-            ["band_idx", "band_hash"],
-        )
-        .select("batch_id", "corpus_id")
-        .distinct()
-    )
+    cand = cache(band_candidates(b_bands, c_bands, TEXT_BANDS).distinct())
     # candidates-only verification (dedup.candidate_jaccard)
     return (
         dedup.candidate_jaccard(cand, batch, corpus)

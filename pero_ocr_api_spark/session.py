@@ -146,6 +146,14 @@ def per_context(build: Callable) -> Callable:
 #   ("stage", n, ...)   a ``with cache_scope():`` block, freed on exit.
 # A scope opened inside another extends the outer key, so releasing a
 # scope also releases every scope opened inside it.
+# The exception: eager lineage cuts whose result the caller keeps call
+# localCheckpoint directly, because the returned DataFrame reads their
+# blocks for as long as it lives, past any scope they could name here:
+#   similarity.trained_centroids, ivf_topk  the nlist-row IVF centroids;
+#   bpe.bpe_train                           the word table, per round;
+#   dedup.connected_components              the edge and label tables;
+#   streaming.stream_incremental_dedup and  the default corpus bands,
+#   stream_incremental_embedding_dedup      read by every micro-batch.
 QUERY_SCOPE = ("query",)
 _CACHES: dict[tuple, list] = {}  # DataFrames and checkpoint RDDs
 _OPEN: list[tuple] = []

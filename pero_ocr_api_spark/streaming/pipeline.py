@@ -270,8 +270,11 @@ def stream_incremental_dedup(
     Each incoming doc is LSH-banded per row (``minhash_signature_col``
     — aggregation-free, so the plan stays a chain of projections and
     stream-STATIC joins, all append-mode legal) and equi-joined
-    against the pre-built corpus band index; candidate pairs dedupe
-    across bands inside the watermark, then an exact Jaccard verify
+    against the pre-built corpus band index through
+    ``plans.io.band_candidates`` (which drops self pairs, so a
+    replayed doc already in the index is not its own duplicate);
+    candidate pairs dedupe across bands inside the watermark, then an
+    exact Jaccard verify
     joins the static corpus texts — candidates-only, never
     corpus × stream.
 
@@ -288,17 +291,15 @@ def stream_incremental_dedup(
     from pero_ocr_api_spark.operators.dedup import (
         band_structs_col,
         jaccard_col,
-        minhash_signatures,
-        lsh_bands_df,
         minhash_signature_col,
         shingles_col,
     )
+    from pero_ocr_api_spark.plans.io import TEXT_BANDS, band_candidates
 
     if corpus_bands is None:
-        corpus_bands = lsh_bands_df(
-            minhash_signatures(corpus.select("doc_id", "text"))
+        corpus_bands = TEXT_BANDS.bands(
+            corpus.select("doc_id", "text")
         ).localCheckpoint(eager=True)
-    c_bands = corpus_bands
     c_text = corpus.select(
         F.col("doc_id").alias("corpus_id"),
         F.col("text").alias("corpus_text"),
@@ -320,13 +321,8 @@ def stream_incremental_dedup(
         .select("doc_id", "ts", "text", "b.band_idx", "b.band_hash")
     )
     cand = (
-        s_bands.join(
-            c_bands.select(
-                F.col("doc_id").alias("corpus_id"), "band_idx", "band_hash"
-            ),
-            ["band_idx", "band_hash"],
-        )
-        .select("doc_id", "corpus_id", "ts", "text")
+        band_candidates(s_bands, corpus_bands, TEXT_BANDS)
+        .select(F.col("batch_id").alias("doc_id"), "corpus_id", "ts", "text")
         .withWatermark("ts", watermark_delay)
         .dropDuplicatesWithinWatermark(["doc_id", "corpus_id"])
     )
@@ -356,27 +352,30 @@ def stream_incremental_embedding_dedup(
 ) -> DataFrame:
     """Streaming batch-vs-corpus EMBEDDING dedup — the continuous twin
     of the batch ``incremental_embedding_dedup`` query and the stream
-    hook of the embedding index (``plans.io.write_embedding_index``).
+    hook of the embedding index (``plans.io.write_band_index`` with
+    ``EMBEDDING_BANDS``).
     Each incoming vector is sign-LSH-bucketed per row
     (a pure projection of the expression behind
     ``similarity.embedding_bands_df``, so stream and index buckets
-    always agree) and equi-joined against the pre-built corpus band index;
+    always agree) and equi-joined against the pre-built corpus band
+    index through ``plans.io.band_candidates`` (self pairs dropped);
     candidate pairs dedupe across tables inside the watermark, then an
     exact-cosine verify joins the static corpus VECTORS —
     candidates-only, never corpus × stream.
 
     Scale shape: the corpus is hashed ONCE — pass the bucketed table
-    from ``write_embedding_index`` as ``corpus_bands`` (columns
+    from ``write_band_index`` as ``corpus_bands`` (columns
     vec_id, t, bucket), or let the default build it and
     ``localCheckpoint`` so micro-batches reuse the materialized bands.
     The plan stays projections + stream-STATIC joins (append-mode
     legal); state is one (vec_id, corpus_id) key per in-watermark
     candidate."""
     from pero_ocr_api_spark.operators import similarity
+    from pero_ocr_api_spark.plans.io import EMBEDDING_BANDS, band_candidates
 
     if corpus_bands is None:
-        corpus_bands = similarity.embedding_bands_df(
-            similarity.as_double_vec(corpus.select("vec_id", "embedding")), dim
+        corpus_bands = EMBEDDING_BANDS.bands(
+            corpus.select("vec_id", "embedding"), dim
         ).localCheckpoint(eager=True)
     c_vec = similarity._with_norm(corpus.select("vec_id", "embedding")).select(
         F.col("vec_id").alias("corpus_id"),
@@ -412,18 +411,8 @@ def stream_incremental_embedding_dedup(
         ).alias("b"),
     ).select("vec_id", "ts", "v", "norm", "b.t", "b.bucket")
     cand = (
-        s_bands.join(
-            corpus_bands.select(
-                F.col("vec_id").alias("corpus_id"), "t", "bucket"
-            ),
-            ["t", "bucket"],
-        )
-        # a replayed/retried stream file whose vectors are already in
-        # the corpus index would join its own stored rows and emit
-        # (X, X, cosine=1.0) — a keep-list consumer would then drop
-        # every retried doc (same guard as embedding_index_candidates)
-        .filter(F.col("vec_id") != F.col("corpus_id"))
-        .select("vec_id", "corpus_id", "ts", "v", "norm")
+        band_candidates(s_bands, corpus_bands, EMBEDDING_BANDS)
+        .select(F.col("batch_id").alias("vec_id"), "corpus_id", "ts", "v", "norm")
         .withWatermark("ts", watermark_delay)
         .dropDuplicatesWithinWatermark(["vec_id", "corpus_id"])
     )

@@ -1,32 +1,30 @@
-"""Persistent embedding-ANN band index: idempotent build, batch-only
-shuffle on candidate lookup, batch vs streaming parity — the embedding
-twin of tests/test_band_index.py, completing the embedding family's
+"""Persistent embedding-ANN band index: the embedding runs of the
+checks in tests/test_band_index.py (idempotent build, batch-only
+shuffle on candidate lookup, no self pairs, empty first build, CLI),
+plus batch vs streaming parity — completing the embedding family's
 production triangle (self-join → index → incremental)."""
 
 from __future__ import annotations
 
-import json
 import tempfile
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.operators import similarity
-from pero_ocr_api_spark.plans.io import (
-    embedding_index_candidates,
-    write_embedding_index,
+from tests.test_band_index import (
+    DIM,
+    EMBEDDING,
+    check_build_dedup_index_job_cli,
+    check_candidates_match_fresh_join,
+    check_empty_first_build_creates_table,
+    check_idempotent_and_incremental,
+    check_join_shuffles_batch_only,
+    check_retried_batch_emits_no_self_pairs,
+    vec as _vec,
 )
 
-DIM = 8
 T0 = datetime(2024, 1, 1, 0, 0, 0)
-
-
-def _vec(i: int) -> list[float]:
-    # deterministic spread directions: distinct sign patterns per id
-    return [
-        float(((i >> (d % 4)) & 1) * 2 - 1) * (1.0 + 0.1 * d + 0.01 * i)
-        for d in range(DIM)
-    ]
 
 
 def _corpus_rows(n: int = 30):
@@ -39,227 +37,35 @@ def _emb_df(spark, rows):
     )
 
 
-def _batch_df(spark, n_twins: int = 5):
-    # scaled twins of corpus vectors 0..n-1 (same direction ⇒ identical
-    # sign buckets, cosine 1.0) + one orthogonal-ish novel vector
-    rows = [
-        (1000 + i, [x * 1.1 for x in _vec(i)]) for i in range(n_twins)
-    ] + [(2000, [(-1.0) ** d * 7.5 for d in range(DIM)])]
-    return _emb_df(spark, rows)
-
-
-def _cleanup(spark, table):
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_embedding_index_idempotent_and_incremental(spark):
-    d = tempfile.mkdtemp()
-    table = "emb_index_test1"
-    _cleanup(spark, table)
-    emb = _emb_df(spark, _corpus_rows())
-    rows_per_vec = similarity.ANN_SELF_TABLES
-    try:
-        assert (
-            write_embedding_index(spark, emb, table, DIM, path=f"{d}/t", buckets=4)
-            == 30
-        )
-        # re-run: nothing new (MERGE analog)
-        assert (
-            write_embedding_index(spark, emb, table, DIM, path=f"{d}/t", buckets=4)
-            == 0
-        )
-        assert spark.table(table).count() == 30 * rows_per_vec
-        more = _emb_df(spark, [(100, _vec(100))])
-        assert (
-            write_embedding_index(
-                spark, emb.unionByName(more), table, DIM, path=f"{d}/t", buckets=4
-            )
-            == 1
-        )
-        assert spark.table(table).count() == 31 * rows_per_vec
-    finally:
-        _cleanup(spark, table)
+    check_idempotent_and_incremental(spark, EMBEDDING, "emb_index_test1")
 
 
 def test_embedding_index_candidates_match_fresh_join(spark):
-    d = tempfile.mkdtemp()
-    table = "emb_index_test2"
-    _cleanup(spark, table)
-    corpus = _emb_df(spark, _corpus_rows())
-    batch = _batch_df(spark)
-    try:
-        write_embedding_index(spark, corpus, table, DIM, path=f"{d}/t", buckets=4)
-        got = {
-            (r.batch_id, r.corpus_id)
-            for r in embedding_index_candidates(spark, batch, table, DIM).collect()
-        }
-
-        def bands(df, alias):
-            e = similarity.as_double_vec(df)
-            return e.select(
-                F.col("vec_id").alias(alias),
-                F.explode(
-                    similarity.bucket_struct_col(
-                        F.col("v"),
-                        DIM,
-                        similarity.ANN_SELF_TABLES,
-                        similarity.ANN_SELF_PLANES,
-                    )
-                ).alias("b"),
-            ).select(alias, "b.t", "b.bucket")
-
-        expected = {
-            (r.batch_id, r.corpus_id)
-            for r in bands(batch, "batch_id")
-            .join(bands(corpus, "corpus_id"), ["t", "bucket"])
-            .select("batch_id", "corpus_id")
-            .distinct()
-            .collect()
-        }
-        assert got == expected
-        # every scaled twin finds its original (identical sign buckets)
-        twins = {(1000 + i, i) for i in range(5)}
-        assert twins <= got
-    finally:
-        _cleanup(spark, table)
+    check_candidates_match_fresh_join(spark, EMBEDDING, "emb_index_test2")
 
 
 def test_embedding_index_join_shuffles_batch_only(spark):
-    """The index side must scan bucketed (no Exchange); joining the
-    same data as plain parquet costs exactly one more Exchange."""
-    d = tempfile.mkdtemp()
-    table = "emb_index_test3"
-    _cleanup(spark, table)
-    corpus = _emb_df(spark, _corpus_rows())
-    batch = _emb_df(spark, [(1000, _vec(0))])
-    try:
-        write_embedding_index(spark, corpus, table, DIM, path=f"{d}/t", buckets=4)
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            bucketed_plan = (
-                embedding_index_candidates(spark, batch, table, DIM)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            e = similarity.as_double_vec(batch)
-            b_bands = e.select(
-                F.col("vec_id").alias("batch_id"),
-                F.explode(
-                    similarity.bucket_struct_col(
-                        F.col("v"),
-                        DIM,
-                        similarity.ANN_SELF_TABLES,
-                        similarity.ANN_SELF_PLANES,
-                    )
-                ).alias("b"),
-            ).select("batch_id", "b.t", "b.bucket")
-            plain = spark.read.parquet(f"{d}/t").select(
-                F.col("vec_id").alias("corpus_id"), "t", "bucket"
-            )
-            plain_plan = (
-                b_bands.join(plain, ["t", "bucket"])
-                .filter(F.col("batch_id") != F.col("corpus_id"))
-                .select("batch_id", "corpus_id")
-                .distinct()
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        assert "Bucketed: true" in bucketed_plan
-        assert (
-            bucketed_plan.count("Exchange") == plain_plan.count("Exchange") - 1
-        ), (bucketed_plan, plain_plan)
-    finally:
-        _cleanup(spark, table)
+    check_join_shuffles_batch_only(spark, EMBEDDING, "emb_index_test3")
 
 
 def test_retried_embedding_batch_emits_no_self_pairs(spark):
-    d = tempfile.mkdtemp()
-    table = "emb_index_retry"
-    _cleanup(spark, table)
-    emb = _emb_df(spark, _corpus_rows())
-    try:
-        write_embedding_index(spark, emb, table, DIM, path=f"{d}/t", buckets=4)
-        cand = embedding_index_candidates(spark, emb, table, DIM)
-        assert cand.filter(F.col("batch_id") == F.col("corpus_id")).count() == 0
-    finally:
-        _cleanup(spark, table)
+    check_retried_batch_emits_no_self_pairs(spark, EMBEDDING, "emb_index_retry")
 
 
 def test_empty_first_embedding_build_creates_table(spark):
-    d = tempfile.mkdtemp()
-    table = "emb_index_empty"
-    _cleanup(spark, table)
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    try:
-        assert (
-            write_embedding_index(spark, empty, table, DIM, path=f"{d}/t", buckets=4)
-            == 0
-        )
-        assert spark.table(table).count() == 0
-        batch = _emb_df(spark, _corpus_rows(3))
-        assert embedding_index_candidates(spark, batch, table, DIM).count() == 0
-    finally:
-        _cleanup(spark, table)
+    check_empty_first_build_creates_table(spark, EMBEDDING, "emb_index_empty")
 
 
 def test_build_dedup_index_job_cli_embeddings(spark, tmp_path):
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    import build_dedup_index
-
-    table = "emb_index_test_cli"
-    _cleanup(spark, table)
-    emb_path = str(tmp_path / "emb")
-    _emb_df(spark, _corpus_rows()).write.parquet(emb_path)
-    try:
-        import io as _io
-        from contextlib import redirect_stdout
-
-        buf = _io.StringIO()
-        with redirect_stdout(buf):
-            rc = build_dedup_index.main(
-                [
-                    "--embeddings", emb_path,
-                    "--dim", str(DIM),
-                    "--table", table,
-                    "--path", str(tmp_path / "idx"),
-                    "--buckets", "4",
-                ]
-            )
-        assert rc == 0
-        report = json.loads(buf.getvalue().strip().splitlines()[-1])
-        assert report["family"] == "embedding"
-        assert report["docs_indexed"] == 30
-        assert report["band_rows"] == 30 * similarity.ANN_SELF_TABLES
-        # idempotent re-run
-        buf2 = _io.StringIO()
-        with redirect_stdout(buf2):
-            assert build_dedup_index.main(
-                [
-                    "--embeddings", emb_path,
-                    "--dim", str(DIM),
-                    "--table", table,
-                    "--path", str(tmp_path / "idx"),
-                    "--buckets", "4",
-                ]
-            ) == 0
-        report2 = json.loads(buf2.getvalue().strip().splitlines()[-1])
-        assert report2["docs_indexed"] == 0
-    finally:
-        _cleanup(spark, table)
+    check_build_dedup_index_job_cli(spark, EMBEDDING, "emb_index_test_cli", tmp_path)
 
 
 def test_stream_replayed_corpus_vectors_emit_no_self_pairs(spark):
     """A replayed stream file whose vectors are already in the corpus
     index must not emit (X, X) self-duplicates — a keep-list consumer
-    would drop every retried doc (review finding; same guard as
-    embedding_index_candidates)."""
+    would drop every retried doc (the self-pair filter of
+    plans.io.band_candidates)."""
     from pero_ocr_api_spark.streaming.pipeline import (
         stream_incremental_embedding_dedup,
     )

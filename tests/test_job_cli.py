@@ -730,10 +730,7 @@ def test_curate_job_incremental_index_stages(spark):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
     import curate_job
 
-    from pero_ocr_api_spark.plans.io import (
-        write_band_index,
-        write_embedding_index,
-    )
+    from pero_ocr_api_spark.plans.io import EMBEDDING_BANDS, write_band_index
 
     d = tempfile.mkdtemp()
     corpus_path = "/root/testdata/sf0.001/documents.parquet"
@@ -799,7 +796,7 @@ def test_curate_job_incremental_index_stages(spark):
             "vec_id long, embedding array<float>",
         )
         c_emb.write.mode("overwrite").parquet(f"{d}/c_emb")
-        write_embedding_index(spark, c_emb, t_emb, dim=16, buckets=4)
+        write_band_index(spark, c_emb, t_emb, EMBEDDING_BANDS, dim=16, buckets=4)
 
         # batch embeddings: 10002 twins corpus doc a; others are novel
         b_vecs = {

@@ -297,8 +297,9 @@ def test_kernel_fake_pdf_still_invalid():
 
 
 def test_kernel_corrupt_jpeg_invalid():
-    r = kernel.process_media(b"\xff\xd8garbage", "image/jpeg", "m_badjpg")
-    assert r.state == kernel.STATE_INVALID_FILE
+    for blob in (b"\xff\xd8garbage", b"\xff\xd8\xff\xe0"):
+        r = kernel.process_media(blob, "image/jpeg", "m_badjpg")
+        assert r.state == kernel.STATE_INVALID_FILE
 
 
 def test_fill_bytes_before_eoi_decode():

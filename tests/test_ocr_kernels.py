@@ -86,6 +86,15 @@ def test_kernel_failure_states():
         kernel.process_media(b"%PDF-1.4", "application/pdf", "x").state
         == "INVALID_FILE"
     )
+    # kinds with no decoder fail as a row state, never an exception
+    # that would crash the whole Arrow batch
+    for blob, kind in (
+        (b"RIFF0000WAVE", "audio/wav"),
+        (b"\x00\x00\x00 ftypmp42", "video/mp4"),
+    ):
+        res = kernel.process_media(blob, kind, "x")
+        assert res.state == "INVALID_FILE"
+        assert "unsupported media_kind" in res.error
     # oversized image → PROCESSING_FAILED via MAX_MEGAPIXELS guard
     big = np.full((2600, 2100), 255, dtype=np.uint8)
     res = kernel.process_media(png.encode_gray(big), "image/png", "x")

@@ -192,3 +192,46 @@ def test_stream_incremental_dedup_matches_batch(spark):
     assert got == expected
     assert ("n1", 10) in got  # the constructed near-twin is flagged
     assert all(doc != "n2" for doc, _ in got)  # fresh doc passes clean
+
+
+def test_stream_replayed_corpus_docs_emit_no_self_pairs(spark):
+    """A replayed stream file whose docs are already in the corpus
+    index must not emit (X, X) self-duplicates — a keep-list consumer
+    would drop every retried doc (the self-pair filter of
+    plans.io.band_candidates). The stream's doc_id is a string and the
+    corpus keys it as a long, so the ids compare as strings, here as
+    in the filter (in Python '10' != 10 always holds)."""
+    from pero_ocr_api_spark.streaming.pipeline import stream_incremental_dedup
+
+    texts = {
+        10: "the quick brown fox jumps over the lazy dog today",
+        # a genuine near-twin of doc 10 inside the corpus
+        11: "the quick brown fox jumps over the lazy dog today extra",
+        12: "another unrelated corpus document mentioning benchmarks",
+    }
+    corpus = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
+    )
+    d = tempfile.mkdtemp()
+    replay = [
+        (str(i), T0 + timedelta(seconds=k), t)
+        for k, (i, t) in enumerate(sorted(texts.items()))
+    ]
+    spark.createDataFrame(
+        replay, "doc_id string, ts timestamp, text string"
+    ).coalesce(1).write.parquet(f"{d}/in")
+    sq = (
+        stream_incremental_dedup(spark, f"{d}/in", corpus)
+        .writeStream.format("memory")
+        .queryName("text_replay_out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    sq.awaitTermination(240)
+    got = {
+        (r.doc_id, r.corpus_id)
+        for r in spark.sql("select * from text_replay_out").collect()
+    }
+    assert all(str(doc) != str(c) for doc, c in got), got
+    assert ("10", 11) in got  # real near-twins are still flagged
