@@ -1,16 +1,31 @@
 """Similarity search over embedding columns (`array<float>`).
 
-Two paths:
+Five entry points:
 
 * :func:`cosine_topk` — exact brute force: broadcast the (small)
-  query side, one scan of the corpus, per-query window top-k. The
-  correctness baseline; O(|corpus| x |queries|) dot products.
+  query side, one nested-loop scan of the corpus, per-query window
+  top-k. The correctness baseline; O(|corpus| x |queries|) dot
+  products.
 * :func:`ann_topk` — random-hyperplane LSH: corpus and queries are
   bucketed by the sign pattern of dot products with fixed
   hyperplanes; candidates only join within a bucket. At cluster
   scale the bucket is the shuffle/partition key, turning ANN into an
   equi-join — the standard way to make nearest-neighbor shuffle-
   bounded instead of all-pairs.
+* :func:`ann_topk_multiprobe` — the same index, each query also
+  probing the Hamming-1 neighbours of its own buckets.
+* :func:`ivf_topk` — inverted file: each query probes its `nprobe`
+  nearest k-means cells.
+* :func:`ann_self_pairs` — the whole corpus against itself (nothing
+  broadcast), scored through :func:`candidate_cosine`.
+
+The three approximate top-k operators differ only in their probe, the
+code that yields (qid, vec_id) candidates. They share one probe join
+(:func:`_probe_join`: broadcast equi-join on the index key, self
+pairs dropped, candidates deduplicated) and one rescore body
+(:func:`_rescore_topk`: vectors joined to the candidates and to the
+broadcast query vectors, rounded cosine, per-query top-k). The exact
+scan shares its query-vector lookup and its scoring.
 
 Hyperplanes are deterministic md5-derived integer vectors computed
 driver-side and embedded as literals (engine-portable: the DuckDB
@@ -125,47 +140,102 @@ def bucket_struct_col(v: Column, dim: int, tables: int, planes: int) -> Column:
 
 
 def _with_norm(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, norm): the double vector and its L2 norm."""
     # spread first: a single-file embedding scan would serialize the
     # per-vector dot products onto one core (see dedup.spread_to_parallelism)
     from pero_ocr_api_spark.operators.dedup import spread_to_parallelism
 
     emb = as_double_vec(spread_to_parallelism(emb))
-    return emb.withColumn("norm", F.sqrt(dot_col(F.col("v"), F.col("v"))))
+    return emb.select(
+        "vec_id", "v", F.sqrt(dot_col(F.col("v"), F.col("v"))).alias("norm")
+    )
 
 
-def _topk(sims: DataFrame, k: int) -> DataFrame:
+def _not_self() -> Column:
+    return F.col("vec_id") != F.col("qid")
+
+
+def _probe_join(
+    index: DataFrame, probes: DataFrame, key: str | list[str]
+) -> DataFrame:
+    """The one probe join: index rows (vec_id, key) meet the broadcast
+    probe rows (qid, key); self pairs are dropped and the (qid, vec_id)
+    candidates deduplicated *before* vectors are re-joined for scoring
+    — the shape that matters at scale, where re-scoring a duplicate
+    candidate is the dominant waste."""
+    return (
+        index.join(F.broadcast(probes), key)
+        .filter(_not_self())
+        .select("qid", "vec_id")
+        .distinct()
+    )
+
+
+def _query_vecs(e: DataFrame, query_ids: DataFrame) -> DataFrame:
+    """The query vectors (qid, qv, qn) of the normed corpus ``e``,
+    broadcast-hinted: the query side is small by contract."""
+    return F.broadcast(
+        e.join(query_ids, "vec_id").select(
+            F.col("vec_id").alias("qid"),
+            F.col("v").alias("qv"),
+            F.col("norm").alias("qn"),
+        )
+    )
+
+
+def _score_topk(sims: DataFrame, k: int) -> DataFrame:
+    """Rounded cosine of each (qid, vec_id) row of ``sims`` (v, norm
+    beside qv, qn), then the top ``k`` per query."""
+    cosine = round_bin(
+        dot_col(F.col("v"), F.col("qv")) / (F.col("norm") * F.col("qn")), 4
+    )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
     return (
-        sims.withColumn("rn", F.row_number().over(w))
+        sims.select("qid", "vec_id", cosine.alias("cosine"))
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("qid", "vec_id", "cosine", "rn")
     )
 
 
-def _cosine(sims: DataFrame) -> DataFrame:
-    return sims.select(
-        "qid",
-        "vec_id",
-        round_bin(
-            dot_col(F.col("v"), F.col("qv")) / (F.col("norm") * F.col("qn")), 4
-        ).alias("cosine"),
-    )
-
-
-def cosine_topk(
-    emb: DataFrame, query_ids: DataFrame, k: int, dim: int
+def _rescore_topk(
+    e: DataFrame, query_ids: DataFrame, k: int, cand: DataFrame
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query vec_id."""
+    """The one rescore body of the approximate operators: the (qid,
+    vec_id) candidates ``cand`` join to the normed vectors ``e`` and to
+    the broadcast query vectors, then score and keep the top ``k``."""
+    sims = cand.join(e, "vec_id").join(_query_vecs(e, query_ids), "qid")
+    return _score_topk(sims, k)
+
+
+def cosine_topk(emb: DataFrame, query_ids: DataFrame, k: int) -> DataFrame:
+    """Exact top-k cosine neighbors per query vec_id: one nested-loop
+    scan of every other corpus row against the broadcast query vectors
+    (routing it through a candidate set would add a shuffle join),
+    scored like the approximate operators."""
     # two plan references (query lookup + corpus scan) — one cached
     # norm pass instead of two
     e = cache(_with_norm(emb))
-    q = e.join(query_ids, "vec_id").select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
+    return _score_topk(e.join(_query_vecs(e, query_ids), _not_self()), k)
+
+
+def _lsh_index(
+    emb: DataFrame, query_ids: DataFrame, dim: int, tables: int, planes: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Normed vectors, their (vec_id, t, bucket) rows and the queries'
+    own (qid, t, bucket) rows. ``e`` is referenced by the bucket pass,
+    the candidate re-score join and the query-vector lookup; the bands
+    by the corpus and query sides — both are cached so the norm and
+    hyperplane pipelines run once per call, not once per plan
+    reference (the ann_self_pairs lesson; on an unbounded corpus the
+    same boundary comes free from the persisted bucketed index
+    table)."""
+    e = cache(_with_norm(emb))
+    bucketed = cache(embedding_bands_df(e, dim, tables, planes))
+    own = bucketed.join(query_ids, "vec_id").select(
+        F.col("vec_id").alias("qid"), "t", "bucket"
     )
-    sims = e.join(F.broadcast(q), e.vec_id != q.qid)
-    return _topk(_cosine(sims), k)
+    return e, bucketed, own
 
 
 def ann_topk(
@@ -178,38 +248,14 @@ def ann_topk(
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
-    Candidates = union over `tables` independent hash tables of the
-    query's bucket (recall stacks as 1-(1-p)^L). Candidate ids are
-    deduplicated *before* vectors are re-joined for scoring — the
-    shape that matters at scale, where re-scoring a duplicate
-    candidate is the dominant waste. On unstructured (near-random)
+    Probe: the query's own bucket in each of `tables` independent hash
+    tables (recall stacks as 1-(1-p)^L). On unstructured (near-random)
     embeddings recall ≈ the scanned corpus fraction by information-
     theoretic necessity; on clustered real embeddings the same plan
     concentrates neighbors into shared buckets."""
-    # e is referenced by the bucket pass, the candidate re-score join
-    # and the query-vector lookup; bucketed by the corpus and query
-    # sides — cache both so the norm and hyperplane pipelines
-    # run once per call, not once per plan reference (the
-    # ann_self_pairs lesson; on an unbounded corpus the same boundary
-    # comes free from the persisted bucketed index table).
-    e = cache(_with_norm(emb))
-    bucketed = cache(embedding_bands_df(e, dim, tables, planes))
-    q_buckets = bucketed.join(query_ids, "vec_id").select(
-        F.col("vec_id").alias("qid"), "t", "bucket"
-    )
-    cand = (
-        bucketed.join(F.broadcast(q_buckets), ["t", "bucket"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
-    q_vec = e.join(query_ids, "vec_id").select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-    )
-    sims = cand.join(e, "vec_id").join(F.broadcast(q_vec), "qid")
-    return _topk(_cosine(sims), k)
+    e, bucketed, own = _lsh_index(emb, query_ids, dim, tables, planes)
+    cand = _probe_join(bucketed, own, ["t", "bucket"])
+    return _rescore_topk(e, query_ids, k, cand)
 
 
 # ---------------------------------------------------- corpus-scale self-join ---
@@ -239,36 +285,30 @@ def embedding_bands_df(
 
 
 def candidate_cosine(
-    cand: DataFrame, batch: DataFrame, corpus: DataFrame
+    cand: DataFrame,
+    batch: DataFrame,
+    corpus: DataFrame,
+    ids: tuple[str, str] = ("batch_id", "corpus_id"),
 ) -> DataFrame:
-    """Raw cosine of each (batch_id, corpus_id) candidate; ``batch``
-    and ``corpus`` are normed vectors (vec_id, v, norm). Vectors join
-    for candidate rows only — batch-linear, never corpus x batch.
-    Callers apply their own threshold."""
-    return (
-        cand.join(
-            batch.select(
-                F.col("vec_id").alias("batch_id"),
-                F.col("v").alias("v1"),
-                F.col("norm").alias("n1"),
+    """Raw cosine of each candidate pair, whose ``ids`` columns name a
+    ``batch`` and a ``corpus`` vec_id; ``batch`` and ``corpus`` are
+    normed vectors (vec_id, v, norm). Vectors join for candidate rows
+    only — batch-linear, never corpus x batch. Callers apply their own
+    rounding and threshold."""
+    for i, (id_col, side) in enumerate(zip(ids, (batch, corpus)), 1):
+        cand = cand.join(
+            side.select(
+                F.col("vec_id").alias(id_col),
+                F.col("v").alias(f"v{i}"),
+                F.col("norm").alias(f"n{i}"),
             ),
-            "batch_id",
+            id_col,
         )
-        .join(
-            corpus.select(
-                F.col("vec_id").alias("corpus_id"),
-                F.col("v").alias("v2"),
-                F.col("norm").alias("n2"),
-            ),
-            "corpus_id",
-        )
-        .select(
-            "batch_id",
-            "corpus_id",
-            (
-                dot_col(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
-            ).alias("cosine"),
-        )
+    return cand.select(
+        *ids,
+        (dot_col(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))).alias(
+            "cosine"
+        ),
     )
 
 
@@ -313,7 +353,7 @@ def ann_self_pairs(
 
     if max_bucket is None:
         max_bucket = dedup.MAX_BUCKET
-    e = cache(_with_norm(emb).select("vec_id", "v", "norm"))
+    e = cache(_with_norm(emb))
     bands = cache(
         embedding_bands_df(e, dim, tables, planes).withColumnsRenamed(
             {"t": "band_idx", "bucket": "band_hash"}
@@ -322,32 +362,11 @@ def ann_self_pairs(
     if bands_out is not None:
         bands_out.append(bands)
     cand = dedup.lsh_candidate_pairs(bands, id_col="vec_id", max_bucket=max_bucket)
-    scored = (
-        cand.join(
-            e.select(
-                F.col("vec_id").alias("id1"),
-                F.col("v").alias("v1"),
-                F.col("norm").alias("n1"),
-            ),
-            "id1",
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("id2"),
-                F.col("v").alias("v2"),
-                F.col("norm").alias("n2"),
-            ),
-            "id2",
-        )
-        .select(
-            "id1",
-            "id2",
-            round_bin(
-                dot_col(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 4
-            ).alias("cosine"),
-        )
+    return (
+        candidate_cosine(cand, e, e, ("id1", "id2"))
+        .select("id1", "id2", round_bin(F.col("cosine"), 4).alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
     )
-    return scored.filter(F.col("cosine") >= threshold)
 
 
 IVF_NLIST = 16
@@ -473,7 +492,8 @@ def trained_centroids(emb: DataFrame, nlist: int = IVF_NLIST) -> DataFrame:
     index trains per corpus, not per query: callers cache the result
     per (session, corpus) and pass it to :func:`ivf_topk` via
     ``centroids=`` (see queries_textops._ivf_cents, a session corpus
-    memo)."""
+    memo). Materializing the 16-odd rows once measured 12.5 s → ~1 s
+    for an ivf_topk call at sf0.001."""
     return ivf_train_centroids(_with_norm(emb), nlist).localCheckpoint(eager=True)
 
 
@@ -502,25 +522,19 @@ def ivf_topk(
     emb: DataFrame,
     query_ids: DataFrame,
     k: int,
-    dim: int,
     nlist: int = IVF_NLIST,
     nprobe: int = IVF_NPROBE,
-    trained: bool = True,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: the corpus is partitioned into `nlist`
-    cells around coarse centroids; a query probes its `nprobe` nearest
-    cells and re-scores exactly inside them.
+    cells around coarse centroids; probe: a query's `nprobe` nearest
+    cells, re-scored exactly inside them.
 
-    ``trained=True`` (default) runs :func:`ivf_train_centroids` —
-    a deterministic spread sample + Lloyd iterations, fully in
-    DataFrame ops, reproduced bit-for-bit by the DuckDB oracle via
-    2^-16-grid exact arithmetic. ``trained=False`` keeps the naive
-    first-`nlist`-vectors init (the k-means|| sampling step alone) —
-    retained because it is the instructive failure mode: on data
-    clustered by ingest order its centroids collapse into one region
-    and recall craters (tests/test_similarity_recall.py measures
-    exactly this).
+    Centroids are ``centroids`` when the caller trained them once per
+    corpus (the amortized path: this call pays only assignment and
+    probe), else :func:`trained_centroids` — a deterministic spread
+    sample + Lloyd iterations, fully in DataFrame ops, reproduced
+    bit-for-bit by the DuckDB oracle via 2^-16-grid exact arithmetic.
 
     Scale shape: the cell id is the partition key of the inverted
     file (cluster-by on write); assignment is a broadcast cross-join
@@ -529,44 +543,14 @@ def ivf_topk(
     to the data's density, LSH needs no training."""
     # e feeds corpus assignment, query probing, the candidate re-score
     # join and the query-vector lookup (4 plan references) — cache it
-    # so the norm pass runs once per call (see ann_topk)
+    # so the norm pass runs once per call
     e = cache(_with_norm(emb))
-    if centroids is not None:
-        # amortized path: the caller trained once per corpus (see
-        # trained_centroids) — this call pays only assignment+probe
-        cents = centroids
-    elif trained:
-        # The centroid table is nlist rows of metadata, but its plan
-        # is the whole Lloyd iteration tree; every downstream consumer
-        # (corpus assignment, query probing — and each window branch
-        # inside them) would otherwise re-plan AND re-execute that
-        # subtree. Eager localCheckpoint materializes the 16-odd rows
-        # once and truncates the lineage (measured 12.5 s → ~1 s at
-        # sf0.001).
-        cents = ivf_train_centroids(e, nlist).localCheckpoint(eager=True)
-    else:
-        cents = e.filter(F.col("vec_id") < nlist).select(
-            F.col("vec_id").alias("cell"),
-            F.col("v").alias("cv"),
-            F.col("norm").alias("cn"),
-        )
+    cents = trained_centroids(emb, nlist) if centroids is None else centroids
     cells = ivf_assign(e, cents, 1).select("vec_id", "cell")
-    q_probe = ivf_assign(e.join(query_ids, "vec_id"), cents, nprobe).select(
+    probes = ivf_assign(e.join(query_ids, "vec_id"), cents, nprobe).select(
         F.col("vec_id").alias("qid"), "cell"
     )
-    cand = (
-        cells.join(F.broadcast(q_probe), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
-    q_vec = e.join(query_ids, "vec_id").select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-    )
-    sims = cand.join(e, "vec_id").join(F.broadcast(q_vec), "qid")
-    return _topk(_cosine(sims), k)
+    return _rescore_topk(e, query_ids, k, _probe_join(cells, probes, "cell"))
 
 
 def duckdb_ivf_cents_cte_sql(
@@ -645,8 +629,8 @@ def ann_topk_multiprobe(
     tables: int = ANN_TABLES,
     planes: int = ANN_TABLE_PLANES,
 ) -> DataFrame:
-    """Multi-probe ANN: each query additionally probes the buckets at
-    Hamming distance 1 from its own (one sign-bit flip per hyperplane)
+    """Multi-probe ANN: probe: each query's own bucket plus the buckets
+    at Hamming distance 1 from it (one sign-bit flip per hyperplane)
     in every table — the standard recall amplifier (Lv et al.,
     multi-probe LSH) that costs nothing on the corpus side.
 
@@ -656,31 +640,11 @@ def ann_topk_multiprobe(
     candidate join stays an equi-join on (table, bucket). Probing
     1-bit neighbors scans the buckets whose boundary the query sits
     closest to — where near-misses of sign-LSH live."""
-    # same cache boundaries as ann_topk: e feeds three plan
-    # references, bucketed two — without them the norm + hyperplane
-    # pipelines re-execute per reference
-    e = cache(_with_norm(emb))
-    bucketed = cache(embedding_bands_df(e, dim, tables, planes))
-    q_own = bucketed.join(query_ids, "vec_id").select(
-        F.col("vec_id").alias("qid"), "t", "bucket"
-    )
-    probe_set = F.array(
+    e, bucketed, own = _lsh_index(emb, query_ids, dim, tables, planes)
+    flips = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(planes)],
     )
-    probes = q_own.select(
-        "qid", "t", F.explode(probe_set).alias("bucket")
-    )
-    cand = (
-        bucketed.join(F.broadcast(probes), ["t", "bucket"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
-    q_vec = e.join(query_ids, "vec_id").select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-    )
-    sims = cand.join(e, "vec_id").join(F.broadcast(q_vec), "qid")
-    return _topk(_cosine(sims), k)
+    probes = own.select("qid", "t", F.explode(flips).alias("bucket"))
+    cand = _probe_join(bucketed, probes, ["t", "bucket"])
+    return _rescore_topk(e, query_ids, k, cand)

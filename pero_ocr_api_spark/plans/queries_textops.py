@@ -476,7 +476,7 @@ def q_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Exact top-k cosine neighbors for the first N query vectors
     (brute-force baseline; scale path is q_ann_topk)."""
     emb = read_table(spark, sf, "embeddings")
-    return similarity.cosine_topk(emb, _query_ids(spark, sf), TOP_K, EMB_DIM)
+    return similarity.cosine_topk(emb, _query_ids(spark, sf), TOP_K)
 
 
 def q_ann_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -588,8 +588,7 @@ def q_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     pay only assignment+probe."""
     emb = read_table(spark, sf, "embeddings")
     return similarity.ivf_topk(
-        emb, _query_ids(spark, sf), TOP_K, EMB_DIM,
-        centroids=_ivf_cents(spark, sf),
+        emb, _query_ids(spark, sf), TOP_K, centroids=_ivf_cents(spark, sf)
     )
 
 
@@ -658,6 +657,17 @@ N_NEARDUP = 20
 NEARDUP_THRESHOLD = 0.999
 
 
+def _scaled_twins(emb: DataFrame) -> DataFrame:
+    """Scaled twins of the first N_NEARDUP vectors (ids offset by
+    NEARDUP_OFFSET, embedding x 1.1): same direction, so cosine 1.0
+    with their originals."""
+    return emb.filter(F.col("vec_id") < N_NEARDUP).select(
+        (F.col("vec_id") + NEARDUP_OFFSET).alias("vec_id"),
+        F.transform("embedding", lambda x: x * 1.1).alias("embedding"),
+        "label",
+    )
+
+
 def q_embedding_near_dup(spark: SparkSession, sf: str) -> DataFrame:
     """Near-duplicate detection by embedding cosine: constructed
     scaled twins (same direction ⇒ cosine 1.0) must pair with their
@@ -665,12 +675,7 @@ def q_embedding_near_dup(spark: SparkSession, sf: str) -> DataFrame:
     buckets (scaled twins share all sign buckets with the original),
     so this composes the ANN machinery into the dedup family."""
     emb = read_table(spark, sf, "embeddings")
-    twins = emb.filter(F.col("vec_id") < N_NEARDUP).select(
-        (F.col("vec_id") + NEARDUP_OFFSET).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 1.1).alias("embedding"),
-        "label",
-    )
-    all_emb = emb.unionByName(twins)
+    all_emb = emb.unionByName(_scaled_twins(emb))
     qids = all_emb.filter(F.col("vec_id") >= NEARDUP_OFFSET).select("vec_id")
     top1 = similarity.ann_topk(all_emb, qids, 1, EMB_DIM)
     return top1.filter(F.col("cosine") >= NEARDUP_THRESHOLD).select(
@@ -730,12 +735,7 @@ def q_ann_self_near_pairs(spark: SparkSession, sf: str) -> DataFrame:
     where the query side IS the corpus and nothing can be broadcast
     (operators/similarity.py:ann_self_pairs)."""
     emb = read_table(spark, sf, "embeddings")
-    twins = emb.filter(F.col("vec_id") < N_NEARDUP).select(
-        (F.col("vec_id") + NEARDUP_OFFSET).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 1.1).alias("embedding"),
-        "label",
-    )
-    all_emb = emb.unionByName(twins)
+    all_emb = emb.unionByName(_scaled_twins(emb))
     return similarity.ann_self_pairs(all_emb, NEARDUP_THRESHOLD, EMB_DIM)
 
 
@@ -778,12 +778,7 @@ def q_embedding_dedup_keep(spark: SparkSession, sf: str) -> DataFrame:
     One anti-join over the pair set; nothing broadcast by
     construction."""
     emb = read_table(spark, sf, "embeddings")
-    twins = emb.filter(F.col("vec_id") < N_NEARDUP).select(
-        (F.col("vec_id") + NEARDUP_OFFSET).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 1.1).alias("embedding"),
-        "label",
-    )
-    all_emb = emb.unionByName(twins)
+    all_emb = emb.unionByName(_scaled_twins(emb))
     pairs = similarity.ann_self_pairs(all_emb, NEARDUP_THRESHOLD, EMB_DIM)
     drops = pairs.select(F.col("id2").alias("vec_id")).distinct()
     return all_emb.select("vec_id").join(drops, "vec_id", "left_anti")
@@ -818,15 +813,8 @@ def q_incremental_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
     exact-cosine verify, which joins vectors for CANDIDATE rows only —
     batch-linear, never corpus × batch."""
     emb = read_table(spark, sf, "embeddings")
-    corpus = cache(
-        similarity._with_norm(emb).select("vec_id", "v", "norm")
-    )
-    batch = similarity._with_norm(
-        emb.filter(F.col("vec_id") < N_NEARDUP).select(
-            (F.col("vec_id") + NEARDUP_OFFSET).alias("vec_id"),
-            F.transform("embedding", lambda x: x * 1.1).alias("embedding"),
-        )
-    ).select("vec_id", "v", "norm")
+    corpus = cache(similarity._with_norm(emb))
+    batch = similarity._with_norm(_scaled_twins(emb))
 
     # the persisted index stand-in: corpus hashed once, joined per batch
     c_bands = cache(similarity.embedding_bands_df(corpus, EMB_DIM))
@@ -885,7 +873,7 @@ def q_knn_label_vote(spark: SparkSession, sf: str) -> DataFrame:
     """Majority label among the exact top-5 neighbors per query
     (deterministic tie-break: count desc, label asc)."""
     emb = read_table(spark, sf, "embeddings")
-    topk = similarity.cosine_topk(emb, _query_ids(spark, sf), TOP_K, EMB_DIM)
+    topk = similarity.cosine_topk(emb, _query_ids(spark, sf), TOP_K)
     labeled = topk.join(emb.select("vec_id", "label"), "vec_id")
     counts = labeled.groupBy("qid", "label").agg(F.count("*").alias("votes"))
     w = Window.partitionBy("qid").orderBy(F.desc("votes"), "label")

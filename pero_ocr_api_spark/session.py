@@ -149,7 +149,7 @@ def per_context(build: Callable) -> Callable:
 # The exception: eager lineage cuts whose result the caller keeps call
 # localCheckpoint directly, because the returned DataFrame reads their
 # blocks for as long as it lives, past any scope they could name here:
-#   similarity.trained_centroids, ivf_topk  the nlist-row IVF centroids;
+#   similarity.trained_centroids            the nlist-row IVF centroids;
 #   bpe.bpe_train                           the word table, per round;
 #   dedup.connected_components              the edge and label tables;
 #   streaming.stream_incremental_dedup and  the default corpus bands,

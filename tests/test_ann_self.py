@@ -168,11 +168,11 @@ def test_trained_ivf_recall_floor_on_clustered_corpus(spark, clustered_corpus):
     ).select("vec_id")
     exact = {
         (r.qid, r.vec_id)
-        for r in similarity.cosine_topk(clustered_corpus, qids, k, DIM).collect()
+        for r in similarity.cosine_topk(clustered_corpus, qids, k).collect()
     }
     trained = {
         (r.qid, r.vec_id)
-        for r in similarity.ivf_topk(clustered_corpus, qids, k, DIM).collect()
+        for r in similarity.ivf_topk(clustered_corpus, qids, k).collect()
     }
     assert len(trained & exact) / len(exact) >= 0.5
 

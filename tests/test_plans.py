@@ -145,6 +145,48 @@ def test_gram_paths_have_no_lambdas(spark, name):
         release(*QUERY_SCOPE)
 
 
+def _nodes(node) -> list:
+    kids = node.children()
+    return [node] + [n for i in range(kids.size()) for n in _nodes(kids.apply(i))]
+
+
+def _names(seq) -> list[str]:
+    return [seq.apply(i).toString().split("#")[0] for i in range(seq.size())]
+
+
+@pytest.mark.parametrize("name", ["ann_topk", "ann_multiprobe_topk", "ivf_topk"])
+def test_ann_topk_rescores_deduped_candidates(spark, name):
+    """The approximate top-k operators share one rescore body: the
+    (qid, vec_id) candidates are deduplicated by an Aggregate *below*
+    the join that brings in the vectors (a duplicate candidate is never
+    re-scored), and the query-vector side is broadcast-hinted."""
+    from pero_ocr_api_spark.session import QUERY_SCOPE, release
+
+    try:
+        df = QUERIES[name][0](spark, SF)
+        joins = [
+            n for n in _nodes(df._jdf.queryExecution().optimizedPlan())
+            if n.nodeName() == "Join"
+        ]
+        [v_join] = [
+            j for j in joins
+            if "v" in _names(j.right().output())
+            and _names(j.left().output()) == ["qid", "vec_id"]
+        ]
+        assert any(
+            n.nodeName() == "Aggregate"
+            and _names(n.groupingExpressions()) == ["qid", "vec_id"]
+            and _names(n.output()) == ["qid", "vec_id"]
+            for n in _nodes(v_join.left())
+        )
+        [q_join] = [j for j in joins if "qv" in _names(j.right().output())]
+        hint = q_join.hint().rightHint()
+        assert hint.isDefined()
+        assert hint.get().strategy().get().toString() == "broadcast"
+    finally:
+        release(*QUERY_SCOPE)
+
+
 def _final_plan(spark, path: str) -> str:
     """The final (AQE-materialized) physical plan of the write into
     ``path``, from Spark's SQL status store. Each nested AQE plan keeps
