@@ -66,9 +66,10 @@ def _score(confidences: list[float]) -> float:
     numpy dispatch per page (measured ~5% of the PNG kernel): for even
     n numpy's _lerp evaluates the upper-anchored form ``b - (b-a)*0.5``
     at t=0.5 (NOT ``a + (b-a)*0.5`` — one-ulp difference, pinned by the
-    hypothesis property test and the same comment in
-    operators/restitch.py), and CPython floats are IEEE doubles, so the
-    pure-Python expression reproduces numpy exactly."""
+    hypothesis property tests), and CPython floats are IEEE doubles, so
+    the pure-Python expression reproduces numpy exactly. The Spark side
+    is the one Column helper ``functions.portable.sorted_median``, which
+    restitch's score and the ``median_score`` query both use."""
     if not confidences:
         return 1.0
     s = sorted(confidences)

@@ -192,7 +192,16 @@ def bpe_encode_docs(
     ORDERED piece-id sequence (the lm.encode_docs contract, subword
     edition). Tokens are segmented via the word table (equi-join);
     words unseen in training fall back to character segmentation,
-    and pieces missing from the vocabulary map to UNK (id 0)."""
+    and pieces missing from the vocabulary map to UNK (id 0).
+
+    Vocabulary bound: the (word → piece ids) map is broadcast, and it
+    holds one row (~64 bytes) per DISTINCT word of ``docs``, unseen
+    words included — not the trained vocabulary. Distinct words grow
+    sublinearly with the corpus but without a cap (the seeded sf0.1
+    corpus has 31 for 270,704 occurrences; web text reaches millions).
+    A call is meant for a shard whose distinct-word count is ~10^6 or
+    less (tens of MB on every executor); a larger corpus is encoded
+    shard by shard."""
     from pero_ocr_api_spark.operators.lm import tokens_col
 
     toks = docs.select(
@@ -226,10 +235,9 @@ def bpe_encode_docs(
     # substring this word contributes to ids_md5), piece count, UNK
     # count — concatenating per-word strings in pos order reproduces
     # the (pos, spos)-ordered id stream byte-for-byte
-    ids_of_word = F.transform(
-        F.array_sort(F.collect_list(F.struct("spos", "tid"))),
-        lambda s: s["tid"].cast("string"),
-    )
+    ids_of_word = F.sort_array(F.collect_list(F.struct("spos", "tid")))[
+        "tid"
+    ].cast("array<string>")
     wmap = wenc.groupBy("word").agg(
         F.concat_ws(",", ids_of_word).alias("ids_str"),
         F.count("*").alias("n_pieces_w"),
@@ -238,14 +246,13 @@ def bpe_encode_docs(
     # broadcast the vocabulary-sized mapping, NOT the occurrence
     # stream: the scan-side size estimate (a few MB of parquet) makes
     # Catalyst pick the 10^2x larger exploded stream as build side
-    # otherwise
+    # otherwise (its size is the docstring's vocabulary bound)
     enc = toks.join(F.broadcast(wmap), "word").select(
         F.col(id_col), "pos", "ids_str", "n_pieces_w", "n_unk_w"
     )
-    ids_in_order = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "ids_str"))),
-        lambda s: s["ids_str"],
-    )
+    ids_in_order = F.sort_array(F.collect_list(F.struct("pos", "ids_str")))[
+        "ids_str"
+    ]
     return enc.groupBy(id_col).agg(
         F.sum("n_pieces_w").alias("n_pieces"),
         F.sum("n_unk_w").alias("n_unk"),

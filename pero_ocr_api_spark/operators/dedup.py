@@ -900,11 +900,7 @@ def line_dedup(
         (F.col(id_col) == F.col("_fd2")) & (F.col("idx") == F.col("_fi"))
     )
     kept_lines = F.concat_ws(
-        "\n",
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("idx", "line"))),
-            lambda s: s["line"],
-        ),
+        "\n", F.sort_array(F.collect_list(F.struct("idx", "line")))["line"]
     )
     per_doc = lines.groupBy(id_col).agg(F.count("*").alias("n_lines"))
     kept_agg = kept.groupBy(id_col).agg(

@@ -184,13 +184,13 @@ def encode_docs(
 
     Scale shape: posexplode + an equi-join against the vocab (k rows —
     broadcast-sized by construction) + one per-doc aggregate whose
-    order-sensitive part is an array_sort over that doc's own tokens,
-    never a cross-row float or global sort."""
+    order-sensitive part is a typed sort_array over that doc's own
+    (pos, tid) structs, read back by field projection (no per-element
+    lambda), never a cross-row float or global sort."""
     enc = _encoded_tokens(docs, vocab, text_col, id_col)
-    ids_in_order = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "tid"))),
-        lambda s: s["tid"].cast("string"),
-    )
+    ids_in_order = F.sort_array(F.collect_list(F.struct("pos", "tid")))[
+        "tid"
+    ].cast("array<string>")
     return enc.groupBy(id_col).agg(
         F.count("*").alias("n_tokens"),
         F.sum((F.col("tid") == UNK_ID).cast("long")).alias("n_unk"),
@@ -272,10 +272,7 @@ def assemble_blocks(
         F.col(id_col),
         "tid",
     )
-    ids_in_order = F.transform(
-        F.array_sort(F.collect_list(F.struct("gpos", "tid"))),
-        lambda s: s["tid"],
-    )
+    ids_in_order = F.sort_array(F.collect_list(F.struct("gpos", "tid")))["tid"]
     return (
         stream.withColumn("block_id", F.expr(f"gpos div {seq_len}"))
         .groupBy("block_id")
@@ -299,7 +296,7 @@ def pack_blocks(
     (block_id, n_tokens, n_docs, ids_md5) — the oracle compares block
     md5s instead of shipping raw id arrays across engines."""
     blocks = assemble_blocks(docs, vocab, seq_len, text_col, id_col)
-    ids_str = F.transform(F.col("token_ids"), lambda t: t.cast("string"))
+    ids_str = F.col("token_ids").cast("array<string>")
     return blocks.select(
         "block_id",
         "n_tokens",

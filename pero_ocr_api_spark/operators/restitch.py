@@ -3,7 +3,12 @@
 Reading order is re-established by sorting on ``offset`` *inside the
 aggregate* — never by relying on shuffle arrival order. This produces
 the per-row invariant: span-sequence equality ``(kind, text,
-media_ref, order)``.
+media_ref, order)``. Every sort is a typed ``sort_array`` over structs
+led by ``offset`` and every read-back a struct-field projection, so no
+per-element lambda runs: a span is collected as ``(offset, s)`` with
+``s`` already in the output field order, and ``o_spans.s`` is the
+``spans`` column. The score is ``portable.sorted_median`` of the
+sorted confidences, the twin of ``ocr.kernel.doc_score``.
 
 Scale design: one ``groupBy(doc_id)``, one shuffle. A media-heavy
 document (FIXTURES §1: 20-50+ spans, at 100 TB potentially thousands)
@@ -20,12 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pero_ocr_api_spark.functions.portable import sorted_median
 from pero_ocr_api_spark.session import per_context
 
 
 @per_context
 def _cols() -> tuple:
-    span_struct = F.struct("offset", "kind", "text", "media_ref")
+    span_struct = F.struct(
+        "offset", F.struct("kind", "text", "media_ref", "offset").alias("s")
+    )
     fail_struct = F.when(
         F.col("state") != "PROCESSED", F.struct("offset", "state", "error")
     )
@@ -34,45 +42,25 @@ def _cols() -> tuple:
         F.struct("offset", "alto_xml", "page_xml", "txt"),
     )
     aggs = [
-        F.array_sort(F.collect_list(span_struct)).alias("o_spans"),
-        F.array_sort(F.collect_list(fail_struct)).alias("o_fails"),
-        F.array_sort(F.collect_list(export_struct)).alias("o_exports"),
-        F.array_sort(F.flatten(F.collect_list("confs"))).alias("o_confs"),
+        F.sort_array(F.collect_list(span_struct)).alias("o_spans"),
+        F.sort_array(F.collect_list(fail_struct)).alias("o_fails"),
+        F.sort_array(F.collect_list(export_struct)).alias("o_exports"),
+        F.sort_array(F.flatten(F.collect_list("confs"))).alias("o_confs"),
     ]
-
-    n = F.size("o_confs")
-    h = (n - F.lit(1)).cast("double") * 0.5
-    lo = F.floor(h).cast("int")
-    # F.get is 0-based and null-safe out of bounds (ANSI mode safe)
-    v_lo = F.get("o_confs", lo)
-    v_hi = F.get("o_confs", lo + 1)
-    # np.quantile(v, .5) bit-exact: for t=0.5 numpy's _lerp uses the
-    # upper-anchored form b - (b-a)*0.5 (not a + (b-a)*0.5 — they can
-    # differ by one ulp, which flips a rounding boundary; found by
-    # the hypothesis property test)
-    median = F.when(h == lo.cast("double"), v_lo).otherwise(
-        v_hi - (v_hi - v_lo) * 0.5
+    score = F.coalesce(
+        F.round(sorted_median("o_confs") * 100.0, 2), F.lit(100.0)
     )
-    score = F.when(n == 0, F.lit(100.0)).otherwise(F.round(median * 100.0, 2))
 
     first_fail = F.get("o_fails", 0)
     join_exports = lambda field, sep: F.when(  # noqa: E731
         F.size("o_exports") > 0,
-        F.array_join(F.transform("o_exports", lambda e: e[field]), sep),
+        F.array_join(F.col("o_exports")[field], sep),
     )
 
     doc_id = F.col("doc_id")
     return doc_id, aggs, [
         doc_id,
-        F.transform(
-            "o_spans",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
-        ).alias("spans"),
+        F.col("o_spans")["s"].alias("spans"),
         score.alias("score"),
         F.coalesce(first_fail["state"], F.lit("PROCESSED")).alias("state"),
         first_fail["error"].alias("error"),

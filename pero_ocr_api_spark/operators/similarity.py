@@ -474,10 +474,7 @@ def ivf_train_centroids(
             .select("cell", "pos", quant16(F.col("raw")).alias("m"))
         )
         cents = means.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("cv")
+            F.sort_array(F.collect_list(F.struct("pos", "m")))["m"].alias("cv")
         )
     return cents.select(
         "cell", "cv", F.sqrt(dot_col(F.col("cv"), F.col("cv"))).alias("cn")

@@ -17,7 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pero_ocr_api_spark.functions.portable import duckdb_round_bin, round_bin
+from pero_ocr_api_spark.functions.portable import (
+    duckdb_round_bin,
+    round_bin,
+    sorted_median,
+)
 from pero_ocr_api_spark.sources.tables import read_table
 
 # pinned "now" stand-ins (tests/oracles must be reproducible — the
@@ -519,13 +523,19 @@ FROM documents GROUP BY lang
 
 # --- A8: median (np.quantile .50, run_client.py:144-152) ---------------------
 def q_median_score(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact interpolated median per group (percentile ==
-    quantile_cont); documented scale-out variant: percentile_approx."""
+    """Exact interpolated median per group (== quantile_cont): each
+    group's prices are collected into one typed ``sort_array`` and the
+    median read from it (``portable.sorted_median``). One group's
+    values live in one array, the same memory class as a
+    ``percentile`` aggregate's map of distinct values, without its
+    boxed hash map, its shuffle serialization and its second sort.
+    Documented scale-out variant: ``percentile_approx``."""
     lineitem = read_table(spark, sf, "lineitem")
     return lineitem.groupBy("l_returnflag").agg(
-        round_bin(F.percentile("l_extendedprice", F.lit(0.5)), 4).alias(
-            "median_price"
-        )
+        F.sort_array(F.collect_list("l_extendedprice")).alias("prices")
+    ).select(
+        "l_returnflag",
+        round_bin(sorted_median("prices"), 4).alias("median_price"),
     )
 
 

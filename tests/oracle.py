@@ -32,7 +32,7 @@ def doc_score(confidences: list[float]) -> float:
     h = (n - 1) * 0.5
     lo = int(h)
     # numpy _lerp upper-anchored form for t=0.5 (bit-exact with
-    # np.quantile and with the SQL median in operators/restitch.py)
+    # np.quantile and with functions/portable.sorted_median)
     med = v[lo] if h == lo else v[lo + 1] - (v[lo + 1] - v[lo]) * 0.5
     return round_half_up(med * 100.0, 2)
 

@@ -187,20 +187,98 @@ def test_ann_topk_rescores_deduped_candidates(spark, name):
         release(*QUERY_SCOPE)
 
 
-def _final_plan(spark, path: str) -> str:
-    """The final (AQE-materialized) physical plan of the write into
-    ``path``, from Spark's SQL status store. Each nested AQE plan keeps
-    only its ``Final Plan`` part."""
+def test_no_registry_query_plans_a_percentile(spark):
+    """Exact medians come from one typed sort_array
+    (portable.sorted_median), never from Spark's ``percentile``, which
+    keeps a boxed hash map of every distinct value, serializes it
+    through the shuffle and sorts it again at eval time."""
+    from pero_ocr_api_spark.session import QUERY_SCOPE, release
+
+    try:
+        for name, (build, *_) in QUERIES.items():
+            plan = build(spark, SF)._jdf.queryExecution().optimizedPlan()
+            assert "percentile(" not in plan.toString(), name
+    finally:
+        release(*QUERY_SCOPE)
+
+
+def _assert_typed_reassembly(plan) -> None:
+    """Every aggregate that collects a list sorts it with ``sort_array``
+    (typed ordering) and reads fields back by projection: no
+    ``array_sort`` (an interpreted comparator lambda) and no lambda in
+    the collecting expression, nor one over a collected column in the
+    node above the aggregate."""
+    edges = [(None, plan)] + [
+        (n, n.children().apply(i)) for n in _nodes(plan) for i in range(n.children().size())
+    ]
+    n_sites = 0
+    for above, agg in edges:
+        if agg.nodeName() != "Aggregate":
+            continue
+        exprs = agg.aggregateExpressions()
+        for e in (exprs.apply(i) for i in range(exprs.size())):
+            s = e.toString()
+            if "collect_list" not in s:
+                continue
+            n_sites += 1
+            assert "array_sort" not in s and "lambdafunction" not in s, s
+            if above is not None:
+                hof = rf"\w+\({e.name()}#\d+L?, lambdafunction"
+                assert not re.search(hof, above.expressions().toString())
+    assert n_sites
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "median_score",
+        "tokenize_corpus",
+        "tokenize_corpus_bpe",
+        "line_dedup_stats",
+        "pack_blocks",
+    ],
+)
+def test_reassembly_sorts_are_typed(spark, name):
+    from pero_ocr_api_spark.session import QUERY_SCOPE, release
+
+    try:
+        df = QUERIES[name][0](spark, SF)
+        _assert_typed_reassembly(df._jdf.queryExecution().optimizedPlan())
+    finally:
+        release(*QUERY_SCOPE)
+
+
+def test_ivf_centroid_reassembly_is_typed(spark):
+    """The centroid vectors of the IVF training, checked on the plan
+    ``ivf_train_centroids`` returns (``trained_centroids`` truncates it
+    with a localCheckpoint)."""
+    from pero_ocr_api_spark.operators import similarity
+    from pero_ocr_api_spark.sources.tables import read_table
+
+    emb = read_table(spark, SF, "embeddings")
+    df = similarity.ivf_train_centroids(similarity._with_norm(emb))
+    _assert_typed_reassembly(df._jdf.queryExecution().optimizedPlan())
+
+
+def _write_description(spark, path: str) -> str:
+    """The plan description of the write into ``path``, from Spark's SQL
+    status store (logical plans, then the physical plan)."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
     execs = conv.asJava(spark._jsparkSession.sharedState().statusStore().executionsList())
     # newest first: the list is in execution-id order
-    plan = next(
+    return next(
         d
         for d in (execs.get(i).physicalPlanDescription() for i in reversed(range(execs.size())))
         if path in d
     )
+
+
+def _final_plan(plan: str) -> str:
+    """The final (AQE-materialized) physical plan of a write
+    description. Each nested AQE plan keeps only its ``Final Plan``
+    part."""
     tree = []
     for ln in plan.split("== Physical Plan ==")[1].strip().splitlines():
         if tree and not re.match(r"[ :]*[+:]- ", ln):
@@ -234,8 +312,8 @@ def _subtree(lines: list[str], i: int) -> list[str]:
 def test_extract_write_plan_shape(spark, docs_df, media_df, tmp_path):
     """The executed plan of one extract run's write: the media blobs are
     shuffled once and never broadcast, restitch is one groupBy(doc_id)
-    (one Exchange between the union and the write, no salt), and the
-    write reads no cache of the restitch output. The media-UDF cache
+    (one Exchange between the union and the write, no salt, typed
+    sorts), and the write reads no cache of the restitch output. The media-UDF cache
     and the cached input tables stay."""
     from pero_ocr_api_spark.plans.extract import release_run, run_extract
     from pero_ocr_api_spark.plans.io import write_extracted
@@ -248,14 +326,20 @@ def test_extract_write_plan_shape(spark, docs_df, media_df, tmp_path):
     spark.conf.set("spark.sql.ui.explainMode", "extended")
     try:
         write_extracted(spark, extracted, out)
-        plan = _final_plan(spark, out)
+        desc = _write_description(spark, out)
     finally:
         spark.conf.set("spark.sql.ui.explainMode", mode)
         release_run("write_plan")
+    plan = _final_plan(desc)
     lines = plan.splitlines()
     assert "MapInPandas" in plan
     assert "BroadcastExchange" not in plan
     assert "pmod(hash(offset" not in plan
+    # restitch sorts with the typed sort_array; the physical aggregate
+    # does not print its result expressions, the optimized plan does
+    optimized = desc.split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0]
+    assert "sort_array(collect_list" in optimized
+    assert "array_sort" not in optimized
     (union,) = [i for i, ln in enumerate(lines) if ln.lstrip(" :+-").startswith("Union")]
     above = [lines[i] for i in range(union) if union - 1 - i < len(_subtree(lines, i))]
     exchanges = [ln for ln in above if "Exchange" in ln]

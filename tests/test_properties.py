@@ -8,7 +8,7 @@ equality at scale.
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pero_ocr_api_spark.functions.arabic import normalize_arabic_py
@@ -113,6 +113,60 @@ def test_doc_score_matches_numpy_quantile(confs):
             2,
         )
         assert got == expect
+
+
+# 2-decimal doubles, as the prices and the rounded confidences are;
+# the small pool forces duplicates
+two_dp = st.one_of(
+    st.integers(min_value=-(10**7), max_value=10**7),
+    st.sampled_from([0, 1, 250, 999]),
+).map(lambda i: i / 100)
+
+
+@settings(max_examples=25, deadline=None)
+@given(groups=st.lists(st.lists(two_dp, max_size=9), min_size=1, max_size=8))
+@example(groups=[[], [12.5], [0.01, 0.02], [2.5, 2.5], [9.99, 0.0, 9.99, 2.5]])
+def test_sorted_median_matches_numpy_and_duckdb(spark, groups):
+    """The Spark-side twin of test_doc_score_matches_numpy_quantile:
+    ``sorted_median(sort_array(v))`` is ``np.quantile(v, .5)`` bit for
+    bit and null on an empty list, and its ``round_bin(·, 4)`` equals
+    DuckDB's ``quantile_cont`` under ``duckdb_round_bin`` (the
+    median_score oracle)."""
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from pero_ocr_api_spark.functions.portable import (
+        duckdb_round_bin,
+        round_bin,
+        sorted_median,
+    )
+
+    median = sorted_median(F.sort_array("v"))
+    got = {
+        r.gid: (r.m, r.r)
+        for r in spark.createDataFrame(list(enumerate(groups)), "gid int, v array<double>")
+        .select("gid", median.alias("m"), round_bin(median, 4).alias("r"))
+        .collect()
+    }
+    rows = pd.DataFrame(
+        [(gid, x) for gid, v in enumerate(groups) for x in v], columns=["gid", "x"]
+    )
+    duck = dict(
+        duckdb.connect()
+        .execute(
+            f"SELECT gid, {duckdb_round_bin('quantile_cont(x, 0.5)', 4)} "
+            "FROM rows GROUP BY gid"
+        )
+        .fetchall()
+    )
+    for gid, v in enumerate(groups):
+        m, r = got[gid]
+        if not v:
+            assert m is None and r is None
+        else:
+            assert m == float(np.quantile(np.array(v), 0.5))
+            assert r == duck[gid]
 
 
 @settings(max_examples=60, deadline=None)
