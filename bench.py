@@ -312,7 +312,10 @@ def _warm_up(spark, sf_dir: str) -> None:
     (assignment + probe), not the one-time training."""
     from pyspark.sql import functions as F
 
-    from pero_ocr_api_spark.operators.dedup import minhash_signatures, winnow_col
+    from pero_ocr_api_spark.operators.dedup import (
+        minhash_signatures,
+        winnow_fingerprints,
+    )
     from pero_ocr_api_spark.plans.queries_textops import _ivf_cents
     from pero_ocr_api_spark.sources.tables import read_table
 
@@ -321,7 +324,7 @@ def _warm_up(spark, sf_dir: str) -> None:
         F.size(F.regexp_extract_all("text", F.lit("[a-z]+"), F.lit(0)))
     ).count()
     minhash_signatures(warm_docs).count()
-    warm_docs.select(F.size(winnow_col(F.col("text")))).count()
+    winnow_fingerprints(warm_docs).count()
     _ivf_cents(spark, sf_dir).count()
 
 

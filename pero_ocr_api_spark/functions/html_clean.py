@@ -118,7 +118,7 @@ def clean_html_col(col: Column) -> Column:
             | (F.length(s["t"]) > LONG_BLOCK_CHARS)
         ),
     )
-    return F.array_join(F.transform(kept, lambda s: s["t"]), "\n")
+    return F.array_join(kept["t"], "\n")
 
 
 # --------------------------------------------------------------- Python ---

@@ -41,28 +41,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_prefix: str = "r_",
-    direction: str = "backward",
-) -> DataFrame:
-    """As-of join: each left row gains its single matching right row
-    (same ``on`` keys) or nulls. ``direction="backward"`` (default)
-    matches the LATEST right row at-or-before the left timestamp;
-    ``"forward"`` the EARLIEST right row at-or-after it (both
-    inclusive at equal timestamps) — the forward scan is the same
-    union-window plan over a descending timestamp order.
+def asof_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """As-of join: each left row gains the LATEST right row with the
+    same ``on`` keys whose ``ts`` is at or before its own ``ts``
+    (inclusive at equal timestamps), or nulls.
 
     Output columns: ``on`` keys, every non-key left column (original
-    names), then every non-key right column as ``{right_prefix}{name}``
-    (the right timestamp arrives as ``{right_prefix}{right_ts}``).
+    names), then every non-key right column as ``r_{name}`` (the right
+    timestamp arrives as ``r_ts``).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"asof_join: unknown direction {direction!r}")
     l_payload = [c for c in left.columns if c not in on]
     r_payload = [c for c in right.columns if c not in on]
     if not l_payload or not r_payload:
@@ -72,35 +59,28 @@ def asof_join(
             "asof_join: each side needs at least one non-key column "
             "(did you include the timestamp column in `on`?)"
         )
-    # a right row with a NULL timestamp can never be "at or before/
-    # after" anything — drop it, or it would sort to an edge of the
-    # scan and be carried as a fabricated match
-    right = right.filter(F.col(right_ts).isNotNull())
+    # a right row with a NULL timestamp can never be "at or before"
+    # anything — drop it, or it would sort to an edge of the scan and
+    # be carried as a fabricated match
+    right = right.filter(F.col("ts").isNotNull())
     r2 = right.select(
         *on,
-        F.col(right_ts).alias("_asof_ts"),
+        F.col("ts").alias("_asof_ts"),
         F.lit(0).alias("_asof_side"),
         F.struct(*r_payload).alias("_asof_r"),
     )
     l2 = left.select(
         *on,
-        F.col(left_ts).alias("_asof_ts"),
+        F.col("ts").alias("_asof_ts"),
         F.lit(1).alias("_asof_side"),
         F.struct(*l_payload).alias("_asof_l"),
     )
     u = r2.unionByName(l2, allowMissingColumns=True)
-    # NULLS FIRST in both directions: a left row with a NULL timestamp
-    # sorts before every right row and therefore carries no match
-    # (reproduced review finding: plain desc puts NULLs last, where a
-    # null-ts left row inherited the earliest right row as a match)
-    ts_order = (
-        F.col("_asof_ts").asc_nulls_first()
-        if direction == "backward"
-        else F.col("_asof_ts").desc_nulls_first()
-    )
+    # NULLS FIRST: a left row with a NULL timestamp sorts before every
+    # right row and therefore carries no match
     w = (
         Window.partitionBy(*on)
-        .orderBy(ts_order, F.col("_asof_side").asc())
+        .orderBy(F.col("_asof_ts").asc_nulls_first(), F.col("_asof_side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = u.withColumn(
@@ -108,5 +88,5 @@ def asof_join(
     ).filter(F.col("_asof_side") == 1)
     out = [F.col(k) for k in on]
     out += [F.col("_asof_l")[c].alias(c) for c in l_payload]
-    out += [F.col("_asof_m")[c].alias(f"{right_prefix}{c}") for c in r_payload]
+    out += [F.col("_asof_m")[c].alias(f"r_{c}") for c in r_payload]
     return matched.select(*out)

@@ -56,7 +56,7 @@ def char_syms_col(col: Column) -> Column:
     return F.regexp_extract_all(col, F.lit("."), F.lit(0))
 
 
-def word_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_table(docs: DataFrame) -> DataFrame:
     """(word, cnt, syms): the word-frequency training state — one
     corpus scan, hash aggregate with map-side partials. Words come
     from the LM's tokenizer (lm.tokens_col, ``[a-z0-9]+`` runs), not
@@ -67,7 +67,7 @@ def word_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from pero_ocr_api_spark.operators.lm import tokens_col
 
     toks = dedup.spread_to_parallelism(docs).select(
-        F.explode(tokens_col(F.col(text_col))).alias("word")
+        F.explode(tokens_col(F.col("text"))).alias("word")
     )
     return (
         toks.groupBy("word")
@@ -117,16 +117,15 @@ def _apply_merge(syms: Column, p1: Column, p2: Column) -> Column:
     return F.aggregate(rest, F.slice(syms, 1, 1), step)
 
 
-def bpe_train(
-    docs: DataFrame, n_merges: int = BPE_MERGES, text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """Train BPE: returns (segments, merges) — the final word table
-    (word, cnt, syms) and the learned merge sequence
-    (merge_rank, p1, p2). Stops early when no pair remains."""
+def bpe_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Train :data:`BPE_MERGES` rounds of BPE: returns (segments,
+    merges) — the final word table (word, cnt, syms) and the learned
+    merge sequence (merge_rank, p1, p2). Stops early when no pair
+    remains."""
     spark = docs.sparkSession
-    words = word_table(docs, text_col).localCheckpoint(eager=True)
+    words = word_table(docs).localCheckpoint(eager=True)
     merge_rows: list[tuple[int, str, str]] = []
-    for r in range(1, n_merges + 1):
+    for r in range(1, BPE_MERGES + 1):
         # Per-round argmax: TakeOrdered top-1 collected to the driver —
         # ONE row of training state (two symbol strings), the same
         # bytes the old localCheckpoint+count pair materialized, at one
@@ -155,12 +154,10 @@ def bpe_train(
     return words, merges
 
 
-def bpe_merges(
-    docs: DataFrame, n_merges: int = BPE_MERGES, text_col: str = "text"
-) -> DataFrame:
+def bpe_merges(docs: DataFrame) -> DataFrame:
     """The learned merge table (merge_rank, p1, p2) — the model
     artifact a production tokenizer ships."""
-    return bpe_train(docs, n_merges, text_col)[1]
+    return bpe_train(docs)[1]
 
 
 def bpe_vocab(segments: DataFrame) -> DataFrame:
@@ -181,14 +178,10 @@ def bpe_vocab(segments: DataFrame) -> DataFrame:
 
 
 def bpe_encode_docs(
-    docs: DataFrame,
-    segments: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    docs: DataFrame, segments: DataFrame, vocab: DataFrame
 ) -> DataFrame:
     """Encode documents against a trained BPE segmentation:
-    (id_col, n_pieces, n_unk, ids_md5) where ids_md5 fingerprints the
+    (doc_id, n_pieces, n_unk, ids_md5) where ids_md5 fingerprints the
     ORDERED piece-id sequence (the lm.encode_docs contract, subword
     edition). Tokens are segmented via the word table (equi-join);
     words unseen in training fall back to character segmentation,
@@ -205,8 +198,8 @@ def bpe_encode_docs(
     from pero_ocr_api_spark.operators.lm import tokens_col
 
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode(tokens_col(F.col(text_col))).alias("pos", "word"),
+        F.col("doc_id"),
+        F.posexplode(tokens_col(F.col("text"))).alias("pos", "word"),
     )
     # The (word → piece-id string) mapping is computed once per
     # DISTINCT word — the vocabulary-sized model surface — instead of
@@ -248,12 +241,12 @@ def bpe_encode_docs(
     # Catalyst pick the 10^2x larger exploded stream as build side
     # otherwise (its size is the docstring's vocabulary bound)
     enc = toks.join(F.broadcast(wmap), "word").select(
-        F.col(id_col), "pos", "ids_str", "n_pieces_w", "n_unk_w"
+        F.col("doc_id"), "pos", "ids_str", "n_pieces_w", "n_unk_w"
     )
     ids_in_order = F.sort_array(F.collect_list(F.struct("pos", "ids_str")))[
         "ids_str"
     ]
-    return enc.groupBy(id_col).agg(
+    return enc.groupBy("doc_id").agg(
         F.sum("n_pieces_w").alias("n_pieces"),
         F.sum("n_unk_w").alias("n_unk"),
         F.md5(F.concat_ws(",", ids_in_order).cast("binary")).alias(
@@ -265,9 +258,7 @@ def bpe_encode_docs(
 # ------------------------------------------------------------- DuckDB twins ---
 
 
-def duckdb_bpe_cte_sql(
-    n_merges: int = BPE_MERGES, docs_cte: str = "documents"
-) -> str:
+def duckdb_bpe_cte_sql() -> str:
     """CTE chain ending in ``bpe_words (word, cnt, syms)`` and
     ``bpe_merges (merge_rank, p1, p2)`` — the DuckDB twin of
     :func:`bpe_train`, rounds unrolled like the Lloyd-iteration twin
@@ -278,7 +269,7 @@ def duckdb_bpe_cte_sql(
     parts = [
         f"""w_tok AS (
   SELECT unnest(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS word
-  FROM {docs_cte}
+  FROM documents
 )""",
         """words_0 AS (
   SELECT word, CAST(count(*) AS BIGINT) AS cnt,
@@ -286,7 +277,7 @@ def duckdb_bpe_cte_sql(
   FROM w_tok GROUP BY word
 )""",
     ]
-    for r in range(1, n_merges + 1):
+    for r in range(1, BPE_MERGES + 1):
         parts.append(
             f"""pairs_{r} AS (
   SELECT p1, p2, sum(cnt) AS n FROM (
@@ -314,36 +305,30 @@ def duckdb_bpe_cte_sql(
         )
     merge_union = "\n  UNION ALL ".join(
         f"SELECT {r} AS merge_rank, p1, p2 FROM best_{r}"
-        for r in range(1, n_merges + 1)
+        for r in range(1, BPE_MERGES + 1)
     )
     parts.append(
-        f"bpe_words AS (SELECT * FROM words_{n_merges})",
+        f"bpe_words AS (SELECT * FROM words_{BPE_MERGES})",
     )
     parts.append(f"bpe_merges AS (\n  {merge_union}\n)")
     return ",\n".join(parts)
 
 
-def duckdb_bpe_merges_sql(
-    n_merges: int = BPE_MERGES, docs_cte: str = "documents"
-) -> str:
+def duckdb_bpe_merges_sql() -> str:
     return f"""
-WITH {duckdb_bpe_cte_sql(n_merges, docs_cte)}
+WITH {duckdb_bpe_cte_sql()}
 SELECT merge_rank, p1, p2 FROM bpe_merges
 """
 
 
-def duckdb_bpe_encode_sql(
-    n_merges: int = BPE_MERGES,
-    docs_cte: str = "documents",
-    id_col: str = "doc_id",
-) -> str:
+def duckdb_bpe_encode_sql() -> str:
     """DuckDB twin of train + :func:`bpe_vocab` + :func:`bpe_encode_docs`
     on the same corpus (so the segments join always hits)."""
     from pero_ocr_api_spark.operators.lm import TOKEN_RE
 
     toks = f"regexp_extract_all(lower(text), '{TOKEN_RE}')"
     return f"""
-WITH {duckdb_bpe_cte_sql(n_merges, docs_cte)},
+WITH {duckdb_bpe_cte_sql()},
 bpe_vocab AS (
   SELECT piece,
          CAST(row_number() OVER (ORDER BY n DESC, piece ASC) AS BIGINT)
@@ -355,30 +340,30 @@ bpe_vocab AS (
   )
 ),
 bpe_positions AS (
-  SELECT {id_col},
+  SELECT doc_id,
          unnest({toks}) AS word,
          unnest(range(1, len({toks}) + 1)) AS pos
-  FROM {docs_cte}
+  FROM documents
 ),
 bpe_seg AS (
-  SELECT p.{id_col}, p.pos, w.syms
+  SELECT p.doc_id, p.pos, w.syms
   FROM bpe_positions p JOIN bpe_words w USING (word)
 ),
 bpe_pieces AS (
-  SELECT {id_col}, pos, unnest(syms) AS piece,
+  SELECT doc_id, pos, unnest(syms) AS piece,
          unnest(range(1, len(syms) + 1)) AS spos
   FROM bpe_seg
 ),
 bpe_enc AS (
-  SELECT e.{id_col}, e.pos, e.spos,
+  SELECT e.doc_id, e.pos, e.spos,
          coalesce(v.piece_id, {UNK_ID}) AS tid
   FROM bpe_pieces e LEFT JOIN bpe_vocab v USING (piece)
 )
-SELECT {id_col},
+SELECT doc_id,
        count(*) AS n_pieces,
        CAST(sum(CASE WHEN tid = {UNK_ID} THEN 1 ELSE 0 END) AS BIGINT)
          AS n_unk,
        md5(string_agg(CAST(tid AS VARCHAR), ',' ORDER BY pos, spos))
          AS ids_md5
-FROM bpe_enc GROUP BY {id_col}
+FROM bpe_enc GROUP BY doc_id
 """

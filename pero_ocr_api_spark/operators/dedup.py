@@ -198,9 +198,9 @@ def duckdb_word_ngram_ints_sql(expr: str, n: int) -> str:
 # ---------------------------------------------------------------- exact ---
 
 
-def fingerprint_exact(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint_exact(df: DataFrame) -> DataFrame:
     """Exact dedup key: md5 of case/whitespace-normalized text."""
-    return df.withColumn("fingerprint", fingerprint_col(F.col(text_col)))
+    return df.withColumn("fingerprint", fingerprint_col(F.col("text")))
 
 
 def exact_keep(docs: DataFrame) -> DataFrame:
@@ -338,12 +338,7 @@ def spread_to_parallelism(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Integer MinHash signatures via explode + groupBy.
 
     Shape matters at scale: exploding shingle hashes and taking k
@@ -364,7 +359,7 @@ def minhash_signatures(
     ``min`` over its distinct set, so signatures are bit-identical to
     the array_distinct form. A text with fewer than SHINGLE_N tokens
     hashes its whole text, exactly like :func:`shingles_col`."""
-    text = F.col(text_col)
+    text = F.col("text")
     exploded = exploded_word_grams(
         spread_to_parallelism(df),
         tokens_col(text),
@@ -376,14 +371,15 @@ def minhash_signatures(
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
             f"_sig{i}"
         )
-        for i, (a, b) in enumerate(_minhash_coeffs(k))
+        for i, (a, b) in enumerate(_minhash_coeffs(MINHASH_K))
     ]
     return exploded.groupBy(id_col).agg(*aggs).select(
-        id_col, F.array(*[f"_sig{i}" for i in range(k)]).alias("signature")
+        id_col,
+        F.array(*[f"_sig{i}" for i in range(MINHASH_K)]).alias("signature"),
     )
 
 
-def minhash_signature_col(text: Column, k: int = MINHASH_K) -> Column:
+def minhash_signature_col(text: Column) -> Column:
     """Per-ROW MinHash signature expression — the streaming-safe twin
     of :func:`minhash_signatures` (a streaming DataFrame cannot run
     the explode+groupBy shape without becoming a streaming
@@ -403,7 +399,7 @@ def minhash_signature_col(text: Column, k: int = MINHASH_K) -> Column:
     coeffs = F.array(
         *[
             F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _minhash_coeffs(k)
+            for a, b in _minhash_coeffs(MINHASH_K)
         ]
     )
     return F.transform(
@@ -419,49 +415,43 @@ def duckdb_shingle_ints_sql(expr: str) -> str:
     return f"list_transform({sh}, s -> {duckdb_md5_int_sql('s', 7)})"
 
 
-def duckdb_minhash_from_ints_sql(ints_col: str = "ints", k: int = MINHASH_K) -> str:
+def duckdb_minhash_from_ints_sql(ints_col: str = "ints") -> str:
     """Signature list expression over a precomputed shingle-int column
     (callers materialize the ints in a CTE)."""
     mins = ", ".join(
         f"list_min(list_transform({ints_col}, v -> (v * {a} + {b}) % {MINHASH_PRIME}))"
-        for a, b in _minhash_coeffs(k)
+        for a, b in _minhash_coeffs(MINHASH_K)
     )
     return f"[{mins}]"
 
 
-def lsh_bands_df(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "signature",
-    bands: int = LSH_BANDS,
-    k: int = MINHASH_K,
-) -> DataFrame:
-    """Explode a signature into (id, band_idx, band_hash) rows."""
+def lsh_bands_df(df: DataFrame) -> DataFrame:
+    """Explode a (doc_id, signature) frame into (doc_id, band_idx,
+    band_hash) rows."""
     return df.select(
-        id_col, F.explode(band_structs_col(sig_col, bands, k)).alias("b")
-    ).select(id_col, "b.band_idx", "b.band_hash")
+        "doc_id", F.explode(band_structs_col()).alias("b")
+    ).select("doc_id", "b.band_idx", "b.band_hash")
 
 
-def band_structs_col(
-    sig_col: str = "signature", bands: int = LSH_BANDS, k: int = MINHASH_K
-) -> Column:
-    """Array of (band_idx, band_hash) structs from a signature column
-    — the explode-ready expression behind :func:`lsh_bands_df`,
+def band_structs_col() -> Column:
+    """Array of (band_idx, band_hash) structs from the ``signature``
+    column — the explode-ready expression behind :func:`lsh_bands_df`,
     exposed so callers that must CARRY extra columns through the
     explosion (e.g. a stream keeping ts/text to avoid a stream-stream
     join-back) can build the same band hashes."""
-    rows = k // bands
+    rows = MINHASH_K // LSH_BANDS
     return F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_idx"),
                 F.md5(
                     F.concat_ws(
-                        "|", *[F.col(sig_col)[b * rows + r] for r in range(rows)]
+                        "|",
+                        *[F.col("signature")[b * rows + r] for r in range(rows)],
                     ).cast("binary")
                 ).alias("band_hash"),
             )
-            for b in range(bands)
+            for b in range(LSH_BANDS)
         ]
     )
 
@@ -478,14 +468,10 @@ def lsh_bucket_sizes(bands_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    bands_df: DataFrame,
-    id_col: str = "doc_id",
-    max_bucket: int | None = MAX_BUCKET,
-) -> DataFrame:
+def lsh_candidate_pairs(bands_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Candidate pairs from the banded buckets, skew-guarded.
 
-    Buckets of n ≤ ``max_bucket`` members self-join into the full
+    Buckets of n ≤ :data:`MAX_BUCKET` members self-join into the full
     clique (n·(n-1)/2 pairs — the exact LSH semantics). Oversized
     buckets — on real web data these are boilerplate-identical
     mega-groups, and an unguarded self-join makes O(n²) shuffle rows —
@@ -494,26 +480,12 @@ def lsh_candidate_pairs(
     downstream verify + keep-min-id pass still drops every true
     duplicate against the representative.
 
-    ``max_bucket=None`` restores the unguarded clique join.
     Use :func:`lsh_bucket_sizes` to surface the bucket histogram /
     truncation count as a metric."""
-    if max_bucket is None:
-        left = bands_df.select(
-            F.col(id_col).alias("id1"), "band_idx", "band_hash"
-        )
-        right = bands_df.select(
-            F.col(id_col).alias("id2"), "band_idx", "band_hash"
-        )
-        return (
-            left.join(right, ["band_idx", "band_hash"])
-            .filter(F.col("id1") < F.col("id2"))
-            .select("id1", "id2")
-            .distinct()
-        )
     sized = bands_df.join(
         lsh_bucket_sizes(bands_df, id_col), ["band_idx", "band_hash"]
     )
-    small = sized.filter(F.col("bucket_n") <= max_bucket)
+    small = sized.filter(F.col("bucket_n") <= MAX_BUCKET)
     clique = (
         small.select(F.col(id_col).alias("id1"), "band_idx", "band_hash")
         .join(
@@ -525,7 +497,7 @@ def lsh_candidate_pairs(
     )
     star = (
         sized.filter(
-            (F.col("bucket_n") > max_bucket)
+            (F.col("bucket_n") > MAX_BUCKET)
             & (F.col(id_col) != F.col("bucket_min_id"))
         )
         .select(F.col("bucket_min_id").alias("id1"), F.col(id_col).alias("id2"))
@@ -571,30 +543,21 @@ def lsh_near_pairs(
     )
 
 
-def duckdb_capped_pairs_sql(
-    id_col: str = "doc_id",
-    max_bucket: int = MAX_BUCKET,
-    sized_cte: str = "sized",
-) -> str:
-    """DuckDB twin of :func:`lsh_candidate_pairs` (capped form).
+def duckdb_capped_pairs_sql(id_col: str = "doc_id") -> str:
+    """DuckDB twin of :func:`lsh_candidate_pairs`.
 
-    Emits a SELECT referencing ``sized_cte`` — callers must first
+    Emits a SELECT referencing a ``sized`` CTE — callers must first
     install it via :func:`duckdb_sized_cte_sql` (which pairs each
     band row with its bucket's count + min id). The two helpers are a
-    pair by contract. A prefixed chain (queries_textops._sql_bands_cte
-    with ``prefix='c_'`` emits ``c_sized``) passes
-    ``sized_cte='c_sized'`` so two chains coexist in one statement
-    without cross-binding — exercised by
-    tests/test_dedup_cap.py::test_prefixed_sized_cte_binds."""
-    s = sized_cte
+    pair by contract."""
     return f"""
 SELECT DISTINCT id1, id2 FROM (
   SELECT a.{id_col} AS id1, b.{id_col} AS id2
-  FROM {s} a JOIN {s} b USING (band_idx, band_hash)
-  WHERE a.bucket_n <= {max_bucket} AND a.{id_col} < b.{id_col}
+  FROM sized a JOIN sized b USING (band_idx, band_hash)
+  WHERE a.bucket_n <= {MAX_BUCKET} AND a.{id_col} < b.{id_col}
   UNION ALL
   SELECT bucket_min_id AS id1, {id_col} AS id2
-  FROM {s} WHERE bucket_n > {max_bucket} AND {id_col} != bucket_min_id
+  FROM sized WHERE bucket_n > {MAX_BUCKET} AND {id_col} != bucket_min_id
 )"""
 
 
@@ -621,17 +584,19 @@ def ordered_gram_ints_col(text: Column) -> Column:
     return F.transform(_shingle_seq_col(text), lambda s: md5_int_col(s, 7))
 
 
-def winnow_from_hashes_col(h: Column, w: int = WINNOW_W) -> Column:
+def winnow_from_hashes_col(h: Column) -> Column:
     """Winnowing fingerprint set over a gram-hash array column:
-    minimum gram hash of every length-w sliding window, deduplicated —
-    the rolling-hash document fingerprint (guarantees shared
-    fingerprints for any shared run of w+k-1 tokens, the property
-    MOSS-style overlap detection needs). On heavy paths feed it a
-    *materialized* hash column (:func:`winnow_fingerprints`): the
-    one-shot :func:`winnow_col` references its gram pipeline from four
-    places, and CollapseProject inlines the whole md5 pipeline into
-    each — a codegen method so large that Janino compilation dominates
-    (measured ~13 s for an 80-doc query; two-step ~5 s)."""
+    minimum gram hash of every length-w sliding window
+    (w = :data:`WINNOW_W`), deduplicated — the rolling-hash document
+    fingerprint (guarantees shared fingerprints for any shared run of
+    w+k-1 tokens, the property MOSS-style overlap detection needs).
+    Feed it a *materialized* hash column (:func:`winnow_fingerprints`):
+    the expression references ``h`` from four places, and over an
+    unmaterialized gram pipeline CollapseProject inlines the whole md5
+    pipeline into each — a codegen method so large that Janino
+    compilation dominates (measured ~13 s for an 80-doc query;
+    two-step ~5 s)."""
+    w = WINNOW_W
     n = F.size(h)
     mins = F.transform(
         F.sequence(F.lit(0), n - w),
@@ -642,31 +607,22 @@ def winnow_from_hashes_col(h: Column, w: int = WINNOW_W) -> Column:
     )
 
 
-def winnow_col(text: Column, w: int = WINNOW_W) -> Column:
-    """Winnowing fingerprint set of ``text`` as one Column."""
-    return winnow_from_hashes_col(ordered_gram_ints_col(text), w)
-
-
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    w: int = WINNOW_W,
-) -> DataFrame:
-    """(id, fp) winnowing fingerprints, computed in two projections
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
+    """(doc_id, fp) winnowing fingerprints, computed in two projections
     with a materialization boundary between them so the gram-hash
     pipeline is evaluated once per row and compiled once per stage
     (see :func:`winnow_from_hashes_col`). The intermediate gram arrays
     are cached in the caller's cache scope (session cache registry)."""
     hashes = cache(
-        df.select(F.col(id_col), ordered_gram_ints_col(F.col(text_col)).alias("_h"))
+        df.select(F.col("doc_id"), ordered_gram_ints_col(F.col("text")).alias("_h"))
     )
     return hashes.select(
-        F.col(id_col), winnow_from_hashes_col(F.col("_h"), w).alias("fp")
+        F.col("doc_id"), winnow_from_hashes_col(F.col("_h")).alias("fp")
     )
 
 
-def duckdb_winnow_sql(expr: str, w: int = WINNOW_W) -> str:
+def duckdb_winnow_sql(expr: str) -> str:
+    w = WINNOW_W
     seq = _duckdb_shingle_seq_sql(expr)
     h = f"list_transform({seq}, s -> {duckdb_md5_int_sql('s', 7)})"
     mins = (
@@ -708,12 +664,7 @@ def simhash_col(text: Column, bits: int = SIMHASH_BITS) -> Column:
     return out
 
 
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """SimHash via explode + groupBy: each token hashed once, the
     per-bit ±1 balances combine map-side before one shuffle on id —
     the same shape as :func:`minhash_signatures`, and the layout that
@@ -727,11 +678,11 @@ def simhash_signatures(
     bit test is ``shiftright & 1`` instead of ``floor(h / 2^b) % 2`` —
     identical for the non-negative md5-derived ints, without the
     per-token double division."""
-    tok = F.explode(F.array_distinct(tokens_col(F.col(text_col))))
+    tok = F.explode(F.array_distinct(tokens_col(F.col("text"))))
     exploded = (
         spread_to_parallelism(df)
-        .select(F.col(id_col), tok.alias("_tok"))
-        .select(F.col(id_col), md5_int_col(F.col("_tok"), bits // 4).alias("h"))
+        .select(F.col("doc_id"), tok.alias("_tok"))
+        .select(F.col("doc_id"), md5_int_col(F.col("_tok"), bits // 4).alias("h"))
     )
     aggs = [
         F.sum(
@@ -739,12 +690,12 @@ def simhash_signatures(
         ).alias(f"_b{b}")
         for b in range(bits)
     ]
-    per_bit = exploded.groupBy(id_col).agg(*aggs)
+    per_bit = exploded.groupBy("doc_id").agg(*aggs)
     sim = None
     for b in range(bits):
         term = F.when(F.col(f"_b{b}") >= 0, F.lit(2**b)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
-    return per_bit.select(id_col, sim.alias("simhash"))
+    return per_bit.select("doc_id", sim.alias("simhash"))
 
 
 def duckdb_simhash_sql(expr: str, bits: int = SIMHASH_BITS) -> str:
@@ -760,9 +711,7 @@ def duckdb_simhash_sql(expr: str, bits: int = SIMHASH_BITS) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def simhash_near_pairs(
-    sigs: DataFrame, id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
+def simhash_near_pairs(sigs: DataFrame, bits: int = 32) -> DataFrame:
     """Near-duplicate pairs by simhash Hamming distance ≤ 1, in the
     group-then-pair shape that stays linear on web data:
 
@@ -779,14 +728,14 @@ def simhash_near_pairs(
 
     Connectivity is preserved for keep-min-id dedup: every member
     reaches its representative, and representatives reach Hamming-1
-    neighbor groups. `sigs`: (id_col, simhash)."""
-    groups = sigs.groupBy("simhash").agg(F.min(id_col).alias("rep"))
+    neighbor groups. `sigs`: (doc_id, simhash)."""
+    groups = sigs.groupBy("simhash").agg(F.min("doc_id").alias("rep"))
     star = (
         sigs.join(groups, "simhash")
-        .filter(F.col(id_col) != F.col("rep"))
+        .filter(F.col("doc_id") != F.col("rep"))
         .select(
             F.col("rep").alias("id1"),
-            F.col(id_col).alias("id2"),
+            F.col("doc_id").alias("id2"),
             F.lit(0).alias("hamming"),
         )
     )
@@ -861,11 +810,7 @@ def duckdb_jaccard_sql(sh1: str, sh2: str) -> str:
 # ------------------------------------------------- C4 line-level dedup ---
 
 
-def line_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """Corpus-level LINE deduplication (C4, Raffel et al. 2020 §2.2:
     "we discarded all but one of any three-sentence span occurring
     more than once" — the line-granular variant Dolma/RefinedWeb run):
@@ -874,7 +819,7 @@ def line_dedup(
     doc, then min index within that doc — so the order is exact at any
     line count; a single packed-integer key would collide past its
     multiplier, review finding), all later occurrences drop. Lines are
-    '\\n'-separated on both engines. Returns per doc (id_col, n_lines,
+    '\\n'-separated on both engines. Returns per doc (doc_id, n_lines,
     n_kept, kept_md5) where kept_md5 fingerprints the surviving lines
     joined in original order — the reassembled-document check.
 
@@ -886,81 +831,79 @@ def line_dedup(
     AQE skew-join shape — → one per-doc aggregate. No windows over the
     occurrence stream, nothing collected."""
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("idx", "line"),
     )
-    first_doc = lines.groupBy("line").agg(F.min(id_col).alias("_fd"))
+    first_doc = lines.groupBy("line").agg(F.min("doc_id").alias("_fd"))
     first_idx = (
         lines.join(first_doc, "line")
-        .filter(F.col(id_col) == F.col("_fd"))
+        .filter(F.col("doc_id") == F.col("_fd"))
         .groupBy("line")
-        .agg(F.min(id_col).alias("_fd2"), F.min("idx").alias("_fi"))
+        .agg(F.min("doc_id").alias("_fd2"), F.min("idx").alias("_fi"))
     )
     kept = lines.join(first_idx, "line").filter(
-        (F.col(id_col) == F.col("_fd2")) & (F.col("idx") == F.col("_fi"))
+        (F.col("doc_id") == F.col("_fd2")) & (F.col("idx") == F.col("_fi"))
     )
     kept_lines = F.concat_ws(
         "\n", F.sort_array(F.collect_list(F.struct("idx", "line")))["line"]
     )
-    per_doc = lines.groupBy(id_col).agg(F.count("*").alias("n_lines"))
-    kept_agg = kept.groupBy(id_col).agg(
+    per_doc = lines.groupBy("doc_id").agg(F.count("*").alias("n_lines"))
+    kept_agg = kept.groupBy("doc_id").agg(
         F.count("*").alias("n_kept"),
         F.md5(kept_lines.cast("binary")).alias("kept_md5"),
     )
-    return per_doc.join(kept_agg, id_col, "left").select(
-        id_col,
+    return per_doc.join(kept_agg, "doc_id", "left").select(
+        "doc_id",
         "n_lines",
         F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
         "kept_md5",
     )
 
 
-def duckdb_line_dedup_sql(
-    docs_cte: str = "documents", id_col: str = "doc_id"
-) -> str:
-    """DuckDB twin of :func:`line_dedup` over a ({id_col}, text) CTE."""
+def duckdb_line_dedup_sql(docs_cte: str = "documents") -> str:
+    """DuckDB twin of :func:`line_dedup` over a (doc_id, text) CTE."""
     return f"""
 ld_keyed AS (
-  SELECT {id_col},
+  SELECT doc_id,
          unnest(string_split(text, chr(10))) AS line,
          unnest(range(0, len(string_split(text, chr(10))))) AS idx
   FROM {docs_cte}
 ), ld_first_doc AS (
-  SELECT line, min({id_col}) AS fd FROM ld_keyed GROUP BY line
+  SELECT line, min(doc_id) AS fd FROM ld_keyed GROUP BY line
 ), ld_firsts AS (
-  SELECT k.line, min(k.idx) AS fi, min(k.{id_col}) AS fd2
+  SELECT k.line, min(k.idx) AS fi, min(k.doc_id) AS fd2
   FROM ld_keyed k JOIN ld_first_doc f
-    ON k.line = f.line AND k.{id_col} = f.fd
+    ON k.line = f.line AND k.doc_id = f.fd
   GROUP BY k.line
 ), ld_kept AS (
-  SELECT k.{id_col}, k.idx, k.line
+  SELECT k.doc_id, k.idx, k.line
   FROM ld_keyed k JOIN ld_firsts f
-    ON k.line = f.line AND k.{id_col} = f.fd2 AND k.idx = f.fi
+    ON k.line = f.line AND k.doc_id = f.fd2 AND k.idx = f.fi
 ), ld_perdoc AS (
-  SELECT {id_col}, count(*) AS n_lines FROM ld_keyed GROUP BY {id_col}
+  SELECT doc_id, count(*) AS n_lines FROM ld_keyed GROUP BY doc_id
 ), ld_keptagg AS (
-  SELECT {id_col}, count(*) AS n_kept,
+  SELECT doc_id, count(*) AS n_kept,
          md5(string_agg(line, chr(10) ORDER BY idx)) AS kept_md5
-  FROM ld_kept GROUP BY {id_col}
+  FROM ld_kept GROUP BY doc_id
 )
-SELECT p.{id_col}, p.n_lines,
+SELECT p.doc_id, p.n_lines,
        CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
        a.kept_md5
-FROM ld_perdoc p LEFT JOIN ld_keptagg a USING ({id_col})
+FROM ld_perdoc p LEFT JOIN ld_keptagg a USING (doc_id)
 """
 
 
 # --------------------------------------------- connected components ---
+CC_MAX_ROUNDS = 25
+
+
 def connected_components(
-    edges: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 25,
-    report_out: dict | None = None,
+    edges: DataFrame, report_out: dict | None = None
 ) -> DataFrame:
-    """Distributed connected components over a candidate-pair graph:
-    ``(node, component)`` where ``component`` is the minimum node id
-    in each component.
+    """Distributed connected components over an (id1, id2) candidate-
+    pair graph: ``(node, component)`` where ``component`` is the
+    minimum node id in each component, after at most
+    :data:`CC_MAX_ROUNDS` propagation rounds.
 
     The keep-one-per-cluster step of a dedup pipeline is per
     *component*, not per pair: near-dup similarity is not transitive,
@@ -989,8 +932,8 @@ def connected_components(
     a huge first round = one dense mega-component (both the skew
     shapes a 100 TB closure run wants surfaced).
     """
-    e1 = edges.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
-    e2 = edges.select(F.col(id2).alias("src"), F.col(id1).alias("dst"))
+    e1 = edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+    e2 = edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
     # checkpoint the symmetrized edges once: the caller's edge plan is
     # typically the expensive part (LSH candidate join + Jaccard
     # verify ∪ ANN self-join), and every propagation round references
@@ -1003,7 +946,7 @@ def connected_components(
         .withColumn("lbl", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         nbr = (
             sym.join(labels, sym["src"] == labels["node"])
             .groupBy(sym["dst"].alias("node"))

@@ -62,18 +62,16 @@ def tokens_col(col: Column) -> Column:
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), F.lit(0))
 
 
-def bigram_lm_scores(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     """Per-document add-one-smoothed bigram log-likelihood under the
     corpus's own bigram model.
 
-    Returns (id_col, n_bigrams, novel_bigrams, sum_lp): occurrence
+    Returns (doc_id, n_bigrams, novel_bigrams, sum_lp): occurrence
     count, bigrams whose corpus count is 1 (unique to this doc), and
     the exact-grid sum of per-bigram log probabilities.
     """
     toks = docs.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("t")
+        F.col("doc_id"), tokens_col(F.col("text")).alias("t")
     ).filter(F.size("t") >= 2)
     uni = (
         toks.select(F.explode("t").alias("tok"))
@@ -83,7 +81,7 @@ def bigram_lm_scores(
     voc = uni.agg(F.count("*").alias("v"))
     # Flat bigram stream (dedup.exploded_word_grams: each gram built
     # by codegen'd element_at/concat, not an interpreted lambda)
-    bg = dedup.exploded_word_grams(toks, F.col("t"), 2, keep=(id_col,))
+    bg = dedup.exploded_word_grams(toks, F.col("t"), 2)
     # bigram model side: aggregate-then-equi-join (NOT a count window
     # over the occurrence stream — WindowExec partitions are not
     # AQE-splittable, so the head gram would pin one task at scale).
@@ -112,7 +110,7 @@ def bigram_lm_scores(
         )
     )
     scored = bg.join(model, bg.gram == model.g2)
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
         F.sum((F.col("c2") == 1).cast("long")).alias("novel_bigrams"),
         F.sum("lp").alias("sum_lp"),
@@ -123,9 +121,7 @@ VOCAB_K = 512  # query-level default; a production vocab is 2^15-2^17
 UNK_ID = 0
 
 
-def vocab_topk(
-    docs: DataFrame, k: int = VOCAB_K, text_col: str = "text"
-) -> DataFrame:
+def vocab_topk(docs: DataFrame, k: int = VOCAB_K) -> DataFrame:
     """Deterministic corpus vocabulary: the top-k whitespace tokens by
     occurrence count (count-desc, token-asc tie-break), numbered
     1..k; id 0 is reserved for UNK.
@@ -138,7 +134,7 @@ def vocab_topk(
     (dedup.tokens_col) so vocab and shingles agree on token
     boundaries."""
     toks = dedup.spread_to_parallelism(docs).select(
-        F.explode(dedup.tokens_col(F.col(text_col))).alias("tok")
+        F.explode(dedup.tokens_col(F.col("text"))).alias("tok")
     )
     top = (
         toks.groupBy("tok")
@@ -152,32 +148,25 @@ def vocab_topk(
     ).select("tok", "token_id", "n")
 
 
-def _encoded_tokens(
-    docs: DataFrame, vocab: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """(id_col, pos, tid): every whitespace token (dedup.tokens_col) of
+def _encoded_tokens(docs: DataFrame, vocab: DataFrame) -> DataFrame:
+    """(doc_id, pos, tid): every whitespace token (dedup.tokens_col) of
     every doc with its in-doc position, encoded against the (tok,
     token_id) vocabulary; unknown tokens are UNK."""
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode(dedup.tokens_col(F.col(text_col))).alias("pos", "tok"),
+        F.col("doc_id"),
+        F.posexplode(dedup.tokens_col(F.col("text"))).alias("pos", "tok"),
     )
     return toks.join(vocab.select("tok", "token_id"), "tok", "left").select(
-        F.col(id_col),
+        F.col("doc_id"),
         "pos",
         F.coalesce(F.col("token_id"), F.lit(UNK_ID)).alias("tid"),
     )
 
 
-def encode_docs(
-    docs: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def encode_docs(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     """Encode every document against a (tok, token_id) vocabulary —
     the tokenization handoff a training pipeline runs last. Unknown
-    tokens map to UNK (id 0). Returns (id_col, n_tokens, n_unk,
+    tokens map to UNK (id 0). Returns (doc_id, n_tokens, n_unk,
     ids_md5) where ids_md5 fingerprints the ORDERED id sequence, so
     two engines (or two cluster sizes) agree iff they produced the
     identical token stream.
@@ -187,11 +176,11 @@ def encode_docs(
     order-sensitive part is a typed sort_array over that doc's own
     (pos, tid) structs, read back by field projection (no per-element
     lambda), never a cross-row float or global sort."""
-    enc = _encoded_tokens(docs, vocab, text_col, id_col)
+    enc = _encoded_tokens(docs, vocab)
     ids_in_order = F.sort_array(F.collect_list(F.struct("pos", "tid")))[
         "tid"
     ].cast("array<string>")
-    return enc.groupBy(id_col).agg(
+    return enc.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.sum((F.col("tid") == UNK_ID).cast("long")).alias("n_unk"),
         F.md5(F.concat_ws(",", ids_in_order).cast("binary")).alias("ids_md5"),
@@ -201,17 +190,12 @@ def encode_docs(
 SEQ_LEN = 256  # query-level block capacity; production 2048-8192
 
 
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int = SEQ_LEN,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
     """Sequence-packing index: concatenate the corpus's token stream
-    in deterministic ``id_col`` order and cut it every ``seq_len``
+    in deterministic ``doc_id`` order and cut it every ``seq_len``
     tokens — the last step before a pretraining data loader. Emits per
     document its global token offset and block placement:
-    (id_col, n_tokens, start_tok, block_id, offset_in_block,
+    (doc_id, n_tokens, start_tok, block_id, offset_in_block,
     n_blocks_spanned) — the index a packed-shard writer consumes; a
     doc whose tokens straddle a cut spans >1 block.
 
@@ -220,20 +204,19 @@ def pack_sequences(
     partition + local window + P-row offset table, NO
     single-partition exchange over data). Everything emitted is
     integer arithmetic on exact counts."""
-    from pero_ocr_api_spark.operators import dedup
     from pero_ocr_api_spark.operators.scheduling import global_prefix_sum
 
     counted = docs.select(
-        F.col(id_col),
-        F.size(dedup.tokens_col(F.col(text_col))).cast("long").alias(
+        F.col("doc_id"),
+        F.size(dedup.tokens_col(F.col("text"))).cast("long").alias(
             "n_tokens"
         ),
     )
-    placed = global_prefix_sum(counted, [id_col], "n_tokens", out="start_tok")
+    placed = global_prefix_sum(counted, ["doc_id"], "n_tokens", out="start_tok")
     block = F.expr(f"start_tok div {seq_len}")
     end_block = F.expr(f"(start_tok + n_tokens - 1) div {seq_len}")
     return placed.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "start_tok",
         block.alias("block_id"),
@@ -243,11 +226,7 @@ def pack_sequences(
 
 
 def assemble_blocks(
-    docs: DataFrame,
-    vocab: DataFrame,
-    seq_len: int = SEQ_LEN,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    docs: DataFrame, vocab: DataFrame, seq_len: int = SEQ_LEN
 ) -> DataFrame:
     """Assemble the actual packed training blocks: every token gets a
     GLOBAL position (its doc's start_tok from :func:`pack_sequences`
@@ -263,13 +242,11 @@ def assemble_blocks(
     broadcast-sized, the placement join is an equi-join on the doc
     key. Every block except the last is exactly seq_len tokens — the
     invariant the tests pin."""
-    placed = pack_sequences(docs, seq_len, text_col, id_col).select(
-        id_col, "start_tok"
-    )
-    enc = _encoded_tokens(docs, vocab, text_col, id_col)
-    stream = enc.join(placed, id_col).select(
+    placed = pack_sequences(docs, seq_len).select("doc_id", "start_tok")
+    enc = _encoded_tokens(docs, vocab)
+    stream = enc.join(placed, "doc_id").select(
         (F.col("start_tok") + F.col("pos")).alias("gpos"),
-        F.col(id_col),
+        F.col("doc_id"),
         "tid",
     )
     ids_in_order = F.sort_array(F.collect_list(F.struct("gpos", "tid")))["tid"]
@@ -279,23 +256,18 @@ def assemble_blocks(
         .agg(
             ids_in_order.alias("token_ids"),
             F.count("*").alias("n_tokens"),
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
             F.sum((F.col("tid") == UNK_ID).cast("long")).alias("n_unk"),
         )
     )
 
 
-def pack_blocks(
-    docs: DataFrame,
-    vocab: DataFrame,
-    seq_len: int = SEQ_LEN,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Fingerprintable view of :func:`assemble_blocks`:
-    (block_id, n_tokens, n_docs, ids_md5) — the oracle compares block
-    md5s instead of shipping raw id arrays across engines."""
-    blocks = assemble_blocks(docs, vocab, seq_len, text_col, id_col)
+def pack_blocks(docs: DataFrame, vocab: DataFrame) -> DataFrame:
+    """Fingerprintable view of :func:`assemble_blocks` at
+    :data:`SEQ_LEN`: (block_id, n_tokens, n_docs, ids_md5) — the oracle
+    compares block md5s instead of shipping raw id arrays across
+    engines."""
+    blocks = assemble_blocks(docs, vocab)
     ids_str = F.col("token_ids").cast("array<string>")
     return blocks.select(
         "block_id",
@@ -305,78 +277,71 @@ def pack_blocks(
     )
 
 
-def duckdb_pack_blocks_sql(
-    k: int = VOCAB_K,
-    seq_len: int = SEQ_LEN,
-    docs_cte: str = "documents",
-    id_col: str = "doc_id",
-) -> str:
+def duckdb_pack_blocks_sql() -> str:
     """DuckDB twin of vocab build + :func:`pack_blocks`."""
     toks = dedup.duckdb_tokens_sql("text")
     return f"""
-WITH {duckdb_vocab_cte_sql(k, docs_cte)},
+WITH {duckdb_vocab_cte_sql()},
 counted AS (
-  SELECT {id_col}, CAST(len({toks}) AS BIGINT) AS n_tokens FROM {docs_cte}
+  SELECT doc_id, CAST(len({toks}) AS BIGINT) AS n_tokens FROM documents
 ), placed AS (
-  SELECT {id_col},
+  SELECT doc_id,
          CAST(coalesce(sum(n_tokens) OVER (
-           ORDER BY {id_col}
+           ORDER BY doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
            AS start_tok
   FROM counted
 ), positions AS (
-  SELECT {id_col},
+  SELECT doc_id,
          unnest({toks}) AS tok,
          unnest(range(0, len({toks}))) AS pos
-  FROM {docs_cte}
+  FROM documents
 ), stream AS (
-  SELECT p.start_tok + t.pos AS gpos, t.{id_col},
+  SELECT p.start_tok + t.pos AS gpos, t.doc_id,
          coalesce(v.token_id, {UNK_ID}) AS tid
   FROM positions t
   LEFT JOIN vocab v USING (tok)
-  JOIN placed p USING ({id_col})
+  JOIN placed p USING (doc_id)
 )
-SELECT gpos // {seq_len} AS block_id,
+SELECT gpos // {SEQ_LEN} AS block_id,
        count(*) AS n_tokens,
-       CAST(count(DISTINCT {id_col}) AS BIGINT) AS n_docs,
+       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
        md5(string_agg(CAST(tid AS VARCHAR), ',' ORDER BY gpos)) AS ids_md5
 FROM stream GROUP BY block_id
 """
 
 
-def duckdb_pack_sequences_sql(
-    seq_len: int = SEQ_LEN, docs_cte: str = "documents", id_col: str = "doc_id"
-) -> str:
+def duckdb_pack_sequences_sql() -> str:
     """DuckDB twin of :func:`pack_sequences` (plain window cumsum —
     single-threaded is fine for the oracle)."""
     toks = dedup.duckdb_tokens_sql("text")
     return f"""
 WITH counted AS (
-  SELECT {id_col}, CAST(len({toks}) AS BIGINT) AS n_tokens FROM {docs_cte}
+  SELECT doc_id, CAST(len({toks}) AS BIGINT) AS n_tokens FROM documents
 ), placed AS (
-  SELECT {id_col}, n_tokens,
+  SELECT doc_id, n_tokens,
          CAST(coalesce(sum(n_tokens) OVER (
-           ORDER BY {id_col}
+           ORDER BY doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
            AS start_tok
   FROM counted
 )
-SELECT {id_col}, n_tokens, start_tok,
-       start_tok // {seq_len} AS block_id,
-       start_tok % {seq_len} AS offset_in_block,
-       (start_tok + n_tokens - 1) // {seq_len} - start_tok // {seq_len} + 1
+SELECT doc_id, n_tokens, start_tok,
+       start_tok // {SEQ_LEN} AS block_id,
+       start_tok % {SEQ_LEN} AS offset_in_block,
+       (start_tok + n_tokens - 1) // {SEQ_LEN} - start_tok // {SEQ_LEN} + 1
          AS n_blocks_spanned
 FROM placed
 """
 
 
-def duckdb_vocab_cte_sql(k: int = VOCAB_K, docs_cte: str = "documents") -> str:
+def duckdb_vocab_cte_sql(k: int = VOCAB_K) -> str:
     """CTE chain ending in ``vocab (tok, token_id, n)`` — the DuckDB
     twin of :func:`vocab_topk`."""
     toks = dedup.duckdb_tokens_sql("text")
     return f"""vocab_top AS (
   SELECT tok, CAST(count(*) AS BIGINT) AS n
-  FROM (SELECT unnest({toks}) AS tok FROM {docs_cte})
+  FROM (SELECT unnest({toks}) AS tok FROM documents)
   GROUP BY tok ORDER BY n DESC, tok ASC LIMIT {k}
 ), vocab AS (
   SELECT tok, CAST(row_number() OVER (ORDER BY n DESC, tok ASC) AS BIGINT)
@@ -385,40 +350,38 @@ def duckdb_vocab_cte_sql(k: int = VOCAB_K, docs_cte: str = "documents") -> str:
 )"""
 
 
-def duckdb_encode_docs_sql(
-    k: int = VOCAB_K, docs_cte: str = "documents", id_col: str = "doc_id"
-) -> str:
+def duckdb_encode_docs_sql() -> str:
     """Full DuckDB twin of vocab build + :func:`encode_docs`."""
     toks = dedup.duckdb_tokens_sql("text")
     return f"""
-WITH {duckdb_vocab_cte_sql(k, docs_cte)},
+WITH {duckdb_vocab_cte_sql()},
 positions AS (
-  SELECT {id_col},
+  SELECT doc_id,
          unnest({toks}) AS tok,
          unnest(range(1, len({toks}) + 1)) AS pos
-  FROM {docs_cte}
+  FROM documents
 ),
 enc AS (
-  SELECT p.{id_col}, p.pos, coalesce(v.token_id, {UNK_ID}) AS tid
+  SELECT p.doc_id, p.pos, coalesce(v.token_id, {UNK_ID}) AS tid
   FROM positions p LEFT JOIN vocab v USING (tok)
 )
-SELECT {id_col},
+SELECT doc_id,
        count(*) AS n_tokens,
        CAST(sum(CASE WHEN tid = {UNK_ID} THEN 1 ELSE 0 END) AS BIGINT)
          AS n_unk,
        md5(string_agg(CAST(tid AS VARCHAR), ',' ORDER BY pos)) AS ids_md5
-FROM enc GROUP BY {id_col}
+FROM enc GROUP BY doc_id
 """
 
 
-def duckdb_bigram_lm_sql(docs_cte: str = "documents", id_col: str = "doc_id") -> str:
-    """DuckDB twin of :func:`bigram_lm_scores` over a (id, text) CTE or
-    table. Bit-identical: same tokenizer regex, same integer counts,
+def duckdb_bigram_lm_sql(docs_cte: str = "documents") -> str:
+    """DuckDB twin of :func:`bigram_lm_scores` over a (doc_id, text) CTE
+    or table. Bit-identical: same tokenizer regex, same integer counts,
     same quant16 grid per term, exact sum."""
     lp = duckdb_quant16_sql("(ln(c2 + 1.0) - ln(c1 + v + 0.0))")
     return f"""
 WITH lm_toks AS (
-  SELECT {id_col}, regexp_extract_all(lower(text), '{TOKEN_RE}') AS t
+  SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_RE}') AS t
   FROM {docs_cte}
   WHERE len(regexp_extract_all(lower(text), '{TOKEN_RE}')) >= 2
 ), lm_uni AS (
@@ -427,19 +390,19 @@ WITH lm_toks AS (
 ), lm_voc AS (
   SELECT count(*) AS v FROM lm_uni
 ), lm_bg AS (
-  SELECT {id_col}, unnest({dedup.duckdb_word_grams_sql('t', 2)}) AS gram
+  SELECT doc_id, unnest({dedup.duckdb_word_grams_sql('t', 2)}) AS gram
   FROM lm_toks
 ), lm_scored AS (
-  SELECT {id_col},
+  SELECT doc_id,
          count(*) OVER (PARTITION BY gram) AS c2,
          split_part(gram, ' ', 1) AS w1
   FROM lm_bg
 )
-SELECT {id_col},
+SELECT doc_id,
        count(*) AS n_bigrams,
        CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
          AS novel_bigrams,
        sum({lp}) AS sum_lp
 FROM lm_scored JOIN lm_uni ON w1 = tok CROSS JOIN lm_voc
-GROUP BY {id_col}
+GROUP BY doc_id
 """

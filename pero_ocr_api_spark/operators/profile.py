@@ -11,11 +11,10 @@ Scale shape: all metrics are a single ``df.agg(...)`` — one scan,
 map-side partial aggregation, a 1-row result. The one scale hazard is
 exact ``count(distinct c)`` over k columns: Catalyst rewrites
 multi-distinct into an Expand (k+1 rows emitted per input row) feeding
-one shuffle — linear but with a k× constant. ``approx=True`` switches
-every cardinality to ``approx_count_distinct`` (HyperLogLog++, one
-pass, no Expand, mergeable sketches) — the 100 TB default; exact mode
-is what the DuckDB oracle can reproduce bit-for-bit, so the
-correctness gate runs exact and the scale path is flag-tested.
+one shuffle — linear but with a k× constant. The counts are exact,
+because exact is what the DuckDB oracle can reproduce bit-for-bit;
+``approx_count_distinct`` (HyperLogLog++, no Expand) is the spelling
+to switch to if that constant ever dominates.
 
 Cross-engine parity notes (see tests/test_queries_parity.py):
 
@@ -36,25 +35,20 @@ from pyspark.sql import functions as F
 PROFILE_FIELDS = ("n_null", "n_distinct", "min_str", "max_str", "sum_len")
 
 
-def _metrics(c: str, approx: bool) -> list[Column]:
+def _metrics(c: str) -> list[Column]:
     s = F.col(c).cast("string")
-    distinct = (
-        F.approx_count_distinct(c) if approx else F.count_distinct(F.col(c))
-    )
     return [
         F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
         .cast("long")
         .alias(f"{c}__n_null"),
-        distinct.cast("long").alias(f"{c}__n_distinct"),
+        F.count_distinct(F.col(c)).cast("long").alias(f"{c}__n_distinct"),
         F.min(s).alias(f"{c}__min_str"),
         F.max(s).alias(f"{c}__max_str"),
         F.sum(F.length(s)).cast("long").alias(f"{c}__sum_len"),
     ]
 
 
-def profile_table(
-    df: DataFrame, cols: list[str], approx: bool = False
-) -> DataFrame:
+def profile_table(df: DataFrame, cols: list[str]) -> DataFrame:
     """Long-format profile: one row per column with
     (col_name, n_rows, n_null, n_distinct, min_str, max_str, sum_len).
 
@@ -63,7 +57,7 @@ def profile_table(
     the agg row, exploded — no shuffle after the agg)."""
     aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
     for c in cols:
-        aggs.extend(_metrics(c, approx))
+        aggs.extend(_metrics(c))
     row = df.agg(*aggs)
     entries = F.array(
         *[
@@ -87,7 +81,7 @@ def profile_table(
 
 
 def duckdb_profile_sql(table: str, cols: list[str]) -> str:
-    """DuckDB twin of :func:`profile_table` (exact mode): the same
+    """DuckDB twin of :func:`profile_table`: the same
     one-scan wide aggregate in a CTE, unpivoted by a UNION ALL of
     per-column projections."""
     aggs = ["CAST(count(*) AS BIGINT) AS n_rows"]

@@ -207,21 +207,21 @@ def fair_assign_preferred(
     api_key: DataFrame,
     now: datetime,
     preferred_engine_id: int,
-    limit: int = 1,
 ) -> DataFrame:
-    """The reference's two-pass dequeue (general.py:112-151): try the
-    preferred engine first; if it yields nothing, fall back to
-    any-engine work — one lazy plan, no driver-side branch.
+    """The reference's two-pass dequeue (general.py:112-151): the one
+    page to hand out next, from the preferred engine first; if it
+    yields nothing, fall back to any-engine work — one lazy plan, no
+    driver-side branch.
 
     Pass 1 rows win over pass 2 rows; a page appearing in both passes
     is kept once (pass 1). The final re-rank window runs over at most
-    ``2*limit`` pre-filtered rows, so it is bounded regardless of
-    queue depth."""
+    two pre-filtered rows, so it is bounded regardless of queue
+    depth."""
     pref = fair_assign(
-        page, request, api_key, now, engine_id=preferred_engine_id, limit=limit
+        page, request, api_key, now, engine_id=preferred_engine_id, limit=1
     ).withColumn("_pass", F.lit(0))
     any_engine = fair_assign(
-        page, request, api_key, now, engine_id=None, limit=limit
+        page, request, api_key, now, engine_id=None, limit=1
     ).withColumn("_pass", F.lit(1))
     merged = pref.unionByName(any_engine)
     first_pass = Window.partitionBy("page_id").orderBy("_pass")
@@ -230,10 +230,10 @@ def fair_assign_preferred(
         .filter(F.col("_dup") == 1)
         .drop("_dup")
     )
-    final = Window.orderBy("_pass", "fair_rank", "page_id")  # <= 2*limit rows
+    final = Window.orderBy("_pass", "fair_rank", "page_id")  # <= 2 rows
     return (
         deduped.withColumn("final_rank", F.row_number().over(final))
-        .filter(F.col("final_rank") <= limit)
+        .filter(F.col("final_rank") <= 1)
         .select(
             "page_id", "request_id", "api_key_id", "engine_id",
             F.col("final_rank").alias("fair_rank"),

@@ -64,8 +64,9 @@ def dot_col(a: Column, b: Column) -> Column:
     )
 
 
-def as_double_vec(df: DataFrame, col: str = "embedding", out: str = "v") -> DataFrame:
-    return df.withColumn(out, F.transform(col, lambda x: x.cast("double")))
+def as_double_vec(df: DataFrame) -> DataFrame:
+    """``df`` with its ``embedding`` vector as doubles in ``v``."""
+    return df.withColumn("v", F.transform("embedding", lambda x: x.cast("double")))
 
 
 @lru_cache(maxsize=256)
@@ -117,11 +118,10 @@ def _bucket_from_planes(v: Column, planes_arr: Column) -> Column:
     return F.aggregate(contribs, F.lit(0.0), lambda a, x: a + x).cast("int")
 
 
-def bucket_col(
-    v: Column, dim: int, planes: int = ANN_PLANES, table: int = 0
-) -> Column:
-    """LSH bucket id: bit p = sign(v . plane_p)."""
-    return _bucket_from_planes(v, _planes_lit(dim, planes, table))
+def bucket_col(v: Column, dim: int) -> Column:
+    """LSH bucket id: bit p = sign(v . plane_p) over the
+    :data:`ANN_PLANES` planes of table 0."""
+    return _bucket_from_planes(v, _planes_lit(dim, ANN_PLANES, 0))
 
 
 def bucket_struct_col(v: Column, dim: int, tables: int, planes: int) -> Column:
@@ -220,40 +220,35 @@ def cosine_topk(emb: DataFrame, query_ids: DataFrame, k: int) -> DataFrame:
 
 
 def _lsh_index(
-    emb: DataFrame, query_ids: DataFrame, dim: int, tables: int, planes: int
+    emb: DataFrame, query_ids: DataFrame, dim: int
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Normed vectors, their (vec_id, t, bucket) rows and the queries'
-    own (qid, t, bucket) rows. ``e`` is referenced by the bucket pass,
-    the candidate re-score join and the query-vector lookup; the bands
-    by the corpus and query sides — both are cached so the norm and
-    hyperplane pipelines run once per call, not once per plan
-    reference (the ann_self_pairs lesson; on an unbounded corpus the
-    same boundary comes free from the persisted bucketed index
-    table)."""
+    """Normed vectors, their (vec_id, t, bucket) rows over
+    :data:`ANN_TABLES` tables of :data:`ANN_TABLE_PLANES` planes, and
+    the queries' own (qid, t, bucket) rows. ``e`` is referenced by the
+    bucket pass, the candidate re-score join and the query-vector
+    lookup; the bands by the corpus and query sides — both are cached
+    so the norm and hyperplane pipelines run once per call, not once
+    per plan reference (the ann_self_pairs lesson; on an unbounded
+    corpus the same boundary comes free from the persisted bucketed
+    index table)."""
     e = cache(_with_norm(emb))
-    bucketed = cache(embedding_bands_df(e, dim, tables, planes))
+    bucketed = cache(embedding_bands_df(e, dim, ANN_TABLES, ANN_TABLE_PLANES))
     own = bucketed.join(query_ids, "vec_id").select(
         F.col("vec_id").alias("qid"), "t", "bucket"
     )
     return e, bucketed, own
 
 
-def ann_topk(
-    emb: DataFrame,
-    query_ids: DataFrame,
-    k: int,
-    dim: int,
-    tables: int = ANN_TABLES,
-    planes: int = ANN_TABLE_PLANES,
-) -> DataFrame:
+def ann_topk(emb: DataFrame, query_ids: DataFrame, k: int, dim: int) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
-    Probe: the query's own bucket in each of `tables` independent hash
-    tables (recall stacks as 1-(1-p)^L). On unstructured (near-random)
-    embeddings recall ≈ the scanned corpus fraction by information-
-    theoretic necessity; on clustered real embeddings the same plan
-    concentrates neighbors into shared buckets."""
-    e, bucketed, own = _lsh_index(emb, query_ids, dim, tables, planes)
+    Probe: the query's own bucket in each of :data:`ANN_TABLES`
+    independent hash tables (recall stacks as 1-(1-p)^L). On
+    unstructured (near-random) embeddings recall ≈ the scanned corpus
+    fraction by information-theoretic necessity; on clustered real
+    embeddings the same plan concentrates neighbors into shared
+    buckets."""
+    e, bucketed, own = _lsh_index(emb, query_ids, dim)
     cand = _probe_join(bucketed, own, ["t", "bucket"])
     return _rescore_topk(e, query_ids, k, cand)
 
@@ -313,13 +308,7 @@ def candidate_cosine(
 
 
 def ann_self_pairs(
-    emb: DataFrame,
-    threshold: float,
-    dim: int,
-    tables: int = ANN_SELF_TABLES,
-    planes: int = ANN_SELF_PLANES,
-    max_bucket: int | None = None,
-    bands_out: list | None = None,
+    emb: DataFrame, threshold: float, dim: int, bands_out: list | None = None
 ) -> DataFrame:
     """Corpus-scale near-pair discovery: the whole corpus vs itself,
     with NO broadcast of either side — the op a 100 TB embedding-dedup
@@ -329,7 +318,7 @@ def ann_self_pairs(
     Shape: every vector lands in one bucket per hash table; candidate
     pairs come from a *bucketed equi-self-join* on (table, bucket),
     reusing the dedup LSH cap machinery (`lsh_candidate_pairs`) — a
-    bucket up to ``max_bucket`` members emits its clique, an oversized
+    bucket up to ``dedup.MAX_BUCKET`` members emits its clique, an oversized
     bucket (a dense near-identical cluster, the web-scale hazard)
     collapses to a star around its min id, keeping keep-min-id
     connectivity at linear fan-out. Candidates are deduped across
@@ -351,17 +340,15 @@ def ann_self_pairs(
     compute."""
     from pero_ocr_api_spark.operators import dedup
 
-    if max_bucket is None:
-        max_bucket = dedup.MAX_BUCKET
     e = cache(_with_norm(emb))
     bands = cache(
-        embedding_bands_df(e, dim, tables, planes).withColumnsRenamed(
+        embedding_bands_df(e, dim).withColumnsRenamed(
             {"t": "band_idx", "bucket": "band_hash"}
         )
     )
     if bands_out is not None:
         bands_out.append(bands)
-    cand = dedup.lsh_candidate_pairs(bands, id_col="vec_id", max_bucket=max_bucket)
+    cand = dedup.lsh_candidate_pairs(bands, id_col="vec_id")
     return (
         candidate_cosine(cand, e, e, ("id1", "id2"))
         .select("id1", "id2", round_bin(F.col("cosine"), 4).alias("cosine"))
@@ -399,15 +386,12 @@ def duckdb_quant16_sql(expr: str) -> str:
     return f"(floor({expr} * 65536.0 + 0.5) / 65536.0)"
 
 
-def ivf_train_centroids(
-    e: DataFrame,
-    nlist: int = IVF_NLIST,
-    sample_rows: int = IVF_SAMPLE_ROWS,
-    iters: int = IVF_LLOYD_ITERS,
-) -> DataFrame:
+def ivf_train_centroids(e: DataFrame) -> DataFrame:
     """K-means-trained coarse centroids for the IVF index, fully
     distributed (no collect): deterministic row-budgeted sample →
-    ntile init → `iters` Lloyd iterations as tiny Spark jobs.
+    ntile init → Lloyd iterations as tiny Spark jobs (nlist =
+    :data:`IVF_NLIST` cells, sample_rows = :data:`IVF_SAMPLE_ROWS`,
+    :data:`IVF_LLOYD_ITERS` iterations).
 
     * sample: row kept iff ``md5('ivfsamp|'||vec_id) % mod == 0`` with
       ``mod = max(1, n div sample_rows)`` where n is the corpus count
@@ -433,21 +417,21 @@ def ivf_train_centroids(
     u = md5_int_col(
         F.concat(F.lit("ivfsamp|"), F.col("vec_id").cast("string")), 7
     )
-    mod = F.greatest(F.lit(1).cast("long"), F.expr(f"_n div {sample_rows}"))
+    mod = F.greatest(F.lit(1).cast("long"), F.expr(f"_n div {IVF_SAMPLE_ROWS}"))
     samp = (
         e.crossJoin(nrow)
         .filter(u % mod == 0)
         .select("vec_id", F.transform("v", quant16).alias("vq"))
     )
     w_tile = Window.orderBy("vec_id")
-    tiled = samp.withColumn("cell", F.ntile(nlist).over(w_tile))
+    tiled = samp.withColumn("cell", F.ntile(IVF_NLIST).over(w_tile))
     w_rep = Window.partitionBy("cell").orderBy("vec_id")
     cents = (
         tiled.withColumn("rn", F.row_number().over(w_rep))
         .filter(F.col("rn") == 1)
         .select("cell", F.col("vq").alias("cv"))
     )
-    for _ in range(iters):
+    for _ in range(IVF_LLOYD_ITERS):
         scored = samp.crossJoin(F.broadcast(cents)).select(
             "vec_id",
             "cell",
@@ -481,7 +465,7 @@ def ivf_train_centroids(
     )
 
 
-def trained_centroids(emb: DataFrame, nlist: int = IVF_NLIST) -> DataFrame:
+def trained_centroids(emb: DataFrame) -> DataFrame:
     """Train IVF coarse centroids once and materialize them (eager
     localCheckpoint: the nlist-row table's plan is the whole Lloyd
     iteration tree — truncating it keeps every downstream consumer
@@ -491,7 +475,7 @@ def trained_centroids(emb: DataFrame, nlist: int = IVF_NLIST) -> DataFrame:
     ``centroids=`` (see queries_textops._ivf_cents, a session corpus
     memo). Materializing the 16-odd rows once measured 12.5 s → ~1 s
     for an ivf_topk call at sf0.001."""
-    return ivf_train_centroids(_with_norm(emb), nlist).localCheckpoint(eager=True)
+    return ivf_train_centroids(_with_norm(emb)).localCheckpoint(eager=True)
 
 
 def ivf_assign(
@@ -519,13 +503,11 @@ def ivf_topk(
     emb: DataFrame,
     query_ids: DataFrame,
     k: int,
-    nlist: int = IVF_NLIST,
-    nprobe: int = IVF_NPROBE,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: the corpus is partitioned into `nlist`
-    cells around coarse centroids; probe: a query's `nprobe` nearest
-    cells, re-scored exactly inside them.
+    """IVF (inverted-file) ANN: the corpus is partitioned into
+    :data:`IVF_NLIST` cells around coarse centroids; probe: a query's
+    :data:`IVF_NPROBE` nearest cells, re-scored exactly inside them.
 
     Centroids are ``centroids`` when the caller trained them once per
     corpus (the amortized path: this call pays only assignment and
@@ -542,23 +524,17 @@ def ivf_topk(
     # join and the query-vector lookup (4 plan references) — cache it
     # so the norm pass runs once per call
     e = cache(_with_norm(emb))
-    cents = trained_centroids(emb, nlist) if centroids is None else centroids
+    cents = trained_centroids(emb) if centroids is None else centroids
     cells = ivf_assign(e, cents, 1).select("vec_id", "cell")
-    probes = ivf_assign(e.join(query_ids, "vec_id"), cents, nprobe).select(
+    probes = ivf_assign(e.join(query_ids, "vec_id"), cents, IVF_NPROBE).select(
         F.col("vec_id").alias("qid"), "cell"
     )
     return _rescore_topk(e, query_ids, k, _probe_join(cells, probes, "cell"))
 
 
-def duckdb_ivf_cents_cte_sql(
-    dim: int,
-    nlist: int = IVF_NLIST,
-    sample_rows: int = IVF_SAMPLE_ROWS,
-    iters: int = IVF_LLOYD_ITERS,
-    emb_cte: str = "emb",
-) -> str:
+def duckdb_ivf_cents_cte_sql(dim: int) -> str:
     """DuckDB twin of :func:`ivf_train_centroids` as a CTE chain ending
-    in ``cents (cell, cv, cn)``. Expects an ``{emb_cte}`` CTE with
+    in ``cents (cell, cv, cn)``. Expects an ``emb`` CTE with
     (vec_id, v DOUBLE[]). Bit-identical to the Spark path because all
     cross-row sums run over 2^-16-grid values (see :func:`quant16`) —
     exact in any accumulation order — and the sample coin is the same
@@ -568,14 +544,14 @@ def duckdb_ivf_cents_cte_sql(
     q = duckdb_quant16_sql
     u = duckdb_md5_int_sql("'ivfsamp|' || CAST(vec_id AS VARCHAR)", 7)
     parts = [
-        f"ivf_nrow AS (SELECT count(*) AS n FROM {emb_cte})",
+        "ivf_nrow AS (SELECT count(*) AS n FROM emb)",
         f"""samp AS (
   SELECT vec_id, list_transform(v, x -> {q('x')}) AS vq
-  FROM {emb_cte} CROSS JOIN ivf_nrow
-  WHERE {u} % greatest(1, n // {sample_rows}) = 0
+  FROM emb CROSS JOIN ivf_nrow
+  WHERE {u} % greatest(1, n // {IVF_SAMPLE_ROWS}) = 0
 )""",
         f"""tiled AS (
-  SELECT vec_id, vq, ntile({nlist}) OVER (ORDER BY vec_id) AS cell FROM samp
+  SELECT vec_id, vq, ntile({IVF_NLIST}) OVER (ORDER BY vec_id) AS cell FROM samp
 )""",
         """c0 AS (
   SELECT cell, vq AS cv FROM (
@@ -588,7 +564,7 @@ def duckdb_ivf_cents_cte_sql(
         "list_dot_product(s.vq, c.cv) / "
         "(sqrt(list_dot_product(s.vq, s.vq)) * sqrt(list_dot_product(c.cv, c.cv)))"
     )
-    for i in range(1, iters + 1):
+    for i in range(1, IVF_LLOYD_ITERS + 1):
         parts.append(
             f"""a{i} AS (
   SELECT vec_id, cell FROM (
@@ -613,18 +589,13 @@ def duckdb_ivf_cents_cte_sql(
         )
     parts.append(
         f"cents AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cn "
-        f"FROM c{iters})"
+        f"FROM c{IVF_LLOYD_ITERS})"
     )
     return ",\n".join(parts)
 
 
 def ann_topk_multiprobe(
-    emb: DataFrame,
-    query_ids: DataFrame,
-    k: int,
-    dim: int,
-    tables: int = ANN_TABLES,
-    planes: int = ANN_TABLE_PLANES,
+    emb: DataFrame, query_ids: DataFrame, k: int, dim: int
 ) -> DataFrame:
     """Multi-probe ANN: probe: each query's own bucket plus the buckets
     at Hamming distance 1 from it (one sign-bit flip per hyperplane)
@@ -637,10 +608,13 @@ def ann_topk_multiprobe(
     candidate join stays an equi-join on (table, bucket). Probing
     1-bit neighbors scans the buckets whose boundary the query sits
     closest to — where near-misses of sign-LSH live."""
-    e, bucketed, own = _lsh_index(emb, query_ids, dim, tables, planes)
+    e, bucketed, own = _lsh_index(emb, query_ids, dim)
     flips = F.array(
         F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(planes)],
+        *[
+            F.col("bucket").bitwiseXOR(F.lit(1 << p))
+            for p in range(ANN_TABLE_PLANES)
+        ],
     )
     probes = own.select("qid", "t", F.explode(flips).alias("bucket"))
     cand = _probe_join(bucketed, probes, ["t", "bucket"])

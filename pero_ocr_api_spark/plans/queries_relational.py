@@ -78,21 +78,17 @@ ISO_TO = "1998-01-01T00:00:00"
 ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss"
 
 
-def q_usage_statistics(
-    spark: SparkSession,
-    sf: str,
-    date_from: str = ISO_FROM,
-    date_to: str = ISO_TO,
-) -> DataFrame:
-    """Per-tenant processed-page count between optional ISO-8601
-    bounds, parsed in-query exactly like the route's isoparse of the
-    from/to params (routes.py:64-80) — ``to_timestamp_ntz`` keeps the
-    comparison timezone-independent against TimestampNTZ parquet."""
+def q_usage_statistics(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-tenant processed-page count between the ISO-8601 bounds
+    ISO_FROM and ISO_TO, parsed in-query exactly like the route's
+    isoparse of the from/to params (routes.py:64-80) —
+    ``to_timestamp_ntz`` keeps the comparison timezone-independent
+    against TimestampNTZ parquet."""
     orders = read_table(spark, sf, "orders")
     customer = read_table(spark, sf, "customer")
     lineitem = read_table(spark, sf, "lineitem")
-    lo = F.to_timestamp_ntz(F.lit(date_from), F.lit(ISO_FMT))
-    hi = F.to_timestamp_ntz(F.lit(date_to), F.lit(ISO_FMT))
+    lo = F.to_timestamp_ntz(F.lit(ISO_FROM), F.lit(ISO_FMT))
+    hi = F.to_timestamp_ntz(F.lit(ISO_TO), F.lit(ISO_FMT))
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)

@@ -412,8 +412,8 @@ def q_winnow_overlap(spark: SparkSession, sf: str) -> DataFrame:
     MOSS-style overlap detection; a suffix mutation must still share
     most fingerprints with its original."""
     all_docs = _with_dups(_docs(spark, sf))
-    # Two-step winnowing with a materialization boundary: the one-shot
-    # winnow_col expression inlines its md5-gram pipeline four times
+    # Two-step winnowing with a materialization boundary: one
+    # expression over the text inlined its md5-gram pipeline four times
     # and its Janino compile dominated this query (12-13 s at sf0.1
     # for 80 docs → ~5 s with the split; see
     # dedup.winnow_fingerprints). Bounded working set: only the
@@ -1427,8 +1427,7 @@ PROFILE_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 def q_table_profile(spark: SparkSession, sf: str) -> DataFrame:
     """Pre-ingest data-quality profile of the documents drop: per-column
     null count, exact cardinality, string-form min/max, total payload
-    chars — ONE scan for all 5 columns (operators/profile.py; the
-    100 TB variant flips approx=True for HLL cardinalities)."""
+    chars — ONE scan for all 5 columns (operators/profile.py)."""
     from pero_ocr_api_spark.operators.profile import profile_table
 
     return profile_table(_docs(spark, sf), PROFILE_COLS)

@@ -17,18 +17,6 @@ from pyspark.sql import types as T
 
 NOW = datetime(2026, 1, 1, 0, 0, 0)
 
-PAGE_STATES = (
-    "CREATED",
-    "WAITING",
-    "PROCESSING",
-    "PROCESSED",
-    "NOT_FOUND",
-    "INVALID_FILE",
-    "PROCESSING_FAILED",
-    "CANCELED",
-    "EXPIRED",
-)
-
 API_KEY_SCHEMA = T.StructType(
     [
         T.StructField("id", T.IntegerType(), False),

@@ -18,7 +18,8 @@ fair dequeue per poll          each micro-batch is a full fair batch
 upload_results per page        idempotent per-batch append
 =============================  =====================================
 
-Two entry points:
+Ten entry points, each returning the streaming DataFrame (or, for
+:func:`stream_extract`, the running query) for the caller to sink:
 
 * :func:`stream_clean_text` — fully streaming stateless plan (explode
   → the batch ``text_path`` → append sink). Shows the text path is
@@ -30,6 +31,17 @@ Two entry points:
   needs multi-stage shuffles per batch; the streaming checkpoint
   provides exactly-once batch replay, and writes are idempotent per
   (batch_id) directory.
+* event-log twins of batch queries: :func:`stream_event_window_counts`
+  (windowed counts), :func:`stream_user_sessions` (``session_window``
+  sessionizer) and :func:`stream_attribution_candidates` (bounded
+  stream-stream join under the as-of attribution);
+* dedup within the watermark: :func:`stream_exact_dedup` (md5
+  fingerprint) and :func:`stream_near_dedup` (simhash signature);
+* dedup against a corpus index: :func:`stream_incremental_dedup`
+  (MinHash bands) and :func:`stream_incremental_embedding_dedup`
+  (embedding buckets);
+* :func:`stream_timeout_requeue` — the PROCESSING-timeout watchdog as
+  a custom stateful operator (``applyInPandasWithState``).
 """
 
 from __future__ import annotations
@@ -39,6 +51,10 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pero_ocr_api_spark.operators.state_machine import (
+    FAIL_STATES,
+    PROCESSING_TIMEOUT_S,
+)
 from pero_ocr_api_spark.plans.extract import run_extract, text_path
 from pero_ocr_api_spark.session import cache_scope
 from pero_ocr_api_spark.sources.tables import DOCUMENTS_SCHEMA
@@ -431,13 +447,12 @@ def stream_incremental_embedding_dedup(
 PAGE_EVENT_SCHEMA = "page_id string, state string, ts timestamp"
 REQUEUE_SCHEMA = "page_id string, action string, stuck_since timestamp"
 _TIMEOUT_STATE_SCHEMA = "processing_ts long"
-PROCESSING_TIMEOUT_S = 60  # app/__init__.py:80-83
 
 
 def _timeout_fn(key, pdfs, state):
     """Per-page state machine: remember when PROCESSING started; if
-    the event-time watermark passes start+60 s with no terminal
-    event, emit a requeue row (U6, app/__init__.py:76-124).
+    the event-time watermark passes start + PROCESSING_TIMEOUT_S with
+    no terminal event, emit a requeue row (U6, app/__init__.py:76-124).
 
     Two late-data guards: (a) all Arrow chunks are concatenated and
     sorted by ``ts`` *once*, so an out-of-order batch cannot replay a
@@ -449,8 +464,7 @@ def _timeout_fn(key, pdfs, state):
     import pandas as pd
 
     page_id = key[0]
-    terminal = {"PROCESSED", "CANCELED", "NOT_FOUND", "INVALID_FILE",
-                "PROCESSING_FAILED"}
+    terminal = {"PROCESSED", "CANCELED", *FAIL_STATES}
     if state.hasTimedOut:
         (processing_ts,) = state.get
         state.remove()

@@ -116,28 +116,6 @@ def test_sessions_respect_gap(spark):
     assert out == {(1, 1): (2, 0), (1, 2): (1, 1), (2, 1): (1, 0)}
 
 
-def test_asof_forward_semantics(spark):
-    left, right = _frames(spark)
-    out = {
-        r["pid"]: r["r_cid"]
-        for r in asof_join(left, right, on=["k"], direction="forward").collect()
-    }
-    assert out == {
-        "p1": None,  # 10:00 — no right row at-or-after
-        "p2": "c2",  # equal timestamps match (inclusive)
-        "p3": "c1",  # 07:00 -> earliest right at-or-after is 08:00
-        "p4": None,  # key absent on right
-    }
-
-
-def test_asof_bad_direction_rejected(spark):
-    left, right = _frames(spark)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        asof_join(left, right, on=["k"], direction="nearest")
-
-
 def test_asof_keys_only_side_rejected(spark):
     """A side with zero non-key columns would hit F.struct() with no
     fields — an unrelated analysis error; the guard names the usual
@@ -150,10 +128,8 @@ def test_asof_keys_only_side_rejected(spark):
 
 
 def test_asof_null_timestamps_never_match(spark):
-    """A left row with a NULL timestamp matches nothing in either
-    direction, and null-ts right rows are dropped, never fabricated
-    as matches (reproduced review finding: plain desc ordering made a
-    forward as-of hand the earliest right row to null-ts left rows)."""
+    """A left row with a NULL timestamp matches nothing, and null-ts
+    right rows are dropped, never fabricated as matches."""
     left = spark.createDataFrame(
         [(1, None, "pnull"), (1, _ts("2024-01-01 10:00:00"), "p1")],
         "k int, ts timestamp, pid string",
@@ -165,16 +141,13 @@ def test_asof_null_timestamps_never_match(spark):
         ],
         "k int, ts timestamp, cid string",
     )
-    for direction, expect_p1 in (("backward", "c1"), ("forward", None)):
-        out = {
-            r["pid"]: r["r_cid"]
-            for r in asof_join(
-                left, right, on=["k"], direction=direction
-            ).collect()
-        }
-        assert out["pnull"] is None, direction
-        assert out["p1"] == expect_p1, direction
-        assert "cnull" not in out.values()
+    out = {
+        r["pid"]: r["r_cid"]
+        for r in asof_join(left, right, on=["k"]).collect()
+    }
+    assert out["pnull"] is None
+    assert out["p1"] == "c1"
+    assert "cnull" not in out.values()
 
 
 def test_funnel_strictly_after_semantics(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+from pero_ocr_api_spark.operators import bpe
 from pero_ocr_api_spark.operators.bpe import (
     bpe_encode_docs,
     bpe_train,
@@ -21,7 +22,7 @@ def test_bpe_merges_hand_pinned(spark):
     docs = spark.createDataFrame(
         [(1, "aaab aaab ab")], "doc_id long, text string"
     )
-    segments, merges = bpe_train(docs, n_merges=6)
+    segments, merges = bpe_train(docs)
     got = [
         (r["merge_rank"], r["p1"], r["p2"])
         for r in merges.orderBy("merge_rank").collect()
@@ -31,22 +32,26 @@ def test_bpe_merges_hand_pinned(spark):
     assert segs == {"aaab": ["aaab"], "ab": ["ab"]}
 
 
-def test_bpe_tie_break_deterministic(spark):
-    # "xy" and "ab" both occur twice -> counts tie; (a,b) < (x,y)
+def test_bpe_tie_break_deterministic(spark, monkeypatch):
+    # "xy" and "ab" both occur twice -> counts tie; (a,b) < (x,y);
+    # one round, so the tie's winner is the only merge
     docs = spark.createDataFrame(
         [(1, "xy ab xy ab")], "doc_id long, text string"
     )
-    _, merges = bpe_train(docs, n_merges=1)
+    monkeypatch.setattr(bpe, "BPE_MERGES", 1)
+    _, merges = bpe_train(docs)
     [(r1, p1, p2)] = [
         (r["merge_rank"], r["p1"], r["p2"]) for r in merges.collect()
     ]
     assert (r1, p1, p2) == (1, "a", "b")
 
 
-def test_bpe_run_merge_is_left_to_right_nonoverlapping(spark):
+def test_bpe_run_merge_is_left_to_right_nonoverlapping(spark, monkeypatch):
     # "aaaa": (a,a) count 3 -> merge; fold gives [aa, aa], not [aa, a, a]
+    # (one round: a second would merge (aa, aa))
     docs = spark.createDataFrame([(1, "aaaa")], "doc_id long, text string")
-    segments, merges = bpe_train(docs, n_merges=1)
+    monkeypatch.setattr(bpe, "BPE_MERGES", 1)
+    segments, merges = bpe_train(docs)
     [seg] = segments.collect()
     assert seg["syms"] == ["aa", "aa"]
 
@@ -55,7 +60,7 @@ def test_bpe_encode_hand_computed(spark):
     docs = spark.createDataFrame(
         [(1, "aaab aaab ab")], "doc_id long, text string"
     )
-    segments, _ = bpe_train(docs, n_merges=6)
+    segments, _ = bpe_train(docs)
     vocab = bpe_vocab(segments)
     # pieces: aaab (cnt 2), ab (cnt 1) -> ids: aaab=1, ab=2
     v = {r["piece"]: r["piece_id"] for r in vocab.collect()}
@@ -70,7 +75,7 @@ def test_bpe_encode_hand_computed(spark):
 
 def test_bpe_unseen_word_falls_back_to_chars(spark):
     train = spark.createDataFrame([(1, "aaab aaab ab")], "doc_id long, text string")
-    segments, _ = bpe_train(train, n_merges=6)
+    segments, _ = bpe_train(train)
     vocab = bpe_vocab(segments)
     # "zq" was never trained: char segmentation, both chars UNK
     other = spark.createDataFrame([(7, "zq ab")], "doc_id long, text string")

@@ -2,7 +2,7 @@
 (operators/dedup.py:connected_components): transitive closure of
 near-dup pair lists — paths, merged stars, cliques, singleton pairs —
 with the component id = min node id, deterministic across
-partitionings and iteration caps.
+partitionings.
 """
 
 from __future__ import annotations
@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 from pero_ocr_api_spark.operators import dedup
 
 
-def _cc(spark, edges, **kw):
+def _cc(spark, edges):
     df = spark.createDataFrame(edges, "id1 long, id2 long")
-    rows = dedup.connected_components(df, **kw).collect()
+    rows = dedup.connected_components(df).collect()
     return {r.node: r.component for r in rows}
 
 
@@ -42,7 +42,7 @@ def test_two_stars_merged_by_bridge(spark):
 
 def test_long_path_converges_within_log_rounds(spark):
     # diameter 63: naive min-propagation needs 63 rounds; pointer
-    # jumping must close it within the default max_iter=25 (O(log d)).
+    # jumping must close it within CC_MAX_ROUNDS = 25 (O(log d)).
     edges = [(i, i + 1) for i in range(64)]
     got = _cc(spark, edges)
     assert set(got.values()) == {0}

@@ -21,20 +21,11 @@ def _bands(spark, n_identical=100):
 
 def test_mega_bucket_collapses_to_star(spark):
     bands = _bands(spark).cache()
-    pairs = dedup.lsh_candidate_pairs(bands, max_bucket=10).collect()
+    pairs = dedup.lsh_candidate_pairs(bands).collect()
     star = sorted((p.id1, p.id2) for p in pairs if p.id2 < 1000)
-    # 100 identical docs: 99 star rows around doc 0, not 4950 clique rows
+    # 100 identical docs (> MAX_BUCKET): 99 star rows around doc 0, not
+    # 4950 clique rows
     assert star == [(0, i) for i in range(1, 100)]
-
-
-def test_uncapped_is_quadratic(spark):
-    bands = _bands(spark).cache()
-    unc = (
-        dedup.lsh_candidate_pairs(bands, max_bucket=None)
-        .filter(F.col("id2") < 1000)
-        .count()
-    )
-    assert unc == 100 * 99 // 2  # the O(n²) blow-up the cap prevents
 
 
 def test_small_buckets_keep_clique(spark):
@@ -45,43 +36,10 @@ def test_small_buckets_keep_clique(spark):
     shared = sizes.filter(F.col("bucket_n") == 2).count()
     pairs = {
         (p.id1, p.id2)
-        for p in dedup.lsh_candidate_pairs(bands, max_bucket=10).collect()
+        for p in dedup.lsh_candidate_pairs(bands).collect()
     }
     if shared:
         assert (1000, 1001) in pairs
-
-
-def test_prefixed_sized_cte_binds():
-    """Two namespaced band chains coexist in ONE DuckDB statement and
-    each capped-pairs SELECT binds its own sized CTE — the contract
-    the sized_cte parameter exists for (review finding: the param had
-    no caller and no test)."""
-    import duckdb
-
-    from pero_ocr_api_spark.plans.queries_textops import _sql_bands_cte
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW docs_a AS SELECT * FROM (VALUES "
-        "(1, 'alpha beta gamma delta one two three'), "
-        "(2, 'alpha beta gamma delta one two three')) t(doc_id, text)"
-    )
-    con.execute(
-        "CREATE VIEW docs_b AS SELECT * FROM (VALUES "
-        "(7, 'unrelated text with different words entirely here')) "
-        "t(doc_id, text)"
-    )
-    sql = f"""
-WITH {_sql_bands_cte('docs_a', prefix='a_')},
-{_sql_bands_cte('docs_b', prefix='b_')}
-SELECT 'a' AS chain, * FROM ({dedup.duckdb_capped_pairs_sql(sized_cte='a_sized')})
-UNION ALL
-SELECT 'b' AS chain, * FROM ({dedup.duckdb_capped_pairs_sql(sized_cte='b_sized')})
-"""
-    rows = con.execute(sql).fetchall()
-    # chain a: the identical pair; chain b: single doc, no pairs
-    assert ("a", 1, 2) in rows
-    assert all(r[0] == "a" for r in rows)
 
 
 def test_spread_leaves_non_file_plans_alone(spark):

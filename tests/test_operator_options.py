@@ -1,0 +1,91 @@
+"""Every option an operator offers has a caller.
+
+A defaulted parameter of a function in ``pero_ocr_api_spark/operators/``
+must be set by at least one call in the program: the package, ``jobs/``,
+``bench.py``, ``__spark_entry__.py``, ``scripts/`` or ``perfbench/``
+(never ``tests/``). A parameter counts as set when some call to a
+function of that name passes it by keyword, by position, or through
+``*args`` / ``**kwargs``. An option no caller sets is a constant: write
+it as one, and delete the paths only it reaches.
+"""
+
+from __future__ import annotations
+
+import ast
+from collections import defaultdict
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PROGRAM = (
+    "pero_ocr_api_spark", "jobs", "bench.py", "__spark_entry__.py", "scripts", "perfbench"
+)
+OPERATORS = ROOT / "pero_ocr_api_spark" / "operators"
+
+
+def _program_files():
+    for name in PROGRAM:
+        path = ROOT / name
+        files = [path] if path.is_file() else sorted(path.rglob("*.py"))
+        for f in files:
+            if "tests" not in f.relative_to(ROOT).parts:
+                yield f
+
+
+def _defaulted(fn: ast.FunctionDef, is_method: bool):
+    """(name, positional index or None) of each defaulted parameter;
+    a method's index counts from the first argument after self/cls."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    skip = 1 if is_method and pos and pos[0].arg in ("self", "cls") else 0
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, i - skip) for i, p in enumerate(pos) if i >= first]
+    out += [
+        (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+    return out
+
+
+def _is_set(name: str, index: int | None, calls: list[ast.Call]) -> bool:
+    for c in calls:
+        if any(k.arg in (name, None) for k in c.keywords):
+            return True
+        if index is not None and (
+            len(c.args) > index or any(isinstance(x, ast.Starred) for x in c.args)
+        ):
+            return True
+    return False
+
+
+def unset_operator_options() -> list[str]:
+    calls: dict[str, list[ast.Call]] = defaultdict(list)
+    defs: list[tuple[Path, ast.FunctionDef, bool]] = []
+    for f in _program_files():
+        tree = ast.parse(f.read_text())
+        methods = {
+            id(m)
+            for cls in ast.walk(tree)
+            if isinstance(cls, ast.ClassDef)
+            for m in cls.body
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+                if name:
+                    calls[name].append(node)
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if f.is_relative_to(OPERATORS):
+                    defs.append((f, node, id(node) in methods))
+    return [
+        f"{f.relative_to(ROOT)}:{fn.lineno} {fn.name}({name}=...)"
+        for f, fn, is_method in defs
+        for name, index in _defaulted(fn, is_method)
+        if not _is_set(name, index, calls[fn.name])
+    ]
+
+
+def test_every_operator_option_has_a_caller():
+    hits = unset_operator_options()
+    assert not hits, (
+        f"{len(hits)} operator options no caller sets:\n" + "\n".join(hits)
+    )

@@ -28,23 +28,6 @@ def test_profile_exact_values(spark):
     assert rows["t"].n_null == 1 and rows["t"].n_distinct == 2
 
 
-def test_profile_approx_mode_drops_expand(spark):
-    """Exact multi-distinct compiles through an Expand (k+1 rows per
-    input row — the cost approx mode exists to avoid); HLL mode must
-    not. This is the 100 TB shape assertion, not a value check."""
-    df = _toy(spark)
-    exact_plan = profile_table(df, ["id", "s", "t"])._jdf.queryExecution().executedPlan().toString()
-    approx_plan = profile_table(df, ["id", "s", "t"], approx=True)._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" in exact_plan
-    assert "Expand" not in approx_plan
-    # HLL at this cardinality is exact in practice — sanity only
-    rows = {
-        r.col_name: r
-        for r in profile_table(df, ["id", "s"], approx=True).collect()
-    }
-    assert rows["id"].n_distinct == 4
-
-
 def test_pii_redaction_tokens(spark):
     df = spark.createDataFrame(
         [

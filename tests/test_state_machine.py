@@ -195,7 +195,7 @@ def test_fair_assign_no_single_partition_window(world):
 def test_j3_fair_assign_preferred_direct(world):
     got = scheduling.fair_assign_preferred(
         world["page"], world["request"], world["api_key"], NOW,
-        preferred_engine_id=1, limit=1,
+        preferred_engine_id=1,
     ).collect()
     assert len(got) == 1 and got[0].page_id == "p1"
 
@@ -205,7 +205,7 @@ def test_j3_fair_assign_preferred_fallback(world):
     # preferred pass is empty → any-engine fallback (general.py:129-140)
     got = scheduling.fair_assign_preferred(
         world["page"], world["request"], world["api_key"], NOW,
-        preferred_engine_id=2, limit=1,
+        preferred_engine_id=2,
     ).collect()
     assert len(got) == 1
     assert got[0].page_id == "p1"
