@@ -7,7 +7,7 @@ data loader memory-maps. Composes the lm operators end to end:
 1. vocabulary   — top-k tokens by corpus count (lm.vocab_topk;
                   deterministic count-desc/token-asc order, id 0=UNK);
 2. placement    — global token offsets via the distributed exclusive
-                  prefix sum (scheduling.global_prefix_sum — never a
+                  prefix sum (lm.global_prefix_sum — never a
                   single-partition exchange over data);
 3. assembly     — every token lands in block gpos div seq_len; blocks
                   aggregate their ordered id arrays (ONE hash shuffle

@@ -6,10 +6,12 @@ A from-scratch rebuild of the capabilities of DCGM/pero-ocr-api
 * the interleaved-document extraction dataflow (text/HTML cleaning +
   deterministic layout-analysis/OCR over media spans, re-stitched in
   reading order) — reference ``processing_client/run_client.py:197-225``;
-* the relational queue / scheduling / statistics queries — reference
-  ``app/main/general.py``;
-* the page state machine and maintenance jobs — reference
-  ``app/db/model.py:13-22``, ``app/__init__.py:76-156``.
+* the relational queue / scheduling / statistics / maintenance
+  queries, each with a DuckDB twin (``plans/queries_relational.py``) —
+  reference ``app/main/general.py``, ``app/__init__.py:76-156``;
+* the page states the extraction kernel writes (``ocr/kernel.py``) and
+  the PROCESSING-timeout watchdog (``streaming/pipeline.py``) —
+  reference ``app/db/model.py:13-22``.
 
 Everything is expressed Spark-first: DataFrame/SQL plans optimized by
 Catalyst, with vectorized pandas/Arrow UDFs (``mapInPandas``) only for

@@ -305,12 +305,6 @@ def _lookup16(table_bits: tuple, table_vals: tuple):
     return syms, lens
 
 
-def _extend(bits: int, s: int) -> int:
-    if s == 0:
-        return 0
-    return bits if bits >= (1 << (s - 1)) else bits - (1 << s) + 1
-
-
 def decode_gray(data: bytes) -> np.ndarray:
     """Decode a baseline grayscale JPEG to HxW uint8. Progressive,
     multi-component, subsampled, 16-bit-DQT, arithmetic-coded, and
@@ -415,8 +409,9 @@ def decode_gray(data: bytes) -> np.ndarray:
     # and scatters into the coefficient plane ONCE at the end: a numpy
     # scalar store per symbol (zz_all[bi][k] = v) costs ~10x a list
     # append, and most coefficients are zero anyway (the encoder's
-    # flatnonzero walk is the mirror image). _extend() is inlined —
-    # one function call per symbol was ~15% of the loop.
+    # flatnonzero walk is the mirror image). The sign extension
+    # (T.81 EXTEND) is inlined — one function call per symbol was ~15%
+    # of the loop.
     idxs: list[int] = []
     vals: list[int] = []
     prev_dc = 0

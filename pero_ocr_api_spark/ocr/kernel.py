@@ -17,6 +17,21 @@ one bad document cannot kill an executor task:
   ``get_image`` raise, ``run_client.py:317``);
 * ``PROCESSING_FAILED``  — layout/OCR stage raise
   (``run_client.py:321``).
+
+The ``STATE_*`` constants below are the one definition of these page
+states. The reference's full page state diagram
+(``app/db/model.py:13-22``):
+
+    CREATED → WAITING → PROCESSING → PROCESSED → EXPIRED
+        ↘ CANCELED ↙        ↓ (60 s timeout) → WAITING
+                            ↓ → NOT_FOUND | INVALID_FILE | PROCESSING_FAILED
+
+The kernel takes the last step out of PROCESSING, and ``run_extract``
+writes each document's final state once. The other transitions are
+per-row updates at the REST service's edge, with no batch writer here;
+the registry queries ``timeout_requeue``, ``cancel_anti_join`` and
+``expiry_scan`` read them, and ``streaming.pipeline.stream_timeout_requeue``
+is the 60 s watchdog.
 """
 
 from __future__ import annotations
@@ -212,8 +227,3 @@ def process_media(
             state=STATE_PROCESSING_FAILED, error=traceback.format_exc()
         )
 
-
-def doc_score(confidences: list[float]) -> float:
-    """Document score: median post-filter line confidence across all
-    media spans, x100 rounded to 2 dp (routes.py:271); 100.0 if none."""
-    return round(_score(confidences) * 100.0, 2)

@@ -130,7 +130,7 @@ def vocab_topk(docs: DataFrame, k: int = VOCAB_K) -> DataFrame:
     then a TakeOrdered top-k (per-partition heaps, no global sort of
     the distinct-token set); the final row_number window runs over the
     k retained rows only — metadata-sized, like the P-row offset table
-    in scheduling.global_rank. Same tokenizer as the dedup family
+    in :func:`global_prefix_sum`. Same tokenizer as the dedup family
     (dedup.tokens_col) so vocab and shingles agree on token
     boundaries."""
     toks = dedup.spread_to_parallelism(docs).select(
@@ -190,6 +190,52 @@ def encode_docs(docs: DataFrame, vocab: DataFrame) -> DataFrame:
 SEQ_LEN = 256  # query-level block capacity; production 2048-8192
 
 
+def global_prefix_sum(
+    df: DataFrame,
+    sort_cols: list[str],
+    value_col: str,
+    out: str = "prefix_sum",
+) -> DataFrame:
+    """Exact global EXCLUSIVE prefix sum of a non-negative value
+    column in ``sort_cols`` order, computed distributively.
+
+    A plain ``Window.orderBy(...)`` running sum funnels every row
+    through one reducer (``Exchange SinglePartition``) — the task that
+    kills a 100x-scale job. Instead:
+
+    1. ``repartitionByRange`` on the sort key — partition *i*'s rows
+       all order before partition *i+1*'s;
+    2. a running sum within each range partition (window keyed by
+       ``spark_partition_id()`` — fully parallel);
+    3. prefix-sum of the per-partition totals to offset the local
+       sums — a P-row aggregate (P = shuffle partitions), so *its*
+       single-partition window moves metadata, not data.
+
+    ``value_col`` must be non-negative: the per-partition total is
+    read off the same local-cumsum subtree as ``max`` so the exchange
+    is reused, which needs a monotone running sum."""
+    arranged = df.repartitionByRange(*sort_cols).withColumn(
+        "_pid", F.spark_partition_id()
+    )
+    local_w = (
+        Window.partitionBy("_pid")
+        .orderBy(*sort_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = arranged.withColumn("_lcum", F.sum(value_col).over(local_w))
+    totals = local.groupBy("_pid").agg(F.max("_lcum").alias("_ptot"))
+    off_w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    offs = totals.select(
+        "_pid",
+        F.coalesce(F.sum("_ptot").over(off_w), F.lit(0)).alias("_off"),
+    )
+    return (
+        local.join(F.broadcast(offs), "_pid")
+        .withColumn(out, F.col("_off") + F.col("_lcum") - F.col(value_col))
+        .drop("_pid", "_lcum", "_off")
+    )
+
+
 def pack_sequences(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
     """Sequence-packing index: concatenate the corpus's token stream
     in deterministic ``doc_id`` order and cut it every ``seq_len``
@@ -200,12 +246,10 @@ def pack_sequences(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
     doc whose tokens straddle a cut spans >1 block.
 
     Scale shape: one scan for token counts, then the distributed
-    exclusive prefix sum (scheduling.global_prefix_sum — range
+    exclusive prefix sum (:func:`global_prefix_sum` — range
     partition + local window + P-row offset table, NO
     single-partition exchange over data). Everything emitted is
     integer arithmetic on exact counts."""
-    from pero_ocr_api_spark.operators.scheduling import global_prefix_sum
-
     counted = docs.select(
         F.col("doc_id"),
         F.size(dedup.tokens_col(F.col("text"))).cast("long").alias(

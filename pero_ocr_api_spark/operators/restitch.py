@@ -8,7 +8,8 @@ led by ``offset`` and every read-back a struct-field projection, so no
 per-element lambda runs: a span is collected as ``(offset, s)`` with
 ``s`` already in the output field order, and ``o_spans.s`` is the
 ``spans`` column. The score is ``portable.sorted_median`` of the
-sorted confidences, the twin of ``ocr.kernel.doc_score``.
+sorted confidences x100, rounded to 2 dp, and 100.0 for a document
+with none (``routes.py:271``).
 
 Scale design: one ``groupBy(doc_id)``, one shuffle. A media-heavy
 document (FIXTURES §1: 20-50+ spans, at 100 TB potentially thousands)
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.functions.portable import sorted_median
+from pero_ocr_api_spark.ocr.kernel import STATE_PROCESSED
 from pero_ocr_api_spark.session import per_context
 
 
@@ -35,7 +37,7 @@ def _cols() -> tuple:
         "offset", F.struct("kind", "text", "media_ref", "offset").alias("s")
     )
     fail_struct = F.when(
-        F.col("state") != "PROCESSED", F.struct("offset", "state", "error")
+        F.col("state") != STATE_PROCESSED, F.struct("offset", "state", "error")
     )
     export_struct = F.when(
         F.col("alto_xml").isNotNull(),
@@ -62,7 +64,7 @@ def _cols() -> tuple:
         doc_id,
         F.col("o_spans")["s"].alias("spans"),
         score.alias("score"),
-        F.coalesce(first_fail["state"], F.lit("PROCESSED")).alias("state"),
+        F.coalesce(first_fail["state"], F.lit(STATE_PROCESSED)).alias("state"),
         first_fail["error"].alias("error"),
         join_exports("alto_xml", "\n").alias("alto_xml"),
         join_exports("page_xml", "\n").alias("page_xml"),

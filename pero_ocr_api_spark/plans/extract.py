@@ -161,7 +161,7 @@ def _text_cols(engine) -> tuple:
         *(F.col(c) for c in ("doc_id", "offset", "kind")),
         normalize_arabic_col(cleaned).alias("text"),
         null.alias("media_ref"),
-        F.lit("PROCESSED").alias("state"),
+        F.lit(kernel.STATE_PROCESSED).alias("state"),
         *(null.alias(c) for c in ("error", "alto_xml", "page_xml", "txt")),
         F.array().cast("array<double>").alias("confs"),
     ]

@@ -11,10 +11,9 @@ parquet:
   page-state update (``general.py:210-224`` guarded by PK).
 * :func:`read_done_ids` — the checkpoint read used to build the
   ``resume_from`` anti-join in ``run_extract``.
-* :func:`write_extracted_bucketed` and :func:`write_band_index` — the
-  same exactly-once contract into bucketed tables, through one
-  merge-append body; a band index serves either dedup family
-  (:data:`TEXT_BANDS`, :data:`EMBEDDING_BANDS`), and
+* :func:`write_band_index` — the same exactly-once contract into a
+  band index table bucketed by its join key; one index serves either
+  dedup family (:data:`TEXT_BANDS`, :data:`EMBEDDING_BANDS`), and
   :func:`band_candidates` is the one batch-vs-index candidate join.
 """
 
@@ -98,162 +97,6 @@ def write_extracted(
     return written.get["n"]
 
 
-def _merge_append_bucketed(
-    spark: SparkSession,
-    rows: DataFrame,
-    table: str,
-    id_col: str,
-    key_cols: tuple[str, ...],
-    sort_col: str,
-    path: str | None,
-    buckets: int,
-    to_table: Callable[[DataFrame], DataFrame] = lambda rows: rows,
-) -> int:
-    """Exactly-once merge-append into a table bucketed by ``key_cols``
-    — the one body behind :func:`write_extracted_bucketed` and
-    :func:`write_band_index`. The batch is deduplicated on ``id_col``,
-    ids already in `table` are anti-joined away (Iceberg MERGE
-    analog: a retried or re-run writer never duplicates a row), and
-    ``to_table`` of what is left is appended. Returns the number of
-    new ids.
-
-    An empty FIRST batch still creates the (empty) table: readers
-    read it back unconditionally (the build_dedup_index report,
-    band_index_candidates), and an empty drop must be re-runnable.
-
-    ``path`` makes the table external (data in `path`); bucket count
-    is a table constant — pick ~(table size / a few GB) at production
-    scale, and keep it fixed for the table's lifetime so every
-    writer/reader agrees on the layout."""
-    rows = rows.dropDuplicates([id_col])
-    exists = spark.catalog.tableExists(table)
-    if exists:
-        done = spark.table(table).select(id_col).distinct()
-        rows = rows.join(done, id_col, "left_anti")
-    with cache_scope():
-        rows = cache(rows)
-        n = rows.count()
-        if n or not exists:
-            writer = (
-                # repartition onto the bucket layout first: bucketBy makes
-                # every task write one file PER BUCKET it holds, so an
-                # unaligned batch adds up to tasks x buckets files per
-                # append (measured: 3 appends -> 72 files at 4 buckets);
-                # repartition(buckets, *key_cols) uses the same murmur3
-                # pmod as the bucket spec, so each task holds exactly one
-                # bucket and an append adds <= buckets files
-                to_table(rows)
-                .repartition(buckets, *key_cols)
-                .write.mode("append")
-                .format("parquet")
-                .bucketBy(buckets, *key_cols)
-                .sortBy(sort_col)
-            )
-            if path is not None:
-                writer = writer.option("path", path)
-            writer.saveAsTable(table)
-    return n
-
-
-def write_extracted_bucketed(
-    spark: SparkSession,
-    extracted: DataFrame,
-    table: str,
-    path: str | None = None,
-    buckets: int = 16,
-) -> int:
-    """Exactly-once merge-append into a **doc_id-bucketed table**
-    (Spark native ``bucketBy`` — the closest sandbox analog of the
-    north rule's "explicit doc_id-hash partitioning", i.e. Iceberg's
-    ``bucket(N, doc_id)`` partition transform).
-
-    Why bucketing matters at 10^12 docs: every resume / merge /
-    downstream join keys on doc_id. Against a plain-parquet target
-    the anti-join must shuffle BOTH sides; a bucketed target scans as
-    already-hash-partitioned on doc_id (``spark.sql.sources.bucketing``
-    is on by default), so only the incoming batch — the small side —
-    shuffles. Plan-asserted in tests: with broadcasting disabled the
-    merge anti-join compiles to exactly ONE Exchange (batch side),
-    none on the bucketed scan."""
-    return _merge_append_bucketed(
-        spark, extracted, table, "doc_id", ("doc_id",), "doc_id", path, buckets
-    )
-
-
-def _num_buckets(spark: SparkSession, table: str) -> int:
-    for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if row.col_name.strip() == "Num Buckets":
-            return int(row.data_type)
-    raise ValueError(f"{table} is not a bucketed table")
-
-
-def compact_extracted_bucketed(
-    spark: SparkSession, table: str
-) -> tuple[int, int]:
-    """Small-file compaction for a doc_id-bucketed output table;
-    returns (files_before, files_after).
-
-    Every :func:`write_extracted_bucketed` merge-append adds up to
-    one file per (bucket, writer task) — at 10^12 docs with frequent
-    incremental runs the table accumulates millions of tiny files and
-    scan *planning* (file listing, footer reads) starts to dominate
-    the jobs that read it. Compaction rewrites the table so each
-    bucket holds exactly ONE file: the rewrite *forces* the bucketed
-    scan (``autoBucketedScan`` pinned off for the statement — the
-    planner otherwise drops the bucketed read here because no
-    operator "needs" it, splits the scan by file, and every write
-    task again emits per-bucket files), so the source arrives as one
-    partition per bucket, each task emits one file, and the rewritten
-    table keeps the identical bucket layout — the shuffle-free
-    merge/resume property is preserved (re-asserted in tests after a
-    compaction). The whole rewrite is shuffle-FREE: data moves disk →
-    task → disk once, the shape Iceberg's bin-pack rewrite has.
-
-    Production target is Iceberg's ``rewrite_data_files`` procedure,
-    which swaps files under a snapshot atomically. The session-catalog
-    stand-in stages the rewrite into ``<table>__compacting`` and then
-    drops + renames — same end state, but the metadata swap is two
-    operations, so a crash between them needs the staging table
-    re-renamed by hand (documented, not hidden; the data itself is
-    never at risk — both copies exist until the final rename)."""
-    table_type = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    }.get("Type", "MANAGED")
-    if table_type.upper() == "EXTERNAL":
-        # the staging rewrite below is a MANAGED saveAsTable: renaming
-        # it over an external table would silently repoint the table
-        # at the warehouse and orphan the external files (review
-        # finding) — refuse with a typed error instead
-        raise ValueError(
-            f"compact_extracted_bucketed: {table} is EXTERNAL (path-"
-            "backed); compact it with the table format's own rewrite "
-            "(Iceberg rewrite_data_files) — the session-catalog "
-            "staging swap only preserves MANAGED tables"
-        )
-    files_before = len(spark.table(table).inputFiles())
-    staging = f"{table}__compacting"
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    buckets = _num_buckets(spark, table)
-    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        (
-            spark.table(table)
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, "doc_id")
-            .sortBy("doc_id")
-            .saveAsTable(staging)
-        )
-    finally:
-        spark.conf.set(key, old)
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    return files_before, len(spark.table(table).inputFiles())
-
-
 class BandFamily(NamedTuple):
     """One dedup family's band index, as data: the batch rows
     (``id_col``, ``value_col``) hash through ``bands(rows, dim)`` into
@@ -313,18 +156,46 @@ def write_band_index(
     shuffles. Plan-asserted in tests: broadcast disabled, the
     candidate join compiles to exactly ONE Exchange. Already-indexed
     ids are anti-joined away, so a crashed build re-submits as-is.
-    Returns the number of NEW ids indexed."""
-    return _merge_append_bucketed(
-        spark,
-        rows.select(family.id_col, family.value_col),
-        table,
-        family.id_col,
-        family.key_cols,
-        family.sort_col,
-        path,
-        buckets,
-        lambda new: family.bands(new, dim),
+    Returns the number of NEW ids indexed.
+
+    An empty FIRST batch still creates the (empty) table: readers
+    read it back unconditionally (the build_dedup_index report,
+    band_index_candidates), and an empty drop must be re-runnable.
+
+    ``path`` makes the table external (data in `path`); bucket count
+    is a table constant — pick ~(table size / a few GB) at production
+    scale, and keep it fixed for the table's lifetime so every
+    writer/reader agrees on the layout."""
+    rows = rows.select(family.id_col, family.value_col).dropDuplicates(
+        [family.id_col]
     )
+    exists = spark.catalog.tableExists(table)
+    if exists:
+        done = spark.table(table).select(family.id_col).distinct()
+        rows = rows.join(done, family.id_col, "left_anti")
+    with cache_scope():
+        rows = cache(rows)
+        n = rows.count()
+        if n or not exists:
+            writer = (
+                # repartition onto the bucket layout first: bucketBy makes
+                # every task write one file PER BUCKET it holds, so an
+                # unaligned batch adds up to tasks x buckets files per
+                # append (measured: 3 appends -> 72 files at 4 buckets);
+                # repartition(buckets, *key_cols) uses the same murmur3
+                # pmod as the bucket spec, so each task holds exactly one
+                # bucket and an append adds <= buckets files
+                family.bands(rows, dim)
+                .repartition(buckets, *family.key_cols)
+                .write.mode("append")
+                .format("parquet")
+                .bucketBy(buckets, *family.key_cols)
+                .sortBy(family.sort_col)
+            )
+            if path is not None:
+                writer = writer.option("path", path)
+            writer.saveAsTable(table)
+    return n
 
 
 def band_candidates(

@@ -1324,7 +1324,7 @@ def q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     """Sequence-packing placement index (operators/lm.pack_sequences):
     concatenated token stream cut every SEQ_LEN tokens, per-doc global
     offset + block span via the distributed exclusive prefix sum
-    (scheduling.global_prefix_sum) — plan-tested to never funnel data
+    (lm.global_prefix_sum) — plan-tested to never funnel data
     through a single partition."""
     from pero_ocr_api_spark.operators.lm import pack_sequences
 

@@ -12,9 +12,13 @@ reference mechanism            streaming analog here
 =============================  =====================================
 2 s poll loop                  micro-batch trigger (availableNow /
                                processingTime)
-fair dequeue per poll          each micro-batch is a full fair batch
-60 s processing timeout (U6)   task retry + checkpoint replay
-7-day expiry (U7)              retention job stays batch (cron)
+fair dequeue per poll          each micro-batch takes every new
+                               document (per-tenant order: the
+                               batch registry query ``fair_dequeue``)
+60 s processing timeout (U6)   task retry + checkpoint replay; the
+                               watchdog :func:`stream_timeout_requeue`
+7-day expiry (U7)              the batch registry query
+                               ``expiry_scan`` (cron)
 upload_results per page        idempotent per-batch append
 =============================  =====================================
 
@@ -51,9 +55,11 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pero_ocr_api_spark.operators.state_machine import (
-    FAIL_STATES,
-    PROCESSING_TIMEOUT_S,
+from pero_ocr_api_spark.ocr.kernel import (
+    STATE_INVALID_FILE,
+    STATE_NOT_FOUND,
+    STATE_PROCESSED,
+    STATE_PROCESSING_FAILED,
 )
 from pero_ocr_api_spark.plans.extract import run_extract, text_path
 from pero_ocr_api_spark.session import cache_scope
@@ -447,6 +453,7 @@ def stream_incremental_embedding_dedup(
 PAGE_EVENT_SCHEMA = "page_id string, state string, ts timestamp"
 REQUEUE_SCHEMA = "page_id string, action string, stuck_since timestamp"
 _TIMEOUT_STATE_SCHEMA = "processing_ts long"
+PROCESSING_TIMEOUT_S = 60  # app/__init__.py:80-83
 
 
 def _timeout_fn(key, pdfs, state):
@@ -464,7 +471,10 @@ def _timeout_fn(key, pdfs, state):
     import pandas as pd
 
     page_id = key[0]
-    terminal = {"PROCESSED", "CANCELED", *FAIL_STATES}
+    terminal = {
+        STATE_PROCESSED, "CANCELED",
+        STATE_NOT_FOUND, STATE_INVALID_FILE, STATE_PROCESSING_FAILED,
+    }
     if state.hasTimedOut:
         (processing_ts,) = state.get
         state.remove()

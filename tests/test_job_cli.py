@@ -477,111 +477,6 @@ def test_curate_job_closure_stage(spark):
     assert kept_closure < kept_pairwise  # strictly stronger dedup
 
 
-def test_write_extracted_bucketed(spark, docs_df, media_df):
-    """doc_id-bucketed output table: exactly-once on re-write, and the
-    merge anti-join shuffles ONLY the incoming batch — the bucketed
-    target scans pre-partitioned on doc_id (the Iceberg
-    bucket(doc_id) analog the north rule asks for)."""
-    from pero_ocr_api_spark.plans.io import write_extracted_bucketed
-
-    d = tempfile.mkdtemp()
-    table = "extracted_bucketed_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    first, _ = run_extract(spark, docs_df.limit(15), media_df, run_id="bk1")
-    try:
-        n1 = write_extracted_bucketed(
-            spark, first, table, path=f"{d}/t", buckets=4
-        )
-        assert n1 == 15
-        # re-write of the same batch must add nothing (exactly-once)
-        assert write_extracted_bucketed(
-            spark, first, table, path=f"{d}/t", buckets=4
-        ) == 0
-        assert spark.table(table).count() == 15
-
-        # plan shape: with broadcasting disabled, the anti-join against
-        # the bucketed table carries exactly one Exchange (batch side)
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            batch = spark.createDataFrame(
-                [(f"doc{i:09d}",) for i in range(20)], "doc_id string"
-            )
-            plan = (
-                batch.join(
-                    spark.table(table).select("doc_id"), "doc_id", "left_anti"
-                )
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        assert plan.count("Exchange") == 1, plan
-        assert "Bucketed: true" in plan
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_compact_extracted_bucketed(spark, docs_df, media_df):
-    """Small-file compaction: several merge-appends accumulate many
-    files; compaction rewrites to exactly one file per bucket, keeps
-    the row set byte-identical, preserves the bucket layout (the
-    anti-join still shuffles only the batch side), and stays
-    exactly-once for subsequent appends."""
-    from pero_ocr_api_spark.plans.io import (
-        compact_extracted_bucketed,
-        write_extracted_bucketed,
-    )
-
-    table = "extracted_compact_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}__compacting")
-    full, _ = run_extract(spark, docs_df.limit(12), media_df, run_id="cp1")
-    full = full.cache()
-    try:
-        # three incremental appends -> multiple files per bucket
-        for lo, hi in ((0, 4), (4, 8), (8, 12)):
-            batch = full.filter(
-                F.col("doc_id").isin(
-                    [r.doc_id for r in full.select("doc_id").collect()][lo:hi]
-                )
-            )
-            write_extracted_bucketed(spark, batch, table, buckets=4)
-        before_rows = {r.doc_id for r in spark.table(table).collect()}
-        files_before, files_after = compact_extracted_bucketed(spark, table)
-        assert files_before > 4  # 3 appends x up-to-4-bucket files
-        assert files_after == 4  # one file per bucket
-        assert {r.doc_id for r in spark.table(table).collect()} == before_rows
-
-        # bucket layout survived: anti-join still one Exchange
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            batch = spark.createDataFrame(
-                [(f"doc{i:09d}",) for i in range(20)], "doc_id string"
-            )
-            plan = (
-                batch.join(
-                    spark.table(table).select("doc_id"), "doc_id", "left_anti"
-                )
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        assert plan.count("Exchange") == 1, plan
-        assert "Bucketed: true" in plan
-
-        # still exactly-once after compaction
-        assert write_extracted_bucketed(spark, full, table, buckets=4) == 0
-    finally:
-        full.unpersist()
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}__compacting")
-
-
 def test_curate_job_lm_filter_stage(spark):
     """--lm-tail-pct adds the CCNet-style perplexity gate: the funnel
     gains after_lm_filter (monotone between the quality gate and exact
@@ -659,31 +554,6 @@ def test_pack_job_end_to_end(spark):
         for r in spark.read.parquet(f"{d}/packed").orderBy("block_id").collect()
     ]
     assert first == again
-
-
-def test_compact_refuses_external_table(spark, tmp_path):
-    """compact_extracted_bucketed must refuse EXTERNAL (path-backed)
-    tables with a typed error — the managed staging swap would
-    silently repoint the table at the warehouse and orphan the
-    external files (review finding)."""
-    import pytest as _pytest
-
-    from pero_ocr_api_spark.plans.io import compact_extracted_bucketed
-
-    table = "compact_external_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    (
-        spark.createDataFrame([(1, "x")], "doc_id long, text string")
-        .write.format("parquet")
-        .bucketBy(2, "doc_id")
-        .option("path", str(tmp_path / "ext"))
-        .saveAsTable(table)
-    )
-    try:
-        with _pytest.raises(ValueError, match="EXTERNAL"):
-            compact_extracted_bucketed(spark, table)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_pack_job_kept_filter(spark):

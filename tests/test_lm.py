@@ -96,7 +96,7 @@ def test_encode_docs_hand_computed(spark):
 
 
 def test_global_prefix_sum_exact(spark):
-    from pero_ocr_api_spark.operators.scheduling import global_prefix_sum
+    from pero_ocr_api_spark.operators.lm import global_prefix_sum
 
     df = spark.createDataFrame(
         [(i, (i * 7) % 5 + 1) for i in range(200)], "k long, v long"
@@ -109,7 +109,7 @@ def test_global_prefix_sum_exact(spark):
 
 
 def test_global_prefix_sum_no_single_partition_data_exchange(spark):
-    from pero_ocr_api_spark.operators.scheduling import global_prefix_sum
+    from pero_ocr_api_spark.operators.lm import global_prefix_sum
 
     df = spark.createDataFrame(
         [(i, 1) for i in range(100)], "k long, v long"

@@ -100,10 +100,3 @@ def test_kernel_failure_states():
     res = kernel.process_media(png.encode_gray(big), "image/png", "x")
     assert res.state == "PROCESSING_FAILED"
     assert "MP" in res.error
-
-
-def test_doc_score_median():
-    assert kernel.doc_score([]) == 100.0
-    assert kernel.doc_score([0.8]) == 80.0
-    assert kernel.doc_score([0.6, 0.8]) == 70.0
-    assert kernel.doc_score([0.5, 0.6, 0.9]) == 60.0

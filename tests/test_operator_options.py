@@ -1,4 +1,12 @@
-"""Every option an operator offers has a caller.
+"""Every name and every option in the program has a caller.
+
+A top-level name of ``pero_ocr_api_spark/`` must be reached from an
+entry point: a name mentioned in ``jobs/``, ``scripts/``,
+``perfbench/``, ``bench.py`` or ``__spark_entry__.py``, a
+``streaming/pipeline.stream_*`` function, or a module-level statement
+of the package that is not a definition (imports, registry dicts).
+Reach is transitive by name: a reached definition reaches every name
+its body mentions. Code only tests run is deleted with its tests.
 
 A defaulted parameter of a function in ``pero_ocr_api_spark/operators/``
 must be set by at least one call in the program: the package, ``jobs/``,
@@ -19,7 +27,18 @@ ROOT = Path(__file__).resolve().parents[1]
 PROGRAM = (
     "pero_ocr_api_spark", "jobs", "bench.py", "__spark_entry__.py", "scripts", "perfbench"
 )
-OPERATORS = ROOT / "pero_ocr_api_spark" / "operators"
+PACKAGE = ROOT / "pero_ocr_api_spark"
+OPERATORS = PACKAGE / "operators"
+STREAMING = PACKAGE / "streaming" / "pipeline.py"
+# Package names no entry point reaches that tests keep as a reference
+# or a fixture; each is a root of the reach census.
+TEST_REFERENCES = {
+    "__version__",  # package metadata, read by no code
+    "duckdb_normalize_arabic_sql",  # test_html_clean::test_arabic_parity
+    "encode_text_pdf_a85",  # test_pdf::test_ascii85_roundtrip
+    "encode_text_pdf_rle",  # test_pdf::test_rle_roundtrip
+    "generate_pandas",  # conftest::corpus_pandas
+}
 
 
 def _program_files():
@@ -88,4 +107,62 @@ def test_every_operator_option_has_a_caller():
     hits = unset_operator_options()
     assert not hits, (
         f"{len(hits)} operator options no caller sets:\n" + "\n".join(hits)
+    )
+
+
+def _mentioned(node: ast.AST) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.split(".")[-1])
+    return out
+
+
+def _defined(stmt: ast.stmt) -> list[str]:
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    return []
+
+
+def unreached_program_names() -> list[str]:
+    defs: dict[str, list[tuple[Path, ast.stmt]]] = defaultdict(list)
+    reached = set(TEST_REFERENCES)
+    for f in _program_files():
+        tree = ast.parse(f.read_text())
+        if not f.is_relative_to(PACKAGE):
+            reached |= _mentioned(tree)
+            continue
+        for stmt in tree.body:
+            names = _defined(stmt)
+            if not names:
+                reached |= _mentioned(stmt)
+            for name in names:
+                defs[name].append((f, stmt))
+                if f == STREAMING and name.startswith("stream_"):
+                    reached.add(name)
+    todo = list(reached)
+    while todo:
+        for _, stmt in defs.get(todo.pop(), ()):
+            new = _mentioned(stmt) - reached
+            reached |= new
+            todo += new
+    return sorted(
+        f"{f.relative_to(ROOT)}:{stmt.lineno} {name}"
+        for name, sites in defs.items()
+        if name not in reached
+        for f, stmt in sites
+    )
+
+
+def test_every_program_name_is_reached():
+    hits = unreached_program_names()
+    assert not hits, (
+        f"{len(hits)} package names no entry point reaches:\n" + "\n".join(hits)
     )
