@@ -60,6 +60,7 @@ def main(argv=None) -> int:
 
         spark = get_spark(app_name="extract_job", cores=args.cores)
 
+    from pero_ocr_api_spark.ocr import kernel
     from pero_ocr_api_spark.plans.extract import run_extract
     from pero_ocr_api_spark.plans.io import read_done_ids, write_extracted
     from pero_ocr_api_spark.session import cache_scope
@@ -72,10 +73,6 @@ def main(argv=None) -> int:
         docs = spark.read.parquet(args.documents)
         media = spark.read.parquet(args.media)
 
-    config = {}
-    if args.min_confidence is not None:
-        config["min_confidence"] = args.min_confidence
-
     resume_from = read_done_ids(spark, args.output) if args.resume else None
     lineage_path = args.lineage or f"{args.output.rstrip('/')}_lineage"
     t0 = time.monotonic()
@@ -85,7 +82,11 @@ def main(argv=None) -> int:
             spark,
             docs,
             media,
-            config=config or None,
+            min_confidence=(
+                kernel.MIN_CONFIDENCE
+                if args.min_confidence is None
+                else args.min_confidence
+            ),
             run_id=args.run_id,
             resume_from=resume_from,
         )

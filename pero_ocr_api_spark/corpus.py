@@ -31,14 +31,13 @@ import numpy as np
 import pandas as pd
 
 from pero_ocr_api_spark.ocr import pdf, png
+from pero_ocr_api_spark.ocr.glyphs import SCALE
 from pero_ocr_api_spark.ocr.render import (
     MIN_BLOCK_GAP_X,
     MIN_BLOCK_GAP_Y,
     BlockSpec,
     render_page,
 )
-
-SCALE = 5  # glyph scale, must match engine config
 
 TEXT_VOCAB = (
     "the quick brown fox jumps over lazy dog and a small stream runs to "

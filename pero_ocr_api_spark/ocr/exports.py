@@ -18,7 +18,11 @@ from xml.sax.saxutils import escape, quoteattr
 
 from pero_ocr_api_spark.ocr.layout import Block
 
+# the ALTO processing-software stamp (run_client.py:203-207): the one
+# engine, the glyph-template decoder of ocr/glyphs.py
 SOFTWARE_CREATOR = "pero_ocr_api_spark"
+SOFTWARE_NAME = "glyph_template_engine"
+SOFTWARE_VERSION = "v1"
 
 
 def _attr(v: object) -> str:
@@ -35,8 +39,6 @@ def to_alto_xml(
     blocks: list[Block],
     page_wh: tuple[int, int],
     page_id: str,
-    engine_name: str,
-    engine_version: str,
     min_line_confidence: float,
 ) -> str:
     w, h = page_wh
@@ -51,8 +53,8 @@ def to_alto_xml(
         "</processingStepSettings>",
         "<processingSoftware>",
         f"<softwareCreator>{escape(SOFTWARE_CREATOR)}</softwareCreator>",
-        f"<softwareName>{escape(engine_name)}</softwareName>",
-        f"<softwareVersion>{escape(engine_version)}</softwareVersion>",
+        f"<softwareName>{escape(SOFTWARE_NAME)}</softwareName>",
+        f"<softwareVersion>{escape(SOFTWARE_VERSION)}</softwareVersion>",
         "</processingSoftware>",
         "</ocrProcessingStep>",
         "</OCRProcessing>",

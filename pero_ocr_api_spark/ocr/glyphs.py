@@ -29,6 +29,11 @@ PITCH = GLYPH_W + 1
 # vertical advance between lines in glyph-grid rows (7 ink + 2 gap)
 LINE_ADVANCE = GLYPH_H + 2
 
+# pixels per glyph-grid unit, shared by the corpus renderer and the
+# kernel's layout stage (reference LINE_HEIGHT=40, model.py:171-175:
+# 7-row glyphs plus padding at scale 5)
+SCALE = 5
+
 BINARIZE_THRESHOLD = 192
 MAX_NOISE = 0.74  # keeps max ink value < BINARIZE_THRESHOLD
 

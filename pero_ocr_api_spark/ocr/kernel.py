@@ -42,7 +42,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from pero_ocr_api_spark.functions.arabic import is_arabic_line
-from pero_ocr_api_spark.ocr import exports, jpeg, layout, pdf, png
+from pero_ocr_api_spark.ocr import exports, glyphs, jpeg, layout, pdf, png
 from pero_ocr_api_spark.ocr.layout import Block, Line
 
 STATE_PROCESSED = "PROCESSED"
@@ -50,50 +50,19 @@ STATE_NOT_FOUND = "NOT_FOUND"
 STATE_INVALID_FILE = "INVALID_FILE"
 STATE_PROCESSING_FAILED = "PROCESSING_FAILED"
 
-DEFAULT_CONFIG = {
-    # reference defaults: run_client.py:41-42 (min confidence),
-    # model.py:171-175 (LINE_HEIGHT=40 ≈ 7px glyphs + padding at scale 5)
-    "scale": 5,
-    "min_confidence": 0.42,
-    "engine_name": "glyph_template_engine",
-    "engine_version": "v1",
-}
+# reference default line-confidence threshold (run_client.py:41-42)
+MIN_CONFIDENCE = 0.42
 
 
 @dataclass
 class MediaResult:
     state: str
     text: str = ""  # filtered + normalized, "\n"-joined (span text)
-    score: float | None = None  # median post-filter confidence, 0-1
     alto_xml: str | None = None
     page_xml: str | None = None
     txt: str | None = None
     error: str | None = None
-    n_lines: int = 0
     confidences: list[float] = field(default_factory=list)  # post-filter
-
-
-def _score(confidences: list[float]) -> float:
-    """Median line confidence; 1.0 with no lines (get_score,
-    run_client.py:144-152).
-
-    Bit-exact twin of ``np.quantile(v, 0.5)`` without the ~1 ms of
-    numpy dispatch per page (measured ~5% of the PNG kernel): for even
-    n numpy's _lerp evaluates the upper-anchored form ``b - (b-a)*0.5``
-    at t=0.5 (NOT ``a + (b-a)*0.5`` — one-ulp difference, pinned by the
-    hypothesis property tests), and CPython floats are IEEE doubles, so
-    the pure-Python expression reproduces numpy exactly. The Spark side
-    is the one Column helper ``functions.portable.sorted_median``, which
-    restitch's score and the ``median_score`` query both use."""
-    if not confidences:
-        return 1.0
-    s = sorted(confidences)
-    n = len(s)
-    mid = (n - 1) // 2
-    if n % 2:
-        return float(s[mid])
-    a, b = s[mid], s[mid + 1]
-    return b - (b - a) * 0.5
 
 
 _PAGE_GAP = 120  # white rows between stacked scanned-PDF pages — wide
@@ -123,9 +92,8 @@ def process_media(
     media_bytes: bytes | None,
     media_kind: str | None,
     media_ref: str,
-    config: dict | None = None,
+    min_confidence: float = MIN_CONFIDENCE,
 ) -> MediaResult:
-    cfg = {**DEFAULT_CONFIG, **(config or {})}
     if media_bytes is None:
         return MediaResult(
             state=STATE_NOT_FOUND,
@@ -167,29 +135,21 @@ def process_media(
         )
     try:
         if gray is not None:
-            blocks = layout.analyze_page(gray, int(cfg["scale"]))
+            blocks = layout.analyze_page(gray, glyphs.SCALE)
             page_wh = (gray.shape[1], gray.shape[0])
         else:
             blocks = pdf.to_blocks(pdf_lines)
             page_wh = (pdf.PAGE_W, pdf.PAGE_H)
         # ALTO first: unfiltered, unnormalized (run_client.py:209)
-        alto = exports.to_alto_xml(
-            blocks,
-            page_wh,
-            media_ref,
-            str(cfg["engine_name"]),
-            str(cfg["engine_version"]),
-            float(cfg["min_confidence"]),
-        )
+        alto = exports.to_alto_xml(blocks, page_wh, media_ref, min_confidence)
         # confidence filter: strictly greater-than, falsy conf dropped
         # (run_client.py:212-216)
-        min_conf = float(cfg["min_confidence"])
         filtered: list[Block] = []
-        if min_conf > 0:
+        if min_confidence > 0:
             for b in blocks:
                 kept = [
                     l for l in b.lines
-                    if l.confidence and l.confidence > min_conf
+                    if l.confidence and l.confidence > min_confidence
                 ]
                 filtered.append(
                     Block(y0=b.y0, x0=b.x0, y1=b.y1, x1=b.x1, lines=kept)
@@ -215,11 +175,9 @@ def process_media(
         return MediaResult(
             state=STATE_PROCESSED,
             text="\n".join(l.text for b in filtered for l in b.lines),
-            score=_score(confs),
             alto_xml=alto,
             page_xml=page_xml,
             txt=txt,
-            n_lines=len(confs),
             confidences=confs,
         )
     except Exception:

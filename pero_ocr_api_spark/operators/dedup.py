@@ -415,11 +415,11 @@ def duckdb_shingle_ints_sql(expr: str) -> str:
     return f"list_transform({sh}, s -> {duckdb_md5_int_sql('s', 7)})"
 
 
-def duckdb_minhash_from_ints_sql(ints_col: str = "ints") -> str:
+def duckdb_minhash_from_ints_sql() -> str:
     """Signature list expression over a precomputed shingle-int column
-    (callers materialize the ints in a CTE)."""
+    ``ints`` (callers materialize the ints in a CTE)."""
     mins = ", ".join(
-        f"list_min(list_transform({ints_col}, v -> (v * {a} + {b}) % {MINHASH_PRIME}))"
+        f"list_min(list_transform(ints, v -> (v * {a} + {b}) % {MINHASH_PRIME}))"
         for a, b in _minhash_coeffs(MINHASH_K)
     )
     return f"[{mins}]"
@@ -995,16 +995,16 @@ def connected_components(
     )
 
 
-def duckdb_components_sql(edges_cte: str = "edges") -> str:
+def duckdb_components_sql() -> str:
     """Recursive-CTE twin of :func:`connected_components`: min
     reachable id per node (exact transitive closure — fine at oracle
-    scale). Expects ``{edges_cte}(id1, id2)`` in scope; emits
+    scale). Expects ``edges(id1, id2)`` in scope; emits
     ``(node, component)`` with both BIGINT."""
-    return f"""
+    return """
 sym AS (
-  SELECT id1 AS src, id2 AS dst FROM {edges_cte}
+  SELECT id1 AS src, id2 AS dst FROM edges
   UNION ALL
-  SELECT id2, id1 FROM {edges_cte}
+  SELECT id2, id1 FROM edges
 ),
 reach(node, r) AS (
   SELECT src, dst FROM sym

@@ -418,15 +418,15 @@ FROM enc GROUP BY doc_id
 """
 
 
-def duckdb_bigram_lm_sql(docs_cte: str = "documents") -> str:
-    """DuckDB twin of :func:`bigram_lm_scores` over a (doc_id, text) CTE
-    or table. Bit-identical: same tokenizer regex, same integer counts,
-    same quant16 grid per term, exact sum."""
+def duckdb_bigram_lm_sql() -> str:
+    """DuckDB twin of :func:`bigram_lm_scores` over the ``documents``
+    (doc_id, text) table. Bit-identical: same tokenizer regex, same
+    integer counts, same quant16 grid per term, exact sum."""
     lp = duckdb_quant16_sql("(ln(c2 + 1.0) - ln(c1 + v + 0.0))")
     return f"""
 WITH lm_toks AS (
   SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_RE}') AS t
-  FROM {docs_cte}
+  FROM documents
   WHERE len(regexp_extract_all(lower(text), '{TOKEN_RE}')) >= 2
 ), lm_uni AS (
   SELECT tok, count(*) AS c1

@@ -503,17 +503,17 @@ def ivf_topk(
     emb: DataFrame,
     query_ids: DataFrame,
     k: int,
-    centroids: DataFrame | None = None,
+    centroids: DataFrame,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: the corpus is partitioned into
     :data:`IVF_NLIST` cells around coarse centroids; probe: a query's
     :data:`IVF_NPROBE` nearest cells, re-scored exactly inside them.
 
-    Centroids are ``centroids`` when the caller trained them once per
-    corpus (the amortized path: this call pays only assignment and
-    probe), else :func:`trained_centroids` — a deterministic spread
-    sample + Lloyd iterations, fully in DataFrame ops, reproduced
-    bit-for-bit by the DuckDB oracle via 2^-16-grid exact arithmetic.
+    ``centroids`` come from :func:`trained_centroids`, trained once per
+    corpus by the caller (this call pays only assignment and probe) —
+    a deterministic spread sample + Lloyd iterations, fully in
+    DataFrame ops, reproduced bit-for-bit by the DuckDB oracle via
+    2^-16-grid exact arithmetic.
 
     Scale shape: the cell id is the partition key of the inverted
     file (cluster-by on write); assignment is a broadcast cross-join
@@ -524,9 +524,8 @@ def ivf_topk(
     # join and the query-vector lookup (4 plan references) — cache it
     # so the norm pass runs once per call
     e = cache(_with_norm(emb))
-    cents = trained_centroids(emb) if centroids is None else centroids
-    cells = ivf_assign(e, cents, 1).select("vec_id", "cell")
-    probes = ivf_assign(e.join(query_ids, "vec_id"), cents, IVF_NPROBE).select(
+    cells = ivf_assign(e, centroids, 1).select("vec_id", "cell")
+    probes = ivf_assign(e.join(query_ids, "vec_id"), centroids, IVF_NPROBE).select(
         F.col("vec_id").alias("qid"), "cell"
     )
     return _rescore_topk(e, query_ids, k, _probe_join(cells, probes, "cell"))

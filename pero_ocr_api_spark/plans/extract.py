@@ -43,7 +43,6 @@ import json
 import time
 from collections.abc import Iterator
 from types import SimpleNamespace
-from typing import Any
 
 import pandas as pd
 
@@ -52,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pero_ocr_api_spark.functions.arabic import normalize_arabic_col
+from pero_ocr_api_spark.functions.html_clean import clean_html_col
 from pero_ocr_api_spark.ocr import kernel
 from pero_ocr_api_spark.operators.restitch import restitch
 from pero_ocr_api_spark.session import cache, per_context, release
@@ -85,7 +85,7 @@ MEDIA_OUT_SCHEMA = T.StructType(
 )
 
 
-def _media_map_fn(config: dict[str, Any], run_id: str):
+def _media_map_fn(min_confidence: float, run_id: str):
     """Build the mapInPandas kernel wrapper.
 
     Loads nothing per row: per-partition state (the glyph templates are
@@ -112,7 +112,7 @@ def _media_map_fn(config: dict[str, Any], run_id: str):
                     None if media_bytes is None else bytes(media_bytes),
                     media_kind,
                     media_ref,
-                    config,
+                    min_confidence,
                 )
                 docs_in.add(doc_id)
                 if res.state != kernel.STATE_PROCESSED:
@@ -154,9 +154,12 @@ def _media_map_fn(config: dict[str, Any], run_id: str):
 
 
 @per_context
-def _text_cols(engine) -> tuple:
+def _text_cols() -> tuple:
     null = F.lit(None).cast("string")
-    cleaned = engine.text_expr(F.col("kind"), F.col("text"))
+    text = F.col("text")
+    cleaned = F.when(F.col("kind") == "html", clean_html_col(text)).otherwise(
+        F.coalesce(text, F.lit(""))
+    )
     return F.col("kind") != "media", [
         *(F.col(c) for c in ("doc_id", "offset", "kind")),
         normalize_arabic_col(cleaned).alias("text"),
@@ -167,15 +170,11 @@ def _text_cols(engine) -> tuple:
     ]
 
 
-def text_path(spans: DataFrame, engine=None) -> DataFrame:
-    """X9 + X4 over text/html spans — pure JVM column expressions.
-
-    The per-kind transform is dispatched through the engine registry
-    (plans/registry.py), the analog of the reference's engine/model
-    rows; the default engine wires html→cleaner, text→passthrough."""
-    from pero_ocr_api_spark.plans.registry import DEFAULT_ENGINE
-
-    keep, cols = _text_cols(engine or DEFAULT_ENGINE)
+def text_path(spans: DataFrame) -> DataFrame:
+    """X9 + X4 over text/html spans — pure JVM column expressions:
+    html spans go through the X9 cleaner, every other kind passes
+    through null-safed, then all get X4 Arabic normalization."""
+    keep, cols = _text_cols()
     return spans.filter(keep).select(*cols)
 
 
@@ -205,7 +204,7 @@ def _media_cols() -> SimpleNamespace:
 def media_path(
     spans: DataFrame,
     media: DataFrame,
-    config: dict[str, Any] | None = None,
+    min_confidence: float = kernel.MIN_CONFIDENCE,
     run_id: str = "run0",
     udf_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -216,7 +215,6 @@ def media_path(
     byte-sized coalescing would otherwise shrink this stage to a
     handful of partitions and serialize the kernel. Hash on media_ref
     (unique) → perfectly uniform spread regardless of doc skew."""
-    cfg = {**kernel.DEFAULT_CONFIG, **(config or {})}
     c = _media_cols()
     if udf_partitions is None:
         # one partition per core: per-task Python round-trips carry a
@@ -244,7 +242,7 @@ def media_path(
     # cannot spill, the sort-merge join's sort can.
     blobs = media.select(*c.blobs).repartition(udf_partitions, c.ref).hint("merge")
     joined = refs.join(blobs, "media_ref", "left").select(*c.joined)
-    out = joined.mapInPandas(_media_map_fn(cfg, run_id), MEDIA_OUT_SCHEMA)
+    out = joined.mapInPandas(_media_map_fn(min_confidence, run_id), MEDIA_OUT_SCHEMA)
     # the UDF output feeds two consumers (extracted rows + lineage);
     # persist so the expensive OCR stage runs exactly once. The cache
     # is recorded under the run's scope and freed by release_run();
@@ -271,11 +269,10 @@ def run_extract(
     spark: SparkSession,
     docs: DataFrame,
     media: DataFrame,
-    config: dict[str, Any] | None = None,
+    min_confidence: float = kernel.MIN_CONFIDENCE,
     run_id: str = "run0",
     resume_from: DataFrame | None = None,
     udf_partitions: int | None = None,
-    engine=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full pipeline; returns (extracted, lineage) DataFrames.
 
@@ -287,10 +284,8 @@ def run_extract(
         docs = docs.join(resume_from.select("doc_id"), "doc_id", "left_anti")
     c = _run_cols()
     spans = docs.select(*c.explode).select(*c.spans)
-    if engine is not None:
-        config = {**engine.kernel_config(), **(config or {})}
-    t_rows = text_path(spans, engine)
-    m_rows, lineage = media_path(spans, media, config, run_id, udf_partitions)
+    t_rows = text_path(spans)
+    m_rows, lineage = media_path(spans, media, min_confidence, run_id, udf_partitions)
     m_rows = m_rows.withColumn("kind", c.media_kind)
     extracted = restitch(t_rows.unionByName(m_rows))
     return extracted, lineage

@@ -110,13 +110,13 @@ class BandFamily(NamedTuple):
     bands: Callable[[DataFrame, int | None], DataFrame]
 
 
-def _text_bands(rows: DataFrame, dim: int | None = None) -> DataFrame:
+def _text_bands(rows: DataFrame, dim: int | None) -> DataFrame:
     from pero_ocr_api_spark.operators.dedup import lsh_bands_df, minhash_signatures
 
     return lsh_bands_df(minhash_signatures(rows))
 
 
-def _embedding_bands(rows: DataFrame, dim: int | None = None) -> DataFrame:
+def _embedding_bands(rows: DataFrame, dim: int | None) -> DataFrame:
     from pero_ocr_api_spark.operators import similarity
 
     return similarity.embedding_bands_df(similarity.as_double_vec(rows), dim)

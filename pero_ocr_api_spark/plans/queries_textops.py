@@ -186,7 +186,7 @@ def _sql_bands_cte(
     in the incremental query) can coexist in one statement."""
     p = prefix
     ints = dedup.duckdb_shingle_ints_sql("text")
-    sig = dedup.duckdb_minhash_from_ints_sql("ints")
+    sig = dedup.duckdb_minhash_from_ints_sql()
     rows = dedup.MINHASH_K // dedup.LSH_BANDS
     band_rows = " UNION ALL ".join(
         "SELECT doc_id, {b} AS band_idx, md5({cols}) AS band_hash FROM {p}sigs".format(
@@ -1115,7 +1115,7 @@ def q_lm_quality_scores(spark: SparkSession, sf: str) -> DataFrame:
 def _sql_lm_quality_scores() -> str:
     from pero_ocr_api_spark.operators.lm import duckdb_bigram_lm_sql
 
-    return duckdb_bigram_lm_sql("documents")
+    return duckdb_bigram_lm_sql()
 
 
 # --- corpus vocabulary + tokenization handoff ---------------------------------
@@ -1662,7 +1662,7 @@ edges AS (
   FROM ids a JOIN ids b ON b.id = a.id + 1
   WHERE a.id % {CC_CHAIN} != {CC_CHAIN - 1}
 ),
-{dedup.duckdb_components_sql("edges")}
+{dedup.duckdb_components_sql()}
 SELECT node, component FROM components
 """
 

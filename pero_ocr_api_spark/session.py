@@ -117,18 +117,18 @@ def stop_spark() -> None:
 
 
 def per_context(build: Callable) -> Callable:
-    """Memoize ``build(*key)`` per active SparkContext: each Column call
-    is a py4j round trip, and a Column is a handle into the context it
-    was built in, so a new context gets a fresh build."""
-    built: dict[tuple, tuple] = {}  # key -> (context, build(*key))
+    """Memoize ``build()`` per active SparkContext: each Column call is
+    a py4j round trip, and a Column is a handle into the context it was
+    built in, so a new context gets a fresh build."""
+    built = [(object(), None)]  # the one slot: (context, build())
 
     @functools.wraps(build)
-    def get(*key: Hashable):
+    def get():
         sc = SparkContext._active_spark_context
         # two threads racing here both build; either result is valid
-        hit = built.get(key)
-        if hit is None or hit[0] is not sc:
-            hit = built[key] = (sc, build(*key))
+        hit = built[0]
+        if hit[0] is not sc:
+            hit = built[0] = (sc, build())
         return hit[1]
 
     return get

@@ -50,8 +50,6 @@ Ten entry points, each returning the streaming DataFrame (or, for
 
 from __future__ import annotations
 
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -320,7 +318,7 @@ def stream_incremental_dedup(
 
     if corpus_bands is None:
         corpus_bands = TEXT_BANDS.bands(
-            corpus.select("doc_id", "text")
+            corpus.select("doc_id", "text"), None  # text bands take no dim
         ).localCheckpoint(eager=True)
     c_text = corpus.select(
         F.col("doc_id").alias("corpus_id"),
@@ -553,7 +551,6 @@ def stream_extract(
     media: DataFrame,
     output_path: str,
     checkpoint_path: str,
-    config: dict[str, Any] | None = None,
 ):
     """Full extraction as a micro-batch stream over a documents
     directory; processes everything available, then stops
@@ -572,7 +569,7 @@ def stream_extract(
         # the batch's media cache is freed once its output is written
         with cache_scope("run", run_id):
             extracted, lineage = run_extract(
-                spark, batch_df, media, config=config, run_id=run_id
+                spark, batch_df, media, run_id=run_id
             )
             # idempotent under checkpoint replay: a re-run of the same
             # batch overwrites its own directory

@@ -40,7 +40,7 @@ def doc_score(confidences: list[float]) -> float:
 def extract_docs(
     docs_pdf: pd.DataFrame,
     media_pdf: pd.DataFrame,
-    config: dict | None = None,
+    min_confidence: float = kernel.MIN_CONFIDENCE,
 ) -> list[dict]:
     media_lookup = {
         r.media_ref: (r.media_kind, r.media_bytes)
@@ -59,7 +59,10 @@ def extract_docs(
             if s["kind"] == "media":
                 mk, mb = media_lookup.get(s["media_ref"], (None, None))
                 res = kernel.process_media(
-                    None if mb is None else bytes(mb), mk, s["media_ref"], config
+                    None if mb is None else bytes(mb),
+                    mk,
+                    s["media_ref"],
+                    min_confidence,
                 )
                 if res.state != kernel.STATE_PROCESSED:
                     fails.append((s["offset"], res.state, res.error))

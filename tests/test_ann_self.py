@@ -172,7 +172,9 @@ def test_trained_ivf_recall_floor_on_clustered_corpus(spark, clustered_corpus):
     }
     trained = {
         (r.qid, r.vec_id)
-        for r in similarity.ivf_topk(clustered_corpus, qids, k).collect()
+        for r in similarity.ivf_topk(
+            clustered_corpus, qids, k, similarity.trained_centroids(clustered_corpus)
+        ).collect()
     }
     assert len(trained & exact) / len(exact) >= 0.5
 

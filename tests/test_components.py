@@ -69,7 +69,7 @@ def test_oracle_twin_matches(spark):
 WITH RECURSIVE edges(id1, id2) AS (
   SELECT * FROM (VALUES {",".join(f"({a},{b})" for a, b in edges)})
 ),
-{dedup.duckdb_components_sql("edges")}
+{dedup.duckdb_components_sql()}
 SELECT node, component FROM components
 """
     exp = {int(n): int(c) for n, c in duckdb.connect().execute(sql).fetchall()}

@@ -8,13 +8,15 @@ of the package that is not a definition (imports, registry dicts).
 Reach is transitive by name: a reached definition reaches every name
 its body mentions. Code only tests run is deleted with its tests.
 
-A defaulted parameter of a function in ``pero_ocr_api_spark/operators/``
-must be set by at least one call in the program: the package, ``jobs/``,
-``bench.py``, ``__spark_entry__.py``, ``scripts/`` or ``perfbench/``
-(never ``tests/``). A parameter counts as set when some call to a
-function of that name passes it by keyword, by position, or through
-``*args`` / ``**kwargs``. An option no caller sets is a constant: write
-it as one, and delete the paths only it reaches.
+A defaulted parameter of a function in ``pero_ocr_api_spark/operators/``,
+``plans/`` or ``ocr/kernel.py`` must be set by at least one call in the
+program: the package, ``jobs/``, ``bench.py``, ``__spark_entry__.py``,
+``scripts/`` or ``perfbench/`` (never ``tests/``). A parameter counts
+as set when some call to a function of that name passes it by keyword,
+by position, or through ``*args`` / ``**kwargs``. An option no caller
+sets is a constant: write it as one, and delete the paths only it
+reaches. Calls through another name (``BandFamily.bands``) are not
+matched, so a function called that way takes no defaults.
 """
 
 from __future__ import annotations
@@ -28,7 +30,13 @@ PROGRAM = (
     "pero_ocr_api_spark", "jobs", "bench.py", "__spark_entry__.py", "scripts", "perfbench"
 )
 PACKAGE = ROOT / "pero_ocr_api_spark"
-OPERATORS = PACKAGE / "operators"
+OPTION_SCOPES = (PACKAGE / "operators", PACKAGE / "plans", PACKAGE / "ocr" / "kernel.py")
+# Options only tests set, each with the reason it stays an option.
+TEST_OPTIONS = {
+    # pins the UDF partition count for test_plans' lineage-row test and
+    # the determinism probe (same output at any partition count)
+    ("run_extract", "udf_partitions"),
+}
 STREAMING = PACKAGE / "streaming" / "pipeline.py"
 # Package names no entry point reaches that tests keep as a reference
 # or a fixture; each is a root of the reach census.
@@ -93,13 +101,14 @@ def unset_operator_options() -> list[str]:
                 if name:
                     calls[name].append(node)
             elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                if f.is_relative_to(OPERATORS):
+                if any(f.is_relative_to(scope) for scope in OPTION_SCOPES):
                     defs.append((f, node, id(node) in methods))
     return [
         f"{f.relative_to(ROOT)}:{fn.lineno} {fn.name}({name}=...)"
         for f, fn, is_method in defs
         for name, index in _defaulted(fn, is_method)
-        if not _is_set(name, index, calls[fn.name])
+        if (fn.name, name) not in TEST_OPTIONS
+        and not _is_set(name, index, calls[fn.name])
     ]
 
 

@@ -76,8 +76,7 @@ def test_kernel_pdf_processed():
     res = process_media(pdf.encode_text_pdf(lines), "application/pdf", "m1")
     assert res.state == "PROCESSED"
     assert res.text == "alpha\nbeta gamma"
-    assert res.score == 1.0  # digital text: per-line confidence 1.0
-    assert res.n_lines == 2
+    assert res.confidences == [1.0, 1.0]  # digital text: per-line 1.0
     assert "alpha" in res.alto_xml and "alpha" in res.page_xml
     assert res.txt.splitlines() == lines
 
@@ -90,16 +89,13 @@ def test_kernel_pdf_malformed_is_invalid_file():
 
 def test_kernel_pdf_confidence_filter_keeps_digital_text():
     """min_confidence 0.42 must not drop confidence-1.0 lines, and a
-    raised threshold above 1.0 drops them all (score falls back 1.0,
-    no-lines convention)."""
+    raised threshold above 1.0 drops them all."""
     b = pdf.encode_text_pdf(["keep me"])
     kept = process_media(b, "application/pdf", "m3")
-    assert kept.n_lines == 1
-    dropped = process_media(
-        b, "application/pdf", "m3", config={"min_confidence": 1.5}
-    )
+    assert kept.confidences == [1.0]
+    dropped = process_media(b, "application/pdf", "m3", min_confidence=1.5)
     assert dropped.state == "PROCESSED"
-    assert dropped.n_lines == 0 and dropped.text == ""
+    assert dropped.confidences == [] and dropped.text == ""
 
 
 def test_length_slicing_survives_endstream_in_data():
@@ -231,7 +227,7 @@ def test_objstm_kernel_integration():
     )
     assert res.state == "PROCESSED"
     assert res.txt.splitlines() == lines
-    assert res.score == 1.0
+    assert res.confidences == [1.0, 1.0]
 
 
 def test_corrupt_objstm_raises():
@@ -344,7 +340,7 @@ def test_new_filter_kernel_integration():
         pdf.encode_text_pdf_a85(["kernel a85"], cascade=True),
         pdf.encode_text_pdf_rle(["kernel rle"]),
     ):
-        res = process_media(blob, "application/pdf", "ref.pdf", {})
+        res = process_media(blob, "application/pdf", "ref.pdf")
         assert res.state == "PROCESSED"
         assert res.confidences and min(res.confidences) == 1.0
 
@@ -536,4 +532,4 @@ def test_multipage_kernel_integration():
     )
     assert res.state == "PROCESSED"
     assert res.text == "alpha\nbeta"
-    assert res.n_lines == 2
+    assert len(res.confidences) == 2

@@ -66,6 +66,32 @@ def test_scores_states_exports(extracted_rows, oracle_rows):
         assert (got["error"] is None) == (expect["error"] is None), doc_id
 
 
+def test_min_confidence_reaches_kernel(spark, docs_df, media_df, corpus_pandas):
+    """The one extraction setting travels run_extract → media_path →
+    the UDF → the kernel: above every line confidence it empties each
+    media span and PAGE export, while the ALTO export (pre-filter,
+    run_client.py:203-209) records it and keeps the engine stamp."""
+    extracted, _ = run_extract(
+        spark, docs_df, media_df, run_id="min_conf", min_confidence=1.5
+    )
+    rows = extracted.collect()
+    media_spans = [s for r in rows for s in r.spans if s.kind == "media"]
+    assert media_spans and all(s.text == "" for s in media_spans)
+    exported = [r for r in rows if r.alto_xml is not None]
+    assert exported
+    for r in exported:
+        assert "<TextLine" not in r.page_xml
+        assert "<processingStepSettings>min_confidence:1.5<" in r.alto_xml
+        assert "<softwareName>glyph_template_engine</softwareName>" in r.alto_xml
+        assert "<softwareVersion>v1</softwareVersion>" in r.alto_xml
+        assert "<TextLine" in r.alto_xml
+    docs_pdf, media_pdf = corpus_pandas
+    expect = oracle.extract_docs(docs_pdf, media_pdf, min_confidence=1.5)
+    got = {r.doc_id: r for r in rows}
+    for e in expect:
+        assert got[e["doc_id"]].alto_xml == e["alto_xml"], e["doc_id"]
+
+
 def test_failure_states_reachable(extracted_rows):
     rows, _ = extracted_rows
     states = {r["state"] for r in rows.values()}

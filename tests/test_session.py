@@ -114,24 +114,23 @@ def test_checkpoint_is_freed_with_its_scope(spark):
 
 
 def test_columns_are_built_once_per_spark_context(spark, monkeypatch):
-    """``per_context`` builds once per key and context, and a new
+    """``per_context`` builds once per context, and a new
     SparkContext never gets Columns built against an old one."""
     from types import SimpleNamespace
 
     from pyspark import SparkContext
 
     from pero_ocr_api_spark.plans import extract
-    from pero_ocr_api_spark.plans.registry import DEFAULT_ENGINE
 
-    first = extract._text_cols(DEFAULT_ENGINE)
-    assert extract._text_cols(DEFAULT_ENGINE) is first
+    first = extract._text_cols()
+    assert extract._text_cols() is first
     # a second context on the same gateway, so the build can run
     real = SparkContext._active_spark_context
     other = SimpleNamespace(_jvm=real._jvm, _gateway=real._gateway)
     monkeypatch.setattr(SparkContext, "_active_spark_context", other)
-    second = extract._text_cols(DEFAULT_ENGINE)
+    second = extract._text_cols()
     assert second is not first
-    assert extract._text_cols(DEFAULT_ENGINE) is second
+    assert extract._text_cols() is second
     monkeypatch.undo()
-    third = extract._text_cols(DEFAULT_ENGINE)
+    third = extract._text_cols()
     assert third is not first and third is not second

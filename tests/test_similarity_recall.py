@@ -26,7 +26,7 @@ def topk_sets(spark):
     exact = pairs(similarity.cosine_topk(emb, qids, K))
     single = pairs(similarity.ann_topk(emb, qids, K, DIM))
     multi = pairs(similarity.ann_topk_multiprobe(emb, qids, K, DIM))
-    ivf = pairs(similarity.ivf_topk(emb, qids, K))
+    ivf = pairs(similarity.ivf_topk(emb, qids, K, similarity.trained_centroids(emb)))
     return exact, single, multi, ivf
 
 
