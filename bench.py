@@ -41,6 +41,8 @@ import os
 import sys
 import time
 
+from perfbench.host import steal_fraction, steal_ticks
+
 HEADLINE_QUERIES = (
     # round-1 set (comparable across rounds)
     "usage_statistics",
@@ -140,23 +142,23 @@ def _run_extract_bench(spark, n_docs: int, runs: int = 5, max_runs: int = 9) -> 
     warm, _ = run_extract(spark, docs, media, run_id="warmup")
     warm.count()
     release_run("warmup")
-    samples: list[tuple[float, float | None]] = []  # (wall, steal_frac)
+    samples: list[tuple[float, float]] = []  # (wall, steal_frac)
     out_rows = 0
     for i in range(max_runs):
-        s0 = _steal_ticks()
+        s0 = steal_ticks()
         t0 = time.monotonic()
         extracted, _ = run_extract(spark, docs, media, run_id=f"bench{i}")
         out_rows = extracted.count()
         wall = time.monotonic() - t0
-        samples.append((wall, _steal_frac(s0, _steal_ticks(), wall)))
+        samples.append((wall, steal_fraction(s0, steal_ticks(), wall)))
         release_run(f"bench{i}")
-        n_clean = sum(1 for _, f in samples if f is None or f <= STEAL_TAINT)
+        n_clean = sum(1 for _, f in samples if f <= STEAL_TAINT)
         if i + 1 >= runs and n_clean >= runs:
             break
     docs.unpersist()
     media.unpersist()
     walls = [w for w, _ in samples]
-    clean_walls = [w for w, f in samples if f is None or f <= STEAL_TAINT]
+    clean_walls = [w for w, f in samples if f <= STEAL_TAINT]
     use = clean_walls if len(clean_walls) >= 3 else walls
     med = statistics.median(use)
     return {
@@ -169,7 +171,7 @@ def _run_extract_bench(spark, n_docs: int, runs: int = 5, max_runs: int = 9) -> 
         "samples_docs_per_sec": [round(n / w, 1) for w in walls],
         # per-sample hypervisor steal fraction — the value-blind taint
         # measurement behind the clean-window median
-        "steal": [None if f is None else round(f, 3) for _, f in samples],
+        "steal": [round(f, 3) for _, f in samples],
         "clean_samples": len(clean_walls),
         "clean_window": len(clean_walls) >= 3,
     }
@@ -200,7 +202,7 @@ def main() -> None:
 
     query_secs: dict[str, float] = {}
     query_samples: dict[str, list[float]] = {}
-    query_suite_steal: list[float | None] = []
+    query_suite_steal: list[float] = []
     extract: dict = {}
     if do_queries:
         # The suite runs once per bench invocation, so a minutes-long
@@ -214,14 +216,12 @@ def main() -> None:
         best = None
         for attempt in range(2):
             secs, frac, q_samples = _run_query_suite(sf_dir, cpus)
-            query_suite_steal.append(None if frac is None else round(frac, 3))
+            query_suite_steal.append(round(frac, 3))
             # keep the attempt with the smaller measured steal (host
             # counters only — never the times themselves)
-            if best is None or (frac or 0.0) < (
-                best[1] if best[1] is not None else float("inf")
-            ):
+            if best is None or frac < best[1]:
                 best = (secs, frac, q_samples)
-            if frac is None or frac <= STEAL_TAINT:
+            if frac <= STEAL_TAINT:
                 break
         query_secs = best[0]
         query_samples = best[2]
@@ -259,7 +259,7 @@ def main() -> None:
 
 def _run_query_suite(
     sf_dir: str, cpus: int
-) -> tuple[dict[str, float], float | None, dict[str, list[float]]]:
+) -> tuple[dict[str, float], float, dict[str, list[float]]]:
     """One timed pass over HEADLINE_QUERIES in a fresh session (warmed
     first), steal-bracketed as a whole; each query timed twice,
     min-of-2 quoted (see inline rationale). Returns (per-query secs,
@@ -287,7 +287,7 @@ def _run_query_suite(
     # that the whole-suite steal bracket read as clean.
     secs: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
-    s0 = _steal_ticks()
+    s0 = steal_ticks()
     t0 = time.monotonic()
     for name in HEADLINE_QUERIES:
         fn = QUERIES[name][0]
@@ -299,7 +299,7 @@ def _run_query_suite(
         samples[name] = walls
         secs[name] = min(walls)
     wall = time.monotonic() - t0
-    return secs, _steal_frac(s0, _steal_ticks(), wall), samples
+    return secs, steal_fraction(s0, steal_ticks(), wall), samples
 
 
 def _warm_up(spark, sf_dir: str) -> None:
@@ -389,31 +389,9 @@ def _stage_corpus(n_docs: int, path: str) -> None:
 STEAL_TAINT = float(os.environ.get("SPARK_GRAFT_STEAL_TAINT", "0.05"))
 
 
-def _steal_ticks() -> int | None:
-    """Hypervisor steal-time counter (aggregate cpu line, /proc/stat
-    field 8) — ticks this VM's vCPUs were runnable but descheduled by
-    the host. The direct, value-blind measurement of the host-steal
-    windows that plague this sandbox (observed: whole minutes at >50%
-    steal; near 0 when clean)."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8])
-    except Exception:  # pragma: no cover — non-Linux fallback
-        return None
-
-
-def _steal_frac(s0: int | None, s1: int | None, wall: float) -> float | None:
-    """Fraction of machine cycles stolen during [t0, t0+wall]."""
-    if s0 is None or s1 is None or wall <= 0:
-        return None
-    hz = os.sysconf("SC_CLK_TCK") if hasattr(os, "sysconf") else 100
-    return (s1 - s0) / (wall * (os.cpu_count() or 1) * hz)
-
-
 def _measure_block(
     cores: int, path: str, run_id: str, k: int, best_so_far: float = 0.0
-) -> list[tuple[float, float | None]]:
+) -> list[tuple[float, float]]:
     """Fresh session, staged corpus, warmed workers, k back-to-back
     timed runs (warm samples — a long-lived cluster's steady state).
 
@@ -438,17 +416,17 @@ def _measure_block(
     warm.count()
     release_run(f"w{run_id}")
 
-    out: list[tuple[float, float | None]] = []
+    out: list[tuple[float, float]] = []
     rates: list[float] = []
     for i in range(k):
-        s0 = _steal_ticks()
+        s0 = steal_ticks()
         t0 = time.monotonic()
         extracted, _ = run_extract(spark, docs, media, run_id=f"{run_id}_{i}")
         extracted.count()
         wall = time.monotonic() - t0
-        s1 = _steal_ticks()
+        s1 = steal_ticks()
         rates.append(n / wall)
-        out.append((rates[-1], _steal_frac(s0, s1, wall)))
+        out.append((rates[-1], steal_fraction(s0, s1, wall)))
         release_run(f"{run_id}_{i}")
         if rates[-1] < 0.6 * max(best_so_far, *rates):
             break  # stolen window — stop sampling it
@@ -503,16 +481,13 @@ def _scaling_pass(scale_lo: int, scale_hi: int, n_docs: int) -> dict:
     budget_s = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "1350"))
     _stage_corpus(scale_docs, staging)
 
-    def _rates(samples: list[tuple[float, float | None]]) -> list[float]:
+    def _rates(samples: list[tuple[float, float]]) -> list[float]:
         return [r for r, _ in samples]
 
-    def _clean(samples: list[tuple[float, float | None]]) -> list[float]:
+    def _clean(samples: list[tuple[float, float]]) -> list[float]:
         # samples whose own /proc/stat bracket shows the host stole
-        # <= STEAL_TAINT of machine cycles while they ran. If the
-        # counter is unavailable, every sample counts (old behavior).
-        if all(f is None for _, f in samples):
-            return _rates(samples)
-        return [r for r, f in samples if f is not None and f <= STEAL_TAINT]
+        # <= STEAL_TAINT of machine cycles while they ran
+        return [r for r, f in samples if f <= STEAL_TAINT]
 
     def _stable(samples) -> bool:
         # converged = the two best CLEAN samples agree within 10%.
@@ -547,8 +522,8 @@ def _scaling_pass(scale_lo: int, scale_hi: int, n_docs: int) -> dict:
         )
 
     t_start = time.monotonic()
-    lo_s: list[tuple[float, float | None]] = []
-    hi_s: list[tuple[float, float | None]] = []
+    lo_s: list[tuple[float, float]] = []
+    hi_s: list[tuple[float, float]] = []
     blocks_run = 0
     for b in range(max_blocks):
         if b >= 1 and time.monotonic() - t_start > budget_s:
@@ -590,8 +565,8 @@ def _scaling_pass(scale_lo: int, scale_hi: int, n_docs: int) -> dict:
         blocks_run = b + 1
         print(
             f"[scaling] block {b}: "
-            f"lo={[(round(r, 1), None if f is None else round(f, 3)) for r, f in lo_s]} "
-            f"hi={[(round(r, 1), None if f is None else round(f, 3)) for r, f in hi_s]} "
+            f"lo={[(round(r, 1), round(f, 3)) for r, f in lo_s]} "
+            f"hi={[(round(r, 1), round(f, 3)) for r, f in hi_s]} "
             f"({time.monotonic() - t_start:.0f}s)",
             file=sys.stderr,
             flush=True,
@@ -628,8 +603,8 @@ def _scaling_pass(scale_lo: int, scale_hi: int, n_docs: int) -> dict:
         "samples_hi": [round(x, 1) for x in hi_rates],
         # per-sample hypervisor steal fraction (/proc/stat bracket) —
         # the value-blind taint measurement behind the flags
-        "steal_lo": [None if f is None else round(f, 3) for _, f in lo_s],
-        "steal_hi": [None if f is None else round(f, 3) for _, f in hi_s],
+        "steal_lo": [round(f, 3) for _, f in lo_s],
+        "steal_hi": [round(f, 3) for _, f in hi_s],
         "clean_lo": len(_clean(lo_s)),
         "clean_hi": len(_clean(hi_s)),
         "median_lo": round(statistics.median(lo_rates), 1),

@@ -63,6 +63,8 @@ def decode_gray(data: bytes) -> np.ndarray:
         if len(payload) != length:
             raise PngError("truncated chunk")
         if tag == b"IHDR":
+            if length != 13:
+                raise PngError("bad IHDR length")
             width, height, depth, ctype, comp, filt, interlace = struct.unpack(
                 ">IIBBBBB", payload
             )

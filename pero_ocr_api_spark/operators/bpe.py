@@ -1,30 +1,22 @@
-"""Distributed byte-pair-encoding (BPE) vocabulary training.
+"""Byte-pair-encoding (BPE) vocabulary training and encoding.
 
 A real pretraining handoff learns a SUBWORD vocabulary, not a
 whitespace top-k (Sennrich et al. 2016, "Neural Machine Translation of
 Rare Words with Subword Units"): start from characters, repeatedly
 merge the globally most frequent adjacent symbol pair, bounded rounds.
-This module is the fully-distributed Spark rendering with an exact
-(unrolled) DuckDB twin:
+This module trains on the word table and encodes the corpus in Spark,
+with an exact (unrolled) DuckDB twin:
 
 * the training state is the WORD-FREQUENCY table, not the token
-  stream: one corpus scan builds (word, cnt, syms) — vocabulary-sized,
-  many orders of magnitude smaller than the corpus at web scale — and
-  every merge round is a pair-count hash aggregate + argmax + a
-  per-word fold over that table. 100 TB of text costs ONE scan; the
-  R merge rounds never touch the corpus again.
-* per round: pair counts (explode adjacent symbol pairs weighted by
-  word cnt, map-side partials), the best pair by (count desc, p1 asc,
-  p2 asc) — a deterministic TakeOrdered top-1, never a full sort — and
-  merge application as a left-to-right non-overlapping fold
-  (`F.aggregate`) over each word's symbol array. The best-pair row is
-  joined on (1 row, broadcast-sized by construction); nothing is
-  collected to the driver except the per-round empty-check on a
-  1-row materialized DataFrame.
-* the word table is eagerly ``localCheckpoint``-ed per round (the
-  Lloyd-iteration lesson from similarity.ivf_train_centroids: the
-  table is metadata-sized but its lineage is the whole training
-  history).
+  stream: one distributed corpus scan builds (word, cnt, syms) —
+  vocabulary-sized, many orders of magnitude smaller than the corpus
+  at web scale. 100 TB of text costs ONE scan; the merge rounds never
+  touch the corpus again.
+* the table is collected once (at most :data:`BPE_MAX_WORDS` rows,
+  the bound the encoder's broadcast word map already has) and the
+  merge rounds run in plain Python over it: pair counts weighted by
+  word cnt, the best pair by (count desc, p1 asc, p2 asc), and a
+  left-to-right non-overlapping merge of each word's symbols.
 
 Encoding segments each document's tokens via the trained word table
 (an equi-join; skewed head words are single-row-per-key on the model
@@ -42,10 +34,17 @@ of this pipeline, trained once and shipped to every consumer.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pero_ocr_api_spark.session import local_frame
+
 BPE_MERGES = 8  # query-level default; production vocabularies run 10^4+
+# Distinct words bpe_train collects to the driver and bpe_encode_docs
+# broadcasts as its (word -> piece ids) map.
+BPE_MAX_WORDS = 10**6
 UNK_ID = 0
 
 
@@ -76,88 +75,49 @@ def word_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(p1, p2, n): adjacent symbol-pair occurrence counts weighted by
-    word frequency. All adjacent positions count (the classic
-    estimator — "aaa" contributes (a,a) twice)."""
-    idx = F.sequence(F.lit(1), F.size("syms") - 1)
-    pair = F.transform(
-        idx,
-        lambda i: F.struct(
-            F.element_at(F.col("syms"), i).alias("p1"),
-            F.element_at(F.col("syms"), i + 1).alias("p2"),
-        ),
-    )
-    return (
-        words.filter(F.size("syms") >= 2)
-        .select("cnt", F.explode(pair).alias("pr"))
-        .groupBy("pr.p1", "pr.p2")
-        .agg(F.sum("cnt").alias("n"))
-    )
-
-
-def _apply_merge(syms: Column, p1: Column, p2: Column) -> Column:
-    """Left-to-right non-overlapping merge of (p1, p2) in a symbol
-    array, as a fold: a run like "aaa" under pair (a,a) merges
-    positions 1 and 3, exactly like the sequential reference
-    algorithm. NULL p1/p2 (no pair this round) leaves the array
-    unchanged — null comparisons are falsy, so every step appends."""
-    rest = F.slice(syms, 2, F.greatest(F.size(syms) - 1, F.lit(0)))
-
-    def step(acc: Column, s: Column) -> Column:
-        last = F.element_at(acc, -1)
-        merged = F.concat(
-            F.slice(acc, F.lit(1), F.size(acc) - 1),
-            F.array(F.concat(last, s)),
-        )
-        return F.when((last == p1) & (s == p2), merged).otherwise(
-            F.concat(acc, F.array(s))
-        )
-
-    return F.aggregate(rest, F.slice(syms, 1, 1), step)
+def _merge(syms: list[str], p1: str, p2: str) -> list[str]:
+    """Left-to-right non-overlapping merge of (p1, p2): each symbol is
+    compared with the last ACCUMULATED one, so "aaa" under (a, a)
+    gives [aa, a]."""
+    out = syms[:1]
+    for s in syms[1:]:
+        if out[-1] == p1 and s == p2:
+            out[-1] = p1 + p2
+        else:
+            out.append(s)
+    return out
 
 
 def bpe_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Train :data:`BPE_MERGES` rounds of BPE: returns (segments,
     merges) — the final word table (word, cnt, syms) and the learned
     merge sequence (merge_rank, p1, p2). Stops early when no pair
-    remains."""
+    remains. All adjacent positions count ("aaa" contributes (a, a)
+    twice). Raises ``ValueError`` past :data:`BPE_MAX_WORDS` distinct
+    words."""
     spark = docs.sparkSession
-    words = word_table(docs).localCheckpoint(eager=True)
+    rows = word_table(docs).limit(BPE_MAX_WORDS + 1).collect()
+    if len(rows) > BPE_MAX_WORDS:
+        raise ValueError(
+            f"bpe_train: more than BPE_MAX_WORDS={BPE_MAX_WORDS} distinct "
+            "words; train on a sample of the corpus"
+        )
+    words = [(r["word"], r["cnt"], r["syms"]) for r in rows]
     merge_rows: list[tuple[int, str, str]] = []
     for r in range(1, BPE_MERGES + 1):
-        # Per-round argmax: TakeOrdered top-1 collected to the driver —
-        # ONE row of training state (two symbol strings), the same
-        # bytes the old localCheckpoint+count pair materialized, at one
-        # Spark job per round instead of two; the merge pair is then a
-        # pair of literals in the fold, removing the per-round
-        # broadcast join from the word-table update as well.
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("n"), F.asc("p1"), F.asc("p2"))
-            .limit(1)
-            .select("p1", "p2")
-            .collect()
-        )
-        if not top:
+        pairs: Counter = Counter()
+        for _, cnt, syms in words:
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] += cnt
+        if not pairs:
             break
-        p1, p2 = top[0]["p1"], top[0]["p2"]
+        (p1, p2), _ = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
         merge_rows.append((r, p1, p2))
-        words = words.select(
-            "word",
-            "cnt",
-            _apply_merge(F.col("syms"), F.lit(p1), F.lit(p2)).alias("syms"),
-        ).localCheckpoint(eager=True)
-    merges = spark.createDataFrame(
-        merge_rows, "merge_rank int, p1 string, p2 string"
+        words = [(w, cnt, _merge(syms, p1, p2)) for w, cnt, syms in words]
+    return (
+        local_frame(spark, words, "word string, cnt long, syms array<string>"),
+        local_frame(spark, merge_rows, "merge_rank int, p1 string, p2 string"),
     )
-    return words, merges
-
-
-def bpe_merges(docs: DataFrame) -> DataFrame:
-    """The learned merge table (merge_rank, p1, p2) — the model
-    artifact a production tokenizer ships."""
-    return bpe_train(docs)[1]
 
 
 def bpe_vocab(segments: DataFrame) -> DataFrame:
@@ -192,9 +152,9 @@ def bpe_encode_docs(
     words included — not the trained vocabulary. Distinct words grow
     sublinearly with the corpus but without a cap (the seeded sf0.1
     corpus has 31 for 270,704 occurrences; web text reaches millions).
-    A call is meant for a shard whose distinct-word count is ~10^6 or
-    less (tens of MB on every executor); a larger corpus is encoded
-    shard by shard."""
+    A call is meant for a shard whose distinct-word count is
+    :data:`BPE_MAX_WORDS` or less (tens of MB on every executor); a
+    larger corpus is encoded shard by shard."""
     from pero_ocr_api_spark.operators.lm import tokens_col
 
     toks = docs.select(

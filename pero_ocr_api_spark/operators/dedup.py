@@ -29,7 +29,7 @@ to cluster parallelism before hashing.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.functions.text_stats import fingerprint_col
@@ -920,10 +920,13 @@ def connected_components(
     Scale shape per round: 2 equi-joins + 1 groupBy on uniformly
     distributed ids (dup graphs are star/short-chain shaped — the
     capped LSH output is explicitly a star per bucket, so 2-4 rounds
-    in practice); the label table is eagerly ``localCheckpoint``-ed
-    every round to keep lineage flat (same lesson as the IVF Lloyd
-    loop), and the fixpoint test is a count of decreased labels —
-    labels only ever decrease, so 0 decreases = converged.
+    in practice). Each round is ONE Spark action: the label table,
+    which carries every node's label from the start of the round, is
+    eagerly ``localCheckpoint``-ed to keep lineage flat, and the
+    fixpoint test — the count of labels that went down — is read
+    from a ``DataFrame.observe`` metric on that same checkpoint, not
+    from a second job. Labels only ever decrease, so 0 decreases =
+    converged.
 
     ``report_out`` (a dict) receives convergence/skew telemetry at no
     extra compute — the per-round decreased-label counts are already
@@ -946,6 +949,7 @@ def connected_components(
         .withColumn("lbl", F.col("node"))
         .localCheckpoint()
     )
+    moved_per_round: list[int] = []
     for _ in range(CC_MAX_ROUNDS):
         nbr = (
             sym.join(labels, sym["src"] == labels["node"])
@@ -954,6 +958,7 @@ def connected_components(
         )
         merged = labels.join(nbr, "node", "left").select(
             "node",
+            F.col("lbl").alias("old"),
             F.least(
                 F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
             ).alias("lbl"),
@@ -961,34 +966,26 @@ def connected_components(
         hop = merged.select(
             F.col("node").alias("j_node"), F.col("lbl").alias("j_lbl")
         )
+        moved = Observation()
         jumped = (
             merged.join(hop, merged["lbl"] == hop["j_node"], "left")
             .select(
                 "node",
+                "old",
                 F.least(
                     F.col("lbl"), F.coalesce(F.col("j_lbl"), F.col("lbl"))
                 ).alias("lbl"),
             )
+            .observe(moved, F.count_if(F.col("lbl") < F.col("old")).alias("n"))
             .localCheckpoint()
         )
-        old = labels.select(
-            F.col("node").alias("o_node"), F.col("lbl").alias("o_lbl")
-        )
-        decreased = (
-            jumped.join(old, jumped["node"] == old["o_node"])
-            .filter(F.col("lbl") < F.col("o_lbl"))
-            .count()
-        )
-        labels = jumped
-        if report_out is not None:
-            report_out.setdefault("labels_moved_per_round", []).append(
-                decreased
-            )
-            report_out["rounds"] = len(
-                report_out["labels_moved_per_round"]
-            )
-        if decreased == 0:
+        moved_per_round.append(moved.get["n"])
+        labels = jumped.select("node", "lbl")
+        if moved_per_round[-1] == 0:
             break
+    if report_out is not None:
+        report_out["labels_moved_per_round"] = moved_per_round
+        report_out["rounds"] = len(moved_per_round)
     return labels.select(
         F.col("node").cast("long").alias("node"),
         F.col("lbl").cast("long").alias("component"),

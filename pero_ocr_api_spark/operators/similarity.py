@@ -31,8 +31,9 @@ Hyperplanes are deterministic md5-derived integer vectors computed
 driver-side and embedded as literals (engine-portable: the DuckDB
 oracle embeds the same numbers).
 
-All dot products run as JVM `zip_with`/`aggregate` expressions — no
-Python in the scoring path.
+All dot products of the scoring path run as JVM `zip_with`/`aggregate`
+expressions — no Python in it; only the IVF centroid training runs in
+numpy, over its bounded sample.
 """
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.functions.portable import round_bin
-from pero_ocr_api_spark.session import cache
+from pero_ocr_api_spark.session import cache, local_frame
 
 ANN_PLANES = 6
 ANN_TABLES = 4
@@ -360,8 +361,8 @@ IVF_NLIST = 16
 IVF_NPROBE = 4
 # Training-sample budget in ROWS, not a rate: the modulus is derived
 # from the corpus count at plan time (mod = max(1, n div budget)), so
-# the sample — and therefore the single-partition ntile-init window —
-# is metadata-sized BY CONSTRUCTION at any corpus size. A production
+# the sample trained_centroids collects is metadata-sized BY
+# CONSTRUCTION at any corpus size. A production
 # index wants ~nlist*256; the query-level default is nlist*16 — enough
 # sample per centroid for stable Lloyd cells at sandbox scale.
 IVF_SAMPLE_ROWS = 256
@@ -386,96 +387,73 @@ def duckdb_quant16_sql(expr: str) -> str:
     return f"(floor({expr} * 65536.0 + 0.5) / 65536.0)"
 
 
-def ivf_train_centroids(e: DataFrame) -> DataFrame:
-    """K-means-trained coarse centroids for the IVF index, fully
-    distributed (no collect): deterministic row-budgeted sample →
-    ntile init → Lloyd iterations as tiny Spark jobs (nlist =
-    :data:`IVF_NLIST` cells, sample_rows = :data:`IVF_SAMPLE_ROWS`,
-    :data:`IVF_LLOYD_ITERS` iterations).
+def trained_centroids(emb: DataFrame) -> DataFrame:
+    """K-means-trained coarse centroids for the IVF index: a
+    deterministic row-budgeted sample drawn in Spark, then ntile init
+    and :data:`IVF_LLOYD_ITERS` Lloyd iterations in numpy over the
+    collected sample (nlist = :data:`IVF_NLIST` cells, sample_rows =
+    :data:`IVF_SAMPLE_ROWS`). A production index trains once per
+    corpus, not per query: callers keep the result per (session,
+    corpus) and pass it to :func:`ivf_topk` (see
+    queries_textops._ivf_cents, a session corpus memo).
 
     * sample: row kept iff ``md5('ivfsamp|'||vec_id) % mod == 0`` with
       ``mod = max(1, n div sample_rows)`` where n is the corpus count
-      (a 1-row aggregate cross-joined in — no driver action). Expected
-      sample size is in [sample_rows, 2*sample_rows) whenever
-      n >= sample_rows, so the single-partition ntile-init window is
-      metadata-sized BY CONSTRUCTION at any corpus size — not by
-      caller discipline. The md5 coin is the house engine-portable
-      hash (dedup.md5_int_col), reproduced bit-for-bit by the twin.
-    * init: ntile(nlist) over vec_id order, one representative per
-      tile — spread across the ingest order, so data clustered by
-      ingest (where first-n init collapses into one region) still gets
-      covering centroids.
-    * Lloyd: assign sample to nearest centroid by cosine (tie-break
-      cell id), recompute element-wise means, re-snap onto the 2^-16
-      grid (see :func:`quant16` — keeps every sum exact so the DuckDB
-      oracle reproduces the centroids bit-for-bit).
+      (a 1-row aggregate cross-joined in). Expected sample size is in
+      [sample_rows, 2*sample_rows) whenever n >= sample_rows, so the
+      collected sample is metadata-sized BY CONSTRUCTION at any corpus
+      size. The md5 coin is the house engine-portable hash
+      (dedup.md5_int_col), reproduced bit-for-bit by the twin.
+    * init: ntile(nlist) over vec_id order (the first n % nlist tiles
+      hold one extra row), one representative per tile — spread
+      across the ingest order, so data clustered by ingest (where
+      first-n init collapses into one region) still gets covering
+      centroids.
+    * Lloyd: assign each sample row to its nearest centroid by cosine
+      (ties and NaN: the lowest cell, as Spark's descending order puts
+      NaN first), recompute element-wise means, re-snap onto the
+      2^-16 grid (see :func:`quant16`). Grid values keep every dot
+      product and every mean's sum exact in any order, so the DuckDB
+      oracle reproduces the centroids bit-for-bit. A cell left without
+      members is dropped.
 
-    Returns (cell, cv, cn) — broadcast-sized (nlist rows)."""
+    Returns a local (cell, cv, cn) DataFrame of at most nlist rows."""
+    import numpy as np
+
     from pero_ocr_api_spark.operators.dedup import md5_int_col
 
+    e = _with_norm(emb)
     nrow = e.agg(F.count("*").alias("_n"))
     u = md5_int_col(
         F.concat(F.lit("ivfsamp|"), F.col("vec_id").cast("string")), 7
     )
     mod = F.greatest(F.lit(1).cast("long"), F.expr(f"_n div {IVF_SAMPLE_ROWS}"))
-    samp = (
+    rows = sorted(  # by vec_id, the first field
         e.crossJoin(nrow)
         .filter(u % mod == 0)
         .select("vec_id", F.transform("v", quant16).alias("vq"))
+        .collect()
     )
-    w_tile = Window.orderBy("vec_id")
-    tiled = samp.withColumn("cell", F.ntile(IVF_NLIST).over(w_tile))
-    w_rep = Window.partitionBy("cell").orderBy("vec_id")
-    cents = (
-        tiled.withColumn("rn", F.row_number().over(w_rep))
-        .filter(F.col("rn") == 1)
-        .select("cell", F.col("vq").alias("cv"))
+    schema = "cell int, cv array<double>, cn double"
+    if not rows:  # an empty corpus has no cells
+        return local_frame(emb.sparkSession, [], schema)
+    x = np.array([r["vq"] for r in rows], dtype=np.float64)
+    n, k = len(rows), min(IVF_NLIST, len(rows))
+    cells = np.arange(1, k + 1)
+    c = x[[t * (n // IVF_NLIST) + min(t, n % IVF_NLIST) for t in range(k)]]
+    xn = np.sqrt((x * x).sum(1))[:, None]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        for _ in range(IVF_LLOYD_ITERS):
+            s = (x @ c.T) / (xn * np.sqrt((c * c).sum(1)))
+            best = np.argmax(s, axis=1)
+            kept = np.unique(best)
+            means = np.array([x[best == j].mean(0) for j in kept])
+            cells, c = cells[kept], np.floor(means * 65536.0 + 0.5) / 65536.0
+    return local_frame(
+        emb.sparkSession,
+        [(int(j), cv.tolist(), float(np.sqrt(cv @ cv))) for j, cv in zip(cells, c)],
+        schema,
     )
-    for _ in range(IVF_LLOYD_ITERS):
-        scored = samp.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            "cell",
-            (
-                dot_col(F.col("vq"), F.col("cv"))
-                / (
-                    F.sqrt(dot_col(F.col("vq"), F.col("vq")))
-                    * F.sqrt(dot_col(F.col("cv"), F.col("cv")))
-                )
-            ).alias("s"),
-        )
-        w_assign = Window.partitionBy("vec_id").orderBy(F.desc("s"), "cell")
-        assign = (
-            scored.withColumn("rn", F.row_number().over(w_assign))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cell")
-        )
-        vals = assign.join(samp, "vec_id").select(
-            "cell", F.posexplode("vq").alias("pos", "val")
-        )
-        means = (
-            vals.groupBy("cell", "pos")
-            .agg((F.sum("val") / F.count("*")).alias("raw"))
-            .select("cell", "pos", quant16(F.col("raw")).alias("m"))
-        )
-        cents = means.groupBy("cell").agg(
-            F.sort_array(F.collect_list(F.struct("pos", "m")))["m"].alias("cv")
-        )
-    return cents.select(
-        "cell", "cv", F.sqrt(dot_col(F.col("cv"), F.col("cv"))).alias("cn")
-    )
-
-
-def trained_centroids(emb: DataFrame) -> DataFrame:
-    """Train IVF coarse centroids once and materialize them (eager
-    localCheckpoint: the nlist-row table's plan is the whole Lloyd
-    iteration tree — truncating it keeps every downstream consumer
-    from re-planning AND re-executing the training). A production
-    index trains per corpus, not per query: callers cache the result
-    per (session, corpus) and pass it to :func:`ivf_topk` via
-    ``centroids=`` (see queries_textops._ivf_cents, a session corpus
-    memo). Materializing the 16-odd rows once measured 12.5 s → ~1 s
-    for an ivf_topk call at sf0.001."""
-    return ivf_train_centroids(_with_norm(emb)).localCheckpoint(eager=True)
 
 
 def ivf_assign(
@@ -511,8 +489,8 @@ def ivf_topk(
 
     ``centroids`` come from :func:`trained_centroids`, trained once per
     corpus by the caller (this call pays only assignment and probe) —
-    a deterministic spread sample + Lloyd iterations, fully in
-    DataFrame ops, reproduced bit-for-bit by the DuckDB oracle via
+    a deterministic spread sample drawn in Spark + Lloyd iterations in
+    numpy over it, reproduced bit-for-bit by the DuckDB oracle via
     2^-16-grid exact arithmetic.
 
     Scale shape: the cell id is the partition key of the inverted
@@ -532,7 +510,7 @@ def ivf_topk(
 
 
 def duckdb_ivf_cents_cte_sql(dim: int) -> str:
-    """DuckDB twin of :func:`ivf_train_centroids` as a CTE chain ending
+    """DuckDB twin of :func:`trained_centroids` as a CTE chain ending
     in ``cents (cell, cv, cn)``. Expects an ``emb`` CTE with
     (vec_id, v DOUBLE[]). Bit-identical to the Spark path because all
     cross-row sums run over 2^-16-grid values (see :func:`quant16`) —

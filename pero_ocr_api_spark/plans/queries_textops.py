@@ -567,7 +567,7 @@ SELECT qid, vec_id, cosine, rn FROM (
 """
 
 
-# Trained+checkpointed centroid table (nlist rows), memoized per
+# Trained centroid table (a local DataFrame of nlist rows), memoized per
 # (session, sf_dir): a production IVF index trains once per corpus;
 # per-call training was the r3 perf regression (2.7 s -> 7.7 s).
 def _ivf_cents(spark: SparkSession, sf: str) -> DataFrame:
@@ -1241,14 +1241,15 @@ FROM documents GROUP BY 1
 
 # --- distributed BPE (subword vocabulary training) -----------------------------
 def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
-    """Learned BPE merge table (operators/bpe.bpe_train): bounded
-    rounds of pair-count hash aggregate + deterministic argmax + fold
-    merge application over the word-frequency table — the corpus is
-    scanned ONCE; training never touches it again. (merge_rank, p1,
-    p2) is the model artifact a production tokenizer ships."""
-    from pero_ocr_api_spark.operators.bpe import bpe_merges
+    """Learned BPE merge table (operators/bpe.bpe_train): one
+    distributed corpus scan builds the word-frequency table, and the
+    bounded merge rounds (pair counts, deterministic argmax, left-to-
+    right merge) run over that collected table — training never
+    touches the corpus again. (merge_rank, p1, p2) is the model
+    artifact a production tokenizer ships."""
+    from pero_ocr_api_spark.operators.bpe import bpe_train
 
-    return bpe_merges(_docs(spark, sf))
+    return bpe_train(_docs(spark, sf))[1]
 
 
 def _sql_bpe_merges() -> str:

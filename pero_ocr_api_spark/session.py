@@ -24,6 +24,7 @@ from contextlib import contextmanager
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 # Arrow batch size for media-carrying stages. Sandbox fixture pages
 # are ~25 KB so 256 rows/batch ≈ 6 MB; production 5 MP pages would
@@ -116,6 +117,18 @@ def stop_spark() -> None:
         active.stop()
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` (a driver-side result, such as a trained model) as a
+    DataFrame that reading runs no job for: with Arrow on (get_spark
+    turns it on), a pandas frame under
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    LocalRelation, where a list becomes a parallelized RDD."""
+    import pandas as pd
+
+    struct = DataType.fromDDL(schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=struct.names), struct)
+
+
 def per_context(build: Callable) -> Callable:
     """Memoize ``build()`` per active SparkContext: each Column call is
     a py4j round trip, and a Column is a handle into the context it was
@@ -149,8 +162,6 @@ def per_context(build: Callable) -> Callable:
 # The exception: eager lineage cuts whose result the caller keeps call
 # localCheckpoint directly, because the returned DataFrame reads their
 # blocks for as long as it lives, past any scope they could name here:
-#   similarity.trained_centroids            the nlist-row IVF centroids;
-#   bpe.bpe_train                           the word table, per round;
 #   dedup.connected_components              the edge and label tables;
 #   streaming.stream_incremental_dedup and  the default corpus bands,
 #   stream_incremental_embedding_dedup      read by every micro-batch.

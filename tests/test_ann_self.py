@@ -133,7 +133,7 @@ def clustered_corpus(spark):
 def _cell_shares(emb, trained):
     e = similarity._with_norm(emb)
     if trained:
-        cents = similarity.ivf_train_centroids(e)
+        cents = similarity.trained_centroids(emb)
     else:
         cents = e.filter(F.col("vec_id") < similarity.IVF_NLIST).select(
             F.col("vec_id").alias("cell"),

@@ -32,6 +32,9 @@ def test_png_rejects_garbage():
         png.decode_gray(b"not a png at all")
     with pytest.raises(png.PngError):
         png.decode_gray(b"\x89PNG\r\n\x1a\ntruncated")
+    # a 12-byte IHDR: the header struct cannot be read from it
+    with pytest.raises(png.PngError):
+        png.decode_gray(png._SIGNATURE + png._chunk(b"IHDR", bytes(12)))
 
 
 @pytest.mark.parametrize("scale", [3, 5])

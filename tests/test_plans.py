@@ -4,6 +4,7 @@ pruning, broadcast dims, no stray shuffles)."""
 
 from __future__ import annotations
 
+import itertools
 import re
 
 import pytest
@@ -248,16 +249,68 @@ def test_reassembly_sorts_are_typed(spark, name):
         release(*QUERY_SCOPE)
 
 
-def test_ivf_centroid_reassembly_is_typed(spark):
-    """The centroid vectors of the IVF training, checked on the plan
-    ``ivf_train_centroids`` returns (``trained_centroids`` truncates it
-    with a localCheckpoint)."""
-    from pero_ocr_api_spark.operators import similarity
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, counted in a job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_trainers_collect_their_bounded_state_once(spark):
+    """BPE merges and IVF Lloyd iterations run on the driver over state
+    collected once, not as Spark jobs per round or iteration (29 and
+    18 jobs when they did)."""
+    from pero_ocr_api_spark.operators import bpe, similarity
     from pero_ocr_api_spark.sources.tables import read_table
 
+    def bpe_train():
+        segments, merges = bpe.bpe_train(read_table(spark, SF, "documents"))
+        segments.collect(), merges.collect()
+
     emb = read_table(spark, SF, "embeddings")
-    df = similarity.ivf_train_centroids(similarity._with_norm(emb))
-    _assert_typed_reassembly(df._jdf.queryExecution().optimizedPlan())
+    assert _jobs(spark, bpe_train) <= 4
+    assert _jobs(spark, lambda: similarity.trained_centroids(emb).collect()) <= 8
+
+
+def test_bpe_train_refuses_more_words_than_it_may_collect(spark, monkeypatch):
+    from pero_ocr_api_spark.operators import bpe
+
+    docs = spark.createDataFrame([(1, "ab cd ef")], "doc_id long, text string")
+    monkeypatch.setattr(bpe, "BPE_MAX_WORDS", 2)
+    with pytest.raises(ValueError, match="BPE_MAX_WORDS=2"):
+        bpe.bpe_train(docs)
+
+
+def test_components_round_is_one_job(spark):
+    """Each propagation round is one action: the label checkpoint, with
+    the fixpoint count read from an observation on it. Adaptive
+    execution runs each shuffle stage as its own job and a broadcast
+    runs one too, so both are off here and an action is one job: two
+    setup checkpoints, one job per round and the final collect."""
+    from pero_ocr_api_spark.operators import dedup
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(64)], "id1 long, id2 long")
+    report: dict = {}
+    confs = {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        n = _jobs(spark, lambda: dedup.connected_components(edges, report).collect())
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert report["rounds"] == 7
+    assert n == 2 + report["rounds"] + 1
 
 
 def _write_description(spark, path: str) -> str:
